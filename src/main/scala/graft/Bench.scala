@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark harness: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
@@ -11,17 +10,8 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
+    val cpus = spark.sparkContext.defaultParallelism
     val names = SparkEntry.queries.keys.toSeq.sorted
     // Warm-up: run the full suite once untimed (JIT, codegen cache, parquet
     // footers, broadcast thread pools).
@@ -50,9 +40,9 @@ object Bench {
       import org.apache.spark.sql.functions._
       val t0 = System.nanoTime()
       // % bounds the addends so the 200M-term sum can't overflow ANSI long
-      spark.range(0L, 200000000L, 1, cpus.toInt)
+      spark.range(0L, 200000000L, 1, cpus)
         .agg(sum(xxhash64(col("id")) % 1000000)).collect()
-      spark.range(0L, 20000000L, 1, cpus.toInt)
+      spark.range(0L, 20000000L, 1, cpus)
         .groupBy((col("id") % 1000).as("k")).agg(count(lit(1)))
         .agg(sum("count(1)")).collect()
       (System.nanoTime() - t0) / 1e9
@@ -73,16 +63,24 @@ object Bench {
     // per pass: name -> (wall_sec, fixture_sec) — the FixtureClock ledger
     // splits synthesized-input generation (q31/q56/q71-class gates write
     // their own PDFs/WARCs/codec tars before the read path runs) from the
-    // query itself, so a regression in either half is visible
+    // query itself, so a regression in either half is visible. A run that
+    // throws records no sample: its wall timed the exception path, not the
+    // query. Its query is listed under "failed" instead.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     val samples: Seq[Map[String, (Double, Double)]] = (1 to passes).map { _ =>
       graft.queries.SimQ.clearNearDupPairCache()
       canaries += canary()
-      names.map { name =>
+      names.flatMap { name =>
         graft.queries.FixtureClock.drain() // clear any prior accrual
         val t0 = System.nanoTime()
-        try { SparkEntry.queries(name)(spark, sfDir).count() }
-        catch { case _: Throwable => -1L }
-        name -> ((System.nanoTime() - t0) / 1e9, graft.queries.FixtureClock.drain())
+        try {
+          SparkEntry.queries(name)(spark, sfDir).count()
+          Some(name -> ((System.nanoTime() - t0) / 1e9, graft.queries.FixtureClock.drain()))
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          failed += name
+          None
+        }
       }.toMap
     }
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
@@ -91,15 +89,18 @@ object Bench {
       val s = xs.sorted
       s(s.size - 1 - s.size / 4) - s(s.size / 4)
     }
-    val med = names.map(n => n -> median(samples.map(_(n)._1)))
-    val iqrs = names.map(n => n -> iqr(samples.map(_(n)._1)))
+    // medians over the successful runs; a query with none has no timing
+    val timed = names.filter(n => samples.exists(_.contains(n)))
+    def ok(n: String): Seq[(Double, Double)] = samples.flatMap(_.get(n))
+    val med = timed.map(n => n -> median(ok(n).map(_._1)))
+    val iqrs = timed.map(n => n -> iqr(ok(n).map(_._1)))
     // fixture/query split: "queries" stays the WALL median (cross-round
     // comparable); fixture_sec/query_sec are its decomposition, emitted
     // only for queries that build fixtures. query_sec is the median of the
     // PER-PASS difference wall−fixture — taking median(wall)−median(fixture)
     // could pair components from different passes and need not correspond
     // to any actual run.
-    val fixMed = names.map(n => n -> median(samples.map(_(n)._2)))
+    val fixMed = timed.map(n => n -> median(ok(n).map(_._2)))
       .filter(_._2 > 0.005)
     val qs = med.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -109,7 +110,7 @@ object Bench {
     val fx = fixMed.map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val qonly = fixMed.map { case (k, _) =>
-      val diffMed = median(samples.map(s => s(k)._1 - s(k)._2))
+      val diffMed = median(ok(k).map { case (wall, fix) => wall - fix })
       s"\"" + k + "\":" + f"${math.max(0.0, diffMed)}%.3f"
     }.mkString("{", ",", "}")
     val total = med.map(_._2).sum
@@ -135,7 +136,8 @@ object Bench {
         s""""runs":$passes,"iqr":$sp,""" +
         f""""fixture_total_sec":$fixtureTotal%.3f,"fixture_sec":$fx,"query_sec":$qonly,""" +
         s""""canary_sec":$canMed,"canary_iqr":$canIqr,"noisy":$noisy,""" +
-        s""""rel_noisy_queries":$relNoisyCount,"sf":"$sfDir"}"""
+        s""""rel_noisy_queries":$relNoisyCount,""" +
+        s""""failed":${failed.map(n => s""""$n"""").mkString("[", ",", "]")},"sf":"$sfDir"}"""
     Files.writeString(Paths.get("bench_out.json"), json)
     // stop() BEFORE printing so the JSON is the final stdout line (no
     // shutdown log lines after it) — the driver parses the last line.

@@ -17,13 +17,7 @@ import org.apache.spark.sql.SparkSession
   */
 object BpeTrain {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkEntry.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     args.headOption match {
       case Some("bench") => bench(spark)
       case _ =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: `runMain graft.Explain q34_ann_ivf [sfDir]` prints the
   * formatted physical plan of any SparkEntry query plus red-flag checks
   * (cartesian products, missing pushdown). Used per-round to keep plans
@@ -13,12 +11,7 @@ object Explain {
     val qArgs = args.filterNot(_.startsWith("/")).toSeq
     val names = if (qArgs.nonEmpty) qArgs else SparkEntry.queries.keys.toSeq.sorted
     val dir = args.find(_.startsWith("/")).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query profiling harness (optimization-guide §1: measure first).
   *
@@ -20,18 +19,8 @@ object Profile {
     val names = if (qArgs.nonEmpty) qArgs else SparkEntry.queries.keys.toSeq.sorted
     val dir = args.find(_.startsWith("/")).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("GRAFT_PROFILE_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
 
     // listener tallies reset per timed run; volatile not needed — the bus
     // drains before we read (waitUntilEmpty via listener queue poll below)
@@ -46,6 +35,10 @@ object Profile {
       var inputB = 0L
       def reset(): Unit = { jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0
         shufReadB = 0; shufWriteB = 0; spillB = 0; inputB = 0 }
+      /** This run's tallies as the table's counter columns. */
+      def columns: String =
+        f"$jobs%5d $stages%6d $tasks%6d ${taskTimeMs / 1e3}%8.2f " +
+          f"${shufReadB / 1e6}%9.2f ${shufWriteB / 1e6}%9.2f ${spillB / 1e6}%9.2f ${inputB / 1e6}%8.2f"
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages += 1
@@ -113,31 +106,31 @@ object Profile {
     names.foreach { n =>
       // failed timed runs print a FAIL line and are excluded from the
       // median (ADVICE r21: a swallowed failure used to report a
-      // plausible-looking wall with no error indication)
-      val walls = (1 to runs).flatMap { _ =>
+      // plausible-looking wall with no error indication). Each successful
+      // run keeps its own counters and fixture time, so the printed row is
+      // one run: the median-wall one.
+      val ok = (1 to runs).flatMap { _ =>
         graft.queries.SimQ.clearNearDupPairCache()
         graft.queries.FixtureClock.drain()
         settle()
         L.reset()
         val t0 = System.nanoTime()
-        val ok =
+        val succeeded =
           try { SparkEntry.queries(n)(spark, dir).count(); true }
           catch { case e: Throwable =>
             println(s"FAIL $n: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}")
             false
           }
         val w = (System.nanoTime() - t0) / 1e9
+        val fix = graft.queries.FixtureClock.drain()
         settle()
-        if (ok) Some(w) else None
+        if (succeeded) Some((w, L.columns, fix)) else None
       }
-      if (walls.isEmpty) { println(f"$n%-32s ${"ALL-RUNS-FAILED"}%8s") }
+      if (ok.isEmpty) println(f"$n%-32s ${"ALL-RUNS-FAILED"}%8s")
       else {
-      val wall = walls.sorted.apply(walls.size / 2)
-      val fix = graft.queries.FixtureClock.drain()
-      println(f"$n%-32s $wall%8.3f ${L.jobs}%5d ${L.stages}%6d ${L.tasks}%6d " +
-        f"${L.taskTimeMs / 1e3}%8.2f ${L.shufReadB / 1e6}%9.2f ${L.shufWriteB / 1e6}%9.2f " +
-        f"${L.spillB / 1e6}%9.2f ${L.inputB / 1e6}%8.2f" +
-        (if (fix > 0.005) f"  fixture=$fix%.3f" else ""))
+        val (wall, columns, fix) = ok.sortBy(_._1).apply(ok.size / 2)
+        println(f"$n%-32s $wall%8.3f $columns" +
+          (if (fix > 0.005) f"  fixture=$fix%.3f" else ""))
       }
     }
     spark.stop()

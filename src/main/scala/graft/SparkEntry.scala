@@ -10,10 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  /** Session settings every entry point needs (applied by entry/Verify/Bench;
-    * harmless when already set): events.ts is nanosecond parquet which Spark
-    * only reads as bigint-nanos via the legacy flag; UTC keeps timestamp
-    * rendering engine-independent.
+  /** Session settings every entry point needs (applied by entry and
+    * [[localSession]]; harmless when already set): events.ts is nanosecond
+    * parquet which Spark only reads as bigint-nanos via the legacy flag;
+    * UTC keeps timestamp rendering engine-independent.
     */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -24,6 +24,22 @@ object SparkEntry {
     // per exchange; at full scale the advisory size keeps partitions fat.
     spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
     spark
+  }
+
+  /** The one session builder: `local[cpus]` with as many shuffle
+    * partitions, no UI, WARN logging and [[tune]]'s settings. `cpus`
+    * defaults to `SPARK_GRAFT_CPUS` (4 when unset), the core count every
+    * harness main runs at.
+    */
+  def localSession(
+      cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    tune(spark)
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

@@ -4,8 +4,8 @@ import graft.doc.HtmlNode
 
 /** Pluggable browser session driven by the interpreter (reference
   * module/web Selenium actions — Selenium itself is NOT bundled here; a real
-  * deployment provides a [[DriverFactory]] backed by it, tests and offline
-  * runs use [[MockBrowser]]).
+  * deployment drives a W3C WebDriver remote end through
+  * [[RemoteWebDriverFactory]], tests and offline runs use [[MockBrowser]]).
   */
 trait BrowserDriver {
   def visit(uri: String): Unit

@@ -69,7 +69,7 @@ object Fetcher {
   // the stream returns the socket to the JDK keep-alive pool, so repeated
   // fetches against one host reuse a connection instead of paying TCP
   // setup + TIME_WAIT churn per page (measured ~10x on a host-skewed
-  // crawl — HostLayoutBench). disconnect() is reserved for the FAILURE
+  // crawl). disconnect() is reserved for the FAILURE
   // path and the timeout watchdog ([[abortInFlight]]), where killing the
   // socket is the point.
 

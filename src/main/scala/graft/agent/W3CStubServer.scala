@@ -65,6 +65,9 @@ final class W3CStubServer(site: String => Option[String]) {
   private val sessions = new ConcurrentHashMap[String, Session]()
   private val nextId = new AtomicLong(1L)
   val requestCount = new AtomicLong(0L)
+  // client-side ports seen: one per TCP connection the clients opened
+  // (a keep-alive client opens far fewer connections than it sends requests)
+  private val clientPorts = ConcurrentHashMap.newKeySet[Int]()
 
   // TCP_NODELAY on accepted sockets + keep-alive pool sizing (HttpTuning):
   // avoids the Nagle/delayed-ACK stall on kernels that don't fast-ACK loopback
@@ -84,6 +87,7 @@ final class W3CStubServer(site: String => Option[String]) {
   def start(): this.type = { server.start(); this }
   def stop(): Unit = { server.stop(0); pool.shutdown() }
   def openSessions: Int = sessions.size()
+  def clientConnections: Int = clientPorts.size()
 
   private def encodeElem(selector: String, idx: Int): String =
     Base64.getUrlEncoder.withoutPadding()
@@ -220,6 +224,7 @@ final class W3CStubServer(site: String => Option[String]) {
 
   server.createContext("/", (ex: HttpExchange) => {
     requestCount.incrementAndGet()
+    clientPorts.add(ex.getRemoteAddress.getPort)
     val parts = ex.getRequestURI.getPath.split('/').toList.filter(_.nonEmpty)
     val bodyText = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
     val body = if (bodyText.isEmpty) F.objectNode() else mapper.readTree(bodyText)

@@ -13,10 +13,9 @@ import scala.jdk.CollectionConverters._
   * https://www.w3.org/TR/webdriver/ — the same protocol Selenium's
   * RemoteWebDriver speaks): drives any conformant remote end — a local
   * `chromedriver --port=9515`, geckodriver, or a Selenium Grid hub — over
-  * plain HTTP + JSON. No Selenium jars anywhere: unlike the reflection shim
-  * ([[SeleniumDriverFactory]], kept for in-JVM Selenium users), this path is
-  * fully exercisable offline against a protocol stub, so the binding the
-  * tests run is the binding production runs.
+  * plain HTTP + JSON. No Selenium jars anywhere: the client is fully
+  * exercisable offline against a protocol stub ([[W3CStubServer]]), so the
+  * binding the tests run is the binding production runs.
   *
   * Reference semantics kept (module/web/actions/Foundation.scala:25-301):
   * document-ready wait after navigation, frame switch by selector, explicit
@@ -72,9 +71,6 @@ final class WebDriverHttpBrowser(
   // operator's unit cost. W3C protocol errors (4xx/5xx envelopes) drain the
   // error stream the same way — the connection is still clean — and only a
   // transport failure mid-request hard-disconnects.
-  // GRAFT_WIRE_DISCONNECT=1 restores the pre-r22 disconnect-per-request
-  // behavior — the same-JVM A/B seam WireBench measures both modes through.
-  private val reuseConnections = System.getenv("GRAFT_WIRE_DISCONNECT") == null
 
   private def http(method: String, path: String, body: Option[JNode]): JNode = {
     val conn = URI.create(endpoint + path).toURL
@@ -98,7 +94,7 @@ final class WebDriverHttpBrowser(
         else
           try new String(is.readAllBytes(), StandardCharsets.UTF_8)
           finally is.close()
-      drained = reuseConnections
+      drained = true
       val parsed = if (text.isEmpty) F.objectNode() else mapper.readTree(text)
       val value = parsed.path("value")
       if (status >= 400)

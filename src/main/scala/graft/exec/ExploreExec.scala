@@ -326,7 +326,7 @@ object ExploreExec {
     * payloads never reach the driver. Scores must be total (no NaN).
     * Each round runs exactly ONE Spark job: the frontier-cut action's
     * zipPartitions pass also harvests the next selection and the budget
-    * census (census-pinned — see ExploreSpec / CrawlBench).
+    * census (census-pinned — see ExploreSpec).
     */
   def exploreBestFirst[D](
       spark: SparkSession,

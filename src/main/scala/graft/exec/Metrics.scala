@@ -28,7 +28,7 @@ final class Metrics(@transient sc: SparkContext) extends Serializable {
   /** Sequential traversal steps the driver ran: one per BFS level
     * ([[ExploreExec.explore]]) and one per best-first round
     * ([[ExploreExec.exploreBestFirst]]). The driver-latency denominator for
-    * crawl throughput (CrawlBench reports secs/round from it) and the
+    * crawl throughput and the
     * round count the job-census pins multiply against.
     */
   val exploreRounds: LongAccumulator = sc.longAccumulator("graft.exploreRounds")

@@ -63,8 +63,8 @@ object Bloom {
     (0 until 3).map(i => (h1 + lit(i.toLong) * h2) % lit(mBits))
   }
 
-  /** Sized variant — BloomBench scales the mask with the key count (the
-    * bits/key rule); mBits must be a multiple of 8.
+  /** Sized variant — scale the mask with the key count (the bits/key
+    * rule); mBits must be a multiple of 8.
     */
   def positions(key: Column, mBits: Long): Seq[Column] = {
     val h1 = conv(substring(md5(key), 1, 15), 16, 10).cast("long")

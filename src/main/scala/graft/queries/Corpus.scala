@@ -404,9 +404,8 @@ object CorpusQ {
     * rows in ONE source, the plain window's per-source partition task is
     * sorting a macroscopic corpus share (4M (doc_id, source, md5) rows ≈
     * hundreds of MB in one task's sorter — spill territory) and the
-    * two-phase plan wins; under it, DomainCapBench measures the single
-    * window FASTER (one shuffle + one sort vs two windows + a verdict
-    * join). The same number at 100 TB: domains are millions, so only a
+    * two-phase plan wins; under it, the single window measured FASTER
+    * (one shuffle + one sort vs two windows + a verdict join; NOTES_bench_mains.md). The same number at 100 TB: domains are millions, so only a
     * degenerate mega-domain ever crosses it.
     */
   val DOMAIN_CAP_HOT: Long = 1L << 22

@@ -25,7 +25,7 @@ import java.nio.file.{Files, Paths}
   */
 object EngineQ {
 
-  /** In-JVM oracle stub server (the HostLayoutBench pattern), with
+  /** In-JVM oracle stub server, with
     * TCP_NODELAY on accepted sockets: the JDK HttpServer writes headers and
     * body as separate small packets, and with Nagle on, the body write can
     * stall behind the client's delayed ACK (~40 ms per response on kernels
@@ -810,7 +810,7 @@ object EngineQ {
     * path), asserted on `pagesFetched` INSIDE the query: exactly one POST
     * per distinct entity, per invocation (doc cache disabled so the pin is
     * exact every run). The in-JVM HTTP stub is the oracle seam (local[*]
-    * shares the JVM — the HostLayoutBench pattern); on a cluster the
+    * shares the JVM); on a cluster the
     * target is a real service and the engine path is byte-identical.
     */
   def q127Wpost(spark: SparkSession, dir: String): DataFrame = {
@@ -929,7 +929,7 @@ object EngineQ {
     * carries index k over a total of min(depth, 3). Fetch count asserted
     * in-query: Σ min(d,3) + [d < 3] (the terminating probe costs one
     * request; ids that hit the limit never probe). The in-JVM stateful
-    * stub is the oracle seam (the HostLayoutBench pattern); on a cluster
+    * stub is the oracle seam (see [[stubServer]]); on a cluster
     * the cursor lives server-side and the engine path is byte-identical.
     */
   def q143Loop(spark: SparkSession, dir: String): DataFrame = {

@@ -844,8 +844,11 @@ object SimQ {
          org.apache.spark.HashPartitioner) = {
     val spark = ids.sparkSession
     import spark.implicits._
+    // a null endpoint matches no label under lpRound's inner join: drop the
+    // edge here instead of failing to decode it into the unboxed tuple
     val edgesRaw = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
+      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
       .as[(Long, Long)].rdd
     // partitioner width derives from the EDGE INPUT's own scan parallelism
     // (guide §2: partitioning from data size, not local cores, the

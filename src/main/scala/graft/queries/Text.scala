@@ -1620,7 +1620,7 @@ object TextQ {
     * group is either a rank window — bounded-shuffle on Spark 3.5+ via
     * `WindowGroupLimit`, but it still full-sorts every map partition
     * below the partial limit — or a bounded mergeable aggregate; this is
-    * the aggregate, 4.2× faster at 50M rows in SketchBench). The priority order
+    * the aggregate, 4.2× faster at 50M rows per NOTES_bench_mains.md). The priority order
     * rides an INVERTED integer key `qinv = (h+1) div w` (bottom-k by
     * qinv ≈ top-k by w/u, floor-quantized so both engines replay it
     * exactly; value = doc_id, so the aggregate's (key, value) tie-break

@@ -52,11 +52,8 @@ object Layout {
     * no-op and the exchange it adds locally costs only the narrow table's
     * few MB. Row-identical by construction (round-robin repartition; all
     * gated consumers aggregate with exact arithmetic downstream).
-    *
-    * `GRAFT_NO_SPREAD=1` disables (the A/B seam).
     */
   def spreadNarrowScan(df: DataFrame, tablePath: String): DataFrame = {
-    if (System.getenv("GRAFT_NO_SPREAD") != null) return df
     val spark = df.sparkSession
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))

@@ -548,14 +548,12 @@ final case class ShingleSignature(child: Expression)
         }
         seen.toArray(new Array[String](seen.size()))
       }
-    val md = threadMd5.get()
     val mins = new Array[String](NUM_SLICES)
     val hashes = new Array[Long](grams.length)
     var g = 0
     while (g < grams.length) {
       val gram = grams(g)
-      md.reset()
-      val hex = toHex(md.digest(gram.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      val hex = Md5.hex(Md5(gram))
       var s = 0
       while (s < NUM_SLICES) {
         val slice = hex.substring(s * SLICE_LEN, s * SLICE_LEN + SLICE_LEN)
@@ -587,25 +585,6 @@ object ShingleSignature {
     Seq(StructField("hset", ArrayType(LongType, containsNull = false)),
       StructField("n_grams", LongType)) ++
       (1 to NUM_SLICES).map(i => StructField(s"s$i", StringType)))
-
-  private val threadMd5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private val HEX = "0123456789abcdef".toCharArray
-
-  private def toHex(bytes: Array[Byte]): String = {
-    val out = new Array[Char](bytes.length * 2)
-    var i = 0
-    while (i < bytes.length) {
-      val b = bytes(i) & 0xFF
-      out(i * 2) = HEX(b >>> 4)
-      out(i * 2 + 1) = HEX(b & 0xF)
-      i += 1
-    }
-    new String(out)
-  }
 }
 
 /** The whole n-bit SimHash document fingerprint in ONE codegen'd pass over
@@ -655,11 +634,6 @@ final case class SimHash(child: Expression, bits: Int)
 
 object SimHashFunction {
 
-  private val threadMd5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** Static entry point for generated code: primitive long out, no boxing. */
   def simhash(text: UTF8String, bits: Int): Long = {
     // split(text, ' ') semantics (regex limit -1: trailing empties kept;
@@ -667,19 +641,16 @@ object SimHashFunction {
     val toks = text.toString.split(" ", -1)
     val seen = new java.util.HashSet[String]()
     val counts = new Array[Int](bits)
-    val md = threadMd5.get()
     val n1 = math.min(bits, 32)
     var i = 0
     while (i < toks.length) {
       val t = toks(i)
       if (seen.add(t)) {
-        md.reset()
-        val d1 = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val d1 = Md5(t)
         var b = 0
         while (b < n1) { counts(b) += nibbleSign(d1, b); b += 1 }
         if (bits > 32) {
-          md.reset()
-          val d2 = md.digest(("x" + t).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          val d2 = Md5("x" + t)
           b = 32
           while (b < bits) { counts(b) += nibbleSign(d2, b - 32); b += 1 }
         }
@@ -1147,7 +1118,7 @@ final case class CmSketch(
   * (`WindowGroupLimit` pushes the rank limit below the shuffle), but the
   * window still fully SORTS every map partition below the partial limit —
   * O(n log n) per task vs this aggregate's O(n log k) heap with no sort
-  * (measured 4.2× faster at 50M rows, SketchBench leg 5) — and a window
+  * (measured 4.2× faster at 50M rows, NOTES_bench_mains.md) — and a window
   * result cannot re-aggregate: only the mergeable aggregate rolls STORED
   * per-shard samples up to the sample of the union without rescanning.
   * Downstream, the sampled payloads feed any statistic
@@ -1576,18 +1547,11 @@ final case class QhistMerge(
 }
 
 object KmvFunction {
-  private val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** First 60 bits of md5 as a non-negative long — identical to parsing
     * the digest's first 15 hex chars base 16 (the Bloom hash convention).
     */
   def hash60(s: UTF8String): Long = {
-    val d = md.get()
-    d.reset()
-    val dig = d.digest(s.getBytes)
+    val dig = Md5(s.getBytes)
     var h = 0L
     var i = 0
     while (i < 8) { h = (h << 8) | (dig(i) & 0xffL); i += 1 }
@@ -1713,13 +1677,11 @@ final case class AnchorGrams(child: Expression, k: Int, p: Int)
       seen.add(sb.toString)
       i += 1
     }
-    val md = AnchorGrams.threadMd5.get()
     val out = new java.util.ArrayList[AnyRef](seen.size() / p + 1)
     val it = seen.iterator()
     while (it.hasNext) {
       val gram = it.next()
-      md.reset()
-      val digest = md.digest(gram.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val digest = Md5(gram)
       if (((digest(15) & 0x0F) % p) == 0) out.add(UTF8String.fromString(gram))
     }
     new GenericArrayData(out.toArray)
@@ -1727,13 +1689,6 @@ final case class AnchorGrams(child: Expression, k: Int, p: Int)
 
   override protected def withNewChildInternal(newChild: Expression): AnchorGrams =
     copy(child = newChild)
-}
-
-object AnchorGrams {
-  private[sql] val threadMd5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 }
 
 /** Positional companion to [[AnchorGrams]] for SPAN-granular substring
@@ -1772,7 +1727,6 @@ final case class AnchorSpans(child: Expression, k: Int, p: Int)
     val text = input.asInstanceOf[UTF8String].toString
     val toks = text.split(" ", -1)
     val nGrams = math.max(toks.length - k + 1, 1)
-    val md = AnchorGrams.threadMd5.get()
     val verdict = new java.util.HashMap[String, java.lang.Boolean]()
     val out = new java.util.ArrayList[AnyRef](nGrams / p + 1)
     var i = 0
@@ -1788,8 +1742,7 @@ final case class AnchorSpans(child: Expression, k: Int, p: Int)
       val gram = sb.toString
       var sel = verdict.get(gram)
       if (sel == null) {
-        md.reset()
-        val digest = md.digest(gram.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val digest = Md5(gram)
         sel = java.lang.Boolean.valueOf(((digest(15) & 0x0F) % p) == 0)
         verdict.put(gram, sel)
       }
@@ -1859,13 +1812,11 @@ final case class WinnowGrams(child: Expression, k: Int, w: Int)
       grams(i) = sb.toString
       i += 1
     }
-    val md = WinnowGrams.threadMd5.get()
     val memo = new java.util.HashMap[String, String]() // identical grams hash once
     val hashes = grams.map { g =>
       var h = memo.get(g)
       if (h == null) {
-        md.reset()
-        h = WinnowGrams.hex(md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        h = Md5.hex(Md5(g))
         memo.put(g, h)
       }
       h
@@ -1944,13 +1895,11 @@ final case class WinnowSpans(child: Expression, k: Int, w: Int)
       grams(i) = sb.toString
       i += 1
     }
-    val md = AnchorGrams.threadMd5.get()
     val memo = new java.util.HashMap[String, String]()
     val hashes = grams.map { g =>
       var h = memo.get(g)
       if (h == null) {
-        md.reset()
-        h = WinnowGrams.hex(md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        h = Md5.hex(Md5(g))
         memo.put(g, h)
       }
       h
@@ -1991,15 +1940,28 @@ final case class WinnowSpans(child: Expression, k: Int, w: Int)
     copy(child = newChild)
 }
 
-object WinnowGrams {
-  private[sql] val threadMd5 = new ThreadLocal[java.security.MessageDigest] {
+/** MD5 for the hashing expressions: one digest per thread (a
+  * `MessageDigest` is stateful, and `getInstance` per row would dominate the
+  * hot loops) plus lowercase hex, matching Spark's `md5()` string form.
+  */
+private[graft] object Md5 {
+  private val digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
+  def apply(bytes: Array[Byte]): Array[Byte] = {
+    val md = digest.get()
+    md.reset()
+    md.digest(bytes)
+  }
+
+  /** MD5 of the string's UTF-8 bytes. */
+  def apply(s: String): Array[Byte] = apply(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
   private val HEX = "0123456789abcdef".toCharArray
 
-  private[sql] def hex(bytes: Array[Byte]): String = {
+  def hex(bytes: Array[Byte]): String = {
     val out = new Array[Char](bytes.length * 2)
     var i = 0
     while (i < bytes.length) {

@@ -51,10 +51,6 @@ object StreamCkpt {
     * session windows) — re-verified by the full oracle gate.
     */
   def statePartitions(spark: org.apache.spark.sql.SparkSession, inputPath: String): Int = {
-    sys.env.get("GRAFT_STREAM_STATE_PARTS") match {
-      case Some(v) => return v.toInt // measurement seam (Profile A/B only)
-      case None    => ()
-    }
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))

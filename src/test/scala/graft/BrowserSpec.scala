@@ -142,22 +142,6 @@ class BrowserSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(titles == Seq("Q1", "Q2")) // Q2's snapshot came from the aborted iteration
   }
 
-  test("Selenium factory is classpath-guarded: absent here, fails with guidance") {
-    import graft.agent.SeleniumDriverFactory
-    if (SeleniumDriverFactory.isAvailable) {
-      // environments WITH selenium on the classpath: the factory must build
-      // a real driver; same interpreter assertions as the mock (not run here)
-      succeed
-    } else {
-      val e = intercept[IllegalArgumentException](SeleniumDriverFactory().create())
-      assert(e.getMessage.contains("Selenium"))
-      // the factory itself is serializable for closure shipping either way
-      val out = new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream())
-      out.writeObject(SeleniumDriverFactory())
-      out.close()
-    }
-  }
-
   // --- W3C wire binding: the REAL remote binding against a protocol stub ---
 
   private def withStub[A](pages: Map[String, String])(f: (W3CStubServer, String) => A): A = {
@@ -185,6 +169,27 @@ class BrowserSpec extends AnyFunSuite with BeforeAndAfterEach {
       } finally b.close()
       assert(stub.openSessions == 0, "DELETE /session not honored")
       assert(stub.requestCount.get() > 0)
+    }
+  }
+
+  test("W3C wire client: keep-alive — one rollout incl. an error envelope runs over one connection") {
+    withStub(site) { (stub, endpoint) =>
+      val b = graft.agent.RemoteWebDriverFactory(endpoint).create()
+      try {
+        b.visit("mock://home")
+        // a W3C 4xx envelope is drained like a 2xx: the connection stays clean
+        val missing = intercept[graft.agent.WebDriverHttpBrowser.WebDriverException](
+          b.textInput("#does-not-exist", "x"))
+        assert(missing.getMessage.contains("404 no such element"))
+        b.textInput("input[name=q]", "spark")
+        b.submit("form")
+        assert(b.pageSource.contains("found spark"))
+        assert(new String(b.screenshot, "UTF-8") == "PNG-STUB:mock://search?q=spark")
+      } finally b.close()
+      assert(stub.openSessions == 0)
+      assert(stub.requestCount.get() > 10)
+      assert(stub.clientConnections == 1,
+        s"${stub.requestCount.get()} wire requests opened ${stub.clientConnections} connections")
     }
   }
 

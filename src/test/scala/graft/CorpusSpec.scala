@@ -398,6 +398,23 @@ class CorpusSpec extends AnyFunSuite {
     }
   }
 
+  test("label propagation: null-endpoint edges are dropped, as under the declarative inner join") {
+    val spark0 = spark
+    import spark0.implicits._
+    val ids = (0L to 3L).toDF("id")
+    val clean = Seq((0L, 1L), (1L, 2L), (2L, 0L), (0L, 3L))
+    val nulls = Seq[(Option[Long], Option[Long])]((Some(3L), None), (None, Some(1L)), (None, None))
+    val edges = (clean.map { case (a, b) => (Option(a), Option(b)) } ++ nulls).toDF("src", "dst")
+    def labels(df: DataFrame): Map[Long, Long] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val expected = labels(graft.queries.SimQ.labelPropagate(ids, clean.toDF("src", "dst"), 3))
+    assert(labels(graft.queries.SimQ.labelPropagate(ids, edges, 3)) == expected)
+    val viaPlan = (1 to 3).foldLeft(ids.select($"id", $"id".as("lbl"))) { (l, _) =>
+      graft.queries.SimQ.lpRound(edges)(l).drop("prev")
+    }
+    assert(labels(viaPlan) == expected)
+  }
+
   test("label propagation converge: ONE Spark job per round (scalar rides the materializing action)") {
     val spark0 = spark
     import spark0.implicits._

@@ -410,8 +410,8 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
     // 25 single-fetch rounds against the default foldEvery = 8: the exact
     // equality 2 + rounds + rounds/8 is the CI-level pin of the
     // O(1)-live-handles claim — an un-folded visited union (or any hidden
-    // per-round action) would add jobs and break it. CrawlBench asserts
-    // the same census at 100k pages / 68 rounds; this is its fast twin.
+    // per-round action) would add jobs and break it. The same census held
+    // at 100k pages / 68 rounds (NOTES_bench_mains.md); this is its fast twin.
     val n = 63
     (0 until n).foreach { i =>
       val kids = Seq(2 * i + 1, 2 * i + 2).filter(_ < n)
@@ -427,6 +427,7 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
     val ctx = new GraftContext(spark, GraftConf())
     import spark.implicits._
     val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
     sc.setJobGroup("bf-deep-census", "bf-deep-census", interruptOnCancel = false)
     val explored = ctx.create(Seq(s"file:$seed"))
       .exploreBestFirst(u => Trace.of(Wget(u)))(
@@ -438,6 +439,10 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(ctx.metrics.exploreRounds.value == 25)
     assert(jobs == 2 + 1 * 25 + 25 / 8,
       s"25 rounds at foldEvery 8 must run 2 + 25 + 3 jobs: got $jobs")
+    // only the eager output checkpoint stays persisted: frontiers, per-round
+    // keys and folded visited sets are all released
+    val leaked = sc.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.size <= 1, s"best-first leaked ${leaked.size} persisted RDDs: $leaked")
     assert(explored.dataset.count() == 25)
     assert(ctx.metrics.pagesFetched.value == 25)
   }

@@ -802,6 +802,26 @@ class LlmSpec extends AnyFunSuite {
       s"guarded pair volume must be bounded: $guarded vs $unguarded")
   }
 
+  test("semdedup sizing rule: fixed k quadruples the pair volume as n doubles; k scaled with n keeps cells bounded") {
+    val S = graft.llm.SemDedup
+    // formula vectors: a group center from id % g plus per-id jitter
+    def vectors(n: Long, g: Int) = spark.range(n).select(col("id").as("vec_id"), expr(
+      s"""transform(sequence(0, 15), j ->
+         |  (pmod(xxhash64((id % $g) * 131 + j), 1000) / 1000.0 - 0.5)
+         |  + (pmod(xxhash64(id * 31 + j), 1000) / 1000.0 - 0.5) * 1.4)""".stripMargin)
+      .as("embedding"))
+    def cellSizes(n: Long, k: Int): Seq[Long] = {
+      val q = S.quantize(vectors(n, k), "embedding").select(col("vec_id"), col("qv"))
+      S.assign(q, S.fit(q, "vec_id", k, 1)).groupBy(col("cluster")).count()
+        .collect().map(_.getLong(1)).toSeq
+    }
+    def pairs(cells: Seq[Long]): Long = cells.map(m => m * (m - 1)).sum
+    val pairRatio = pairs(cellSizes(2000, 8)).toDouble / pairs(cellSizes(1000, 8))
+    assert(pairRatio > 3.0 && pairRatio < 5.0, s"fixed-k pair volume must ~quadruple: $pairRatio")
+    val (cellHalf, cellFull) = (cellSizes(1000, 8).max, cellSizes(2000, 16).max)
+    assert(cellFull <= cellHalf * 2, s"scaled-k cells must stay bounded: $cellHalf -> $cellFull")
+  }
+
   test("semdedup: a Lloyd iteration never increases total within-cluster distance (exact ints)") {
     val q = graft.llm.SemDedup.quantize(
       spark.read.parquet(s"$sf/embeddings.parquet"), "embedding")

@@ -133,8 +133,8 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("sketch/sample/histogram aggregates ship bounded exchanges: shuffle write constant in input rows") {
-    // the 100 TB argument as a CI invariant (SketchBench measures it at
-    // 5M/50M rows; this pins it every run): the KMV sketch, the bottom-k
+    // the 100 TB argument as a CI invariant (measured at 5M/50M rows in
+    // NOTES_bench_mains.md; this pins it every run): the KMV sketch, the bottom-k
     // sample, the CM grid, and the one-hot histogram all collapse
     // map-side to fixed-size partial state, so the aggregation exchange
     // is groups x state — CONSTANT in corpus size. 10x the rows must not

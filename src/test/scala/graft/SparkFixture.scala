@@ -9,18 +9,7 @@ import java.nio.file.{Files, Path, Paths}
   */
 object SparkFixture {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkEntry.localSession(cpus = 4)
 
   val fixtureRoot: Path = Paths.get("target", "test-fixtures").toAbsolutePath
 

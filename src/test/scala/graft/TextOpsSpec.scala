@@ -512,8 +512,9 @@ class TextOpsSpec extends AnyFunSuite {
                            // at pos2 with bigram seen -> 0.4*bi
       (5L, "x x c")        // double-unseen context -> 0.16*uni
     ).toDF("doc_id", "text")
-    val got = TextQ.lmQuality(docs).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    val rows = TextQ.lmQuality(docs).collect()
+    assert(rows.length == 4, "one output row per doc")
+    val got = rows.map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     // doc 0: 1000000*2/6=333333 | bi(a,b)2/c1(a)2=1000000 | tri 1/2=500000 |
     //        tri(b,c,a)1/1 | tri(c,a,b)1/1 | tri(a,b,d)1/bi(a,b)2=500000
     assert(got(0L) == ((6L, 4333333L, 722222L)))

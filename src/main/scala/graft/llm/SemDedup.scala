@@ -428,8 +428,8 @@ object SemDedup {
 
   /** [[fit]] in the distributed regime: centroids are a (cid, cv, n2)
     * frame throughout, localCheckpointed per iteration (k rows — truncates
-    * the nested-broadcast lineage the way [[graft.scale.PageRank]] cadences
-    * its ranks). Callers pass a corpus ALREADY hash-partitioned on `idCol`
+    * the nested-broadcast lineage the way [[graft.scale.GraphLoop]] cuts
+    * its rounds). Callers pass a corpus ALREADY hash-partitioned on `idCol`
     * (and persisted) so every iteration is exchange-free for the vectors.
     *
     * Above `coarseMaxKd` ([[COARSE_MAX_KD]]) the bucketed-broadcast

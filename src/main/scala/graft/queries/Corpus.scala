@@ -168,15 +168,10 @@ object CorpusQ {
   private def gramPositions(docs: DataFrame): DataFrame = {
     // split once, md5 inside the transform: only 32-hex keys explode (the
     // q80 gram shape); distinct-on-hash == distinct-on-gram (shared md5)
-    // explode_outer + output-side null drop == explode minus the
-    // InferFiltersFromGenerate predicate, which would re-evaluate the whole
-    // per-position md5 transform inside the pushed-down scan filter (the
-    // q102/q53 disease; the gram array is never empty — sequence ≥ 1)
-    val g = docs.select(col("doc_id"), split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), explode_outer(expr(
+    val g = graft.scale.Layout.explodeNonNull(
+      docs.select(col("doc_id"), split(col("text"), " ").as("ts")), "doc_id", expr(
         """array_distinct(transform(sequence(1, greatest(size(ts) - 4, 1)),
-          |  i -> md5(concat_ws(' ', slice(ts, i, 5)))))""".stripMargin)).as("ghex"))
-      .filter(col("ghex").isNotNull)
+          |  i -> md5(concat_ws(' ', slice(ts, i, 5)))))""".stripMargin), "ghex")
     val Seq(p0, p1, p2) = Bloom.positionsFromHex(col("ghex"))
     g.select(col("doc_id"), p0.as("p0"), p1.as("p1"), p2.as("p2"))
   }
@@ -556,11 +551,8 @@ object CorpusQ {
     val grams8 = expr(
       """transform(sequence(1, greatest(size(ts) - 7, 1)),
         |  i -> array_join(slice(ts, i, 8), ' '))""".stripMargin)
-    // explode_outer + null drop: see gramPositions — keeps the expensive
-    // gram transform out of the inferred pushed-down filter
-    val r = docs.select(col("source"), split(col("text"), " ").as("ts"))
-      .select(col("source"), explode_outer(grams8).as("gram"))
-      .filter(col("gram").isNotNull)
+    val r = graft.scale.Layout.explodeNonNull(
+        docs.select(col("source"), split(col("text"), " ").as("ts")), "source", grams8, "gram")
       .select(col("source"), graft.functions.rolling_hash(col("gram")).as("r"))
     val minCols = (0 until 32).map(i =>
       min((lit((2 * i + 3).toLong) * col("r") + lit((11 * i + 7).toLong)) % 2147483647L)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.scale.GraphLoop
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -589,14 +590,18 @@ object SimQ {
     * data). The graph is synthesized from id formulas — every doc links to
     * `(7i+1) % n, (13i+3) % n, (31i+7) % n` as a MULTISET (outdeg exactly
     * 3, parallel edges kept) — so the DuckDB oracle can unroll the same
-    * three iterations as CTEs and hash-match rounded ranks.
+    * three iterations as CTEs and match rounded ranks.
     *
-    * Scale shape: each iteration is one shuffle (contribs groupBy dst) +
-    * a left join back onto the node set for dangling targets; ranks and
-    * edges hash-partition on the same id so AQE reuses the exchange. At
-    * 100 TB the edge table is the corpus link graph (q33's explore emits
-    * exactly that), iterations run until delta, and the rank join stays
-    * shuffle-hash — never broadcast (ranks are node-cardinality).
+    * Oracle tolerance (the whole PageRank family): ranks are rounded to 4
+    * places on both sides and `tools/check.py` compares them at atol 1e-9.
+    * Summation order is NOT pinned — each engine merges the rank sums in
+    * its own order, and those differences sit ~12 orders of magnitude
+    * inside the rounding.
+    *
+    * Scale shape: [[graft.scale.GraphLoop]] — edges are keyed by src
+    * once, and each iteration's one exchange is the per-dst rank reduce.
+    * At 100 TB the edge table is the corpus link graph (q33's explore emits
+    * exactly that) and iterations run until delta.
     */
   def q62Pagerank(spark: SparkSession, dir: String): DataFrame = {
     val ids = Tables.documents(spark, dir).select(col("doc_id").as("id"))
@@ -605,14 +610,9 @@ object SimQ {
         explode(array(
           (col("id") * 7 + 1) % n, (col("id") * 13 + 3) % n,
           (col("id") * 31 + 7) % n)).as("dst"))
-    // no checkpoint here: PageRank.run materializes the outdeg-annotated
-    // edge list itself — a second edge materialization would be pure waste
-    // the general operator ([[graft.scale.PageRank]]): this graph has no
-    // dangling nodes and tol=0, so the run stays PURE LINEAGE — Catalyst
-    // sees all three unrolled iterations and PlanAuditSpec audits their
-    // joins. outdeg is counted from the edge multiset (exactly 3 here);
-    // the oracle divides by the same 3. Both engines compute the teleport
-    // base as IEEE `1.0 - 0.85` (the oracle casts to DOUBLE for parity).
+    // outdeg is counted from the edge multiset (exactly 3 here); the
+    // oracle divides by the same 3. Both engines compute the teleport base
+    // as IEEE `1.0 - 0.85` (the oracle casts to DOUBLE for parity).
     graft.scale.PageRank.run(ids, edges, damping = 0.85, tol = 0.0, maxIter = 3)
       .ranks
       .select(col("id").as("doc_id"), round(col("pr"), 4).as("pr"))
@@ -630,10 +630,9 @@ object SimQ {
     * teleport base is IEEE `1.0 - 0.85` on both engines.
     *
     * Scale note: the dangling mass is ONE double per iteration collected
-    * at the driver (the PrefixSum/Bpe bounded-aggregate pattern); ranks
-    * are materialized per iteration through typed-RDD checkpoints whose
-    * predecessors release immediately — O(1) executor storage however
-    * many iterations run.
+    * at the driver by the fold that materializes the iteration (the
+    * PrefixSum/Bpe bounded-aggregate pattern); predecessors release
+    * immediately — O(1) executor storage however many iterations run.
     */
   def q64PagerankDangling(spark: SparkSession, dir: String): DataFrame = {
     val ids = Tables.documents(spark, dir).select(col("doc_id").as("id"))
@@ -658,36 +657,22 @@ object SimQ {
     * with no FP-order sensitivity — same oracle-design doctrine as the
     * canonical-state sketches.
     *
-    * Scale shape: each half-step is ONE shuffle (contribs groupBy the
-    * opposite endpoint) + a left join back onto the node set, identical to
-    * [[graft.scale.PageRank]]'s iteration; scores are node-cardinality so
-    * the join stays shuffle-hash, never broadcast. Unbounded iteration
-    * counts would checkpoint like PageRank's tol path; the fixed-k query
-    * form stays pure lineage for Catalyst (and PlanAuditSpec) to see.
+    * Scale shape: [[graft.scale.GraphLoop]] with the reversed index —
+    * the auth step pushes hubs along src-keyed edges, the hub step pushes
+    * authorities along dst-keyed ones; each half-step's one exchange is
+    * the per-receiver sum. Scores are (id, auth, hub).
     */
-  def hits(ids: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
+  def hits(ids: DataFrame, edges: DataFrame, iters: Int): GraphLoop.Result = {
     require(iters >= 1, s"hits: iters >= 1, got $iters")
-    val e = edges.select(col("src"), col("dst"))
-    var hub = ids.select(col("id"), lit(1L).as("hub"))
-    var auth: DataFrame = null
-    // every join carries hint("shuffle_hash"): iteration outputs are
-    // stat-less to Catalyst, and a size-blind SMJ would add a sort per
-    // half-step (the PageRank.run rule — see its scaladoc)
-    for (_ <- 1 to iters) {
-      auth = ids.join(
-          e.join(hub.hint("shuffle_hash"), e("src") === hub("id"))
-            .groupBy(col("dst")).agg(sum(col("hub")).as("a"))
-            .hint("shuffle_hash"),
-          ids("id") === col("dst"), "left")
-        .select(ids("id"), coalesce(col("a"), lit(0L)).as("auth"))
-      hub = ids.join(
-          e.join(auth.hint("shuffle_hash"), e("dst") === auth("id"))
-            .groupBy(col("src")).agg(sum(col("auth")).as("h"))
-            .hint("shuffle_hash"),
-          ids("id") === col("src"), "left")
-        .select(ids("id"), coalesce(col("h"), lit(0L)).as("hub"))
+    val spark = ids.sparkSession
+    import spark.implicits._
+    val g = new GraphLoop(ids, edges, reversed = true)
+    val (scores, _, _) = g.rounds(g.nodes((_, _) => (0L, 1L)), iters, None, 0L) { (ah, _) =>
+      val auth = g.push(ah, g.bySrc)(_._2)(_ + _, (v, in) => (in.getOrElse(0L), v._2))
+      g.push(auth.mapValues(_._1), g.byDst)(_._1)(_ + _, (v, in) => (v._1, in.getOrElse(0L)))
     }
-    auth.join(hub.hint("shuffle_hash"), "id")
+    g.result(scores.map { case (id, (a, h)) => (id, a, h) }.toDF("id", "auth", "hub"),
+      iters, Double.NaN)
   }
 
   /** q149 — HITS over a hierarchy-shaped formula graph: 2 exact power
@@ -712,7 +697,7 @@ object SimQ {
         .select(col("id").as("src"), expr("id DIV 2").as("dst")))
       .union(ids.filter(col("id") % 3 === 0)
         .select(col("id").as("src"), expr("id DIV 3").as("dst")))
-    val scores = hits(ids, edges, iters = 2)
+    val scores = hits(ids, edges, iters = 2).frame
     val totals = scores.agg(sum(col("auth")).as("sa"), sum(col("hub")).as("sh"))
     scores.crossJoin(broadcast(totals))
       .select(col("id").as("doc_id"),
@@ -731,14 +716,10 @@ object SimQ {
     * collapse into one community in a handful of rounds. At sf0.01 the
     * 500-node graph settles into 68 communities.
     *
-    * Scale shape (r22, the explicit-partitioner RDD loop — [[lpRoundRdd]]):
-    * labels and the src-keyed edge index are co-partitioned ONCE, so each
-    * round's contribution join and relabel join are narrow zipPartitions
-    * and the round's single exchange is the map-side-combined per-dst
-    * label count — edges never reshuffle after setup (the declarative
-    * formulation re-shuffled them every round). Labels stay (id, lbl)
-    * pairs — no driver state, no collect; for unbounded rounds the
-    * PageRank.run checkpoint cadence applies unchanged.
+    * Scale shape: [[graft.scale.GraphLoop]] — labels and the src-keyed
+    * edge index are co-partitioned once, and each round's one exchange is
+    * the map-side-combined per-dst label count (the declarative
+    * [[lpRound]] re-shuffled the edges every round).
     */
   def q90LabelProp(spark: SparkSession, dir: String): DataFrame = {
     val ids = Tables.documents(spark, dir).select(col("doc_id").as("id"))
@@ -747,15 +728,15 @@ object SimQ {
       explode(array(
         (col("id") * 7 + 1) % n, (col("id") * 13 + 3) % n,
         (col("id") * 31 + 7) % n)).as("dst"))
-    labelPropagate(ids, edges, 3).orderBy(col("id"))
+    labelPropagate(ids, edges, 3).frame.orderBy(col("id"))
   }
 
   /** One synchronous label-propagation round: relabel every node with the
     * MODE of its in-neighbors' labels (count desc, label asc — fully
     * deterministic; no in-edges → keep). Output carries the OLD label as
-    * `prev` so convergence loops can count changes without a second join;
-    * the declarative path prunes it. Shared by [[labelPropagate]] and
-    * [[labelPropagateConverge]] so the relabel rule can never fork.
+    * `prev` so convergence loops can count changes without a second join.
+    * The declarative reference that CorpusSpec holds [[labelPropagate]]
+    * to.
     */
   private[graft] def lpRound(edges: DataFrame)(labels: DataFrame): DataFrame = {
     val counts = edges
@@ -773,183 +754,56 @@ object SimQ {
         col("lbl").as("prev"))
   }
 
-  /** One RDD-level label-propagation round under an EXPLICIT partitioner
-    * (r22, optimization guide §2.4/§8 — VERDICT item 6): labels and the
-    * src-keyed edge index share `part`, so the contribution join and the
-    * relabel join are NARROW `zipPartitions` (neither labels nor edges
-    * reshuffle, ever) and the round's ONE exchange is the per-dst
-    * label-count combine — map-side combined, so it carries per-partition
-    * (dst, label)→count partials, not edges. The declarative [[lpRound]]
-    * paid 3-4 exchanges per round for the same facts (edges⋈labels, the
-    * count groupBy, the mode window, the relabel join); at graph scale the
-    * edge re-shuffle per round is the dominant cost this removes.
-    *
-    * Result-identical to [[lpRound]] BY ARITHMETIC, not by plan: counts
-    * are exact longs (order-independent merges) and the mode tie-break
-    * ((count desc, label asc) — here `c > bestC || (c == bestC && l <
-    * bestL)` over any iteration order) is the same deterministic rule.
-    * CorpusSpec pins RDD-vs-declarative parity on planted and formula
-    * graphs.
-    *
-    * Output values: (id, (newLabel, oldLabel)) — the old label rides along
-    * so the convergence loop's changed-count needs no second join.
-    */
-  private def lpRoundRdd(
-      labels: org.apache.spark.rdd.RDD[(Long, Long)],
-      edgesBySrc: org.apache.spark.rdd.RDD[(Long, Long)],
-      part: org.apache.spark.Partitioner)
-      : org.apache.spark.rdd.RDD[(Long, (Long, Long))] = {
-    val contrib = labels.zipPartitions(edgesBySrc) { (lit, eit) =>
-      val m = new scala.collection.mutable.LongMap[Long]()
-      lit.foreach { case (id, l) => m.update(id, l) }
-      eit.flatMap { case (src, dst) =>
-        if (m.contains(src)) Iterator.single((dst, m(src))) else Iterator.empty
-      }
-    }
-    val mode = contrib.combineByKey(
-      (l: Long) => {
-        val m = new scala.collection.mutable.LongMap[Long](); m.update(l, 1L); m
-      },
-      (m: scala.collection.mutable.LongMap[Long], l: Long) => {
-        m.update(l, m.getOrElse(l, 0L) + 1L); m
-      },
-      (a: scala.collection.mutable.LongMap[Long],
-       b: scala.collection.mutable.LongMap[Long]) => {
-        b.foreach { case (l, c) => a.update(l, a.getOrElse(l, 0L) + c) }; a
-      },
-      part)
-      .mapValues { m =>
-        var bestL = Long.MaxValue
-        var bestC = 0L
-        m.foreach { case (l, c) =>
-          if (c > bestC || (c == bestC && l < bestL)) { bestC = c; bestL = l }
-        }
-        bestL
-      }
-    labels.zipPartitions(mode, preservesPartitioning = true) { (lit, mit) =>
-      val m = new scala.collection.mutable.LongMap[Long]()
-      mit.foreach { case (id, l) => m.update(id, l) }
-      lit.map { case (id, old) => (id, (m.getOrElse(id, old), old)) }
-    }
-  }
-
-  /** (src-keyed edge index, initial self-labels) co-partitioned for
-    * [[lpRoundRdd]]. The edge index is persisted — every round re-reads it
-    * from executor blocks; its storage frees via the ContextCleaner when
-    * the result drops out of scope (the in-query norm).
-    */
-  private def lpSetup(ids: DataFrame, edges: DataFrame)
-      : (org.apache.spark.rdd.RDD[(Long, Long)],
-         org.apache.spark.rdd.RDD[(Long, Long)],
-         org.apache.spark.HashPartitioner) = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    // a null endpoint matches no label under lpRound's inner join: drop the
-    // edge here instead of failing to decode it into the unboxed tuple
-    val edgesRaw = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .as[(Long, Long)].rdd
-    // partitioner width derives from the EDGE INPUT's own scan parallelism
-    // (guide §2: partitioning from data size, not local cores, the
-    // ExploreExec rule): a narrow test graph stays 1-few partitions — no
-    // 32-empty-task rounds — while a production edge table whose scan
-    // shards clamps to defaultParallelism exactly as a shuffle would.
-    val part = new org.apache.spark.HashPartitioner(
-      math.max(1, math.min(spark.sparkContext.defaultParallelism,
-        edgesRaw.getNumPartitions)))
-    val edgesBySrc = edgesRaw.partitionBy(part)
-    edgesBySrc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val labels0 = ids.select(col("id").cast("long")).as[Long].rdd
-      .map(id => (id, id)).partitionBy(part)
-    (edgesBySrc, labels0, part)
-  }
-
   /** Core of [[q90LabelProp]] over any (id) / (src, dst) frames — the spec
-    * hand-verifies rounds on planted community graphs. Fixed round count
-    * over the RDD loop ([[lpRoundRdd]] — one exchange per round, edges
-    * never reshuffle; r22, replacing the declarative unroll whose every
-    * round paid 3-4 exchanges); every `checkpointEvery`-th round truncates
-    * lineage so plan depth stays bounded over long runs.
+    * hand-verifies rounds on planted community graphs. `rounds` synchronous
+    * rounds on [[graft.scale.GraphLoop]]: each node counts its in-neighbors'
+    * labels into a per-receiver map and takes the mode (count desc, label
+    * asc over any iteration order — [[lpRound]]'s rule; counts are exact
+    * longs, so the result matches the declarative unroll by arithmetic,
+    * and CorpusSpec pins the parity on random multigraphs). The frame is
+    * (id, lbl).
     */
-  def labelPropagate(ids: DataFrame, edges: DataFrame, rounds: Int,
-                     checkpointEvery: Int = 8): DataFrame = {
-    require(checkpointEvery >= 1, s"checkpointEvery must be >= 1: $checkpointEvery")
-    val spark = ids.sparkSession
-    val (edgesBySrc, labels0, part) = lpSetup(ids, edges)
-    var labels = labels0
-    var r = 0
-    while (r < rounds) {
-      r += 1
-      labels = lpRoundRdd(labels, edgesBySrc, part).mapValues(_._1)
-      if (r % checkpointEvery == 0 && r < rounds) labels.localCheckpoint()
-    }
-    val enc2 = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong)
-    spark.createDataset(labels)(enc2).toDF("id", "lbl")
-  }
-
-  /** @param labels (id, lbl) — materialized (checkpointed) final labels
-    * @param rounds rounds actually run — the first whose changed-count hit
-    *               zero, or `maxRounds`
-    * @param changedLast the final round's changed-node count (0 iff the
-    *               run converged)
-    */
-  final class LabelPropResult private[SimQ] (
-      val labels: DataFrame, val rounds: Int, val changedLast: Long,
-      handle: Option[org.apache.spark.rdd.RDD[_]]) {
-    /** Releases the final checkpoint blocks; `labels` must not be
-      * re-executed afterwards (the PageRank.Result contract). */
-    def release(): Unit = handle.foreach(_.unpersist(blocking = false))
-  }
+  def labelPropagate(ids: DataFrame, edges: DataFrame,
+                     rounds: Int): GraphLoop.Result =
+    labelLoop(ids, edges, rounds, None)
 
   /** [[labelPropagate]] with a CONVERGENCE STOP — run until a round changes
-    * no label (or `maxRounds`), the [[graft.scale.PageRank]] tol-path
-    * applied to community detection. Each round needs a per-round scalar
-    * (the changed count — one Long to the driver, the bounded-aggregate
-    * class), so labels materialize every round through a typed-RDD
-    * localCheckpoint and the PREVIOUS round's blocks release immediately:
-    * O(1) executor storage and flat lineage across any number of rounds,
-    * exactly PageRank's needScalars branch. The changed count IS the
-    * materializing action — one `aggregate` both populates the
-    * checkpoint blocks and returns the exact scalar (an action result,
-    * exactly-once), so each round launches ONE job, not a count() plus a
-    * second scalar pass (spec-pinned by a SparkListener job census).
-    * Synchronous LPA can 2-cycle on bipartite-ish structures and never
-    * converge — `maxRounds` bounds that honestly (callers read
-    * `changedLast > 0` as "stopped, not settled").
+    * no label (or `maxRounds`). The changed count is the loop's per-round
+    * tally, so each round launches ONE job (spec-pinned by a SparkListener
+    * census) and holds O(1) storage. `rounds` is the first round whose
+    * changed count hit zero, or `maxRounds`; `last` is that round's changed
+    * count. Synchronous LPA can 2-cycle on bipartite-ish structures and
+    * never converge — `maxRounds` bounds that honestly (callers read
+    * `last > 0` as "stopped, not settled").
     */
   def labelPropagateConverge(ids: DataFrame, edges: DataFrame,
-                             maxRounds: Int): LabelPropResult = {
+                             maxRounds: Int): GraphLoop.Result = {
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
+    labelLoop(ids, edges, maxRounds,
+      Some(GraphLoop.Tally[Long, Long](0L, (nw, old) => if (nw != old) 1L else 0L,
+        _ + _, _ == 0L)))
+  }
+
+  private def labelLoop(ids: DataFrame, edges: DataFrame, maxRounds: Int,
+      tally: Option[GraphLoop.Tally[Long, Long]]): GraphLoop.Result = {
+    type Counts = scala.collection.mutable.LongMap[Long]
     val spark = ids.sparkSession
-    // the RDD loop (r22): one exchange per round (the per-dst count
-    // combine), labels and edges co-partitioned so both joins are narrow —
-    // see lpRoundRdd. The census contract is unchanged: each round's
-    // changed-count rides the SAME rdd.aggregate that populates the
-    // round's localCheckpoint blocks — exactly ONE job per round
-    // (CorpusSpec's SparkListener census), and the previous round's
-    // blocks release immediately (O(1) executor storage).
-    val (edgesBySrc, labels0, part) = lpSetup(ids, edges)
-    var labels = labels0
-    var prevCp: org.apache.spark.rdd.RDD[_] = null
-    var r = 0
-    var changed = Long.MaxValue
-    while (r < maxRounds && changed != 0L) {
-      r += 1
-      val next = lpRoundRdd(labels, edgesBySrc, part)
-      next.localCheckpoint()
-      changed = next.aggregate(0L)(
-        (acc, t) => if (t._2._1 != t._2._2) acc + 1L else acc, _ + _)
-      if (prevCp != null) prevCp.unpersist(blocking = false)
-      prevCp = next
-      labels = next.mapValues(_._1)
+    import spark.implicits._
+    val g = new GraphLoop(ids, edges)
+    val (labels, r, changed) = g.rounds(g.nodes((id, _) => id), maxRounds, tally, 0L) {
+      (l, _) => g.push(l, g.bySrc)(lbl => { val m = new Counts(); m.update(lbl, 1L); m })(
+        (a, b) => { b.foreach { case (k, c) => a.update(k, a.getOrElse(k, 0L) + c) }; a },
+        (old, in) => in.fold(old) { m =>
+          var bestL = Long.MaxValue
+          var bestC = 0L
+          m.foreach { case (k, c) =>
+            if (c > bestC || (c == bestC && k < bestL)) { bestC = c; bestL = k }
+          }
+          bestL
+        })
     }
-    edgesBySrc.unpersist(blocking = false) // labels is checkpoint-backed now
-    val enc2 = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong)
-    new LabelPropResult(spark.createDataset(labels)(enc2).toDF("id", "lbl"),
-      r, changed, Option(prevCp))
+    g.result(labels.toDF("id", "lbl"), r,
+      if (tally.isDefined) changed.toDouble else Double.NaN)
   }
 
   /** q95 — label propagation with the CONVERGENCE STOP oracle-gated, the
@@ -971,13 +825,13 @@ object SimQ {
       .union(ids.filter(col("id") % 8 >= 2)
         .select((col("id") - 2).as("src"), col("id").as("dst")))
     val res = labelPropagateConverge(ids, edges, maxRounds = 6)
-    res.labels
+    res.frame
       .select(col("id").as("doc_id"), col("lbl"), lit(res.rounds.toLong).as("rounds"))
       .orderBy(col("doc_id"))
   }
 
   /** q69 — PageRank EARLY-EXIT convergence (tol > 0), the one
-    * [[graft.scale.PageRank]] path q62 (pure lineage, tol = 0) and q64
+    * [[graft.scale.PageRank]] path q62 (no scalars, tol = 0) and q64
     * (dangling scalars, tol = 0) leave spec-only: the run stops at the
     * first iteration whose L1 delta Σ|pr' − pr| falls under tol, and the
     * output pins BOTH the converged ranks and the iteration count. The

@@ -330,18 +330,12 @@ object TextQ {
 
   /** The q80 operator over any (lang, text) frame. */
   def dupProfile(input: DataFrame): DataFrame = {
-    // explode_outer + output-side null drop == explode (empty arrays emit
-    // one null row, dropped here) minus the InferFiltersFromGenerate
-    // predicate that would re-run the per-position md5 transform inside the
-    // pushed-down scan filter (the q102/q53 disease)
-    val docs = input
-      .select(col("lang"), split(col("text"), " ").as("toks"))
-      .select(col("lang"), explode_outer(expr(
+    val docs = graft.scale.Layout.explodeNonNull(
+      input.select(col("lang"), split(col("text"), " ").as("toks")), "lang", expr(
         """CASE WHEN size(toks) >= 8
           |THEN transform(sequence(1, size(toks) - 7),
           |  i -> md5(concat_ws(' ', slice(toks, i, 8))))
-          |ELSE array() END""".stripMargin)).as("gram"))
-      .filter(col("gram").isNotNull)
+          |ELSE array() END""".stripMargin), "gram")
     docs.groupBy(col("lang"), col("gram"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("lang"))
@@ -385,9 +379,7 @@ object TextQ {
       * Input needs (lang, text).
       */
     def train(docs: DataFrame, profileSize: Int = 64): DataFrame = {
-      val counts = docs
-        .select(col("lang"), explode_outer(trigrams("text")).as("tri"))
-        .filter(col("tri").isNotNull) // == explode, minus the inferred filter
+      val counts = graft.scale.Layout.explodeNonNull(docs, "lang", trigrams("text"), "tri")
         .groupBy(col("lang"), col("tri")).agg(count(lit(1)).as("n"))
         .persist() // read by three aggregates below
       // totals as AGGREGATE JOINS, not windows: sum().over() with no
@@ -430,9 +422,8 @@ object TextQ {
       * the lexicographically first language — deterministic).
       */
     def predict(docs: DataFrame, profiles: DataFrame): DataFrame = {
-      val scored = docs
-        .select(col("doc_id"), explode_outer(array_distinct(trigrams("text"))).as("tri"))
-        .filter(col("tri").isNotNull) // == explode, minus the inferred filter
+      val scored = graft.scale.Layout
+        .explodeNonNull(docs, "doc_id", array_distinct(trigrams("text")), "tri")
         .join(broadcast(profiles), Seq("tri"))
         .groupBy(col("doc_id"), col("p_lang"))
         .agg(sum(col("weight")).as("score"))
@@ -562,15 +553,13 @@ object TextQ {
     // split ONCE into a column (r21): the previous form re-evaluated
     // split(text) inside the transform lambda — once per gram position,
     // quadratic in document length (lambda bodies are not hoisted).
-    // Identical gram strings. explode_outer + null drop == explode minus
-    // the InferFiltersFromGenerate duplicate (the q102/q53 disease).
+    // Identical gram strings.
     val grams = expr(
       """transform(sequence(1, greatest(size(ts) - 4, 1)),
         |  i -> array_join(slice(ts, i, 5), ' '))""".stripMargin)
-    val g = docs
-      .select(col("doc_id"), split(col("text"), " ").as("ts"))
-      .select(col("doc_id"), explode_outer(array_distinct(grams)).as("gram"))
-      .filter(col("gram").isNotNull)
+    val g = graft.scale.Layout.explodeNonNull(
+        docs.select(col("doc_id"), split(col("text"), " ").as("ts")),
+        "doc_id", array_distinct(grams), "gram")
       .select(col("doc_id"), md5(col("gram")).as("gh"))
     val evalG = g.filter(col("doc_id") % 50 === 0)
       .select(col("doc_id").as("eval_id"), col("gh"))
@@ -740,22 +729,8 @@ object TextQ {
     * (the substring-family analog of [[SimQ.bandIndex]]).
     */
   def anchorIndex(docs: DataFrame, k: Int = 12, p: Int = 4): DataFrame =
-    // explode_outer + output-side null drop == explode, minus the
-    // InferFiltersFromGenerate predicate that plain explode triggers: that
-    // inferred `size(anchor_grams(text)) > 0` is pushed into the scan
-    // filter and evaluates the whole anchor pass a second time per
-    // document (the q102 disease; the output-side filter cannot sink below
-    // the Generate because `gram` does not exist there).
-    // INVARIANT the row-identity rests on (ADVICE r21), here and at every
-    // other explode_outer+isNotNull site: the generator's ELEMENTS are
-    // never null (md5/array_join/substring/anchor_grams all emit non-null
-    // strings), so the only nulls the outer join introduces are the
-    // empty/null-ARRAY placeholder rows the filter drops. A generator that
-    // could emit null elements would have those rows silently dropped
-    // where plain explode kept them — don't reuse this pattern for one.
-    docs.select(col("doc_id"),
-        explode_outer(graft.functions.anchor_grams(col("text"), k, p)).as("gram"))
-      .filter(col("gram").isNotNull)
+    graft.scale.Layout.explodeNonNull(
+      docs, "doc_id", graft.functions.anchor_grams(col("text"), k, p), "gram")
 
   /** Winnowed variant of [[anchorIndex]] — selection by sliding min-hash
     * window instead of mod-p, making detection of shared spans ≥ w+k−1

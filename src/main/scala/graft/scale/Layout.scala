@@ -4,13 +4,27 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Physical-layout utilities for the 100 TB shapes the query pack relies on
   * (SURVEY §4 / prompt: "bucketing for co-located joins, salting for skew").
   */
 object Layout {
+
+  /** `explode(gen)` next to column `keep`, written as `explode_outer` plus
+    * an output-side null drop. The two are row-identical, but plain
+    * `explode` lets InferFiltersFromGenerate add `size(gen) > 0`, which is
+    * pushed into the scan filter and evaluates the whole generator a second
+    * time per row (the q102/q53 disease); the output-side filter cannot
+    * sink below the Generate because `name` does not exist there.
+    * INVARIANT the row identity rests on: `gen` never emits null ELEMENTS,
+    * so the only nulls are the empty/null-array placeholder rows the filter
+    * drops. Don't use it for a generator that can emit null elements.
+    */
+  private[graft] def explodeNonNull(df: DataFrame, keep: String, gen: Column,
+                                    name: String): DataFrame =
+    df.select(col(keep), explode_outer(gen).as(name)).filter(col(name).isNotNull)
 
   /** Persist `df` bucketed+sorted on `keys` so future joins/aggregations on
     * those keys are SHUFFLE-FREE: both sides of a bucketed-bucketed

@@ -1,8 +1,6 @@
 package graft.scale
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** General PageRank over an arbitrary edge list — the real operator behind
   * q62's closed-form gate (reference: the crawl-graph link-authority signal;
@@ -15,38 +13,18 @@ import org.apache.spark.sql.functions._
   * is redistributed uniformly instead of leaking (the standard fix; without
   * it total mass decays every iteration on any graph with sinks). Parallel
   * edges are kept as a multiset (a page linking twice contributes twice) —
-  * the q62 convention.
+  * the q62 convention. Edges with a null endpoint are dropped before
+  * out-degrees are counted, so they leak no mass.
   *
-  * Scale shape: outdeg is joined onto the edge list ONCE before the loop
-  * (edge-scale localCheckpoint, released on return); each iteration is one
-  * shuffle-hash contribs join + groupBy(dst) + a left join back onto the
-  * node set — ranks are node-cardinality so neither side ever broadcasts,
-  * and every iterative join carries `hint("shuffle_hash")` because
-  * checkpointed inputs have no stats (the q53/q62 discipline — the static
-  * planner would silently fall back to sort-merge).
-  *
-  * Checkpointing: when the loop needs per-iteration scalars (dangling mass
-  * or a convergence delta), ranks are eagerly materialized each iteration
-  * through a typed-RDD localCheckpoint and the PREVIOUS iteration's blocks
-  * are released immediately — O(1) executor storage across any number of
-  * iterations (the ExploreExec epoch-hygiene discipline). The scalars ride
-  * the materializing `rdd.aggregate` itself — the dangling flag is a
-  * column of the rank vector and the previous ranks a lineage column — so
-  * every scalar-needing regime launches exactly ONE Spark job per
-  * iteration (census-pinned); the FIRST iteration's dangling mass is
-  * `nDangling · 1.0` by construction and needs no job at all. When no scalars
-  * are needed (no dangling nodes, tol = 0), iterations stay PURE LINEAGE
-  * and only every `checkpointEvery`-th iteration truncates — so a short
-  * fixed-iteration run like q62 remains fully declarative (Catalyst sees
-  * the whole multi-iteration plan; PlanAuditSpec audits its joins). The
-  * EDGE index is a plain DataFrame localCheckpoint (a typed-RDD round
-  * trip would pay an encoder pass over the whole edge table just to be
-  * releasable); its blocks free via the ContextCleaner once the Result is
-  * unreferenced — only the node-scale rank checkpoints, the thing that
-  * actually accumulates over a long run, get the eager-release treatment.
-  *
-  * Driver-side state: one Double per iteration (dangling mass / delta) —
-  * the bounded-aggregate pattern of PrefixSum/Bpe, never row data.
+  * Runs on [[GraphLoop]]: one setup job counts the nodes and the dangling
+  * ones while it materializes the (pr, outdeg) vector and the src-keyed
+  * edge index; each iteration is one push (one exchange). When the loop
+  * needs per-iteration scalars (dangling mass or a convergence delta), both
+  * ride the one fold that materializes the iteration — ONE Spark job
+  * per iteration (census-pinned); the first iteration's dangling mass is
+  * `nDangling · 1.0` by construction and needs no job at all. Without
+  * scalars (no dangling nodes, tol = 0) iterations stay lineage, cut on the
+  * loop's constant cadence.
   *
   * @param nodes distinct node ids, column `id` (castable to long)
   * @param edges directed links, columns `src`, `dst`; dst ids outside
@@ -57,162 +35,38 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  /** @param ranks (id, pr) — materialized when the run checkpointed,
-    *              otherwise pure lineage over the inputs
-    * @param iterations iterations actually run
-    * @param delta final Σ|pr' - pr| (NaN when tol = 0 — never computed)
+  /** `ranks` is (id, pr); `delta` is the final Σ|pr' - pr|, NaN when
+    * tol = 0 (never a stop criterion).
     */
-  final class Result private[PageRank] (
-      val ranks: DataFrame, val iterations: Int, val delta: Double,
-      handles: Seq[RDD[_]]) {
-    /** Releases executor storage still held for `ranks` (the final
-      * checkpoint blocks, if any). Call after consuming `ranks`; the
-      * DataFrame must not be re-executed afterwards.
-      */
-    def release(): Unit = handles.foreach(_.unpersist(blocking = false))
-  }
+  type Result = GraphLoop.Result
 
   def run(nodes: DataFrame, edges: DataFrame, damping: Double = 0.85,
-          tol: Double = 0.0, maxIter: Int = 20,
-          checkpointEvery: Int = 5): Result = {
+          tol: Double = 0.0, maxIter: Int = 20): Result = {
     require(damping > 0 && damping < 1, s"damping must be in (0,1): $damping")
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    require(checkpointEvery >= 1, s"checkpointEvery must be >= 1: $checkpointEvery")
     val spark = nodes.sparkSession
-    val ids = nodes.select(col("id").cast("long").as("id"))
-    val n = ids.count()
+    import spark.implicits._
+    val g = new GraphLoop(nodes, edges)
+    val init = g.nodes((_, deg) => (1.0, deg))
+    val (n, nDangling) = g.materialize(init)((0L, 0L))(
+      (a, kv) => (a._1 + 1L, if (kv._2._2 == 0) a._2 + 1L else a._2),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
     require(n > 0, "pagerank needs a non-empty node set")
     val base = 1.0 - damping
 
-    val tupleEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
-    val tuple3Enc = Encoders.tuple(
-      Encoders.scalaLong, Encoders.scalaDouble, Encoders.scalaDouble)
-    val tupleDEnc = Encoders.tuple(
-      Encoders.scalaLong, Encoders.scalaDouble, Encoders.scalaBoolean)
-    val tuple4Enc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble,
-      Encoders.scalaDouble, Encoders.scalaBoolean)
-
-    // out-degree rides the edge list once; the loop never recounts it.
-    // Plain DataFrame localCheckpoint (no typed-RDD round trip — an
-    // encoder pass over the EDGE table is the dominant setup cost at
-    // graph scale): the blocks are freed by the ContextCleaner when the
-    // Result drops out of scope, the accepted in-query norm. Only the
-    // node-scale per-iteration rank checkpoints use the releasable
-    // typed-RDD form — those are what accumulate over a long run.
-    val deg = edges.groupBy(col("src"))
-      .agg(count(lit(1)).cast("double").as("outdeg"))
-    val withDeg = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .join(deg.hint("shuffle_hash"), Seq("src"))
-      .localCheckpoint() // edge-scale, materialized once, read per iteration
-    // dangling count without a second edge pass: emitters = distinct srcs
-    // (assumes src ⊆ nodes — the crawl-graph invariant; a foreign src
-    // would contribute rank it never held)
-    val nDangling = n - withDeg.select(col("src")).distinct().count()
-    // when dangling nodes exist, the per-node flag rides the RANK VECTOR
-    // itself (built once, node-scale, checkpointed): the next iteration's
-    // dangling mass then falls out of THIS iteration's materializing
-    // aggregate — one Spark job per iteration, not a mass job plus a
-    // materialization (the labelPropagateConverge discipline)
-    val idsD =
-      if (nDangling == 0) null
-      else ids.join(
-          withDeg.select(col("src").as("id")).distinct()
-            .withColumn("em", lit(true)).hint("shuffle_hash"),
-          Seq("id"), "left_outer")
-        .select(col("id"), (!coalesce(col("em"), lit(false))).as("dang"))
-        .localCheckpoint()
-    // scalars force a materialized rank vector every iteration; without
-    // them the loop stays declarative and only truncates on the cadence
-    val needScalars = nDangling > 0 || tol > 0
-
-    var ranks = ids.select(col("id"), lit(1.0).as("pr"))
-    // initial ranks are EXACTLY 1.0 each, so the first iteration's mass
-    // needs no job: Σ over dangling nodes of 1.0 is exact in any order
-    var dm = nDangling.toDouble
-    var prevCp: RDD[_] = null
-    var iter = 0
-    var delta = Double.NaN
-    var converged = false
-    while (iter < maxIter && !converged) {
-      iter += 1
-      val contribs = withDeg
-        .join(ranks.hint("shuffle_hash"), withDeg("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("pr") / col("outdeg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("inflow"))
-      val inflowTotal = coalesce(col("inflow"), lit(0.0)) +
-        (if (nDangling == 0) lit(0.0) else lit(dm / n))
-      val pr2 = (lit(base) + lit(damping) * inflowTotal).as("pr")
-      var next = (if (nDangling == 0) ids else idsD)
-        .join(contribs.hint("shuffle_hash"), Seq("id"), "left_outer")
-        .select(col("id") +: pr2 +:
-          (if (nDangling == 0) Seq.empty else Seq(col("dang"))): _*)
-      if (needScalars || iter % checkpointEvery == 0) {
-        // typed-RDD checkpoint: materializes + truncates lineage AND hands
-        // us the RDD so the previous epoch's blocks release NOW. In every
-        // scalar-needing regime the scalars (convergence delta and/or next
-        // dangling mass) ride the SAME rdd.aggregate that populates the
-        // checkpoint blocks — exactly one job per iteration.
-        if (tol > 0 && nDangling > 0) {
-          val rdd4 = next.as("b")
-            .join(ranks.as("a").hint("shuffle_hash"), col("a.id") === col("b.id"))
-            .select(col("b.id"), col("b.pr"), col("a.pr").as("prev"), col("b.dang"))
-            .as[(Long, Double, Double, Boolean)](tuple4Enc).rdd
-          rdd4.localCheckpoint()
-          val (d, m) = rdd4.aggregate((0.0, 0.0))(
-            (acc, t) => (acc._1 + math.abs(t._2 - t._3),
-              acc._2 + (if (t._4) t._2 else 0.0)),
-            (a, b) => (a._1 + b._1, a._2 + b._2))
-          delta = d; dm = m
-          converged = delta <= tol
-          next = spark.createDataset(rdd4)(tuple4Enc)
-            .toDF("id", "pr", "prev", "dang").drop("prev")
-          if (prevCp != null) prevCp.unpersist(blocking = false)
-          prevCp = rdd4
-        } else if (tol > 0) {
-          // the delta scalar IS the materializing action: the previous
-          // ranks ride the lineage as a third column (the same
-          // shuffle-hash join the old separate delta job ran — moved
-          // inside, so the iteration launches ONE job instead of a
-          // count() plus a delta pass), and one rdd.aggregate both
-          // populates the checkpoint blocks and returns Σ|pr' − pr|
-          val rdd3 = next.as("b")
-            .join(ranks.as("a").hint("shuffle_hash"), col("a.id") === col("b.id"))
-            .select(col("b.id"), col("b.pr"), col("a.pr").as("prev"))
-            .as[(Long, Double, Double)](tuple3Enc).rdd
-          rdd3.localCheckpoint()
-          delta = rdd3.aggregate(0.0)(
-            (acc, t) => acc + math.abs(t._2 - t._3), _ + _)
-          converged = delta <= tol
-          next = spark.createDataset(rdd3)(tuple3Enc)
-            .toDF("id", "pr", "prev").drop("prev")
-          if (prevCp != null) prevCp.unpersist(blocking = false)
-          prevCp = rdd3
-        } else if (nDangling > 0) {
-          // next iteration's dangling mass rides the materialization
-          val rddD = next.as[(Long, Double, Boolean)](tupleDEnc).rdd
-          rddD.localCheckpoint()
-          dm = rddD.aggregate(0.0)(
-            (acc, t) => acc + (if (t._3) t._2 else 0.0), _ + _)
-          next = spark.createDataset(rddD)(tupleDEnc).toDF("id", "pr", "dang")
-          if (prevCp != null) prevCp.unpersist(blocking = false)
-          prevCp = rddD
-        } else {
-          val rdd = next.as[(Long, Double)](tupleEnc).rdd
-          rdd.localCheckpoint()
-          rdd.count()
-          next = spark.createDataset(rdd)(tupleEnc).toDF("id", "pr")
-          if (prevCp != null) prevCp.unpersist(blocking = false)
-          prevCp = rdd
-        }
-      }
-      ranks = next
+    // (Σ|pr' - pr|, dangling mass); initial ranks are EXACTLY 1.0 each, so
+    // the first iteration's mass is exact in any summation order
+    val tally =
+      if (nDangling == 0 && tol <= 0) None
+      else Some(GraphLoop.Tally[(Double, Int), (Double, Double)]((0.0, 0.0),
+        (nw, old) => (math.abs(nw._1 - old._1), if (nw._2 == 0) nw._1 else 0.0),
+        (a, b) => (a._1 + b._1, a._2 + b._2),
+        s => tol > 0 && s._1 <= tol))
+    val (ranks, iters, last) = g.rounds(init, maxIter, tally, (Double.NaN, nDangling.toDouble)) {
+      (pr, s) => g.push(pr, g.bySrc)(v => v._1 / v._2)(_ + _,
+        (v, in) => (base + damping * (in.getOrElse(0.0) + s._2 / n), v._2))
     }
-    // rank-checkpoint blocks hand over to release(); the edge index (a
-    // DataFrame localCheckpoint) frees via the ContextCleaner once the
-    // Result is unreferenced. Callers see the (id, pr) contract — the
-    // dangling flag is loop plumbing.
-    val outRanks = if (nDangling == 0) ranks else ranks.select(col("id"), col("pr"))
-    new Result(outRanks, iter, delta, Option(prevCp).toSeq)
+    g.result(ranks.map { case (id, (pr, _)) => (id, pr) }.toDF("id", "pr"), iters,
+      if (tol > 0) last._1 else Double.NaN)
   }
 }

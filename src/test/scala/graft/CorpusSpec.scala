@@ -333,7 +333,7 @@ class CorpusSpec extends AnyFunSuite {
       (3L, 4L), (4L, 5L), (5L, 3L), (3L, 5L), (5L, 4L), (4L, 3L),
       (0L, 6L), (3L, 6L))
     val got = graft.queries.SimQ.labelPropagate(ids.toDF("id"), tri.toDF("src", "dst"), 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      .frame.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // round 1: each triangle node takes the min of its two in-labels;
     // by round 3 both cliques sit on their component min
     assert(Set(0L, 1L, 2L).forall(got(_) == 0L), s"clique A must converge to 0: $got")
@@ -353,23 +353,23 @@ class CorpusSpec extends AnyFunSuite {
     val edges = (ids.filter($"id" % 8 >= 1).select(($"id" - 1).as("src"), $"id".as("dst")))
       .union(ids.filter($"id" % 8 >= 2).select(($"id" - 2).as("src"), $"id".as("dst")))
     val res = graft.queries.SimQ.labelPropagateConverge(ids, edges, maxRounds = 20)
-    val got = res.labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val got = res.frame.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(res.rounds == 5, s"must stop at the detection round, not maxRounds: ${res.rounds}")
-    assert(res.changedLast == 0L)
+    assert(res.last == 0.0)
     assert((0L to 7L).forall(got(_) == 0L) && (8L to 15L).forall(got(_) == 8L),
       s"groups must converge to their leaders: $got")
     // parity with the declarative unroll at the converged round count
     val unrolled = graft.queries.SimQ.labelPropagate(ids, edges, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      .frame.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(unrolled == got)
     res.release()
 
     // a 2-cycle (bipartite oscillation) must NOT converge: maxRounds
-    // bounds it and changedLast stays > 0
+    // bounds it and the last changed count stays > 0
     val osc = graft.queries.SimQ.labelPropagateConverge(
       (0L to 1L).toDF("id"), Seq((0L, 1L), (1L, 0L)).toDF("src", "dst"), maxRounds = 4)
-    assert(osc.rounds == 4 && osc.changedLast > 0L,
-      s"oscillator must exhaust maxRounds: ${osc.rounds}, ${osc.changedLast}")
+    assert(osc.rounds == 4 && osc.last > 0.0,
+      s"oscillator must exhaust maxRounds: ${osc.rounds}, ${osc.last}")
     osc.release()
   }
 
@@ -387,7 +387,7 @@ class CorpusSpec extends AnyFunSuite {
       val ids = (0L until n.toLong).toDF("id")
       val rounds = 1 + rnd.nextInt(4)
       val viaRdd = graft.queries.SimQ.labelPropagate(ids, edges, rounds)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+        .frame.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       val viaPlan = (1 to rounds)
         .foldLeft(ids.select($"id", $"id".as("lbl"))) { (l, _) =>
           graft.queries.SimQ.lpRound(edges)(l).drop("prev")
@@ -407,8 +407,8 @@ class CorpusSpec extends AnyFunSuite {
     val edges = (clean.map { case (a, b) => (Option(a), Option(b)) } ++ nulls).toDF("src", "dst")
     def labels(df: DataFrame): Map[Long, Long] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val expected = labels(graft.queries.SimQ.labelPropagate(ids, clean.toDF("src", "dst"), 3))
-    assert(labels(graft.queries.SimQ.labelPropagate(ids, edges, 3)) == expected)
+    val expected = labels(graft.queries.SimQ.labelPropagate(ids, clean.toDF("src", "dst"), 3).frame)
+    assert(labels(graft.queries.SimQ.labelPropagate(ids, edges, 3).frame) == expected)
     val viaPlan = (1 to 3).foldLeft(ids.select($"id", $"id".as("lbl"))) { (l, _) =>
       graft.queries.SimQ.lpRound(edges)(l).drop("prev")
     }
@@ -430,7 +430,7 @@ class CorpusSpec extends AnyFunSuite {
       sc.setJobGroup("lp-census", "lp-census", interruptOnCancel = false)
       val res = graft.queries.SimQ.labelPropagateConverge(ids, edges, maxRounds = 20)
       sc.clearJobGroup()
-      assert(res.rounds == 5 && res.changedLast == 0L)
+      assert(res.rounds == 5 && res.last == 0.0)
       Thread.sleep(1000) // listener bus drains async
       val jobs = sc.statusTracker.getJobIdsForGroup("lp-census").length
       assert(jobs == res.rounds,

@@ -4,7 +4,7 @@ import graft.actions.{Mock, Trace, TraceSet, Wget}
 import graft.agent.{DriverFactory, Env}
 import graft.conf.GraftConf
 import graft.doc.{Doc, DocUID, Observation, Trajectory}
-import graft.exec.{ExploredRow, ExploreExec, ExploreParams, FetchedRow, FetchExec, Locality, Metrics}
+import graft.exec.{ExploredRow, ExploreExec, FetchedRow, FetchExec, Locality, Metrics}
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
@@ -256,7 +256,8 @@ final class DataView[D](val dataset: Dataset[D], val ctx: GraftContext)(
   /** Bounded BFS: `seed` starts each row's traversal, `next` expands each
     * fetched row into child traces+payloads; depth range `[minDepth,
     * maxDepth)` (reference `recursively(range).explore(fn)` semantics).
-    * Lineage is cut every epoch (see [[graft.exec.ExploreExec]]).
+    * Lineage is cut every [[graft.exec.ExploreExec.LevelsPerEpoch]] levels
+    * (see [[graft.exec.ExploreExec]]).
     */
   /** An implicit `Ordering[D]`, when available, makes the per-trace winning
     * payload fully deterministic (ADVICE r4; matches the reference's minBy);
@@ -265,15 +266,12 @@ final class DataView[D](val dataset: Dataset[D], val ctx: GraftContext)(
     */
   def explore(seed: D => Trace)(next: FetchedRow[D] => Seq[(Trace, D)],
               minDepth: Int = 0, maxDepth: Int = Int.MaxValue,
-              epochInterval: Int = 0,
               layout: graft.exec.FetchLayout = graft.exec.FetchLayout.ByKey)(
               implicit ord: Ordering[D] = null): ExploredView[D] = {
     implicit val pairEnc: Encoder[(Trace, D)] = Encoders.kryo[(Trace, D)]
     val seeds = dataset.map(d => (seed(d), d))
-    val params = ExploreParams(minDepth, maxDepth, epochInterval, layout)
-    new ExploredView(
-      ExploreExec.explore(dataset.sparkSession, seeds, next, ctx.env, params,
-        Option(ord)), ctx)
+    new ExploredView(ExploreExec.explore(dataset.sparkSession, seeds, next, ctx.env,
+      minDepth, maxDepth, layout, Option(ord)), ctx)
   }
 
   /** Best-first traversal under a fetch budget: like [[explore]] but each
@@ -289,16 +287,12 @@ final class DataView[D](val dataset: Dataset[D], val ctx: GraftContext)(
       fetchBudget: Long,
       batchSize: Int = 64,
       minDepth: Int = 0, maxDepth: Int = Int.MaxValue,
-      layout: graft.exec.FetchLayout = graft.exec.FetchLayout.ByKey,
-      foldEvery: Int = 8)(
+      layout: graft.exec.FetchLayout = graft.exec.FetchLayout.ByKey)(
       implicit ord: Ordering[D] = null): ExploredView[D] = {
     implicit val pairEnc: Encoder[(Trace, D)] = Encoders.kryo[(Trace, D)]
     val seeds = dataset.map(d => (seed(d), d))
-    val params = ExploreParams(minDepth, maxDepth, layout = layout,
-      foldEvery = foldEvery)
-    new ExploredView(
-      ExploreExec.exploreBestFirst(dataset.sparkSession, seeds, next, ctx.env,
-        priority, fetchBudget, batchSize, params, Option(ord)), ctx)
+    new ExploredView(ExploreExec.exploreBestFirst(dataset.sparkSession, seeds, next, ctx.env,
+      priority, fetchBudget, batchSize, minDepth, maxDepth, layout, Option(ord)), ctx)
   }
 
   // -- export (reference DataView.scala:33-47)

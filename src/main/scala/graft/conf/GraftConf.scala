@@ -85,20 +85,15 @@ object DownSampling {
   * @param blobOffloadBytes   inline-body size threshold for offload;
   *                           Long.MaxValue = "unset" → defaults to 1 MiB
   *                           whenever a blob dir is available
-  * @param checkpointDir        when set, explore's per-epoch lineage cuts use
-  *                             RELIABLE checkpoints (survive executor loss —
-  *                             the fault-tolerant mode for multi-hour crawls;
-  *                             reference TemporaryRefs cycle) on a cadence
-  * @param checkpointEveryEpochs reliable-checkpoint cadence; localCheckpoint
-  *                             (fast, block-replicated) between them
-  * @param exploreEpochInterval BFS levels explore chains lazily into ONE
-  *                             Spark job between materialized epoch cuts
-  *                             (reference SpookyConf.exploreEpochInterval —
-  *                             its unit is per-partition fetch iterations,
-  *                             ours whole level-synchronous levels, keeping
-  *                             dedup exact). Higher = less per-job driver
-  *                             latency for shallow crawls; lower = fresher
-  *                             epoch counts on explosive fan-out
+  * @param checkpointDir      when set, every lineage cut explore takes
+  *                           (one per BFS epoch of
+  *                           [[graft.exec.ExploreExec.LevelsPerEpoch]] levels,
+  *                           one per best-first round) is a RELIABLE
+  *                           checkpoint here (survives executor loss — the
+  *                           fault-tolerant mode for multi-hour crawls;
+  *                           reference TemporaryRefs cycle); unset =
+  *                           localCheckpoint. The visited-key fold riding
+  *                           each cut is always a localCheckpoint
   */
 final case class GraftConf(
     cacheEnabled: Boolean = true,
@@ -115,8 +110,6 @@ final case class GraftConf(
     blobDir: Option[String] = None,
     blobOffloadBytes: Long = Long.MaxValue,
     checkpointDir: Option[String] = None,
-    checkpointEveryEpochs: Int = 8,
-    exploreEpochInterval: Int = 8,
     /** Minimum ms between remote fetch STARTS against one host, per
       * executor JVM ([[graft.agent.HostPoliteness]]); 0 = off. Cache hits
       * never wait.

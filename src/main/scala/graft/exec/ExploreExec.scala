@@ -2,14 +2,14 @@ package graft.exec
 
 import graft.actions.Trace
 import graft.agent.{Agent, Env}
-import graft.conf.GraftConf
 import graft.doc.Trajectory
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
+import scala.collection.mutable.Buffer
 import scala.reflect.ClassTag
 
 /** One visited row of a recursive traversal: the fetched row plus its BFS
@@ -17,137 +17,97 @@ import scala.reflect.ClassTag
   */
 final case class ExploredRow[D](row: FetchedRow[D], depth: Int) extends Serializable
 
-/** Depth-bounded recursion parameters (reference
-  * `recursively(range, pathPlanning, epochInterval, checkpointInterval)`).
+/** The flagship operator: bounded traversal of the implicit crawl graph
+  * (vertices = canonical traces, edges = "fetching A yields trace B") —
+  * reference execution/ExplorePlan.scala:53-228 + ExploreRunner.scala:20-319.
+  * As in the reference, breadth-first ([[explore]]) and best-first
+  * ([[exploreBestFirst]]) are two orderings (PathPlanning) over ONE epoch
+  * loop, here the [[Frontier]] steps: fetch, unvisited, cut, finish.
+  *
   * Depth semantics `[minDepth, maxDepth)`: traversal expands while
   * `depth < maxDepth`; output keeps `minDepth <= depth < maxDepth`
   * (reference ExploreRunner.scala:72-129, ExplorePlan.scala:170-185).
   *
-  * @param epochInterval BFS levels chained lazily into ONE Spark job between
-  *                      materialized cuts; 0 = use
-  *                      [[GraftConf.exploreEpochInterval]]. The analog of the
-  *                      reference's `epochInterval` (ExplorePlan.scala:60,
-  *                      SpookyConf.scala:64) — its unit is fetch iterations
-  *                      per partition between shuffles; ours is whole
-  *                      level-synchronous BFS levels per job, which keeps the
-  *                      visited-set EXACT while still amortizing per-job
-  *                      driver latency.
-  * @param layout PLACEMENT of frontier fetches (r11 verdict #1: the crawl is
-  *               the operator that actually hammers hosts). Default ByKey
-  *               keeps the frontier on the shared trace-key partitioner —
-  *               fetch stays narrow. [[FetchLayout.ByHost]] re-places each
-  *               frontier by host before fetching, the same placement
-  *               [[FetchExec.fetch]] honors, so the per-JVM
-  *               [[graft.agent.HostPoliteness]] min-interval guarantee holds
-  *               cluster-globally at <= salt x the configured per-host rate;
-  *               costs one frontier-sized shuffle per level (trace + payload,
-  *               never fetched content) plus a keys-only shuffle restoring
-  *               trace-key alignment for the visited-set difference.
-  */
-final case class ExploreParams(
-    minDepth: Int = 0,
-    maxDepth: Int = Int.MaxValue,
-    epochInterval: Int = 0,
-    layout: FetchLayout = FetchLayout.ByKey,
-    /** Best-first visited-key fold cadence (rounds between merges of the
-      * recent per-round key RDDs into the single localCheckpointed
-      * accumulator — see the FoldEvery note in [[ExploreExec
-      * .exploreBestFirst]]). Live RDD handles stay O(foldEvery); each fold
-      * is a keys-only job amortized over foldEvery rounds — raise it when
-      * rounds are cheap relative to a keys materialization, lower it when
-      * per-round task-setup cost (rounds × partitions) dominates.
-      */
-    foldEvery: Int = 8
-)
-
-/** The flagship operator: bounded breadth-first traversal of the implicit
-  * crawl graph (vertices = canonical traces, edges = "fetching A yields
-  * trace B") — reference execution/ExplorePlan.scala:53-228 +
-  * ExploreRunner.scala:20-319, re-expressed as a partitioner-aligned RDD
-  * level chain (this is the one operator where imperative per-partition
-  * logic genuinely beats the DataFrame API — SURVEY §7.5).
-  *
   * Differences we embrace: the visited set is EXACT and distributed —
   * frontier keys are dropped by a co-partitioned set-difference against all
   * visited keys — instead of the reference's best-effort per-JVM
-  * ExploreLocalCache. Because expansion is strictly level-by-level, the
-  * first visit of a key is automatically its minimum depth (the reference
-  * needs a per-lineage min-depth reducer for this —
-  * PathPlanning_Simple.scala:24-49).
+  * ExploreLocalCache. Because BFS expands strictly level by level, the first
+  * visit of a key is automatically its minimum depth (the reference needs a
+  * per-lineage min-depth reducer for this — PathPlanning_Simple.scala:24-49).
   *
   * EXPLORE IS KEYED BY TRACE: one output row per visited canonical trace,
   * exactly like the reference's BreadthFirst reducer, which selects a SINGLE
   * winning lineage per key (`candidates.minBy(min depth, min ordinal)` —
-  * PathPlanning_Simple.scala:36-46). Rows that reach the same trace with
-  * different payloads collapse to one; the winner here is deterministic for
-  * naturally-ordered payload types (minimum — mirroring the reference's
-  * minBy), first-seen otherwise. Payloads should therefore be derivable from
-  * the trace; if you need results fanned back to EVERY origin row, use
-  * `fetch()`, which preserves all rows.
+  * PathPlanning_Simple.scala:36-46). Rows that reach the same trace collapse
+  * to one: the higher score wins (best-first; BFS scores are constant), then
+  * the minimum payload under the caller's `Ordering` when one is given, else
+  * the minimum of naturally-ordered payloads, else the first seen (see
+  * [[Winner]]). Payloads should therefore be derivable from the trace; if
+  * you need results fanned back to EVERY origin row, use `fetch()`, which
+  * preserves all rows.
   *
   * == The 100 TB shape ==
   *
   * Everything in the loop shares ONE `HashPartitioner` on the canonical
-  * trace key, which buys three structural properties:
+  * trace key:
   *
-  *  1. '''One shuffle per BFS level, total.''' A level is: expand children
+  *  1. '''One shuffle per BFS level.''' A level is: expand children
   *     (narrow) → `reduceByKey` winner-dedup (the shuffle) → co-partitioned
   *     set-difference against visited keys (narrow `zipPartitions`) → fetch
-  *     (narrow `mapPartitions` — the frontier is already one row per key, so
-  *     no second dedup shuffle is needed, unlike routing through
-  *     FetchExec.fetch). Visited keys are cached per-partition block RDDs
-  *     that are NEVER re-shuffled — the former DataFrame `left_anti` join
-  *     re-exchanged the whole visited set every epoch.
-  *  1. '''k levels per job''' (`epochInterval`): levels chain lazily —
+  *     (narrow `mapPartitions`; the frontier is already one row per key).
+  *     Only keys, traces and payloads move — never fetched content.
+  *  1. '''[[LevelsPerEpoch]] levels per job.''' BFS levels chain lazily:
   *     each level's fetched rows are block-cached (MEMORY_AND_DISK) and feed
-  *     the next level in the same DAG, so one job materializes k levels.
-  *     The shuffle chain is strictly linear: every stage narrow-depends on
-  *     the previous level's cache, stages execute in order, and each fetch
-  *     runs exactly once (no forked sibling stages racing to compute a
-  *     cached fetch partition). Per-epoch driver latency — the dominant cost
-  *     of shallow-and-wide crawls — is paid once per k levels instead of
-  *     twice per level.
-  *  1. '''Bounded plans.''' At each epoch boundary the frontier is
-  *     localCheckpoint-ed (or reliably checkpointed to
-  *     [[GraftConf.checkpointDir]] on the [[GraftConf.checkpointEveryEpochs]]
-  *     cadence — the multi-hour-crawl mode; executor loss replays at most
-  *     one epoch of doc-cache-warm fetches), so lineage never exceeds k
-  *     levels and the count that gates the loop rides the same job.
+  *     the next level in the same DAG, so one job materializes an epoch and
+  *     each fetch runs exactly once. Best-first rounds are one job each
+  *     (priority order is a global decision).
+  *  1. '''Bounded plans and storage.''' Each epoch or round ends in ONE cut
+  *     job that marks the frontier (reliably checkpointed to
+  *     [[graft.conf.GraftConf.checkpointDir]] when set — the multi-hour-crawl
+  *     mode, where executor loss replays at most one epoch of fetches —
+  *     else `localCheckpoint`), folds the visited keys into one
+  *     `localCheckpoint`ed RDD, and returns the loop's per-partition tally.
+  *     Lineage never exceeds one epoch and the visited keys stay one RDD.
   */
 object ExploreExec {
 
-  // RDD combinators want ClassTags; payloads are opaque (kryo-encoded at the
-  // Dataset boundary), so erased AnyRef tags are the honest choice
-  private implicit def anyTag[T]: ClassTag[T] = ClassTag.AnyRef.asInstanceOf[ClassTag[T]]
+  /** BFS levels chained lazily into one Spark job between cuts (the analog
+    * of the reference's `epochInterval`, ExplorePlan.scala:60, whose unit is
+    * per-partition fetch iterations; ours is whole levels, which keeps the
+    * visited set exact while amortizing per-job driver latency).
+    */
+  val LevelsPerEpoch = 8
 
-  private type OpenRow[D] = (String, (Trace, D, Int))
-
-  /** @param winnerOrdering when supplied, the per-key winning payload is
-    *        `min` by THIS ordering — fully deterministic for any payload
-    *        type; absent, naturally-ordered (Comparable) payloads take
-    *        their minimum and opaque payloads fall back to first-seen
-    *        (partition-order dependent — see [[winner]]).
+  /** Level-synchronous BFS.
+    *
+    * @param layout PLACEMENT of frontier fetches. Default ByKey keeps the
+    *        frontier on the shared trace-key partitioner — fetch stays narrow.
+    *        [[FetchLayout.ByHost]] re-places each frontier by host before
+    *        fetching, the same placement [[FetchExec.fetch]] honors, so the
+    *        per-JVM [[graft.agent.HostPoliteness]] min-interval guarantee
+    *        holds cluster-globally at <= salt x the configured per-host rate;
+    *        costs one frontier-sized shuffle per level (trace + payload,
+    *        never fetched content) plus a keys-only shuffle restoring
+    *        trace-key alignment for the visited-set difference.
+    * @param winnerOrdering when supplied, the per-key winning payload is
+    *        `min` by THIS ordering — fully deterministic for any payload type.
     */
   def explore[D](
       spark: SparkSession,
       seeds: Dataset[(Trace, D)],
       next: FetchedRow[D] => Seq[(Trace, D)],
       env: Env,
-      params: ExploreParams = ExploreParams(),
+      minDepth: Int = 0,
+      maxDepth: Int = Int.MaxValue,
+      layout: FetchLayout = FetchLayout.ByKey,
       winnerOrdering: Option[Ordering[D]] = None
   ): Dataset[ExploredRow[D]] = {
-
     implicit val exploredEnc: Encoder[ExploredRow[D]] = Encoders.kryo[ExploredRow[D]]
-
-    val conf: GraftConf = env.conf
-    val maxDepth = math.min(params.maxDepth, conf.maxExploreDepth)
-    if (maxDepth <= 0) return spark.emptyDataset[ExploredRow[D]]
-    val epochInterval = math.max(1,
-      if (params.epochInterval > 0) params.epochInterval else conf.exploreEpochInterval)
-
+    val depthCap = math.min(maxDepth, env.conf.maxExploreDepth)
+    if (depthCap <= 0) return spark.emptyDataset[ExploredRow[D]]
     val sc = spark.sparkContext
-    val down = conf.downSampling
-    conf.checkpointDir.foreach(sc.setCheckpointDir)
+    val f = new Frontier[D](sc, new HashPartitioner(sc.defaultParallelism), layout, env,
+      depthCap, next, (_, _) => 0.0, winnerOrdering)
 
     val debug = sys.env.get("GRAFT_EXPLORE_DEBUG").contains("true")
     var tEpoch = System.nanoTime()
@@ -157,148 +117,32 @@ object ExploreExec {
       tEpoch = t
     }
 
-    val partitioner = new HashPartitioner(sc.defaultParallelism)
-    val layout = params.layout
-
-    val win: ((Trace, D, Int), (Trace, D, Int)) => (Trace, D, Int) =
-      winnerOrdering match {
-        case Some(ord) => (a, b) => if (ord.compare(a._2, b._2) <= 0) a else b
-        case None      => new NaturalWinner[D]
-      }
-
-    // all fetched-row RDDs (one per level) and their keys-only projections;
-    // both partitioner-aligned and block-cached, flat-unioned narrowly
-    val visitedParts = scala.collection.mutable.Buffer.empty[RDD[ExploredRow[D]]]
-    val visitedKeyParts = scala.collection.mutable.Buffer.empty[RDD[String]]
-    // every epoch-cut frontier is persisted (explicitly before a reliable
-    // checkpoint, implicitly by localCheckpoint); tracked so the blocks are
-    // released on return
-    val persistedFrontiers = scala.collection.mutable.Buffer.empty[RDD[OpenRow[D]]]
-
-    /** Fetch one deduped, unvisited frontier: one row per key. Under the
-      * default ByKey layout the frontier is already partitioner-aligned and
-      * the whole step is narrow. Under ByHost the frontier is re-placed by
-      * (host, salt) first — see [[ExploreParams.layout]] — and the keys-only
-      * projection is shuffled BACK to the shared trace-key partitioner so
-      * the visited-set zipPartitions difference stays co-partitioned.
-      */
-    def fetchLevel(frontier: RDD[OpenRow[D]]): RDD[ExploredRow[D]] = {
-      val placed = layout match {
-        case FetchLayout.ByKey => frontier
-        case _ =>
-          frontier
-            .map { case (k, v) =>
-              (FetchLayout.partitionOf(layout, k, v._1, partitioner.numPartitions), (k, v))
-            }
-            .partitionBy(new IndexPartitioner(partitioner.numPartitions))
-            .map(_._2)
-      }
-      val fetched = placed.mapPartitions({ it =>
-        it.map { case (k, (t, d, depth)) =>
-          ExploredRow(FetchedRow(d, k, t, Trajectory(Agent.execute(t, env))), depth)
-        }
-      }, preservesPartitioning = true)
-      fetched.persist(StorageLevel.MEMORY_AND_DISK)
-      visitedParts += fetched
-      val keys = layout match {
-        case FetchLayout.ByKey =>
-          fetched.mapPartitions(_.map(_.row.traceKey), preservesPartitioning = true)
-        case _ =>
-          fetched.map(r => (r.row.traceKey, ()))
-            .partitionBy(partitioner)
-            .mapPartitions(_.map(_._1), preservesPartitioning = true)
-      }
-      keys.persist(StorageLevel.MEMORY_AND_DISK)
-      visitedKeyParts += keys
-      fetched
-    }
-
-    /** One lazy BFS level: fetch the frontier, expand children, winner-dedup
-      * (the level's single shuffle), co-partitioned visited-set difference.
-      */
-    def oneLevel(frontier: RDD[OpenRow[D]]): RDD[OpenRow[D]] = {
-      val fetched = fetchLevel(frontier)
-      val children: RDD[OpenRow[D]] = fetched.flatMap { r =>
-        if (r.depth + 1 >= maxDepth) Nil
-        else down(next(r.row)).map { case (t, d) => (t.cacheKey, (t, d, r.depth + 1)) }
-      }
-      val deduped = children.reduceByKey(partitioner, win)
-      // visited keys share the partitioner => sc.union is a
-      // PartitionerAwareUnionRDD and the set-difference is narrow
-      val visited = sc.union(visitedKeyParts.toSeq)
-      deduped.zipPartitions(visited, preservesPartitioning = true) { (it, vis) =>
-        val set = new java.util.HashSet[String]()
-        while (vis.hasNext) set.add(vis.next())
-        it.filter(r => !set.contains(r._1))
-      }
-    }
-
-    var epoch = 0
-
-    /** Epoch boundary: truncate lineage + materialize + count in ONE job.
-      * localCheckpoint by default; a RELIABLE checkpoint (persist first, so
-      * the checkpoint write re-reads blocks instead of re-running fetches)
-      * on the configured cadence.
-      */
-    def cutCount(rdd: RDD[OpenRow[D]]): Long = {
-      if (conf.checkpointDir.isDefined &&
-          epoch % math.max(1, conf.checkpointEveryEpochs) == 0) {
-        rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.checkpoint()
-      } else rdd.localCheckpoint() // localCheckpoint PERSISTS the RDD too
-      // every epoch frontier holds executor storage (both branches) until the
-      // release block below — track them all or repeated crawls leak blocks
-      persistedFrontiers += rdd
-      rdd.count()
-    }
-
-    var frontier: RDD[OpenRow[D]] = seeds.rdd
-      .map { case (t, d) => (t.cacheKey, (t, d, 0)) }
-      .reduceByKey(partitioner, win)
-    var openCount = cutCount(frontier)
+    var frontier = f.seed(seeds)
+    var openCount = f.cut(frontier, new OpenCount[D]).sum
     mark(s"seed-cut (open=$openCount)")
-
     // level-synchronous invariant: after `level` total levels, every frontier
-    // row is at exactly that depth — so past maxDepth the frontier is
+    // row is at exactly that depth — so past depthCap the frontier is
     // provably empty and the chain can stop early
     var level = 0
-    while (openCount > 0 && level < maxDepth) {
-      var chained = 0
+    while (openCount > 0 && level < depthCap) {
       // levels chain LAZILY inside an epoch, so the frontier can empty
-      // mid-epoch without the driver knowing until the epoch cut; a
-      // per-level task-side accumulator (zero extra jobs — it rides the
-      // epoch job) lets exploreRounds count only levels that actually
-      // processed a row, instead of crediting the trailing empty levels
-      val levelRows = scala.collection.mutable.ArrayBuffer.empty[
-        org.apache.spark.util.LongAccumulator]
-      while (chained < epochInterval && level < maxDepth) {
+      // mid-epoch without the driver knowing until the cut; a per-level
+      // task-side accumulator (riding the cut job) lets exploreRounds count
+      // only levels that actually processed a row
+      val levelRows = Buffer.empty[org.apache.spark.util.LongAccumulator]
+      while (levelRows.size < LevelsPerEpoch && level < depthCap) {
         val acc = sc.longAccumulator(s"graft.explore.level$level.rows")
         levelRows += acc
         val counted = frontier.mapPartitions(
           it => it.map { r => acc.add(1); r }, preservesPartitioning = true)
-        frontier = oneLevel(counted)
+        frontier = f.unvisited(f.children(f.fetch(counted)))
         level += 1
-        chained += 1
       }
-      epoch += 1
-      openCount = cutCount(frontier)
+      openCount = f.cut(frontier, new OpenCount[D]).sum
       env.metrics.exploreRounds.add(levelRows.count(_.value > 0))
       mark(s"epoch-cut (levels=$level open=$openCount)")
     }
-
-    val all =
-      if (visitedParts.isEmpty) spark.emptyDataset[ExploredRow[D]]
-      else spark.createDataset(sc.union(visitedParts.toSeq))
-    val out = all.filter(_.depth >= params.minDepth).localCheckpoint(true)
-    // the eager checkpoint above materialized the output into its own blocks:
-    // every per-level cache (fetched rows + keys-only projections) and any
-    // reliable-checkpoint frontier persist can be released NOW, not when the
-    // session dies — repeated explores in one session must not accumulate
-    // executor storage.
-    visitedParts.foreach(_.unpersist(blocking = false))
-    visitedKeyParts.foreach(_.unpersist(blocking = false))
-    persistedFrontiers.foreach(_.unpersist(blocking = false))
-    out
+    f.finish(spark, minDepth)
   }
 
   /** Best-first (priority-scored) traversal under an explicit FETCH BUDGET —
@@ -312,21 +156,17 @@ object ExploreExec {
     * must spend a bounded fetch budget on the most valuable frontier first
     * (focused crawling, recrawl-by-staleness, link-authority ordering).
     *
-    * Structure shared with BFS explore: exact co-partitioned visited set
-    * (an open key is dropped the moment it's fetched anywhere), winning
-    * payload per key, maxDepth bound, per-round lineage cuts with
-    * end-of-run block release. Differences: a row's depth is its DISCOVERY
-    * depth (no level invariant — a high-score deep node can be visited
-    * before a low-score shallow one), and rounds are inherently
-    * sequential (priority order is a global decision; `fetchBudget /
-    * batchSize` bounds the round count — batch against driver latency).
+    * A row's depth is its DISCOVERY depth (no level invariant — a
+    * high-score deep node can be visited before a low-score shallow one),
+    * and rounds are sequential (`fetchBudget / batchSize` bounds the round
+    * count — batch against driver latency).
     *
     * Driver-side state per round: `batchSize` (score, key) pairs per
     * partition, merged — the reference's selectNextOpen made BOUNDED;
-    * payloads never reach the driver. Scores must be total (no NaN).
-    * Each round runs exactly ONE Spark job: the frontier-cut action's
-    * zipPartitions pass also harvests the next selection and the budget
-    * census (census-pinned — see ExploreSpec).
+    * payloads never reach the driver, and the selected keys ride the next
+    * stage's task binary. Scores must be total (no NaN). Each round runs
+    * exactly ONE Spark job: the cut also harvests the next selection and the
+    * budget census ([[RoundStats]]; census-pinned — see ExploreSpec).
     */
   def exploreBestFirst[D](
       spark: SparkSession,
@@ -336,18 +176,17 @@ object ExploreExec {
       priority: (Trace, D) => Double,
       fetchBudget: Long,
       batchSize: Int = 64,
-      params: ExploreParams = ExploreParams(),
+      minDepth: Int = 0,
+      maxDepth: Int = Int.MaxValue,
+      layout: FetchLayout = FetchLayout.ByKey,
       winnerOrdering: Option[Ordering[D]] = None
   ): Dataset[ExploredRow[D]] = {
-
     implicit val exploredEnc: Encoder[ExploredRow[D]] = Encoders.kryo[ExploredRow[D]]
     require(fetchBudget >= 1, s"fetchBudget must be >= 1: $fetchBudget")
     require(batchSize >= 1, s"batchSize must be >= 1: $batchSize")
-    val conf: GraftConf = env.conf
-    val maxDepth = math.min(params.maxDepth, conf.maxExploreDepth)
-    if (maxDepth <= 0) return spark.emptyDataset[ExploredRow[D]]
+    val depthCap = math.min(maxDepth, env.conf.maxExploreDepth)
+    if (depthCap <= 0) return spark.emptyDataset[ExploredRow[D]]
     val sc = spark.sparkContext
-    val down = conf.downSampling
     // partitioner width scales with the REQUESTED crawl size, not the local
     // core count (guide §2: partitioning must be scale-adaptive): the open
     // set is O(fetchBudget × branching) keys and every per-round stage runs
@@ -360,261 +199,248 @@ object ExploreExec {
     // must not serialize 8 network fetches onto 2 tasks).
     val width = math.max(1L, math.min(sc.defaultParallelism.toLong,
       math.max(batchSize.toLong, (fetchBudget + 7) / 8))).toInt
-    val partitioner = new HashPartitioner(width)
-    val layout = params.layout
-
-    type Scored = (String, (Trace, D, Int, Double))
-    // higher score wins a key collision; equal scores fall to the payload
-    // winner (ordering when given, else first-seen — the BFS convention)
-    val winS: ((Trace, D, Int, Double), (Trace, D, Int, Double)) => (Trace, D, Int, Double) =
-      (a, b) =>
-        if (a._4 > b._4) a
-        else if (b._4 > a._4) b
-        else winnerOrdering match {
-          case Some(ord) => if (ord.compare(a._2, b._2) <= 0) a else b
-          case None      => a
-        }
+    val f = new Frontier[D](sc, new HashPartitioner(width), layout, env,
+      depthCap, next, priority, winnerOrdering)
     val selOrd: Ordering[(Double, String)] =
       Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.String)
-
-    val visitedParts = scala.collection.mutable.Buffer.empty[RDD[ExploredRow[D]]]
-    val persistedFrontiers = scala.collection.mutable.Buffer.empty[RDD[Scored]]
-
-    // Visited keys, FOLDED (r11 verdict #2): best-first rounds are many by
-    // design (fetchBudget / batchSize), so an ever-growing union of one
-    // keys RDD per round would cost O(rounds × parts) task setup per round
-    // — O(rounds²) over the crawl — and carry O(rounds) live handles.
-    // Instead: at most `FoldEvery` recent per-round key RDDs stay live;
-    // every FoldEvery rounds they merge into ONE localCheckpointed
-    // accumulator (a narrow PartitionerAwareUnion — everything shares
-    // `partitioner`) and the folded handles release. Per-round cost stays
-    // O(visited) with O(1) live handles; the fold's own materialization is
-    // a keys-only job amortized over FoldEvery rounds. Cadence is an
-    // [[ExploreParams]] knob (r19 verdict #6).
-    val FoldEvery = params.foldEvery
-    require(FoldEvery >= 1, s"foldEvery must be >= 1: $FoldEvery")
-    var foldedKeys: RDD[String] = null
-    val recentKeys = scala.collection.mutable.Buffer.empty[RDD[String]]
-    def allVisitedKeys: Seq[RDD[String]] = Option(foldedKeys).toSeq ++ recentKeys
-    def foldVisited(): Unit = {
-      val merged = sc.union(allVisitedKeys)
-      merged.localCheckpoint()
-      merged.count()
-      allVisitedKeys.foreach(_.unpersist(blocking = false))
-      recentKeys.clear()
-      foldedKeys = merged
-    }
-
-    // ONE action per round (r21 optimization): the unfused loop ran THREE
-    // driver-synchronized jobs per round — a takeOrdered selection over the
-    // open set, a budget census count over the fetched batch, and the
-    // frontier-cut count — and at batchSize 1 the crawl is pure
-    // driver-latency, so jobs-per-round IS the operator's unit cost. All
-    // three statistics are computable in a single pass over the new open
-    // frontier zipped with the (cached, co-partitioned) fetched batch:
-    // per-partition (open count, bounded top-batchSize (score, key) heap,
-    // non-blocked fetch count), merged on the driver. The merged top list
-    // is the NEXT round's selection — identical to takeOrdered over the
-    // same RDD (selOrd is total: unique keys break score ties), and the
-    // driver state stays batchSize (score, key) pairs per partition, the
-    // same bounded class as before.
-    // a standalone Serializable function object (the NaturalWinner
-    // discipline) — a local def would lambda-lift onto the (non-
-    // serializable) ExploreExec module and poison the closure
     val stats = new RoundStats[D](batchSize, selOrd)
-    /** Cut + census in one job: localCheckpoints `rdd`, and returns
-      * (open count, merged top-batchSize selection, non-robots-blocked
-      * fetch count of `fetched` — 0 when absent). The fetched batch is
-      * cached and co-partitioned with `rdd`, so zipping it into the same
-      * action costs nothing beyond the iteration.
-      */
-    def cutStats(rdd: RDD[Scored], fetched: Option[RDD[ExploredRow[D]]])
-        : (Long, Seq[(Double, String)], Long) = {
-      rdd.localCheckpoint()
-      persistedFrontiers += rdd
-      // collect() under the object's erased anyTag builds an Object[] — cast
-      // per element (each IS the tuple), never the array itself
-      val raw: Array[AnyRef] = (fetched match {
-        case Some(f) => rdd.zipPartitions(f)((o, t) => stats.withFetched(o, t))
-        case None    => rdd.mapPartitions(o => stats.openOnly(o))
-      }).asInstanceOf[RDD[AnyRef]].collect()
-      val parts = raw.iterator
-        .map(_.asInstanceOf[(Long, Seq[(Double, String)], Long)]).toSeq
-      (parts.map(_._1).sum,
-        parts.iterator.flatMap(_._2).toSeq.sorted(selOrd).take(batchSize),
+    def cut(open: RDD[Open[D]]): (Long, Seq[(Double, String)], Long) = {
+      val parts = f.cut(open, stats)
+      (parts.map(_._1).sum, parts.flatMap(_._2).sorted(selOrd).take(batchSize),
         parts.map(_._3).sum)
     }
 
-    var open: RDD[Scored] = seeds.rdd
-      .map { case (t, d) => (t.cacheKey, (t, d, 0, priority(t, d))) }
-      .reduceByKey(partitioner, winS)
-    var (openCount, topSel, _) = cutStats(open, None)
+    var open = f.seed(seeds)
+    var (openCount, topSel, _) = cut(open)
     var remaining = fetchBudget
-    var round = 0
-
     while (remaining > 0 && openCount > 0) {
-      round += 1
       env.metrics.exploreRounds.add(1)
-      val k = math.min(batchSize.toLong, remaining).toInt
-      val selected = topSel.take(k).map(_._2).toSet
-      val bc = sc.broadcast(selected)
-      val batch0 = open.filter { case (key, _) => bc.value.contains(key) }
-      val rest = open.filter { case (key, _) => !bc.value.contains(key) }
-
-      // host-keyed batch placement when configured — same politeness story
-      // as BFS fetchLevel (see ExploreParams.layout); a batch is at most
-      // batchSize rows, so the extra shuffle is tiny
-      val batch = layout match {
-        case FetchLayout.ByKey => batch0
-        case _ =>
-          batch0
-            .map { case (k, v) =>
-              (FetchLayout.partitionOf(layout, k, v._1, partitioner.numPartitions), (k, v))
-            }
-            .partitionBy(new IndexPartitioner(partitioner.numPartitions))
-            .map(_._2)
-      }
-
-      val fetched = batch.mapPartitions({ it =>
-        it.map { case (key, (t, d, depth, _)) =>
-          ExploredRow(FetchedRow(d, key, t, Trajectory(Agent.execute(t, env))), depth)
-        }
-      }, preservesPartitioning = true)
-      fetched.persist(StorageLevel.MEMORY_AND_DISK)
-      visitedParts += fetched
-      val keys = layout match {
-        case FetchLayout.ByKey =>
-          fetched.mapPartitions(_.map(_.row.traceKey), preservesPartitioning = true)
-        case _ =>
-          fetched.map(r => (r.row.traceKey, ()))
-            .partitionBy(partitioner)
-            .mapPartitions(_.map(_._1), preservesPartitioning = true)
-      }
-      keys.persist(StorageLevel.MEMORY_AND_DISK)
-      recentKeys += keys
-
-      val children: RDD[Scored] = fetched.flatMap { r =>
-        if (r.depth + 1 >= maxDepth) Nil
-        else down(next(r.row)).map { case (t, d) =>
-          (t.cacheKey, (t, d, r.depth + 1, priority(t, d)))
-        }
-      }
-      val merged = rest.union(children).reduceByKey(partitioner, winS)
-      val visited = sc.union(allVisitedKeys)
-      val newOpen = merged.zipPartitions(visited, preservesPartitioning = true) { (it, vis) =>
-        val set = new java.util.HashSet[String]()
-        while (vis.hasNext) set.add(vis.next())
-        it.filter(r => !set.contains(r._1))
-      }
-      // the round's single job: materializes the fetch (and the frontier
-      // cut), selects the next batch, and counts the real requests.
+      val selected = topSel.take(math.min(batchSize.toLong, remaining).toInt).map(_._2).toSet
+      val fetched = f.fetch(open.filter { case (key, _) => selected.contains(key) })
+      // the fetched keys are visited now, so the difference also drops them
+      // from the carried open set
+      open = f.unvisited(open.union(f.children(fetched)))
       // Robots-blocked rows made NO request (the gate refuses before any
       // network or pagesFetched tick) — they must not consume the fetch
       // budget either, or a heavily-disallowed frontier silently starves
       // the crawl. Failed real attempts DO consume (the request happened).
-      val (oc, sel, nonBlocked) = cutStats(newOpen, Some(fetched))
+      val (oc, sel, nonBlocked) = cut(open)
       openCount = oc
       topSel = sel
       remaining -= nonBlocked
-      open = newOpen
-      if (round % FoldEvery == 0) foldVisited()
     }
-
-    val all =
-      if (visitedParts.isEmpty) spark.emptyDataset[ExploredRow[D]]
-      else spark.createDataset(sc.union(visitedParts.toSeq))
-    val out = all.filter(_.depth >= params.minDepth).localCheckpoint(true)
-    visitedParts.foreach(_.unpersist(blocking = false))
-    allVisitedKeys.foreach(_.unpersist(blocking = false))
-    persistedFrontiers.foreach(_.unpersist(blocking = false))
-    out
+    f.finish(spark, minDepth)
   }
 
-  /** The best-first round's fused per-partition statistics pass (r21): open
-    * count + bounded top-`b` (score, key) selection heap over the new
-    * frontier, plus the non-robots-blocked budget census over the
-    * co-partitioned cached fetch — everything the driver needs per round,
-    * in the single job that materializes the frontier cut (the unfused
-    * loop paid three driver-synchronized actions for the same facts).
-    * Standalone Serializable class so closures don't capture the module.
+  /** An open row: trace key → (trace, payload, depth, score). */
+  private type Open[D] = (String, (Trace, D, Int, Double))
+
+  /** The frontier steps both orderings share. All open rows and visited
+    * keys live under `part`; the loops decide only what to fetch and when
+    * to cut.
+    *
+    *  1. [[fetch]]: place (narrow under ByKey, re-placed through
+    *     [[FetchLayout.partitionOf]] otherwise), fetch, persist, and project
+    *     the keys back onto `part`.
+    *  1. [[unvisited]]: one winner per key, then one co-partitioned
+    *     `zipPartitions` difference against the visited keys.
+    *  1. [[cut]]: one job that marks the frontier, folds the visited keys
+    *     and returns a per-partition [[Tally]].
+    *  1. [[finish]]: the depth-filtered union of every fetched row, eagerly
+    *     checkpointed; every cache the loop held is released.
+    *
+    * Driver-side only: closures copy what they need into locals so they
+    * never capture this (non-serializable) instance.
+    */
+  private final class Frontier[D](sc: SparkContext, part: HashPartitioner,
+      layout: FetchLayout, env: Env, depthCap: Int,
+      next: FetchedRow[D] => Seq[(Trace, D)], score: (Trace, D) => Double,
+      ord: Option[Ordering[D]]) {
+    env.conf.checkpointDir.foreach(sc.setCheckpointDir)
+    private val win = new Winner[D](ord)
+    // every fetched batch, block-cached until finish
+    private val visited = Buffer.empty[RDD[ExploredRow[D]]]
+    // the visited keys: the fold of everything before the last cut, plus
+    // one keys RDD per fetch since
+    private var folded: Option[RDD[String]] = None
+    private val recent = Buffer.empty[RDD[String]]
+    // every cut frontier (each holds storage whichever way it was marked)
+    private val cuts = Buffer.empty[RDD[Open[D]]]
+
+    private def visitedKeys: Seq[RDD[String]] = folded.toSeq ++ recent
+
+    def seed(seeds: Dataset[(Trace, D)]): RDD[Open[D]] = {
+      val s = score
+      seeds.rdd.map { case (t, d) => (t.cacheKey, (t, d, 0, s(t, d))) }.reduceByKey(part, win)
+    }
+
+    def fetch(open: RDD[Open[D]]): RDD[ExploredRow[D]] = {
+      val (lay, n, e) = (layout, part.numPartitions, env)
+      val placed = lay match {
+        case FetchLayout.ByKey => open
+        case _ =>
+          open.map { case (k, v) => (FetchLayout.partitionOf(lay, k, v._1, n), (k, v)) }
+            .partitionBy(new IndexPartitioner(n))
+            .map(_._2)
+      }
+      val fetched = placed.mapPartitions({ it =>
+        it.map { case (k, (t, d, depth, _)) =>
+          ExploredRow(FetchedRow(d, k, t, Trajectory(Agent.execute(t, e))), depth)
+        }
+      }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
+      visited += fetched
+      val keys = lay match {
+        case FetchLayout.ByKey =>
+          fetched.mapPartitions(_.map(_.row.traceKey), preservesPartitioning = true)
+        case _ =>
+          fetched.map(r => (r.row.traceKey, ()))
+            .partitionBy(part)
+            .mapPartitions(_.map(_._1), preservesPartitioning = true)
+      }
+      recent += keys.persist(StorageLevel.MEMORY_AND_DISK)
+      fetched
+    }
+
+    /** Open rows one level below `fetched` (down-sampled, within depthCap). */
+    def children(fetched: RDD[ExploredRow[D]]): RDD[Open[D]] = {
+      val (nx, s, down, cap) = (next, score, env.conf.downSampling, depthCap)
+      fetched.flatMap { r =>
+        if (r.depth + 1 >= cap) Nil
+        else down(nx(r.row)).map { case (t, d) => (t.cacheKey, (t, d, r.depth + 1, s(t, d))) }
+      }
+    }
+
+    def unvisited(rows: RDD[Open[D]]): RDD[Open[D]] =
+      // the visited keys share `part`, so sc.union is a
+      // PartitionerAwareUnionRDD and the difference is narrow
+      rows.reduceByKey(part, win).zipPartitions(sc.union(visitedKeys),
+          preservesPartitioning = true) { (it, vis) =>
+        val set = new java.util.HashSet[String]()
+        while (vis.hasNext) set.add(vis.next())
+        it.filter(r => !set.contains(r._1))
+      }
+
+    /** One job: marks `frontier` (reliable checkpoint when a checkpointDir
+      * is configured — persisted first, so the write re-reads blocks instead
+      * of re-running fetches — else localCheckpoint), folds the visited keys
+      * into one localCheckpointed RDD, and returns `tally` per partition
+      * over the frontier and the rows fetched since the last cut. The job's
+      * final RDD is an unmarked zip of the marked ones, so Spark's post-job
+      * checkpoint walk reaches them all.
+      */
+    def cut[T: ClassTag](frontier: RDD[Open[D]], tally: Tally[D, T]): Seq[T] = {
+      if (env.conf.checkpointDir.isDefined) {
+        frontier.persist(StorageLevel.MEMORY_AND_DISK)
+        frontier.checkpoint()
+      } else frontier.localCheckpoint()
+      cuts += frontier
+      if (recent.isEmpty)
+        frontier.mapPartitions(o => Iterator.single(tally(o, Iterator.empty))).collect().toSeq
+      else {
+        val fold = sc.union(visitedKeys)
+        fold.localCheckpoint()
+        val out = frontier.zipPartitions(fold, visited.last)(
+          (o, _, fetched) => Iterator.single(tally(o, fetched))).collect().toSeq
+        visitedKeys.foreach(_.unpersist(blocking = false))
+        folded = Some(fold)
+        recent.clear()
+        out
+      }
+    }
+
+    def finish(spark: SparkSession, minDepth: Int)(
+        implicit enc: Encoder[ExploredRow[D]]): Dataset[ExploredRow[D]] = {
+      val all =
+        if (visited.isEmpty) spark.emptyDataset[ExploredRow[D]]
+        else spark.createDataset(sc.union(visited.toSeq))
+      val out = all.filter(_.depth >= minDepth).localCheckpoint(true)
+      // the eager checkpoint holds the output in its own blocks: release
+      // everything else now, not when the session dies — repeated explores
+      // in one session must not accumulate executor storage
+      (visited ++ visitedKeys ++ cuts).foreach(_.unpersist(blocking = false))
+      out
+    }
+  }
+
+  /** A cut's per-partition statistic over the frontier and the rows fetched
+    * since the previous cut (empty at the seed cut). Standalone Serializable
+    * classes, so closures don't capture the module.
+    */
+  private abstract class Tally[D, T] extends Serializable {
+    def apply(open: Iterator[Open[D]], fetched: Iterator[ExploredRow[D]]): T
+  }
+
+  private final class OpenCount[D] extends Tally[D, Long] {
+    def apply(open: Iterator[Open[D]], fetched: Iterator[ExploredRow[D]]): Long = open.size.toLong
+  }
+
+  /** Best-first's round statistics (r21): open count, bounded top-`b`
+    * (score, key) selection and the non-robots-blocked fetch count —
+    * everything the driver needs per round, in the cut job (the unfused
+    * loop paid three driver-synchronized actions for the same facts). The
+    * merged top list is the NEXT round's selection — identical to
+    * takeOrdered over the frontier (`ord` is total: unique keys break score
+    * ties).
     */
   private final class RoundStats[D](b: Int, ord: Ordering[(Double, String)])
-      extends Serializable {
-    // Seq results, not Array: the enclosing object's erased `anyTag`
-    // implicit would satisfy toArray's ClassTag with AnyRef and produce an
-    // Object[] behind a Tuple2[] type — a runtime ClassCastException
-    private def top(oit: Iterator[(String, (Trace, D, Int, Double))])
-        : (Long, Seq[(Double, String)]) = {
+      extends Tally[D, (Long, Seq[(Double, String)], Long)] {
+    def apply(open: Iterator[Open[D]], fetched: Iterator[ExploredRow[D]])
+        : (Long, Seq[(Double, String)], Long) = {
       var n = 0L
       // max-heap under ord: head = worst kept; strict < keeps exactly the
       // takeOrdered(b)(ord) set (keys are unique after reduceByKey)
       val pq = new scala.collection.mutable.PriorityQueue[(Double, String)]()(ord)
-      oit.foreach { case (key, (_, _, _, s)) =>
+      open.foreach { case (key, (_, _, _, s)) =>
         n += 1
         if (pq.size < b) pq.enqueue((s, key))
         else if (ord.compare((s, key), pq.head) < 0) { pq.dequeue(); pq.enqueue((s, key)) }
       }
-      (n, pq.dequeueAll.toSeq)
-    }
-    // plain methods, not Function-typed vals: a lambda stored in a field of
-    // a serialized instance hits the SerializedLambda field-assignment trap
-    // on deserialization; call sites wrap these in fresh closures instead
-    def openOnly(oit: Iterator[(String, (Trace, D, Int, Double))])
-        : Iterator[(Long, Seq[(Double, String)], Long)] = {
-      val (n, sel) = top(oit)
-      Iterator.single((n, sel, 0L))
-    }
-    def withFetched(oit: Iterator[(String, (Trace, D, Int, Double))],
-        fit: Iterator[ExploredRow[D]])
-        : Iterator[(Long, Seq[(Double, String)], Long)] = {
-      val (n, sel) = top(oit)
-      var nb = 0L
-      fit.foreach { r =>
-        val blocked = r.row.trajectory.observations.exists {
-          case e: graft.doc.DocError => e.message.startsWith("blocked by robots.txt")
-          case _ => false
-        }
-        if (!blocked) nb += 1
-      }
-      Iterator.single((n, sel, nb))
+      val nonBlocked = fetched.count(r => !r.row.trajectory.observations.exists {
+        case e: graft.doc.DocError => e.message.startsWith("blocked by robots.txt")
+        case _ => false
+      })
+      (n, pq.dequeueAll.toSeq, nonBlocked.toLong)
     }
   }
 
-  /** Per-level frontier dedup winner (same level => equal depth), matching
-    * the reference's single-winning-lineage reduce
-    * (PathPlanning_Simple.scala:36-46 `candidates.minBy`). The surviving
-    * payload is DETERMINISTIC for naturally-ordered payload types (the
-    * minimum — the analog of the reference's minBy ordinal); first-seen for
-    * types with no natural order (documented in the operator scaladoc:
-    * explore is keyed by trace, payloads should be derivable from it).
+  /** Per-key winner of two open rows: the higher score, then the payload
+    * winner — the minimum under `ord` when given, matching the reference's
+    * single-winning-lineage reduce (PathPlanning_Simple.scala:36-46
+    * `candidates.minBy`). Without `ord`, naturally-ordered (Comparable)
+    * payloads take their minimum and other types keep the first seen
+    * (partition-order dependent; explore's contract is that payloads derive
+    * from the trace).
     *
     * The Comparable-vs-first-seen strategy is resolved ONCE per task from
-    * the first collision's payload classes and branched on a cached flag
+    * the first tie's payload classes and branched on a cached flag
     * afterwards — no instanceof/getClass checks per collision in the
     * combiner hot path. (Assumes one explore's payloads share a runtime
-    * class — explore's documented contract; a heterogeneous FIRST collision
-    * resolves to first-seen just as the old per-pair check did.)
+    * class; a heterogeneous FIRST tie resolves to first-seen.)
     */
-  private final class NaturalWinner[D]
-      extends (((Trace, D, Int), (Trace, D, Int)) => (Trace, D, Int))
+  private final class Winner[D](ord: Option[Ordering[D]])
+      extends (((Trace, D, Int, Double), (Trace, D, Int, Double)) => (Trace, D, Int, Double))
       with Serializable {
     // 0 = unresolved (per task: @transient resets on deserialization),
     // 1 = comparable-minimum, 2 = first-seen
     @transient private var mode: Int = 0
-    def apply(a: (Trace, D, Int), b: (Trace, D, Int)): (Trace, D, Int) = {
-      if (mode == 0) mode = a._2 match {
-        case x: Comparable[_] if b._2 != null && x.getClass == b._2.getClass => 1
-        case _ => 2
+    def apply(a: (Trace, D, Int, Double), b: (Trace, D, Int, Double)): (Trace, D, Int, Double) =
+      if (a._4 != b._4) { if (a._4 > b._4) a else b }
+      else ord match {
+        case Some(o) => if (o.compare(a._2, b._2) <= 0) a else b
+        case None =>
+          if (mode == 0) mode = a._2 match {
+            case x: Comparable[_] if b._2 != null && x.getClass == b._2.getClass => 1
+            case _ => 2
+          }
+          if (mode == 1) {
+            // the catch costs nothing unless a later tie breaks the
+            // homogeneous-payload contract — then degrade to first-seen for
+            // the rest of the task instead of failing the stage
+            try if (a._2.asInstanceOf[Comparable[Any]].compareTo(b._2) > 0) b else a
+            catch {
+              case _: ClassCastException | _: NullPointerException => mode = 2; a
+            }
+          } else a
       }
-      if (mode == 1) {
-        // the catch costs nothing unless a later collision breaks the
-        // homogeneous-payload contract — then degrade to first-seen for the
-        // rest of the task instead of failing the stage
-        try if (a._2.asInstanceOf[Comparable[Any]].compareTo(b._2) > 0) b else a
-        catch {
-          case _: ClassCastException | _: NullPointerException => mode = 2; a
-        }
-      } else a
-    }
   }
 }

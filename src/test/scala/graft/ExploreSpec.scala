@@ -1,7 +1,7 @@
 package graft
 
 import graft.actions._
-import graft.api.GraftContext
+import graft.api.{ExploredView, GraftContext}
 import graft.cache.InMemoryDocCache
 import graft.conf.{DownSampling, GraftConf}
 import graft.exec.FetchedRow
@@ -108,8 +108,7 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
   test("reliable checkpointing (checkpointDir set) reproduces the diamond golden") {
     val site = diamondSite("explore8")
     val ckpt = scratchDir("explore-ckpt")
-    val ctx = new GraftContext(spark,
-      GraftConf(checkpointDir = Some(ckpt), checkpointEveryEpochs = 1))
+    val ctx = new GraftContext(spark, GraftConf(checkpointDir = Some(ckpt)))
     import spark.implicits._
     val rows = ctx.create(Seq(s"file:${site("A")}"))
       .explore(u => Trace.of(Wget(u)))(linkExpand).collect()
@@ -120,6 +119,10 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
       .filter(java.nio.file.Files.isRegularFile(_)).count()
     assert(wrote > 0, "expected RDD checkpoint files under checkpointDir")
+    // the default conf protects fetched work from the first epoch on: the
+    // seed cut AND the epoch cut are both reliable
+    val rddDirs = ExploreSpec.checkpointRddDirs(ckpt)
+    assert(rddDirs >= 2, s"expected a reliable seed cut and epoch cut, got $rddDirs rdd-* dirs")
   }
 
   test("reliable checkpoints do not re-run fetch side effects (cache disabled)") {
@@ -127,7 +130,7 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
     val ckpt = scratchDir("explore-ckpt2")
     // cache OFF: any checkpoint-write recompute would hit the network again
     val ctx = new GraftContext(spark, GraftConf(cacheEnabled = false,
-      checkpointDir = Some(ckpt), checkpointEveryEpochs = 1))
+      checkpointDir = Some(ckpt)))
     import spark.implicits._
     val n = ctx.create(Seq(s"file:${site("A")}"))
       .explore(u => Trace.of(Wget(u)))(linkExpand).count()
@@ -364,19 +367,19 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
     // batch sizes are bounded by the frontier while it is still narrow and
     // by the remaining budget at the end: 1, 2, 4, 4, 4, 4, 4, 2 = 25
     // fetches in 8 rounds (vs 25 rounds at batchSize 1 — the driver-latency
-    // amortization this mode exists for). 1 fused job per round + the 2
-    // fixed (seed cut+selection, final checkpoint) + 1 visited-keys fold
-    // at round 8.
-    assert(jobs == 2 + 1 * 8 + 1,
-      s"8 batched rounds must run 1 fused job each (+2 fixed, +1 fold): got $jobs")
+    // amortization this mode exists for). 1 fused job per round (the
+    // visited-keys fold rides it) + the 2 fixed (seed cut+selection, final
+    // checkpoint).
+    assert(jobs == 2 + 1 * 8,
+      s"8 batched rounds must run 1 fused job each (+2 fixed): got $jobs")
     assert(explored.dataset.count() == 25) // exactly the budget
     assert(ctx.metrics.pagesFetched.value == 25)
   }
 
   test("best-first: foldEvery knob sets the visited-fold cadence (r19 verdict #6)") {
-    // the same 63-page tree and 8-round schedule as the batched census,
-    // but foldEvery = 2: folds fire at rounds 2, 4, 6, 8 — four keys-only
-    // jobs instead of one — and nothing else about the traversal changes
+    // the knob is gone: the visited keys fold inside EVERY round's cut job.
+    // The same 63-page tree and 8-round schedule as the batched census: no
+    // fold job at any round, and the folds leave no storage behind
     val n = 63
     (0 until n).foreach { i =>
       val kids = Seq(2 * i + 1, 2 * i + 2).filter(_ < n)
@@ -392,26 +395,29 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
     val ctx = new GraftContext(spark, GraftConf())
     import spark.implicits._
     val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
     sc.setJobGroup("bf-fold-census", "bf-fold-census", interruptOnCancel = false)
     val explored = ctx.create(Seq(s"file:$seed"))
       .exploreBestFirst(u => Trace.of(Wget(u)))(
         ExploreSpec.linkExpand,
         priority = (t, _) => t.primaryUri.map(prio).getOrElse(-1.0),
-        fetchBudget = 25, batchSize = 4, foldEvery = 2)
+        fetchBudget = 25, batchSize = 4)
     sc.clearJobGroup()
     val jobs = graft.exec.JobCensus.settledJobCount(sc, "bf-fold-census")
-    assert(jobs == 2 + 1 * 8 + 4,
-      s"foldEvery=2 over 8 rounds must fold 4 times (+2 fixed, 1/round): got $jobs")
-    assert(explored.dataset.count() == 25)
+    assert(jobs == 2 + 1 * 8,
+      s"8 rounds must run 1 job each (+2 fixed) with the fold inside every cut: got $jobs")
+    val leaked = sc.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.size <= 1, s"best-first leaked ${leaked.size} persisted RDDs: $leaked")
+    val pages = explored.collect().map(_.row.trace.primaryUri.get)
+    assert(pages.length == 25 && pages.distinct.length == 25)
     assert(ctx.metrics.pagesFetched.value == 25)
   }
 
   test("best-first: exact job census at rounds ≫ FoldEvery (batchSize 1, default fold cadence)") {
-    // 25 single-fetch rounds against the default foldEvery = 8: the exact
-    // equality 2 + rounds + rounds/8 is the CI-level pin of the
-    // O(1)-live-handles claim — an un-folded visited union (or any hidden
-    // per-round action) would add jobs and break it. The same census held
-    // at 100k pages / 68 rounds (NOTES_bench_mains.md); this is its fast twin.
+    // 25 single-fetch rounds, the visited keys folded inside every round's
+    // cut: the exact equality 2 + rounds is the CI-level pin of the
+    // O(1)-live-handles claim — a separate fold job (or any hidden
+    // per-round action) would add jobs and break it.
     val n = 63
     (0 until n).foreach { i =>
       val kids = Seq(2 * i + 1, 2 * i + 2).filter(_ < n)
@@ -437,8 +443,8 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
     sc.clearJobGroup()
     val jobs = graft.exec.JobCensus.settledJobCount(sc, "bf-deep-census")
     assert(ctx.metrics.exploreRounds.value == 25)
-    assert(jobs == 2 + 1 * 25 + 25 / 8,
-      s"25 rounds at foldEvery 8 must run 2 + 25 + 3 jobs: got $jobs")
+    assert(jobs == 2 + 1 * 25,
+      s"25 rounds must run 2 + 25 jobs: got $jobs")
     // only the eager output checkpoint stays persisted: frontiers, per-round
     // keys and folded visited sets are all released
     val leaked = sc.getPersistentRDDs.keySet -- persistedBefore
@@ -463,8 +469,8 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   test("BFS exploreRounds counts only levels that processed rows") {
-    // chain A→B→C (3 levels of work) explored with epochInterval 8: the
-    // epoch chains 8 levels lazily, so levels 4..8 run on an EMPTY frontier
+    // chain A→B→C (3 levels of work): the epoch chains
+    // ExploreExec.LevelsPerEpoch = 8 levels lazily, so levels 4..8 run on an EMPTY frontier
     // inside the same job — the metric must credit 3, not 8 (the per-level
     // accumulator semantics; the pre-fix counter reported the full chain)
     def page(name: String, link: Option[String]): String =
@@ -477,11 +483,89 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
     val ctx = new GraftContext(spark, GraftConf())
     import spark.implicits._
     val explored = ctx.create(Seq(s"file:$a"))
-      .explore(u => Trace.of(Wget(u)))(linkExpand, maxDepth = 9, epochInterval = 8)
+      .explore(u => Trace.of(Wget(u)))(linkExpand, maxDepth = 9)
     assert(explored.dataset.count() == 3)
     assert(ctx.metrics.pagesFetched.value == 3)
     assert(ctx.metrics.exploreRounds.value == 3,
       s"3-page chain must report 3 rounds, got ${ctx.metrics.exploreRounds.value}")
+  }
+
+  test("best-first honors checkpointDir: reliable cuts, no re-run fetches, same visited set") {
+    val seedPath = scoredSite("explore14")
+    def crawl(conf: GraftConf): (Set[String], Long) = {
+      InMemoryDocCache.clear()
+      val ctx = new GraftContext(spark, conf)
+      import spark.implicits._
+      val uris = ctx.create(Seq(s"file:$seedPath"))
+        .exploreBestFirst(u => Trace.of(Wget(u)))(
+          linkExpand,
+          priority = (t, _) => t.primaryUri.map(ExploreSpec.scoreOf).getOrElse(0.0),
+          fetchBudget = 4, batchSize = 1)
+        .collect().map(_.row.trace.primaryUri.get).toSet
+      (uris, ctx.metrics.pagesFetched.value)
+    }
+    val ckpt = scratchDir("explore-bf-ckpt")
+    // cache OFF: any checkpoint-write recompute would fetch again
+    val (reliable, fetched) = crawl(GraftConf(cacheEnabled = false, checkpointDir = Some(ckpt)))
+    val rddDirs = ExploreSpec.checkpointRddDirs(ckpt)
+    assert(rddDirs >= 1, s"best-first wrote no reliable checkpoint under checkpointDir")
+    assert(fetched == 4, s"checkpoint write re-ran fetches: $fetched for budget 4")
+    val (local, _) = crawl(GraftConf(cacheEnabled = false))
+    assert(reliable == local && reliable.size == 4, s"$reliable vs $local")
+  }
+
+  test("BFS job census: a 20-page chain runs seed cut + one cut per 8-level epoch + output") {
+    def page(i: Int): String =
+      s"""<html><head><title>c$i</title></head><body>${
+        if (i < 19) s"""<a href="c${i + 1}.html">next</a>""" else ""
+      }</body></html>"""
+    (0 until 20).foreach(i => writeFixture(s"explore-chain/c$i.html", page(i)))
+    val seed = fixtureRoot.resolve("explore-chain/c0.html").toString
+    val ctx = new GraftContext(spark, GraftConf())
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    sc.setJobGroup("bfs-chain-census", "bfs-chain-census", interruptOnCancel = false)
+    val explored = ctx.create(Seq(s"file:$seed"))
+      .explore(u => Trace.of(Wget(u)))(linkExpand)
+    sc.clearJobGroup()
+    val jobs = graft.exec.JobCensus.settledJobCount(sc, "bfs-chain-census")
+    // levels 0..19 hold one page each; ceil(20 / 8) = 3 epochs, and the
+    // visited-key fold rides each epoch's cut job
+    assert(jobs == 1 + 3 + 1, s"20-level chain must run 1 + 3 + 1 jobs: got $jobs")
+    assert(ctx.metrics.exploreRounds.value == 20)
+    val leaked = sc.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.size <= 1, s"explore leaked ${leaked.size} persisted RDDs: $leaked")
+    assert(explored.dataset.count() == 20)
+    assert(ctx.metrics.pagesFetched.value == 20)
+  }
+
+  test("explore family runs identically twice in one session (BFS ByKey, BFS ByHost, best-first)") {
+    val site = diamondSite("explore-twice")
+    val seed = s"file:${site("A")}"
+    import spark.implicits._
+    val runs: Seq[(String, GraftContext => ExploredView[String])] = Seq(
+      "bfs-bykey" -> (c => c.create(Seq(seed)).explore(u => Trace.of(Wget(u)))(linkExpand)),
+      "bfs-byhost" -> (c => c.create(Seq(seed)).explore(u => Trace.of(Wget(u)))(
+        linkExpand, layout = graft.exec.FetchLayout.ByHost(1))),
+      "best-first" -> (c => c.create(Seq(seed)).exploreBestFirst(u => Trace.of(Wget(u)))(
+        linkExpand, priority = (t, _) => t.primaryUri.map(_.length.toDouble).getOrElse(0.0),
+        fetchBudget = 3, batchSize = 1)))
+    val sc = spark.sparkContext
+    runs.foreach { case (name, run) =>
+      val results = (1 to 2).map { _ =>
+        InMemoryDocCache.clear()
+        val ctx = new GraftContext(spark, GraftConf())
+        val before = sc.getPersistentRDDs.keySet
+        val rows = run(ctx).collect()
+          .map(r => (r.row.trace.primaryUri.get, r.depth)).sorted.toSeq
+        val grown = (sc.getPersistentRDDs.keySet -- before).size
+        assert(grown <= 1, s"$name: one run left $grown new persisted RDDs")
+        (rows, ctx.metrics.pagesFetched.value)
+      }
+      assert(results(0) == results(1), s"$name: second run differs: $results")
+      assert(results(0)._1.nonEmpty && results(0)._2 == results(0)._1.size)
+    }
   }
 }
 
@@ -489,6 +573,12 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
   * the (non-serializable) ScalaTest engine.
   */
 object ExploreSpec {
+
+  /** `rdd-*` directories Spark's reliable checkpoints wrote under `dir`. */
+  def checkpointRddDirs(dir: String): Long =
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .filter(p => java.nio.file.Files.isDirectory(p) && p.getFileName.toString.startsWith("rdd-"))
+      .count()
 
   /** Filename-encoded score (`name_score.html`); lives here so the
     * priority closure doesn't capture the ScalaTest engine.

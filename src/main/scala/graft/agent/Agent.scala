@@ -7,7 +7,9 @@ import graft.doc._
 import graft.exec.Metrics
 
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{Callable, Executors, ThreadFactory, TimeUnit, TimeoutException}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, Future,
+  ThreadFactory, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -34,13 +36,145 @@ final case class Env(
   *     backtrace.
   *
   * Pure object + pure data in, observations out: nothing here touches Spark
-  * except the metrics accumulators.
+  * except the metrics accumulators (added to under their lock, see
+  * [[graft.exec.Metrics.add]]) and [[executeAll]]'s task-completion hook.
+  *
+  * == Fetch wait overlap ==
+  *
+  * [[executeAll]] is the engine's one remote-fetch loop: it keeps up to
+  * [[InFlight]] distinct idempotent executions running ahead of the task
+  * that consumes them, on one per-JVM daemon pool, so a task slot waits on
+  * several responses at once instead of one (the Mercator answer: many
+  * fetches in flight per machine, politeness per host). Per-host spacing
+  * is unaffected: [[HostPoliteness]] reserves start slots by CAS across
+  * every thread of the JVM. Non-idempotent traces (POSTs, browser state
+  * changes) keep on-demand execution on the task thread.
   */
 object Agent {
 
+  /** Distinct executions one [[executeAll]] holds at most: the one its
+    * consumer is reading plus those started ahead of it. A constant, not a
+    * knob: more connections in flight also means more keep-alive sockets,
+    * each holding its server's write buffer.
+    */
+  val InFlight = 4
+
+  /** Rows [[executeAll]] buffers ahead of its consumer at most, so a long
+    * run of one key streams instead of filling the heap.
+    */
+  private val ReadAheadRows = 256
+
+  /** Executes the trace of every run of consecutive rows with equal keys
+    * once and returns each row with its run's trajectory, in input order.
+    *
+    *  - A `null` key never joins a run: such a row executes on its own.
+    *  - A run executes the trace of its FIRST row.
+    *  - Up to [[InFlight]] distinct idempotent runs execute ahead of the
+    *    consumer on the agent pool; the consumer blocks only on the run it
+    *    reads.
+    *  - A non-idempotent trace ([[Trace.nonIdempotent]]) executes on the
+    *    consumer's thread when its first row is pulled, and no row past it
+    *    is read before that. So a partial consumer (`take`, `limit`) never
+    *    triggers a POST or a form submit the serial loop would not have
+    *    sent; it may start up to `InFlight - 1` idempotent fetches it then
+    *    drops.
+    *  - A failed execution's cause is rethrown on the consumer's thread
+    *    when it reaches that run.
+    *  - Inside a Spark task, task completion waits out every execution
+    *    still running, so none outlives its task and every metric it adds
+    *    reaches the task's accumulators.
+    */
+  def executeAll[R](rows: Iterator[R], env: Env)(key: R => String,
+                                                 trace: R => Trace): Iterator[(R, Trajectory)] = {
+    val pipeline = new Pipeline(rows.buffered, env, key, trace)
+    Option(org.apache.spark.TaskContext.get())
+      .foreach(_.addTaskCompletionListener[Unit](_ => pipeline.drain()))
+    pipeline
+  }
+
+  private final class Pipeline[R](in: BufferedIterator[R], env: Env, key: R => String,
+                                  trace: R => Trace) extends Iterator[(R, Trajectory)] {
+
+    /** One key's buffered rows and their shared execution: `pending` while
+      * it runs on the pool, `traj` once read; neither for a non-idempotent
+      * trace not yet reached.
+      */
+    private final class Run(val key: String, val trace: Trace) {
+      val rows = new java.util.ArrayDeque[R]()
+      var pending: Future[Seq[Observation]] = _
+      var traj: Trajectory = _
+      def started: Boolean = pending != null || traj != null
+      def result(): Trajectory = {
+        if (traj == null) {
+          traj = Trajectory(if (pending == null) execute(trace, env) else await(pending))
+          pending = null
+        }
+        traj
+      }
+    }
+
+    private val runs = new java.util.ArrayDeque[Run]()
+    private var held = 0
+
+    /** Reads ahead until [[InFlight]] runs are open, the row budget is
+      * spent, or the newest run is a non-idempotent trace not yet reached.
+      */
+    private def fill(): Unit = {
+      var more = true
+      while (more && in.hasNext && held < ReadAheadRows) {
+        val last = runs.peekLast()
+        val k = key(in.head)
+        if (last != null && !last.started) more = false
+        else if (last != null && k != null && k == last.key) {
+          last.rows.add(in.next()); held += 1
+        } else if (runs.size >= InFlight) more = false
+        else {
+          val run = new Run(k, trace(in.head))
+          if (!run.trace.nonIdempotent)
+            run.pending = pool.submit(new Callable[Seq[Observation]] {
+              override def call(): Seq[Observation] = execute(run.trace, env)
+            })
+          runs.add(run)
+          run.rows.add(in.next()); held += 1
+        }
+      }
+    }
+
+    override def hasNext: Boolean = {
+      fill()
+      // an emptied head is closed: the fill above would have read its next
+      // row otherwise
+      while (!runs.isEmpty && runs.peekFirst().rows.isEmpty) {
+        runs.pollFirst()
+        fill()
+      }
+      !runs.isEmpty
+    }
+
+    override def next(): (R, Trajectory) = {
+      if (!hasNext) throw new NoSuchElementException("no more fetched rows")
+      val run = runs.peekFirst()
+      val row = run.rows.poll()
+      held -= 1
+      (row, run.result())
+    }
+
+    /** Waits out every execution started ahead of the consumer. */
+    def drain(): Unit =
+      try runs.forEach { run =>
+        if (run.pending != null)
+          try run.pending.get() catch { case scala.util.control.NonFatal(_) => () }
+      }
+      catch { case _: InterruptedException => Thread.currentThread().interrupt() }
+  }
+
+  private def await[T](f: Future[T]): T =
+    try f.get()
+    catch { case e: ExecutionException => throw e.getCause }
+
   /** Execute once, with trace-level retries (reference Trace.scala:214-223). */
   def execute(trace: Trace, env: Env): Seq[Observation] = {
-    env.metrics.traceExecutions.add(1)
+    env.metrics.add(env.metrics.traceExecutions)
     val now = System.currentTimeMillis()
 
     fromCache(trace, env, now).getOrElse {
@@ -56,7 +190,7 @@ object Agent {
       result match {
         case Right(obs) => obs
         case Left(e) =>
-          env.metrics.errors.add(1)
+          env.metrics.add(env.metrics.errors)
           errorDump(trace, e, env, now)
           val key = trace.cacheKey
           Seq(DocError(DocUID(key), uri = describe(trace), message = renderError(e), now))
@@ -95,7 +229,7 @@ object Agent {
         off
       }
       val obs = upgraded.flatten
-      env.metrics.fetchFromCache.add(obs.size)
+      env.metrics.add(env.metrics.fetchFromCache, obs.size)
       Some(obs)
     } else None
   }
@@ -202,7 +336,7 @@ object Agent {
           blocked match {
             case Some(err) => Seq(err)
             case None =>
-              env.metrics.pagesFetched.add(1)
+              env.metrics.add(env.metrics.pagesFetched)
               HostPoliteness.acquire(w.uri, interval)
               Seq(withTimeout(w.timeoutMillis)(Fetcher.get(w.uri, w.timeoutMillis, uid, now)))
           }
@@ -212,13 +346,13 @@ object Agent {
           blocked match {
             case Some(err) => Seq(err)
             case None =>
-              env.metrics.pagesFetched.add(1)
+              env.metrics.add(env.metrics.pagesFetched)
               HostPoliteness.acquire(w.uri, interval)
               Seq(withTimeout(w.timeoutMillis)(
                 Fetcher.post(w.uri, w.entity, w.contentType, w.timeoutMillis, uid, now)))
           }
         case o: OAuthV2 =>
-          env.metrics.pagesFetched.add(1)
+          env.metrics.add(env.metrics.pagesFetched)
           // RFC 5849 §3.3: nonce must be unique per (timestamp, token) — a
           // deterministic nonce makes replays of the same trace rejectable
           // by nonce-enforcing servers. Random per execution; NOT part of
@@ -234,12 +368,12 @@ object Agent {
             ob.withUID(DocUID(key, i, obs.size, name = as))
           }
         case Snapshot(as) =>
-          env.metrics.pagesFetched.add(1)
+          env.metrics.add(env.metrics.pagesFetched)
           Seq(Doc(DocUID(key, name = as), driver.currentUri,
             driver.pageSource.getBytes(StandardCharsets.UTF_8), Some("text/html"),
             timestampMillis = now))
         case Screenshot(as) =>
-          env.metrics.pagesFetched.add(1)
+          env.metrics.add(env.metrics.pagesFetched)
           Seq(Doc(DocUID(key, name = as), driver.currentUri, driver.screenshot,
             Some("image/png"), timestampMillis = now))
         case Loop(body, limit) =>
@@ -313,7 +447,7 @@ object Agent {
         case er: DocError => er
         case ob if env.conf.validation.accept(ob) => ob
         case ob =>
-          env.metrics.errors.add(1)
+          env.metrics.add(env.metrics.errors)
           errorDumpObs(ob, env, now)
           DocError(ob.uid, ob.uri, s"validation failed: ${env.conf.validation}", now)
       }
@@ -333,28 +467,38 @@ object Agent {
           case _        => ()
         })
         DocCaches.write(key, offloaded, env.conf, now)
-        if (env.conf.cacheWrite) env.metrics.cacheWrites.add(1)
+        if (env.conf.cacheWrite) env.metrics.add(env.metrics.cacheWrites)
       }
 
       offloaded
     }
   }
 
-  // -- timeout: hard-bounded future per action (reference MayTimeout +
-  //    Action.scala:131-153 thread interrupt)
-  private lazy val timeoutPool = Executors.newCachedThreadPool(new ThreadFactory {
+  /** The agent's one per-JVM pool: [[executeAll]]'s executions and
+    * [[withTimeout]]'s bounded actions. Cached: threads are made on demand
+    * and retire after 60 s idle; in use it holds at most [[InFlight]]
+    * executions per running task, plus one timed action under each.
+    * Threads are daemons built with `inheritThreadLocals = false`: they are
+    * made from Spark task threads, whose inheritable thread-locals (the
+    * active session, the job's local properties) must not stick to a
+    * long-lived pool thread.
+    */
+  private[graft] lazy val pool: ExecutorService = Executors.newCachedThreadPool(new ThreadFactory {
+    private val count = new AtomicInteger(0)
     override def newThread(r: Runnable): Thread = {
-      val t = new Thread(r, "graft-action-timeout")
+      val t = new Thread(null, r, s"graft-agent-${count.incrementAndGet()}", 0L, false)
       t.setDaemon(true)
       t
     }
   })
 
+  // -- timeout: hard-bounded future per action (reference MayTimeout +
+  //    Action.scala:131-153 thread interrupt)
   private def withTimeout[T](millis: Long)(f: => T): T =
     if (millis <= 0) f
     else {
       val worker = new java.util.concurrent.atomic.AtomicReference[Thread]()
-      val fut = timeoutPool.submit(new Callable[T] {
+      val fut = pool.submit(new Callable[T] {
         override def call(): T = { worker.set(Thread.currentThread()); f }
       })
       try fut.get(millis, TimeUnit.MILLISECONDS)
@@ -366,7 +510,7 @@ object Agent {
           // immediately instead of leaking until the socket timeout
           Option(worker.get()).foreach(Fetcher.abortInFlight)
           throw new TimeoutException(s"action timed out after ${millis}ms")
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
+        case e: ExecutionException => throw e.getCause
       }
     }
 

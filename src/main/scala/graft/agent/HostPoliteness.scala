@@ -9,8 +9,12 @@ package graft.agent
   * least `conf.hostMinIntervalMillis` apart within one JVM. Slots are
   * reserved by CAS on a per-host clock, so N threads hitting one host
   * serialize into an evenly spaced queue while distinct hosts proceed in
-  * parallel. Cache hits never wait (they perform no remote fetch — the
-  * probe short-circuits before the limiter).
+  * parallel. That holds for any number of threads per task too:
+  * [[Agent.executeAll]] runs up to [[Agent.InFlight]] of one task's
+  * fetches on the agent pool, and each reserves its own slot. The limiter
+  * spaces starts; it does not cap requests in flight. Cache hits never
+  * wait (they perform no remote fetch — the probe short-circuits before
+  * the limiter).
   *
   * Scope is deliberately per-executor, matching the reference's in-JVM
   * agent pooling: cluster-wide politeness for a host-skewed crawl is a

@@ -1,7 +1,7 @@
 package graft.cache
 
 import graft.conf.GraftConf
-import graft.doc.Observation
+import graft.doc.{Doc, Observation}
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
 
@@ -42,6 +42,12 @@ trait DocCache {
   * SIZE-BOUNDED (guava, LRU): long-lived executors on a big crawl would
   * otherwise grow this without limit — eviction only costs a DFS-tier or
   * remote re-read. The reference has the same two-tier fallback semantics.
+  *
+  * DETACHED: `put` stores, and `get` hands out, shallow copies of each
+  * [[Doc]] — the body bytes are shared, every lazy view (decoded text,
+  * parsed tree, loaded blob body) starts unset. The bound counts entries,
+  * not bytes, so storing the instances rows later parse would pin every
+  * parsed tree and loaded body for as long as the entry lives.
   */
 object InMemoryDocCache extends DocCache {
 
@@ -61,12 +67,20 @@ object InMemoryDocCache extends DocCache {
 
   override def get(key: String, conf: GraftConf, now: Long): Option[Seq[Observation]] =
     Option(store.getIfPresent(key)).flatMap { versions =>
-      versions.filter(v => inWindow(v._1, conf, now)).sortBy(-_._1).headOption.map(_._2)
+      versions.filter(v => inWindow(v._1, conf, now)).sortBy(-_._1).headOption.map(v => detached(v._2))
     }
 
-  override def put(key: String, obs: Seq[Observation], ts: Long): Unit =
+  override def put(key: String, obs: Seq[Observation], ts: Long): Unit = {
+    val entry = (ts, detached(obs))
     store.asMap().compute(key, (_, old) =>
-      ((ts, obs) :: Option(old).getOrElse(Nil)).sortBy(-_._1).take(MaxVersionsPerKey))
+      (entry :: Option(old).getOrElse(Nil)).sortBy(-_._1).take(MaxVersionsPerKey))
+  }
+
+  /** `copy()` shares the body and starts every lazy field unset. */
+  private def detached(obs: Seq[Observation]): Seq[Observation] = obs.map {
+    case d: Doc => d.copy()
+    case other  => other
+  }
 
   def clear(): Unit = store.invalidateAll()
   def size: Int = store.asMap().size()

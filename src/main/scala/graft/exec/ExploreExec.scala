@@ -2,7 +2,6 @@ package graft.exec
 
 import graft.actions.Trace
 import graft.agent.{Agent, Env}
-import graft.doc.Trajectory
 
 import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.RDD
@@ -54,7 +53,9 @@ final case class ExploredRow[D](row: FetchedRow[D], depth: Int) extends Serializ
   *  1. '''One shuffle per BFS level.''' A level is: expand children
   *     (narrow) → `reduceByKey` winner-dedup (the shuffle) → co-partitioned
   *     set-difference against visited keys (narrow `zipPartitions`) → fetch
-  *     (narrow `mapPartitions`; the frontier is already one row per key).
+  *     (narrow `mapPartitions`; the frontier is already one row per key,
+  *     and [[graft.agent.Agent.executeAll]] keeps up to
+  *     [[graft.agent.Agent.InFlight]] of its fetches in flight per task).
   *     Only keys, traces and payloads move — never fetched content.
   *  1. '''[[LevelsPerEpoch]] levels per job.''' BFS levels chain lazily:
   *     each level's fetched rows are block-cached (MEMORY_AND_DISK) and feed
@@ -240,8 +241,9 @@ object ExploreExec {
     * to cut.
     *
     *  1. [[fetch]]: place (narrow under ByKey, re-placed through
-    *     [[FetchLayout.partitionOf]] otherwise), fetch, persist, and project
-    *     the keys back onto `part`.
+    *     [[FetchLayout.partitionOf]] otherwise), fetch through
+    *     [[graft.agent.Agent.executeAll]] (up to `InFlight` per task, in
+    *     row order), persist, and project the keys back onto `part`.
     *  1. [[unvisited]]: one winner per key, then one co-partitioned
     *     `zipPartitions` difference against the visited keys.
     *  1. [[cut]]: one job that marks the frontier, folds the visited keys
@@ -284,8 +286,8 @@ object ExploreExec {
             .map(_._2)
       }
       val fetched = placed.mapPartitions({ it =>
-        it.map { case (k, (t, d, depth, _)) =>
-          ExploredRow(FetchedRow(d, k, t, Trajectory(Agent.execute(t, e))), depth)
+        Agent.executeAll(it, e)(_._1, _._2._1).map { case ((k, (t, d, depth, _)), traj) =>
+          ExploredRow(FetchedRow(d, k, t, traj), depth)
         }
       }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
       visited += fetched

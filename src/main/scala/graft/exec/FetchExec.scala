@@ -54,6 +54,12 @@ object FetchLayout {
     * serialize the whole crawl behind one task (the documented skew trade:
     * k× that host's rate for k× its throughput). Hostless traces (file:,
     * Mock) place by their dedup key as usual.
+    *
+    * The guarantee is START spacing. Each fetch task keeps up to
+    * [[graft.agent.Agent.InFlight]] requests in flight
+    * ([[graft.agent.Agent.executeAll]]), so one host sees at most
+    * `InFlight × salt` requests in flight per JVM; with a min interval
+    * set, starts stay that interval apart however many are in flight.
     */
   final case class ByHost(salt: Int = 1) extends FetchLayout {
     require(salt >= 1, s"salt must be >= 1, got $salt")
@@ -103,6 +109,13 @@ private[graft] final class IndexPartitioner(parts: Int) extends org.apache.spark
   * the shuffle, inside the group). Co-location is free: all rows wanting one
   * trace land in one task, which also maximizes doc-cache locality on
   * repeated runs (reference DocCacheAware).
+  *
+  * Inside a task, Wide and Passthrough fetch through
+  * [[graft.agent.Agent.executeAll]]: up to [[graft.agent.Agent.InFlight]]
+  * distinct idempotent traces execute ahead of the consumer, so a task
+  * slot overlaps its fetch waits; row order, and so every result, is that
+  * of the serial loop. Narrow stays serial: its LRU and pinned memo decide
+  * per row whether a trace executes at all.
   */
 object FetchExec {
 
@@ -125,8 +138,9 @@ object FetchExec {
     locality match {
       case Locality.Passthrough =>
         keyed.mapPartitions { it =>
-          it.map { case (t, d) =>
-            FetchedRow(d, keyBy(t), t, Trajectory(Agent.execute(t, env)))
+          // a null key never joins a run: every row executes its own trace
+          Agent.executeAll(it, env)(_ => null, _._1).map { case ((t, d), traj) =>
+            FetchedRow(d, keyBy(t), t, traj)
           }
         }
 
@@ -178,8 +192,9 @@ object FetchExec {
         // salt index, so a key's group still lands whole in one partition,
         // while one host spreads over at most `salt` partitions.
         // repartitionAndSortWithinPartitions makes equal keys CONSECUTIVE,
-        // so the per-partition pass executes once per key run and streams —
-        // groups are never buffered (the former flatMapGroups discipline).
+        // so Agent.executeAll executes once per key run, up to InFlight runs
+        // ahead of the consumer, and streams: it buffers a bounded number of
+        // rows, never whole groups.
         val spark = keyed.sparkSession
         val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
         val prepared = keyed.rdd.map { case (t, d) =>
@@ -190,14 +205,8 @@ object FetchExec {
           Ordering.Tuple2(Ordering.Int, Ordering.String)
         val sorted = prepared.repartitionAndSortWithinPartitions(new IndexPartitioner(parts))
         val rows = sorted.mapPartitions { it =>
-          var curKey: String = null
-          var curTraj: Trajectory = null
-          it.map { case ((_, k), (t, d)) =>
-            if (k != curKey) {
-              curKey = k
-              curTraj = Trajectory(Agent.execute(t, env))
-            }
-            FetchedRow(d, k, t, curTraj)
+          Agent.executeAll(it, env)(_._1._2, _._2._1).map { case (((_, k), (t, d)), traj) =>
+            FetchedRow(d, k, t, traj)
           }
         }
         spark.createDataset(rows)(rowEnc)

@@ -33,6 +33,14 @@ final class Metrics(@transient sc: SparkContext) extends Serializable {
     */
   val exploreRounds: LongAccumulator = sc.longAccumulator("graft.exploreRounds")
 
+  /** Adds `n` to `acc` under the accumulator's lock. The agent counts from
+    * several pool threads of one task ([[graft.agent.Agent.executeAll]]),
+    * and a task's `LongAccumulator` copy is an unsynchronized sum that
+    * would lose concurrent updates. The task thread reads the sums only
+    * after every execution it started has finished.
+    */
+  def add(acc: LongAccumulator, n: Long = 1L): Unit = acc.synchronized(acc.add(n))
+
   def reset(): Unit =
     Seq(pagesFetched, fetchFromCache, cacheWrites, traceExecutions, errors,
       exploreRounds).foreach(_.reset())

@@ -136,6 +136,20 @@ class CacheSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(kept.isDefined, "the newest N versions must all be readable")
   }
 
+  test("memory tier stores and hands out detached docs: no reader's parsed state is pinned") {
+    val key = "detach-key"
+    val put = Doc(DocUID(key), "u", "<p>x</p>".getBytes("UTF-8"), Some("text/html"),
+      timestampMillis = 7L)
+    InMemoryDocCache.put(key, Seq(put), 7L)
+    val first = InMemoryDocCache.get(key, GraftConf(), 1000L).get.head
+    val second = InMemoryDocCache.get(key, GraftConf(), 1000L).get.head
+    // equal docs over the same bytes, but never the instance a reader parses
+    assert(first == put && second == put)
+    assert(first ne put, "get returned the very instance that was put")
+    assert(first ne second, "two gets returned one shared instance")
+    assert(first.asInstanceOf[Doc].content eq put.content, "the body bytes are shared, not copied")
+  }
+
   test("blob offload defaults on with a DFS cache dir; warm hits carry pointers") {
     val conf = GraftConf(dfsCacheDir = Some("/tmp/c"))
     assert(conf.effectiveBlobDir.contains("/tmp/c/blobs"))

@@ -5,6 +5,7 @@ import graft.api.{ForkType, GraftContext}
 import graft.cache.InMemoryDocCache
 import graft.conf.GraftConf
 import graft.doc.{Doc, DocUID}
+import graft.agent.Agent
 import graft.exec.Locality
 
 import org.scalatest.BeforeAndAfterEach
@@ -203,5 +204,70 @@ class FetchExecSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(files.nonEmpty)
     assert(new String(java.nio.file.Files.readAllBytes(files.head.toPath), "UTF-8")
       .contains("saved"))
+  }
+
+  // ---- the fetch pipeline primitive (Agent.executeAll) ----------------------
+
+  private def mockTrace(k: String): Trace =
+    Trace.of(Mock(Seq(Doc(DocUID(k), s"mock://$k", k.getBytes("UTF-8"), Some("text/plain")))))
+
+  test("executeAll: rows keep input order; each run of equal keys executes once; a null key runs alone") {
+    val conf = GraftConf(cacheEnabled = false, cacheWrite = false)
+    // 11 runs over 20 rows: "b" and "a" recur after other keys, so each
+    // recurrence is a run of its own
+    val keys = Seq("a", "a", "b", "c", "c", "c", "b", "d", "e", "e",
+      "f", "g", "g", "g", "g", "h", "i", "i", "a", "a")
+    val rows = keys.zipWithIndex
+    val runs = keys.indices.count(i => i == 0 || keys(i) != keys(i - 1))
+    val grouped = freshCtx(conf)
+    val out = Agent.executeAll(rows.iterator, grouped.env)(_._1, r => mockTrace(r._1)).toVector
+    assert(out.map(_._1) == rows)
+    out.foreach { case ((k, _), traj) => assert(traj.observations.map(_.uri) == Seq(s"mock://$k")) }
+    assert(grouped.metrics.traceExecutions.value == runs)
+    // rows of one run share its one trajectory
+    assert(out(3)._2 eq out(5)._2)
+    val solo = freshCtx(conf)
+    val alone = Agent.executeAll(rows.iterator, solo.env)(_ => null, r => mockTrace(r._1)).toVector
+    assert(alone.map(_._1) == rows)
+    assert(solo.metrics.traceExecutions.value == rows.size)
+  }
+
+  test("executeAll: a failed execution's cause is rethrown on the consumer's thread") {
+    // a failing fetch whose error dump cannot be written: the dump's
+    // IOException escapes Agent.execute on the pool thread
+    val notADir = writeFixture("fetch10/file", "x")
+    val ctx = freshCtx(GraftConf(cacheEnabled = false, remoteRetries = 0,
+      errorDumpDir = Some(s"$notADir/dumps")))
+    val rows = Seq(s"file:$notADir", "file:/nonexistent/nope.html")
+    val it = Agent.executeAll(rows.iterator, ctx.env)(identity, u => Trace.of(Wget(u)))
+    assert(it.next()._2.isSuccess)
+    intercept[java.io.IOException](it.next())
+  }
+
+  test("agent pool threads do not inherit the submitting thread's inheritable thread-locals") {
+    import java.util.concurrent.{Callable, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    val local = new InheritableThreadLocal[String]
+    // more concurrent jobs than live pool threads: the pool must make at
+    // least four new threads, from the submitting thread
+    val live = Thread.getAllStackTraces.keySet.asScala.count(_.getName.startsWith("graft-agent-"))
+    val n = live + 4
+    val started = new CountDownLatch(n)
+    val seen = new ConcurrentLinkedQueue[Option[String]]()
+    val submitter = new Thread(() => {
+      local.set("task-local")
+      val jobs = (1 to n).map(_ => Agent.pool.submit(new Callable[Unit] {
+        override def call(): Unit = {
+          started.countDown()
+          started.await(30, TimeUnit.SECONDS)
+          seen.add(Option(local.get()))
+        }
+      }))
+      jobs.foreach(_.get(60, TimeUnit.SECONDS))
+    })
+    submitter.start()
+    submitter.join(90000)
+    assert(seen.size == n)
+    assert(seen.asScala.forall(_.isEmpty), "a pool thread saw the submitter's thread-local")
   }
 }

@@ -108,9 +108,16 @@ class HttpSpec extends AnyFunSuite with BeforeAndAfterAll with BeforeAndAfterEac
       else respond(ex, 200, "<html><head><title>B</title></head><body>leaf</body></html>")
     })
     server.start()
+    delayed = new DelayedServer(delayMs = 50L)
   }
 
-  override def afterAll(): Unit = if (server != null) server.stop(0)
+  override def afterAll(): Unit = {
+    if (server != null) server.stop(0)
+    if (delayed != null) delayed.stop()
+  }
+
+  /** Timer-delayed loopback server for the fetch pipeline cases. */
+  private var delayed: DelayedServer = _
 
   test("Wget over HTTP: content, mime from header, dedup still applies") {
     val ctx = new GraftContext(spark, GraftConf())
@@ -295,6 +302,77 @@ class HttpSpec extends AnyFunSuite with BeforeAndAfterAll with BeforeAndAfterEac
       s"POST executed ${HttpSpec.postHits.get()} times — eviction repeated a side effect")
   }
 
+  // ---- fetch pipeline (Agent.executeAll) ------------------------------------
+
+  test("pipeline: a 1-partition Wide fetch keeps InFlight requests in flight; one GET per key, in key order") {
+    val d = delayed
+    d.reset()
+    val ctx = new GraftContext(spark, GraftConf(cacheEnabled = false))
+    import spark.implicits._
+    // one logical host under ByHost(1): all 16 distinct pages (each asked
+    // twice) land in one fetch task
+    val urls = (0 until 16).map(i => s"http://127.0.0.5:${d.port}/page?i=$i")
+    val view = ctx.create((urls.indices ++ urls.indices).toSeq, numSlices = 4)
+      .fetchOne(i => Trace.of(Wget(urls(i))), layout = graft.exec.FetchLayout.ByHost(1))
+    val parts = view.dataset.rdd.mapPartitions { it =>
+      val rows = it.map(r => (r.traceKey, r.data, r.trajectory.texts("p").mkString)).toVector
+      if (rows.isEmpty) Iterator.empty else Iterator.single(rows)
+    }.collect()
+    assert(parts.length == 1, s"ByHost(1) spread one host over ${parts.length} partitions")
+    val rows = parts.head
+    assert(rows.size == 32)
+    // the shuffle's key order survives the read-ahead, and every row holds
+    // its own page
+    assert(rows.map(_._1) == rows.map(_._1).sorted)
+    rows.foreach { case (_, i, text) => assert(text == s"/page?i=$i") }
+    assert(d.gets.get == 16)
+    assert(ctx.metrics.pagesFetched.value == 16)
+    assert(ctx.metrics.traceExecutions.value == 16)
+    assert(d.inflightMax.get == graft.agent.Agent.InFlight,
+      s"max requests in flight ${d.inflightMax.get}, want ${graft.agent.Agent.InFlight}")
+  }
+
+  test("pipeline: a partial consumer sends exactly 1 of 8 POSTs and at most InFlight of 8 GETs") {
+    val d = delayed
+    val ctx = new GraftContext(spark, GraftConf(cacheEnabled = false))
+    import spark.implicits._
+    val b = s"http://127.0.0.5:${d.port}"
+    d.reset()
+    val posts = ctx.create(0 until 8, numSlices = 1)
+      .fetchOne(i => Trace.of(Wpost(s"$b/post?i=$i", entity = s"e$i")),
+        layout = graft.exec.FetchLayout.ByHost(1))
+    assert(posts.dataset.rdd.mapPartitions(_.take(1)).collect().length == 1)
+    assert(d.posts.get == 1, s"a take(1) sent ${d.posts.get} POSTs")
+    d.reset()
+    val gets = ctx.create(0 until 8, numSlices = 1)
+      .fetchOne(i => Trace.of(Wget(s"$b/page?g=$i")), layout = graft.exec.FetchLayout.ByHost(1))
+    assert(gets.dataset.rdd.mapPartitions(_.take(1)).collect().length == 1)
+    assert(d.gets.get >= 1 && d.gets.get <= graft.agent.Agent.InFlight,
+      s"a take(1) sent ${d.gets.get} GETs")
+  }
+
+  test("pipeline: five 1-partition crawls of 255 delayed pages count every fetch exactly once") {
+    val d = delayed
+    (1 to 5).foreach { run =>
+      InMemoryDocCache.clear()
+      d.reset()
+      val ctx = new GraftContext(spark, GraftConf())
+      import spark.implicits._
+      // a binary tree of 255 pages on one logical host: under ByHost(1)
+      // every level's fetches run in one task, up to InFlight at a time,
+      // all counting into that task's accumulator copies
+      val n = ctx.create(Seq(s"http://127.0.0.6:${d.port}/tree/0"))
+        .explore(u => Trace.of(Wget(u)))(ExploreSpec.linkExpand,
+          layout = graft.exec.FetchLayout.ByHost(1))
+        .count()
+      assert(n == DelayedServer.TreePages, s"run $run")
+      assert(d.gets.get == DelayedServer.TreePages, s"run $run")
+      assert(ctx.metrics.pagesFetched.value == DelayedServer.TreePages, s"run $run")
+      assert(ctx.metrics.traceExecutions.value == DelayedServer.TreePages, s"run $run")
+      assert(ctx.metrics.cacheWrites.value == DelayedServer.TreePages, s"run $run")
+    }
+  }
+
   test("OAuthV2 signs the request with an OAuth Authorization header") {
     val ctx = new GraftContext(spark, GraftConf())
     import spark.implicits._
@@ -307,7 +385,7 @@ class HttpSpec extends AnyFunSuite with BeforeAndAfterAll with BeforeAndAfterEac
   test("action timeout hard-closes a hung HTTP connection (no pool-thread leak)") {
     import scala.jdk.CollectionConverters._
     def busyFetcherThreads: Int = Thread.getAllStackTraces.asScala.count { case (t, st) =>
-      t.getName.startsWith("graft-action-timeout") &&
+      t.getName.startsWith("graft-agent-") &&
         st.exists(_.getClassName.contains("Fetcher"))
     }
     val ctx = new GraftContext(spark, GraftConf(remoteRetries = 0, cacheEnabled = false))
@@ -565,4 +643,64 @@ object HttpSpec {
   val arrivals = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
   val robotsHits = new java.util.concurrent.atomic.AtomicInteger(0)
   val blockedHits = new java.util.concurrent.atomic.AtomicInteger(0)
+}
+
+/** Loopback server (wildcard bind, so every 127.0.0.x is a distinct
+  * logical host) whose timer completes each response `delayMs` after the
+  * request arrived: no server thread is held, so concurrent fetches
+  * overlap at the server exactly as the client sends them. Counts GETs,
+  * POSTs and the maximum number of requests in flight.
+  *
+  *  - `/tree/i` is page i of a binary tree of [[DelayedServer.TreePages]]
+  *    pages, linking to pages 2i+1 and 2i+2 by absolute url;
+  *  - any other target answers `<p>target</p>`.
+  */
+final class DelayedServer(delayMs: Long) {
+  import java.util.concurrent.{Executors, TimeUnit}
+  import java.util.concurrent.atomic.AtomicInteger
+
+  val gets = new AtomicInteger(0)
+  val posts = new AtomicInteger(0)
+  val inflightMax = new AtomicInteger(0)
+  private val inflight = new AtomicInteger(0)
+
+  def reset(): Unit = { gets.set(0); posts.set(0); inflightMax.set(inflight.get()) }
+
+  private val timer = Executors.newSingleThreadScheduledExecutor()
+  private val server = HttpServer.create(new InetSocketAddress(0), 64)
+  server.createContext("/", (ex: HttpExchange) => {
+    inflightMax.accumulateAndGet(inflight.incrementAndGet(), math.max)
+    if (ex.getRequestMethod == "POST") posts.incrementAndGet() else gets.incrementAndGet()
+    ex.getRequestBody.readAllBytes()
+    val target = ex.getRequestURI.toString
+    val body = ex.getRequestURI.getPath match {
+      case DelayedServer.Tree(i) =>
+        val host = ex.getRequestHeaders.getFirst("Host")
+        val links = Seq(2 * i.toInt + 1, 2 * i.toInt + 2).filter(_ < DelayedServer.TreePages)
+          .map(j => s"""<a href="http://$host/tree/$j">$j</a>""").mkString
+        s"<html><head><title>t$i</title></head><body>$links</body></html>"
+      case _ => s"<p>$target</p>"
+    }
+    timer.schedule(new Runnable {
+      override def run(): Unit =
+        try {
+          val bytes = body.getBytes(StandardCharsets.UTF_8)
+          ex.getResponseHeaders.set("Content-Type", "text/html")
+          ex.sendResponseHeaders(200, bytes.length)
+          ex.getResponseBody.write(bytes)
+        } catch { case _: java.io.IOException => () }
+        finally { ex.close(); inflight.decrementAndGet() }
+    }, delayMs, TimeUnit.MILLISECONDS)
+    ()
+  })
+  server.start()
+
+  def port: Int = server.getAddress.getPort
+
+  def stop(): Unit = { server.stop(0); timer.shutdownNow() }
+}
+
+object DelayedServer {
+  val TreePages = 255
+  private val Tree = "/tree/(\\d+)".r
 }

@@ -2,6 +2,7 @@ package graft.exec
 
 import graft.actions.Trace
 import graft.agent.{Agent, Env}
+import graft.scale.Held
 
 import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.RDD
@@ -63,12 +64,13 @@ final case class ExploredRow[D](row: FetchedRow[D], depth: Int) extends Serializ
   *     each fetch runs exactly once. Best-first rounds are one job each
   *     (priority order is a global decision).
   *  1. '''Bounded plans and storage.''' Each epoch or round ends in ONE cut
-  *     job that marks the frontier (reliably checkpointed to
-  *     [[graft.conf.GraftConf.checkpointDir]] when set — the multi-hour-crawl
-  *     mode, where executor loss replays at most one epoch of fetches —
-  *     else `localCheckpoint`), folds the visited keys into one
-  *     `localCheckpoint`ed RDD, and returns the loop's per-partition tally.
-  *     Lineage never exceeds one epoch and the visited keys stay one RDD.
+  *     job ([[graft.scale.Held]]) that marks the frontier (reliably
+  *     checkpointed to [[graft.conf.GraftConf.checkpointDir]] when set — the
+  *     multi-hour-crawl mode, where executor loss replays at most one epoch
+  *     of fetches — else `localCheckpoint`), folds the visited keys into one
+  *     marked RDD that supersedes the previous fold, and returns the loop's
+  *     per-partition tally. Lineage never exceeds one epoch and the visited
+  *     keys stay one RDD.
   */
 object ExploreExec {
 
@@ -246,8 +248,8 @@ object ExploreExec {
     *     row order), persist, and project the keys back onto `part`.
     *  1. [[unvisited]]: one winner per key, then one co-partitioned
     *     `zipPartitions` difference against the visited keys.
-    *  1. [[cut]]: one job that marks the frontier, folds the visited keys
-    *     and returns a per-partition [[Tally]].
+    *  1. [[cut]]: one job that marks the frontier, cuts the visited keys
+    *     into one held fold and returns a per-partition [[Tally]].
     *  1. [[finish]]: the depth-filtered union of every fetched row, eagerly
     *     checkpointed; every cache the loop held is released.
     *
@@ -258,12 +260,12 @@ object ExploreExec {
       layout: FetchLayout, env: Env, depthCap: Int,
       next: FetchedRow[D] => Seq[(Trace, D)], score: (Trace, D) => Double,
       ord: Option[Ordering[D]]) {
-    env.conf.checkpointDir.foreach(sc.setCheckpointDir)
     private val win = new Winner[D](ord)
     // every fetched batch, block-cached until finish
     private val visited = Buffer.empty[RDD[ExploredRow[D]]]
-    // the visited keys: the fold of everything before the last cut, plus
-    // one keys RDD per fetch since
+    // the visited keys: the fold of everything before the last cut (held),
+    // plus one keys RDD per fetch since
+    private val keyFold = new Held(sc, env.conf.checkpointDir)
     private var folded: Option[RDD[String]] = None
     private val recent = Buffer.empty[RDD[String]]
     // every cut frontier (each holds storage whichever way it was marked)
@@ -322,31 +324,24 @@ object ExploreExec {
         it.filter(r => !set.contains(r._1))
       }
 
-    /** One job: marks `frontier` (reliable checkpoint when a checkpointDir
-      * is configured — persisted first, so the write re-reads blocks instead
-      * of re-running fetches — else localCheckpoint), folds the visited keys
-      * into one localCheckpointed RDD, and returns `tally` per partition
-      * over the frontier and the rows fetched since the last cut. The job's
-      * final RDD is an unmarked zip of the marked ones, so Spark's post-job
-      * checkpoint walk reaches them all.
+    /** One job: marks `frontier` (retained until [[finish]]), cuts the
+      * visited keys into one fold that supersedes the previous one, and
+      * returns `tally` per partition over the frontier and the rows fetched
+      * since the last cut. The job's final RDD is an unmarked zip of the
+      * marked ones, so Spark's post-job checkpoint walk reaches them all.
       */
     def cut[T: ClassTag](frontier: RDD[Open[D]], tally: Tally[D, T]): Seq[T] = {
-      if (env.conf.checkpointDir.isDefined) {
-        frontier.persist(StorageLevel.MEMORY_AND_DISK)
-        frontier.checkpoint()
-      } else frontier.localCheckpoint()
-      cuts += frontier
+      cuts += keyFold.mark(frontier)
       if (recent.isEmpty)
         frontier.mapPartitions(o => Iterator.single(tally(o, Iterator.empty))).collect().toSeq
       else {
         val fold = sc.union(visitedKeys)
-        fold.localCheckpoint()
-        val out = frontier.zipPartitions(fold, visited.last)(
-          (o, _, fetched) => Iterator.single(tally(o, fetched))).collect().toSeq
-        visitedKeys.foreach(_.unpersist(blocking = false))
+        val out = keyFold.cut(fold, frontier.zipPartitions(fold, visited.last)(
+          (o, _, fetched) => Iterator.single(tally(o, fetched))))
+        recent.foreach(_.unpersist(blocking = false))
         folded = Some(fold)
         recent.clear()
-        out
+        out.toSeq
       }
     }
 
@@ -359,7 +354,8 @@ object ExploreExec {
       // the eager checkpoint holds the output in its own blocks: release
       // everything else now, not when the session dies — repeated explores
       // in one session must not accumulate executor storage
-      (visited ++ visitedKeys ++ cuts).foreach(_.unpersist(blocking = false))
+      (visited ++ recent ++ cuts).foreach(_.unpersist(blocking = false))
+      keyFold.release()
       out
     }
   }

@@ -1,5 +1,7 @@
 package graft.llm
 
+import graft.scale.Held
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -13,10 +15,11 @@ import org.apache.spark.sql.functions._
   * tie-break (max count, then lexicographically smallest pair), so the
   * merge table is a pure function of the corpus' word multiset —
   * independent of partitioning, task order, or parallelism (spec-pinned by
-  * training the same docs under different repartitionings). Only the
-  * single winning pair is ever collected per round; the symbol table stays
-  * distributed and is re-checkpointed every few rounds to keep lineage
-  * flat. At 100 TB the corpus pass is the only corpus-scale work; rounds
+  * training the same docs under different repartitionings). Only a
+  * bounded top slice of pairs is ever collected per round; the symbol
+  * table stays distributed and is re-cut every 8 merges (a
+  * [[graft.scale.Held]] frame that releases the previous one) to keep
+  * lineage flat. At 100 TB the corpus pass is the only corpus-scale work; rounds
   * cost vocabulary-sized shuffles.
   *
   * **Apply** ([[BpeEncode]] via `graft.functions.bpe_encode`) broadcasts
@@ -71,20 +74,18 @@ object Bpe {
 
   /** The word-frequency symbol table both trainers iterate on: one
     * map-side-combined aggregate over the corpus (the only corpus-scale
-    * work), materialized so every merge round reads executor blocks.
+    * work), a `held` frame so every merge round reads executor blocks.
     */
-  private def wordSyms(docs: DataFrame): DataFrame = {
+  private def wordSyms(docs: DataFrame, held: Held): DataFrame = {
     val symsOf = udf((w: String) => symbolsOf(w))
-    docs
+    held.frame(docs
       .select(explode(split(col("text"), " ")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(symsOf(col("word")).as("syms"), col("freq"))
-      .localCheckpoint()
+      .select(symsOf(col("word")).as("syms"), col("freq")))
   }
 
-  /** Adjacent-pair frequency table of the current symbol sequences — the
-    * per-round counting aggregate shared by [[train]] (argmax row) and
-    * [[trainBatched]] (top slice).
+  /** Adjacent-pair frequency table of the current symbol sequences, ranked
+    * — the per-round counting aggregate of [[trainBatched]].
     */
   private def pairCounts(seqs: DataFrame): DataFrame =
     seqs.filter(size(col("syms")) >= 2)
@@ -99,30 +100,13 @@ object Bpe {
   /** Train `nMerges` BPE merges on (doc_id, text) docs. Returns the merge
     * table in rank order — bounded at nMerges rows by construction, so a
     * driver-side Seq is the honest representation (the PQ-codebook
-    * precedent). Stops early if no adjacent pair remains.
+    * precedent). Stops early if no adjacent pair remains. Exact sequential
+    * BPE: one merge — the top pair — per counting round, which is
+    * [[trainBatched]] with batches of one (its first candidate is always
+    * selected).
     */
-  def train(docs: DataFrame, nMerges: Int): Seq[(String, String)] = {
-    var seqs = wordSyms(docs)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var done = false
-    var round = 0
-    while (round < nMerges && !done) {
-      val best = pairCounts(seqs).limit(1).collect()
-      if (best.isEmpty) done = true
-      else {
-        val (l, r) = (best(0).getString(0), best(0).getString(1))
-        merges += ((l, r))
-        seqs = seqs.withColumn("syms", mergeStep(col("syms"), l, r))
-        round += 1
-        // flat lineage: 8 aggregate-HOF rewrites per checkpoint segment
-        if (round % 8 == 0) {
-          val next = seqs.localCheckpoint()
-          seqs = next
-        }
-      }
-    }
-    merges.toSeq
-  }
+  def train(docs: DataFrame, nMerges: Int): Seq[(String, String)] =
+    trainBatched(docs, nMerges, 1)
 
   /** [[train]] with BATCHED merge selection — the job-count fix for big
     * vocabularies: one Spark job per merge means a 32k-merge training run
@@ -150,10 +134,15 @@ object Bpe {
     * selection is the standard throughput approximation every production
     * BPE trainer makes; q55's gate stays on [[train]]'s exact sequential
     * semantics.
+    *
+    * The symbol table is re-cut every 8 merges as a
+    * [[graft.scale.Held.frame]] that releases the previous one, and the
+    * last is released before returning.
     */
   def trainBatched(docs: DataFrame, nMerges: Int, batch: Int = 8): Seq[(String, String)] = {
     require(batch >= 1, s"batch must be >= 1: $batch")
-    var seqs = wordSyms(docs)
+    val held = new Held(docs.sparkSession.sparkContext)
+    var seqs = wordSyms(docs, held)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var done = false
     var sinceCp = 0
@@ -181,12 +170,13 @@ object Bpe {
         seqs = sel.foldLeft(seqs)((s, p) =>
           s.withColumn("syms", mergeStep(col("syms"), p._1, p._2)))
         sinceCp += sel.size
-        // the same flat-lineage cadence as train: ~8 HOF rewrites/segment
+        // flat lineage: ~8 aggregate-HOF rewrites per checkpoint segment
         if (sinceCp >= 8 && merges.size < nMerges) {
-          seqs = seqs.localCheckpoint(); sinceCp = 0
+          seqs = held.frame(seqs); sinceCp = 0
         }
       }
     }
+    held.release()
     merges.toSeq
   }
 

@@ -1,7 +1,13 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.scale.Held
+
+import scala.collection.mutable.{HashSet, LongMap}
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components for near-duplicate clustering.
@@ -18,27 +24,26 @@ import org.apache.spark.sql.functions._
   * clusters, e.g. drifting boilerplate where doc i matches only doc i±1),
   * the star operators converge in O(log² n) rounds regardless of shape.
   *
-  * Hybrid execution: at or below [[Dedup.SmallGraphEdges]] canonical edges
-  * the components come from a bounded driver union-find (identical min-id
+  * Hybrid execution: one [[graft.scale.Held.cut]] marks the canonical edges
+  * and yields their (count, xor) signature — the only pass over the input.
+  * At or below [[Dedup.SmallGraphEdges]] edges the components come from a
+  * bounded driver union-find over the marked edges (identical min-id
   * labeling, no per-round driver latency); above it, the distributed star
-  * loop below. Execution shape of the loop, tuned like the explore level
-  * chain (iterative loops pay fixed driver cost per materialization, so
-  * both the shuffle count per round and the planning overhead are
-  * engineered down):
-  *   - each star phase is ONE hash-shuffle: the per-node neighborhood
-  *     minimum rides a window aggregate over the node key (no groupBy+join
-  *     round trip), and the Tungsten shuffle moves two-long rows (~16 B per
-  *     similarity pair at 100 TB — documents never enter the loop);
-  *   - one `distinct` per round bounds the edge set, which only SHRINKS as
-  *     stars collapse;
-  *   - the loop runs on a CLONED session with AQE off (clone shares the
-  *     SparkContext and cache; concurrent queries on the caller's session
-  *     keep their AQE) — the loop's plans are tiny and fixed, so AQE's
-  *     per-stage materialization barriers are pure driver latency here;
-  *   - every round cuts lineage with a LAZY `localCheckpoint` materialized
-  *     by the same action that computes the convergence signature
-  *     (count + XOR of edge hashes: commutative, overflow-free under ANSI,
-  *     no second scan, no driver-side data collect).
+  * loop, an RDD loop over two-long edges (~16 B per similarity pair —
+  * documents never enter it):
+  *   - every phase keys edges by node under ONE `HashPartitioner`, sized
+  *     once from the signature's count (~50k edges per partition, capped at
+  *     4x parallelism; the edge set only shrinks). A phase is one shuffle;
+  *     its per-node minimum is a `reduceByKey` on the already-partitioned
+  *     edges (no shuffle) zipped back onto them. Hub nodes never gather
+  *     their neighbour lists;
+  *   - the round's distinct folds into the next large-star phase's
+  *     partitioning: both orientations of an edge land with their node, so
+  *     duplicates meet in one partition;
+  *   - each round is one [[graft.scale.Held.cut]]: the job that
+  *     materializes the round also folds its fixpoint signature (count + XOR
+  *     of edge hashes: commutative, no second scan, no driver-side data
+  *     collect), and the previous round's checkpoint is released at once.
   *
   * Reference analog: none — the reference has no graph operator family. This
   * closes the pairs→groups gap of the training-data-pipeline extensions
@@ -65,11 +70,11 @@ object Dedup {
 
   /** Edge-count threshold below which the component computation runs as a
     * BOUNDED driver-side union-find instead of the iterative star loop. The
-    * loop pays 2 shuffles + a signature job PER ROUND in pure driver
-    * latency; at <= 100k canonical edges (1.6 MB of two-long rows — far
-    * under any broadcast threshold) a local union-find is faster by 10-50x
-    * and produces the identical min-id labeling. This is the standard
-    * hybrid (verified-pair graphs are tiny relative to their corpus even at
+    * loop pays 2 shuffles + a job PER ROUND in pure driver latency; at
+    * <= 100k canonical edges (1.6 MB of two-long rows — far under any
+    * broadcast threshold) a local union-find is faster by 10-50x and
+    * produces the identical min-id labeling. This is the standard hybrid
+    * (verified-pair graphs are tiny relative to their corpus even at
     * 100 TB; when they are not, the distributed loop takes over
     * automatically). The spec suite pins BOTH paths and their equality.
     */
@@ -86,103 +91,80 @@ object Dedup {
   def connectedComponentsWithStats(edges: DataFrame, src: String, dst: String,
                                    maxIter: Int = 30,
                                    smallGraphThreshold: Long = SmallGraphEdges): (DataFrame, Int) = {
-    val caller = edges.sparkSession
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val held = new Held(spark.sparkContext)
 
     // canonical undirected edge list: u < v, nulls/self-loops dropped.
     // Deliberately NOT distinct'd: duplicate input edges are harmless (the
-    // first round's own distinct collapses them; min aggregates are
-    // idempotent), and skipping it saves a full-width shuffle + job per
-    // call. Worst case, a duplicate-bearing input that is ALREADY a star
-    // forest pays one extra detection round.
-    val canonCaller = edges
+    // first round's partitioning collapses them; min aggregates are
+    // idempotent). Worst case, a duplicate-bearing input that is ALREADY a
+    // star forest pays one extra detection round.
+    val canon = edges
       .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
+      .select(least(col("u"), col("v")), greatest(col("u"), col("v")))
+      .as[(Long, Long)].rdd
 
-    // one cheap count decides the path (the loop re-derives it in its first
-    // fixpoint signature; the small path needs it as its collect bound)
-    val nCanon = canonCaller.count()
-    if (nCanon <= smallGraphThreshold) return (smallGraphComponents(canonCaller), 0)
+    var sig = held.cut(canon)((0L, 0L))(EdgeSig.sign, EdgeSig.plus)
+    if (sig._1 <= smallGraphThreshold)
+      try return (smallGraphComponents(canon.collect()).toDF("id", "comp"), 0)
+      finally held.release()
 
-    val spark = cloneSession(caller)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // rebound onto the loop session (one narrow pass; schema is two longs)
-    val canon0 = spark.createDataFrame(canonCaller.rdd, canonCaller.schema)
+    val part = new HashPartitioner(math.max(1L, math.min(sig._1 / 50000L + 1L,
+      spark.sparkContext.defaultParallelism.toLong * 4L)).toInt)
+    // both orientations keyed by node under `part`, duplicates dropped where
+    // they meet (one shuffle)
+    def byNode(e: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      e.flatMap { case (a, b) => Iterator((a, b), (b, a)) }.partitionBy(part)
+        .mapPartitions({ it => val seen = HashSet.empty[(Long, Long)]; it.filter(seen.add) },
+          preservesPartitioning = true)
+    // each key's minimum neighbour, joined back onto its edges (no shuffle:
+    // `keyed` is already partitioned by `part`)
+    def withMin(keyed: RDD[(Long, Long)])(f: (Iterator[(Long, Long)], LongMap[Long]) =>
+        Iterator[(Long, Long)]): RDD[(Long, Long)] =
+      keyed.zipPartitions(keyed.reduceByKey(part, math.min(_, _))) { (eit, mit) =>
+        val m = LongMap.empty[Long]
+        mit.foreach { case (k, x) => m.update(k, x) }
+        f(eit, m)
+      }
 
-    // (row count, order-independent xxhash64 XOR) — the fixpoint signature,
-    // and the action that materializes each round's lazy checkpoint. XOR is
-    // commutative (partition-order independent), cannot overflow under ANSI
-    // mode, and the canonical edge set is distinct so no hash self-cancels.
-    def signature(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
+    // large-star: every node u attaches each STRICTLY LARGER neighbour v to
+    // the minimum m of u's closed neighbourhood; (m, v) is canonical.
+    def largeStar(cur: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      withMin(cur)((eit, m) => eit.collect { case (u, v) if v > u => (math.min(u, m(u)), v) })
 
-    val byNode = Window.partitionBy("u")
+    // small-star: every node v attaches its SMALLER neighbours and itself to
+    // the minimum m of those smaller neighbours. Edges arrive canonical, so
+    // keying them by the larger end gives each v its smaller neighbours.
+    def smallStar(e: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      withMin(e.map(_.swap).partitionBy(part)) { (eit, m) =>
+        eit.collect { case (v, x) if x != m(v) => (m(v), x) } ++ m.iterator.map(_.swap)
+      }
 
-    // large-star: every node u attaches each STRICTLY LARGER neighbor to the
-    // minimum of u's closed neighborhood. Output (m, v) is canonical (m < v)
-    // by construction — no re-canonicalization needed. One shuffle: the
-    // window over u (the union symmetrization is narrow).
-    def largeStar(e: DataFrame): DataFrame =
-      e.union(e.select(col("v"), col("u")))
-        .withColumn("m", least(min(col("v")).over(byNode), col("u")))
-        .where(col("v") > col("u"))
-        .select(col("m").as("u"), col("v"))
-
-    // small-star: every node attaches its SMALLER neighbors (and itself) to
-    // the minimum of those. Rows are oriented (big, small), so no
-    // symmetrization; the member and self edges ride one explode so the
-    // window subtree evaluates once. One shuffle + the round's distinct.
-    def smallStar(e: DataFrame): DataFrame =
-      e.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-        .withColumn("m", min(col("v")).over(byNode)) // m < u always
-        .select(col("m").as("u"), explode(array(col("v"), col("u"))).as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-
-    var cur = canon0.localCheckpoint(eager = false)
-    var sig = signature(cur)
-    // Size the loop's shuffle exactly ONCE from the initial edge count (the
-    // signature already computed it — no extra job): AQE would do this per
-    // stage, but its materialization barriers are driver latency the loop
-    // pays every round; a fixed size is safe because the edge set only
-    // shrinks. ~50k two-long rows per partition, capped at 4x parallelism.
-    val loopParts = math.max(1L, math.min(sig._1 / 50000L + 1L,
-      spark.sparkContext.defaultParallelism.toLong * 4L)).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    var rounds = 0
-    var converged = false
+    var (cur, rounds, converged) = (byNode(canon), 0, false)
     while (!converged && rounds < maxIter) {
-      val next = smallStar(largeStar(cur)).localCheckpoint(eager = false)
-      val nextSig = signature(next)
+      cur = byNode(smallStar(largeStar(cur)))
+      val next = held.cut(cur)((0L, 0L))(EdgeSig.sign, EdgeSig.plus)
       rounds += 1
-      converged = nextSig == sig
-      sig = nextSig
-      val prev = cur
-      cur = next
-      prev.unpersist(blocking = false) // checkpoint blocks ContextCleaner-freed
+      converged = next == sig
+      sig = next
     }
     // A truncated loop is NOT a labeling: the star operators only guarantee
     // "every edge is (root, member)" at the fixpoint, so returning the
     // maxIter-th edge set as components would be silently wrong. Convergence
     // needs ~log2(diameter) rounds, so hitting the default 30 means the graph
     // is pathological (or maxIter was lowered) — fail loudly, don't guess.
+    if (!converged) held.release()
     require(converged,
       s"connectedComponents did not reach a fixpoint within $maxIter rounds; " +
         "raise maxIter (rounds needed ~ log2 of the largest component diameter)")
 
-    // Fixpoint = disjoint stars rooted at each component's minimum: every
-    // canonical edge is (root, member). Roots map to themselves. Handed back
-    // on the CALLER's session, MATERIALIZED OFF the loop's checkpoint blocks
-    // (eager localCheckpoint of the small (id, comp) result) so the final
-    // round's edge-set blocks can be released here instead of pinning
-    // executor storage for the application lifetime.
-    val comps = cur.select(col("v").as("id"), col("u").as("comp"))
-      .union(cur.select(col("u").as("id"), col("u").as("comp")).distinct())
-    val out = caller.createDataFrame(comps.rdd, comps.schema).localCheckpoint(true)
-    cur.unpersist(blocking = false)
-    (out, rounds)
+    // Fixpoint = disjoint stars rooted at each component's minimum: a node's
+    // minimum neighbour is its root, and a root's is larger than itself.
+    // Eagerly checkpointed, so the last round's blocks are released here.
+    val comps = cur.reduceByKey(part, math.min(_, _)).map { case (u, m) => (u, math.min(u, m)) }
+    (held.frame(comps.toDF("id", "comp")), rounds)
   }
 
   /** Incremental dedup-group maintenance: fold a batch of NEW similarity
@@ -271,9 +253,8 @@ object Dedup {
     * the star loop converges to. The collect is bounded by the threshold
     * check in the caller (<= threshold two-long rows).
     */
-  private def smallGraphComponents(canon: DataFrame): DataFrame = {
-    val caller = canon.sparkSession
-    val parent = scala.collection.mutable.LongMap.empty[Long]
+  private def smallGraphComponents(canon: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
@@ -281,31 +262,26 @@ object Dedup {
       while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    canon.collect().foreach { row =>
-      val u = row.getLong(0)
-      val v = row.getLong(1)
+    canon.foreach { case (u, v) =>
       parent.getOrElseUpdate(u, u)
       parent.getOrElseUpdate(v, v)
       val ru = find(u)
       val rv = find(v)
       if (ru != rv) { if (ru < rv) parent(rv) = ru else parent(ru) = rv }
     }
-    val out = parent.keys.toSeq.map(n => (n, find(n)))
-    val c2 = caller
-    import c2.implicits._
-    out.toDF("id", "comp")
+    parent.keys.toSeq.map(n => (n, find(n)))
   }
+}
 
-  /** A session sharing this one's SparkContext/caches but with an isolated
-    * SQLConf — `SparkSession.cloneSession()` is `private[sql]` but compiles
-    * to a public method, so call it reflectively (what Structured Streaming
-    * uses internally for the same isolation). Fallback: `newSession()`.
-    */
-  private def cloneSession(spark: SparkSession): SparkSession =
-    try spark.getClass.getMethod("cloneSession").invoke(spark).asInstanceOf[SparkSession]
-    catch {
-      case scala.util.control.NonFatal(_) => spark.newSession()
-    }
+/** The star loop's fixpoint signature: (edge count, XOR of edge hashes)
+  * over the u < v orientation, each hash Spark's `xxhash64(u, v)`. XOR is
+  * commutative (partition-order independent) and every round's edge set is
+  * distinct, so no hash self-cancels.
+  */
+private object EdgeSig extends Serializable {
+  def sign(s: (Long, Long), e: (Long, Long)): (Long, Long) =
+    if (e._1 < e._2) (s._1 + 1L, s._2 ^ XXH64.hashLong(e._2, XXH64.hashLong(e._1, 42L))) else s
+  def plus(a: (Long, Long), b: (Long, Long)): (Long, Long) = (a._1 + b._1, a._2 ^ b._2)
 }
 
 /** Mutable warm-start handle for streaming / batch-periodic dedup-group

@@ -1,5 +1,7 @@
 package graft.llm
 
+import graft.scale.Held
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -427,10 +429,11 @@ object SemDedup {
   }
 
   /** [[fit]] in the distributed regime: centroids are a (cid, cv, n2)
-    * frame throughout, localCheckpointed per iteration (k rows — truncates
-    * the nested-broadcast lineage the way [[graft.scale.GraphLoop]] cuts
-    * its rounds). Callers pass a corpus ALREADY hash-partitioned on `idCol`
-    * (and persisted) so every iteration is exchange-free for the vectors.
+    * frame throughout, one [[graft.scale.Held.frame]] per iteration (k rows
+    * — truncates the nested-broadcast lineage; each iteration's checkpoint
+    * releases the previous one, so only the returned frame's stays).
+    * Callers pass a corpus ALREADY hash-partitioned on `idCol` (and
+    * persisted) so every iteration is exchange-free for the vectors.
     *
     * Above `coarseMaxKd` ([[COARSE_MAX_KD]]) the bucketed-broadcast
     * assignment itself stops fitting the per-task budget, and each
@@ -451,22 +454,26 @@ object SemDedup {
   def fitDF(q: DataFrame, idCol: String, k: Int, iters: Int,
             bucketSize: Int = ASSIGN_BUCKET,
             coarseMaxKd: Long = COARSE_MAX_KD,
-            nProbe: Int = 2): DataFrame = {
-    var cen = initCentroidsDF(q, idCol, k).localCheckpoint()
-    // d probe: one bounded row — decides the assignment regime for the fit
-    val d = q.select(size(col("qv")).as("d")).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(0)
-    val useCoarse = k.toLong * d > coarseMaxKd
+            nProbe: Int = 2): DataFrame =
+    fitHeld(q, idCol, k, iters, bucketSize, k.toLong * dim(q) > coarseMaxKd, nProbe,
+      new Held(q.sparkSession.sparkContext))
+
+  /** The d probe that decides a regime: one bounded row of `qv`. */
+  private def dim(q: DataFrame): Int =
+    q.select(size(col("qv"))).limit(1).collect().headOption.map(_.getInt(0)).getOrElse(0)
+
+  /** [[fitDF]] with the regime decided, whose centroid checkpoints `held`
+    * holds: the returned frame reads the held one until it is released.
+    */
+  private def fitHeld(q: DataFrame, idCol: String, k: Int, iters: Int, bucketSize: Int,
+                      useCoarse: Boolean, nProbe: Int, held: Held): DataFrame = {
     val coarseEvery = math.max(1, math.round(math.sqrt(k.toDouble)).toInt)
-    var i = 0
-    while (i < iters) {
+    (1 to iters).foldLeft(held.frame(initCentroidsDF(q, idCol, k))) { (cen, _) =>
       val assigned =
         if (useCoarse) assignCoarseDF(q, idCol, cen, coarseEvery, nProbe)
         else assignDF(q, idCol, cen, bucketSize)
-      cen = lloydUpdateDF(assigned, cen).localCheckpoint()
-      i += 1
+      held.frame(lloydUpdateDF(assigned, cen))
     }
-    cen
   }
 
   /** Exact integer dot product of two quantized vectors (native codegen —
@@ -553,9 +560,8 @@ object SemDedup {
                maxClusterSize: Long = 0L,
                coarseMaxKd: Long = COARSE_MAX_KD): DataFrame = {
     val q0 = quantize(vectors, vecCol).select(col(idCol), col("qv"))
-    // d probe for the k·d regime pin: a one-row bounded collect
-    val d = q0.select(size(col("qv")).as("d")).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(0)
+    val d = dim(q0) // for the k·d regime pin
+    val held = new Held(vectors.sparkSession.sparkContext)
     val (assigned, qPinned) =
       if (k.toLong * d <= packedMaxKd) {
         (assign(q0, fit(q0, idCol, k, iters)), None)
@@ -565,12 +571,13 @@ object SemDedup {
         // (exact route; the coarse route past coarseMaxKd shuffles per
         // iteration — the documented memory-vs-exchange trade)
         val qP = q0.repartition(col(idCol)).persist()
-        val cen = fitDF(qP, idCol, k, iters, coarseMaxKd = coarseMaxKd)
+        val coarse = k.toLong * d > coarseMaxKd
+        val cen = fitHeld(qP, idCol, k, iters, ASSIGN_BUCKET, coarse, 2, held)
         // final assignment rides the same regime the fit did: past the
         // coarse pin, assignDF's bucket rows would re-materialize the
         // very k·d the fit just refused to
         val a =
-          if (k.toLong * d > coarseMaxKd)
+          if (coarse)
             assignCoarseDF(qP, idCol, cen,
               math.max(1, math.round(math.sqrt(k.toDouble)).toInt))
           else assignDF(qP, idCol, cen)
@@ -580,7 +587,7 @@ object SemDedup {
       .withColumn("n2", qdot("qv", "qv"))
       .select(col(idCol), col("qv"), col("cluster"), col("cdist"), col("n2"))
       .persist()
-    qPinned.foreach { qP => m.count(); qP.unpersist(false) }
+    qPinned.foreach { qP => m.count(); qP.unpersist(false); held.release() }
     val dups =
       if (maxClusterSize <= 0L) {
         val a = m.select(col(idCol).as("id_a"), col("qv").as("qa"),

@@ -24,12 +24,11 @@ import org.apache.spark.storage.StorageLevel
   *     `zipPartitions`; a round's only exchange is the map-side-combined
   *     per-receiver reduce. Edges never reshuffle after setup.
   *  3. Rounds ([[rounds]]). A round that needs a scalar (a [[GraphLoop.Tally]]
-  *     over the (new, old) node values) materializes through
-  *     `localCheckpoint`, and the tally IS the materializing fold:
-  *     one Spark job per round, and the previous round's blocks are
-  *     released at once, so storage stays O(1) in the round count. Rounds
-  *     without a tally stay lineage and are cut every
-  *     [[GraphLoop.CheckpointEvery]] rounds.
+  *     over the (new, old) node values) is a [[Held.cut]] of the loop's
+  *     [[checkpoints]], and the tally IS the materializing fold: one Spark
+  *     job per round, and the previous round's blocks are released at once,
+  *     so storage stays O(1) in the round count. Rounds without a tally
+  *     stay lineage and are cut every [[GraphLoop.CheckpointEvery]] rounds.
   *  4. Result ([[GraphLoop.Result]]). The caller's frame, the rounds run and
   *     the last scalar; `release()` frees the edge indexes and the last
   *     checkpoint.
@@ -54,8 +53,8 @@ final class GraphLoop(ids: DataFrame, edges: DataFrame, reversed: Boolean = fals
   val bySrc: RDD[(Long, Long)] = index(raw)
   /** (dst, src) keyed by dst; null unless `reversed`. */
   val byDst: RDD[(Long, Long)] = if (reversed) index(raw.map(_.swap)) else null
-  // the checkpoint the latest materialized values live in
-  private var held: RDD[_] = null
+  /** Holds the checkpoint the latest materialized values live in. */
+  val checkpoints = new Held(spark.sparkContext)
 
   /** Node values under [[part]]; `init` gets each id and its out-degree in
     * the edge multiset (counted where the id's out-edges already sit).
@@ -90,19 +89,6 @@ final class GraphLoop(ids: DataFrame, edges: DataFrame, reversed: Boolean = fals
     }
   }
 
-  /** Localcheckpoints `rdd` through one job that folds it with `seq`, and
-    * releases the checkpoint it replaces. The per-partition folds combine
-    * in partition order, not task-completion order, so a rerun sums alike.
-    */
-  def materialize[T, S: ClassTag](rdd: RDD[T])(zero: S)(seq: (S, T) => S, comb: (S, S) => S): S = {
-    rdd.localCheckpoint()
-    val s = rdd.mapPartitions(it => Iterator.single(it.foldLeft(zero)(seq)))
-      .collect().foldLeft(zero)(comb)
-    if (held != null) held.unpersist(blocking = false)
-    held = rdd
-    s
-  }
-
   /** Up to `maxRounds` rounds of `step`, which gets the current values and
     * the last scalar (`first` before any tally ran). With a `tally` every
     * round materializes and the loop stops at the first round whose tally
@@ -121,10 +107,10 @@ final class GraphLoop(ids: DataFrame, edges: DataFrame, reversed: Boolean = fals
       val next = step(values, s)
       tally match {
         case Some(t) =>
-          s = materialize(next)(t.zero)((a, kv) => t.plus(a, t.of(kv._2._1, kv._2._2)), t.plus)
+          s = checkpoints.cut(next)(t.zero)((a, kv) => t.plus(a, t.of(kv._2._1, kv._2._2)), t.plus)
           stop = t.stop(s)
         case None if r % CheckpointEvery == 0 && r < maxRounds =>
-          materialize(next)(0L)((a, _) => a + 1L, _ + _)
+          checkpoints.cut(next)(0L)((a, _) => a + 1L, _ + _)
         case None =>
       }
       values = next.mapValues(_._1)
@@ -136,7 +122,7 @@ final class GraphLoop(ids: DataFrame, edges: DataFrame, reversed: Boolean = fals
     * handles its `release()` frees.
     */
   def result(frame: DataFrame, rounds: Int, last: Double): Result =
-    new Result(frame, rounds, last, Seq(bySrc, byDst, held).filter(_ != null))
+    new Result(frame, rounds, last, Seq(bySrc, byDst).filter(_ != null), checkpoints)
 }
 
 object GraphLoop {
@@ -157,11 +143,11 @@ object GraphLoop {
     * @param last the last round's scalar (NaN when the caller had none)
     */
   final class Result private[scale] (
-      val frame: DataFrame, val rounds: Int, val last: Double, handles: Seq[RDD[_]]) {
+      val frame: DataFrame, val rounds: Int, val last: Double, indexes: Seq[RDD[_]], held: Held) {
     /** Frees the edge indexes and the last checkpoint. Call after consuming
       * `frame`; it must not be re-executed afterwards.
       */
-    def release(): Unit = handles.foreach(_.unpersist(blocking = false))
+    def release(): Unit = { indexes.foreach(_.unpersist(blocking = false)); held.release() }
     // PageRank's names for the same three facts
     def ranks: DataFrame = frame
     def iterations: Int = rounds

@@ -48,7 +48,7 @@ object PageRank {
     import spark.implicits._
     val g = new GraphLoop(nodes, edges)
     val init = g.nodes((_, deg) => (1.0, deg))
-    val (n, nDangling) = g.materialize(init)((0L, 0L))(
+    val (n, nDangling) = g.checkpoints.cut(init)((0L, 0L))(
       (a, kv) => (a._1 + 1L, if (kv._2._2 == 0) a._2 + 1L else a._2),
       (a, b) => (a._1 + b._1, a._2 + b._2))
     require(n > 0, "pagerank needs a non-empty node set")

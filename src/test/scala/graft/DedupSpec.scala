@@ -1,9 +1,14 @@
 package graft
 
+import graft.exec.JobCensus
 import graft.llm.Dedup
 
+import org.apache.spark.graft.BlockCensus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Random
 
@@ -73,10 +78,16 @@ class DedupSpec extends AnyFunSuite {
 
   test("distributed star loop == small-graph fast path == oracle (both paths pinned)") {
     val rnd = new Random(7)
-    for (trial <- 1 to 3) {
-      val edges = Seq.fill(150 + trial * 50) {
+    val random = (1 to 3).map { trial =>
+      Seq.fill(150 + trial * 50) {
         (rnd.nextInt(90).toLong, rnd.nextInt(90).toLong)
       }.filter { case (a, b) => a != b }
+    }
+    // hub-heavy: a 2,000-leaf star with a 64-node chain hung from a leaf,
+    // the chain holding the component's minimum id
+    val hub = (100L until 2100L).map(l => (10000L, l)) ++
+      (0L until 63L).map(i => (i, i + 1)) :+ ((63L, 100L))
+    for ((edges, trial) <- (random :+ hub).zipWithIndex) {
       val (dist, rounds) = runDistributed(edges)
       assert(rounds > 0, "threshold 0 must run the star loop")
       assert(dist == ufComponents(edges), s"trial $trial distributed")
@@ -117,6 +128,76 @@ class DedupSpec extends AnyFunSuite {
     // A~B, B~C with no A~C edge: one group, keeper = min
     val comps = run(Seq((7L, 3L), (7L, 9L)))
     assert(comps == Map(3L -> 3L, 7L -> 3L, 9L -> 3L))
+  }
+
+  /** Jobs and shuffle-map stages (stages that wrote shuffle records) of one
+    * star-loop run, and its rounds.
+    */
+  private def census(name: String, edges: Seq[(Long, Long)]): (Int, Int, Int) = {
+    val sc = spark.sparkContext
+    val input = edgeDf(edges)
+    val jobsEnded = new AtomicInteger
+    val shuffleStages = new AtomicInteger
+    val listener = new SparkListener {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (Option(s.stageInfo.taskMetrics).exists(_.shuffleWriteMetrics.recordsWritten > 0))
+          shuffleStages.incrementAndGet()
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = jobsEnded.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(name, name, interruptOnCancel = false)
+      val rounds = try Dedup.connectedComponentsWithStats(input, "src", "dst",
+        smallGraphThreshold = 0L)._2 finally sc.clearJobGroup()
+      val jobs = JobCensus.settledJobCount(sc, name)
+      val deadline = System.currentTimeMillis() + 15000
+      while (jobsEnded.get < jobs && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      (jobs, shuffleStages.get, rounds)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("star loop census: one job per round plus a fixed term; two shuffles per round") {
+    val chain = (0L until 255L).map(i => (i, i + 1))
+    val stars = Seq((0L, 1L), (0L, 2L), (0L, 3L), (10L, 11L), (10L, 12L))
+    val (chainJobs, chainShuffles, chainRounds) = census("cc-census-chain", chain)
+    val (starJobs, starShuffles, starRounds) = census("cc-census-stars", stars)
+    info(s"chain: $chainJobs jobs, $chainShuffles shuffle-map stages, $chainRounds rounds; " +
+      s"stars: $starJobs jobs, $starShuffles shuffle-map stages, $starRounds round")
+    assert(chainRounds <= 12 && starRounds == 1, s"rounds: chain $chainRounds, stars $starRounds")
+    val fixed = chainJobs - chainRounds
+    assert(starJobs - starRounds == fixed && fixed <= 5,
+      s"jobs: chain $chainJobs in $chainRounds rounds, stars $starJobs in $starRounds")
+    // one initial partitioning by node, then two shuffles per round
+    Seq((chainShuffles, chainRounds), (starShuffles, starRounds)).foreach { case (sh, r) =>
+      assert(sh <= 2 * r + 1, s"$sh shuffle-map stages in $r rounds")
+    }
+  }
+
+  test("star loop: a second run is identical and leaves only its output's blocks") {
+    val chain = (0L until 255L).map(i => (i, i + 1))
+    val outs = (1 to 2).map { _ =>
+      val before = BlockCensus.rddBlocks()
+      val (df, rounds) = Dedup.connectedComponentsWithStats(edgeDf(chain), "src", "dst",
+        smallGraphThreshold = 0L)
+      val left = BlockCensus.leftSince(before, df)
+      assert(left.isEmpty, s"${left.size} RDD blocks left beyond the output's own: $left")
+      (df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
+    }
+    assert(outs(0) == outs(1) && outs(0)._1.size == 256)
+  }
+
+  test("both paths read the edge input once per call") {
+    val reads = spark.sparkContext.longAccumulator("cc-edge-reads")
+    val counted = udf { (x: Long) => reads.add(1); x }.asNondeterministic()
+    val chain = (0L until 255L).map(i => (i, i + 1))
+    Seq("union-find" -> Dedup.SmallGraphEdges, "star loop" -> 0L).foreach { case (path, threshold) =>
+      reads.reset()
+      val in = edgeDf(chain).select(counted(col("src")).as("src"), col("dst"))
+      val (df, rounds) = Dedup.connectedComponentsWithStats(in, "src", "dst",
+        smallGraphThreshold = threshold)
+      assert(df.collect().length == 256 && (rounds > 0) == (threshold == 0L))
+      assert(reads.value == chain.size, s"$path: ${reads.value} reads of ${chain.size} rows")
+    }
   }
 
   private def collectAsg(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =

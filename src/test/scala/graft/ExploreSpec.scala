@@ -540,6 +540,25 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(ctx.metrics.pagesFetched.value == 20)
   }
 
+  test("explore with checkpointDir runs identically twice; only the output's blocks stay") {
+    val site = diamondSite("explore-twice-ckpt")
+    val seed = s"file:${site("A")}"
+    import spark.implicits._
+    val results = (1 to 2).map { _ =>
+      InMemoryDocCache.clear()
+      val ckpt = scratchDir("explore-twice-ckpt")
+      val ctx = new GraftContext(spark, GraftConf(checkpointDir = Some(ckpt)))
+      val before = org.apache.spark.graft.BlockCensus.rddBlocks()
+      val view = ctx.create(Seq(seed)).explore(u => Trace.of(Wget(u)))(linkExpand)
+      val left = org.apache.spark.graft.BlockCensus.leftSince(before, view.dataset)
+      assert(left.isEmpty, s"${left.size} RDD blocks left beyond the output's own: $left")
+      assert(ExploreSpec.checkpointRddDirs(ckpt) >= 2, "cuts were not reliable")
+      (view.collect().map(r => (r.row.trace.primaryUri.get, r.depth)).sorted,
+        ctx.metrics.pagesFetched.value)
+    }
+    assert(results(0) == results(1) && results(0)._1.size == 4, s"second run differs: $results")
+  }
+
   test("explore family runs identically twice in one session (BFS ByKey, BFS ByHost, best-first)") {
     val site = diamondSite("explore-twice")
     val seed = s"file:${site("A")}"

@@ -660,6 +660,20 @@ class LlmSpec extends AnyFunSuite {
       "distributed and packed regimes must agree bit-for-bit")
   }
 
+  test("semdedup: fitDF's second run is identical and leaves only its output's blocks") {
+    val S = graft.llm.SemDedup
+    val qP = S.quantize(spark.read.parquet(s"$sf/embeddings.parquet"), "embedding")
+      .select(col("vec_id"), col("qv")).repartition(col("vec_id"))
+    val outs = (1 to 2).map { _ =>
+      val before = org.apache.spark.graft.BlockCensus.rddBlocks()
+      val cen = S.fitDF(qP, "vec_id", k = 8, iters = 6)
+      val left = org.apache.spark.graft.BlockCensus.leftSince(before, cen)
+      assert(left.isEmpty, s"${left.size} RDD blocks left beyond the centroids' own: $left")
+      cen.collect().map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
+    }
+    assert(outs(0) == outs(1) && outs(0).size == 8)
+  }
+
   test("semdedup: distributed assign reuses the corpus partitioning (no per-iteration exchange)") {
     val S = graft.llm.SemDedup
     val q0 = S.quantize(spark.read.parquet(s"$sf/embeddings.parquet"), "embedding")

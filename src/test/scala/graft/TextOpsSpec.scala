@@ -612,6 +612,28 @@ class TextOpsSpec extends AnyFunSuite {
     assert(graft.llm.Bpe.trainBatched(docs2, 2, 2) == graft.llm.Bpe.train(docs2, 2))
   }
 
+  test("BPE train and trainBatched: a second run is identical and leaves no RDD block") {
+    val s = spark
+    import s.implicits._
+    val words = Seq("lower", "newest", "widest", "lowest", "slower", "network", "tower",
+      "power", "powering", "towering")
+    val docs = Seq((1L, words.zipWithIndex.flatMap { case (w, i) => Seq.fill(30 - 2 * i)(w) }
+      .mkString(" "))).toDF("doc_id", "text")
+    val runs: Seq[(String, () => Seq[(String, String)])] = Seq(
+      "train" -> (() => graft.llm.Bpe.train(docs, 24)),
+      "trainBatched" -> (() => graft.llm.Bpe.trainBatched(docs, 24, 3)))
+    runs.foreach { case (name, run) =>
+      val outs = (1 to 2).map { _ =>
+        val before = org.apache.spark.graft.BlockCensus.rddBlocks()
+        val merges = run()
+        val left = org.apache.spark.graft.BlockCensus.leftSince(before)
+        assert(left.isEmpty, s"$name: ${left.size} RDD blocks left: $left")
+        merges
+      }
+      assert(outs(0) == outs(1) && outs(0).size == 24, s"$name: second run differs")
+    }
+  }
+
   test("BPE train: merge table independent of partitioning; apply round-trips and compresses") {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val a = graft.llm.Bpe.train(docs.repartition(13), 8)

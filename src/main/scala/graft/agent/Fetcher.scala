@@ -135,12 +135,8 @@ object Fetcher {
       Doc(uid, uri, json.getBytes(StandardCharsets.UTF_8), Some("application/json"),
         metadata = Map("type" -> "directory"), timestampMillis = now)
     } else {
-      val in = fs.open(path)
-      try {
-        val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-        Doc(uid, uri, bytes, None, metadata = Map("length" -> status.getLen.toString),
-          timestampMillis = now)
-      } finally in.close()
+      Doc(uid, uri, DocIO.readBytes(stripFileScheme(uri)), None,
+        metadata = Map("length" -> status.getLen.toString), timestampMillis = now)
     }
   }
 

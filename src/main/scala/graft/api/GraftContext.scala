@@ -256,8 +256,9 @@ final class DataView[D](val dataset: Dataset[D], val ctx: GraftContext)(
   /** Bounded BFS: `seed` starts each row's traversal, `next` expands each
     * fetched row into child traces+payloads; depth range `[minDepth,
     * maxDepth)` (reference `recursively(range).explore(fn)` semantics).
-    * Lineage is cut every [[graft.exec.ExploreExec.LevelsPerEpoch]] levels
-    * (see [[graft.exec.ExploreExec]]).
+    * Each level runs as one Spark job; lineage is cut every
+    * [[graft.exec.ExploreExec.LevelsPerEpoch]] levels and at the first level
+    * that emits no children (see [[graft.exec.ExploreExec]]).
     */
   /** An implicit `Ordering[D]`, when available, makes the per-trace winning
     * payload fully deterministic (ADVICE r4; matches the reference's minBy);

@@ -65,10 +65,7 @@ object CacheCompactor {
     val out = fs.create(packPath, false)
     try {
       loose.foreach { case (key, ts, p, len) =>
-        val in = fs.open(p)
-        val bytes =
-          try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-          finally in.close()
+        val bytes = graft.agent.DocIO.readBytes(p.toString)
         out.write(bytes)
         idx.append(key).append('\t').append(ts).append('\t')
           .append(offset).append('\t').append(bytes.length).append('\n')
@@ -120,11 +117,8 @@ object SegmentStore {
       if name.endsWith(".idx")
       pack = name.stripSuffix(".idx") + ".pack"
       line <- {
-        val in = fs.open(f.getPath)
-        val text =
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
+        val text = new String(graft.agent.DocIO.readBytes(f.getPath.toString),
+          java.nio.charset.StandardCharsets.UTF_8)
         text.split('\n').toSeq.filter(_.nonEmpty)
       }
       parts = line.split('\t')

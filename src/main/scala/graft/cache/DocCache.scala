@@ -182,11 +182,7 @@ final class DfsDocCache(dir: String) extends DocCache with Serializable {
         .filter { case (ts, _) => inWindow(ts, conf, now) }
         .sortBy(-_._1)
       versions.headOption.map { case (ts, p) =>
-        (ts, () => {
-          val in = fs.open(p)
-          try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-          finally in.close()
-        })
+        (ts, () => graft.agent.DocIO.readBytes(p.toString))
       }
     }
   }

@@ -86,8 +86,9 @@ object DownSampling {
   *                           Long.MaxValue = "unset" → defaults to 1 MiB
   *                           whenever a blob dir is available
   * @param checkpointDir      when set, every lineage cut explore takes
-  *                           (one per BFS epoch of
-  *                           [[graft.exec.ExploreExec.LevelsPerEpoch]] levels,
+  *                           (one per BFS epoch, which ends after
+  *                           [[graft.exec.ExploreExec.LevelsPerEpoch]] levels
+  *                           or at the first level that emits no children;
   *                           one per best-first round) is a RELIABLE
   *                           checkpoint here (survives executor loss — the
   *                           fault-tolerant mode for multi-hour crawls;

@@ -234,7 +234,7 @@ object HtmlNode {
     def flushText(until: Int): Unit =
       if (until > textStart) {
         val raw = Entities.decode(html.substring(textStart, until))
-        if (raw.exists(!_.isWhitespace)) {
+        if (hasNonWhitespace(raw)) {
           val t = mk("#text", Map.empty, baseUri, Some(stack.head), raw)
           stack.head.kids += t
         }
@@ -287,6 +287,18 @@ object HtmlNode {
     }
     flushText(n)
     root
+  }
+
+  /** `Character.isWhitespace` over `charAt`, without boxing each char
+    * (U+00A0 is not whitespace, so a no-break-space run is text).
+    */
+  private def hasNonWhitespace(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      if (!Character.isWhitespace(s.charAt(i))) return true
+      i += 1
+    }
+    false
   }
 
   private def mk(tag: String, attrs: Map[String, String], base: String,

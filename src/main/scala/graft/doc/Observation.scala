@@ -68,12 +68,7 @@ final case class Doc(
   def bytes: Array[Byte] =
     if (contentPtr.isEmpty || content.nonEmpty) content else loaded
 
-  @transient private lazy val loaded: Array[Byte] = {
-    val p = new org.apache.hadoop.fs.Path(contentPtr.get)
-    val in = p.getFileSystem(graft.agent.DocIO.hadoopConf).open(p)
-    try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-    finally in.close()
-  }
+  @transient private lazy val loaded: Array[Byte] = graft.agent.DocIO.readBytes(contentPtr.get)
 
   /** Move the body to `<dir>/<uid>.blob`, keeping only the pointer in the
     * row (no-op when already offloaded or empty).

@@ -5,9 +5,11 @@ import graft.agent.{Agent, Env}
 import graft.scale.Held
 
 import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.graft.MapStage
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
 
 import scala.collection.mutable.Buffer
 import scala.reflect.ClassTag
@@ -58,10 +60,17 @@ final case class ExploredRow[D](row: FetchedRow[D], depth: Int) extends Serializ
   *     and [[graft.agent.Agent.executeAll]] keeps up to
   *     [[graft.agent.Agent.InFlight]] of its fetches in flight per task).
   *     Only keys, traces and payloads move — never fetched content.
-  *  1. '''[[LevelsPerEpoch]] levels per job.''' BFS levels chain lazily:
-  *     each level's fetched rows are block-cached (MEMORY_AND_DISK) and feed
-  *     the next level in the same DAG, so one job materializes an epoch and
-  *     each fetch runs exactly once. Best-first rounds are one job each
+  *  1. '''One map-stage job per level, one cut per epoch.''' Each BFS
+  *     level runs as the map stage of its winner-dedup shuffle
+  *     ([[org.apache.spark.graft.MapStage]], `SparkContext.submitMapStage`),
+  *     and the driver reads the level's row and child counts before it builds
+  *     the next level, which reads the written shuffle output (no stage runs
+  *     twice; fetched rows are block-cached, MEMORY_AND_DISK, so each fetch
+  *     runs once). An epoch's levels end at the first level that emits no
+  *     children, after [[LevelsPerEpoch]] levels or at the depth cap, so no
+  *     stage runs on an empty frontier past the crawl's last level — the
+  *     reference likewise stops on its open-set accumulator after each epoch
+  *     job (ExplorePlan.scala:103-161). Best-first rounds are one job each
   *     (priority order is a global decision).
   *  1. '''Bounded plans and storage.''' Each epoch or round ends in ONE cut
   *     job ([[graft.scale.Held]]) that marks the frontier (reliably
@@ -74,10 +83,13 @@ final case class ExploredRow[D](row: FetchedRow[D], depth: Int) extends Serializ
   */
 object ExploreExec {
 
-  /** BFS levels chained lazily into one Spark job between cuts (the analog
-    * of the reference's `epochInterval`, ExplorePlan.scala:60, whose unit is
-    * per-partition fetch iterations; ours is whole levels, which keeps the
-    * visited set exact while amortizing per-job driver latency).
+  /** BFS levels between cuts (the analog of the reference's
+    * `epochInterval`, ExplorePlan.scala:60, whose unit is per-partition
+    * fetch iterations; ours is whole levels, which keeps the visited set
+    * exact). Each level is its own map-stage job; the cut that ends an
+    * epoch bounds lineage and folds the visited keys, so this is the
+    * lineage depth between marks, not the number of levels per job. An
+    * epoch ends earlier at a level that emits no children.
     */
   val LevelsPerEpoch = 8
 
@@ -123,26 +135,24 @@ object ExploreExec {
     var frontier = f.seed(seeds)
     var openCount = f.cut(frontier, new OpenCount[D]).sum
     mark(s"seed-cut (open=$openCount)")
-    // level-synchronous invariant: after `level` total levels, every frontier
-    // row is at exactly that depth — so past depthCap the frontier is
-    // provably empty and the chain can stop early
     var level = 0
-    while (openCount > 0 && level < depthCap) {
-      // levels chain LAZILY inside an epoch, so the frontier can empty
-      // mid-epoch without the driver knowing until the cut; a per-level
-      // task-side accumulator (riding the cut job) lets exploreRounds count
-      // only levels that actually processed a row
-      val levelRows = Buffer.empty[org.apache.spark.util.LongAccumulator]
-      while (levelRows.size < LevelsPerEpoch && level < depthCap) {
-        val acc = sc.longAccumulator(s"graft.explore.level$level.rows")
-        levelRows += acc
-        val counted = frontier.mapPartitions(
-          it => it.map { r => acc.add(1); r }, preservesPartitioning = true)
-        frontier = f.unvisited(f.children(f.fetch(counted)))
+    while (openCount > 0) {
+      // each level is one map-stage job, so the driver reads its row and
+      // child counts before building the next: the epoch ends at the first
+      // level that emits no children instead of chaining empty levels. Rows
+      // at level depthCap - 1 emit none (level-synchronous: every row of a
+      // level is at that depth), so this also stops the crawl at depthCap
+      val epochEnd = level + LevelsPerEpoch
+      var kidsLeft = true
+      while (kidsLeft && level < epochEnd) {
+        val rows = sc.longAccumulator(s"graft.explore.level$level.rows")
+        val kids = sc.longAccumulator(s"graft.explore.level$level.children")
+        frontier = f.level(frontier, rows, kids)
+        if (rows.value > 0) env.metrics.exploreRounds.add(1)
+        kidsLeft = kids.value > 0
         level += 1
       }
       openCount = f.cut(frontier, new OpenCount[D]).sum
-      env.metrics.exploreRounds.add(levelRows.count(_.value > 0))
       mark(s"epoch-cut (levels=$level open=$openCount)")
     }
     f.finish(spark, minDepth)
@@ -222,7 +232,7 @@ object ExploreExec {
       val fetched = f.fetch(open.filter { case (key, _) => selected.contains(key) })
       // the fetched keys are visited now, so the difference also drops them
       // from the carried open set
-      open = f.unvisited(open.union(f.children(fetched)))
+      open = f.unvisited(f.winners(open.union(f.children(fetched))))
       // Robots-blocked rows made NO request (the gate refuses before any
       // network or pagesFetched tick) — they must not consume the fetch
       // budget either, or a heavily-disallowed frontier silently starves
@@ -246,8 +256,10 @@ object ExploreExec {
     *     [[FetchLayout.partitionOf]] otherwise), fetch through
     *     [[graft.agent.Agent.executeAll]] (up to `InFlight` per task, in
     *     row order), persist, and project the keys back onto `part`.
-    *  1. [[unvisited]]: one winner per key, then one co-partitioned
-    *     `zipPartitions` difference against the visited keys.
+    *  1. [[winners]]: one winner per key (the shuffle), then
+    *     [[unvisited]]: one co-partitioned `zipPartitions` difference
+    *     against the visited keys. [[level]] is a BFS level — fetch,
+    *     children, winners — run as the shuffle's map-stage job.
     *  1. [[cut]]: one job that marks the frontier, cuts the visited keys
     *     into one held fold and returns a per-partition [[Tally]].
     *  1. [[finish]]: the depth-filtered union of every fetched row, eagerly
@@ -314,11 +326,27 @@ object ExploreExec {
       }
     }
 
-    def unvisited(rows: RDD[Open[D]]): RDD[Open[D]] =
+    /** One BFS level as one job: fetches `frontier`, expands its children
+      * and writes their [[winners]] shuffle — the job is that shuffle's map
+      * stage. Returns the next frontier, which reads the written output.
+      * `rows` and `kids` count the level's fetched rows and emitted children.
+      */
+    def level(frontier: RDD[Open[D]], rows: LongAccumulator,
+        kids: LongAccumulator): RDD[Open[D]] = {
+      val counted = frontier.mapPartitions(_.map { r => rows.add(1); r },
+        preservesPartitioning = true)
+      val won = winners(children(fetch(counted)).map { c => kids.add(1); c })
+      MapStage.run(won)
+      unvisited(won)
+    }
+
+    /** One winner per key: the shuffle every level and round ends in. */
+    def winners(rows: RDD[Open[D]]): RDD[Open[D]] = rows.reduceByKey(part, win)
+
+    def unvisited(won: RDD[Open[D]]): RDD[Open[D]] =
       // the visited keys share `part`, so sc.union is a
       // PartitionerAwareUnionRDD and the difference is narrow
-      rows.reduceByKey(part, win).zipPartitions(sc.union(visitedKeys),
-          preservesPartitioning = true) { (it, vis) =>
+      won.zipPartitions(sc.union(visitedKeys), preservesPartitioning = true) { (it, vis) =>
         val set = new java.util.HashSet[String]()
         while (vis.hasNext) set.add(vis.next())
         it.filter(r => !set.contains(r._1))

@@ -108,6 +108,30 @@ class CacheSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(rows2.head.trajectory.doc.get.contentPtr.isEmpty)
   }
 
+  test("blob read: a body over the 1 MiB offload threshold round-trips byte-identical (schemeless and file: pointers)") {
+    val body = new Array[Byte](GraftConf.DefaultBlobOffloadBytes.toInt + 4096)
+    new scala.util.Random(7).nextBytes(body)
+    val dir = scratchDir("blob-read")
+    Seq("schemeless" -> dir, "file" -> s"file:$dir").foreach { case (name, d) =>
+      val off = Doc(DocUID(s"blob-read-$name"), "u", body).offload(d)
+      assert(off.content.isEmpty && off.contentPtr.exists(_.startsWith(d)))
+      assert(java.util.Arrays.equals(off.bytes, body), s"body from ${off.contentPtr.get} differs")
+    }
+  }
+
+  test("blob read: a file: Wget of a 2 MiB file returns identical bytes") {
+    val body = new Array[Byte](2 << 20)
+    new scala.util.Random(11).nextBytes(body)
+    val p = java.nio.file.Paths.get(scratchDir("wget-2mib"), "big.bin").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(p), body)
+    val ctx = new GraftContext(spark, GraftConf())
+    import spark.implicits._
+    val doc = ctx.create(Seq(0)).fetchOne(_ => Trace.of(Wget(s"file:$p"))).collect()
+      .head.trajectory.doc.get
+    assert(doc.contentPtr.isEmpty)
+    assert(java.util.Arrays.equals(doc.bytes, body))
+  }
+
   test("wayback pin older than the TTL still hits: TTL window is relative to the pin") {
     val key = "wb-ttl-key"
     def doc(ts: Long) = Doc(DocUID(key), "u", s"t$ts".getBytes("UTF-8"), timestampMillis = ts)

@@ -469,10 +469,10 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   test("BFS exploreRounds counts only levels that processed rows") {
-    // chain A→B→C (3 levels of work): the epoch chains
-    // ExploreExec.LevelsPerEpoch = 8 levels lazily, so levels 4..8 run on an EMPTY frontier
-    // inside the same job — the metric must credit 3, not 8 (the per-level
-    // accumulator semantics; the pre-fix counter reported the full chain)
+    // chain A→B→C (3 levels of work): the epoch ends at level 2, which
+    // emits no children, so no level runs on an empty frontier; the metric
+    // credits only levels whose per-level accumulator saw a row (a counter
+    // of chained levels once reported the full 8-level epoch)
     def page(name: String, link: Option[String]): String =
       s"""<html><head><title>$name</title></head><body>
          |${link.map(l => s"""<a href="$l.html">$l</a>""").getOrElse("")}
@@ -525,19 +525,60 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
     import spark.implicits._
     val sc = spark.sparkContext
     val persistedBefore = sc.getPersistentRDDs.keySet
+    val stages = new ExploreSpec.StageCensus("bfs-chain-census")
+    sc.addSparkListener(stages)
     sc.setJobGroup("bfs-chain-census", "bfs-chain-census", interruptOnCancel = false)
-    val explored = ctx.create(Seq(s"file:$seed"))
+    val explored = try ctx.create(Seq(s"file:$seed"))
       .explore(u => Trace.of(Wget(u)))(linkExpand)
-    sc.clearJobGroup()
+    finally sc.clearJobGroup()
     val jobs = graft.exec.JobCensus.settledJobCount(sc, "bfs-chain-census")
-    // levels 0..19 hold one page each; ceil(20 / 8) = 3 epochs, and the
-    // visited-key fold rides each epoch's cut job
-    assert(jobs == 1 + 3 + 1, s"20-level chain must run 1 + 3 + 1 jobs: got $jobs")
+    val stageCount = try stages.settled() finally sc.removeSparkListener(stages)
+    // levels 0..19 hold one page each and run one map-stage job each;
+    // ceil(20 / 8) = 3 epochs, the last ending at level 19, which emits no
+    // children; the visited-key fold rides each epoch's cut job
+    assert(jobs == 1 + 20 + 3 + 1, s"20-level chain must run 1 + 20 + 3 + 1 jobs: got $jobs")
+    // seed (map + cut) + one stage per level + one per cut + output: no
+    // stage runs on an empty frontier (chaining 8 levels per epoch without
+    // looking ran 30, 4 of them on levels 20..23)
+    assert(stageCount == 2 + 20 + 3 + 1,
+      s"20-level chain must submit 2 + 20 + 3 + 1 stages: got $stageCount")
     assert(ctx.metrics.exploreRounds.value == 20)
     val leaked = sc.getPersistentRDDs.keySet -- persistedBefore
     assert(leaked.size <= 1, s"explore leaked ${leaked.size} persisted RDDs: $leaked")
     assert(explored.dataset.count() == 20)
     assert(ctx.metrics.pagesFetched.value == 20)
+  }
+
+  test("BFS stage census: leaves that link back to visited pages run exactly one empty-frontier level") {
+    // R -> {A, B}; both leaves link back to R and to each other: level 1
+    // emits children, all visited, so level 2 runs once on an empty
+    // frontier, emits none and ends the crawl
+    def page(name: String, links: Seq[String]): String =
+      s"""<html><head><title>$name</title></head><body>${
+        links.map(l => s"""<a href="$l.html">$l</a>""").mkString
+      }</body></html>"""
+    val r = writeFixture("explore-backlinks/R.html", page("R", Seq("A", "B")))
+    writeFixture("explore-backlinks/A.html", page("A", Seq("R", "B")))
+    writeFixture("explore-backlinks/B.html", page("B", Seq("R", "A")))
+    val ctx = new GraftContext(spark, GraftConf())
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val stages = new ExploreSpec.StageCensus("bfs-backlink-census")
+    sc.addSparkListener(stages)
+    sc.setJobGroup("bfs-backlink-census", "bfs-backlink-census", interruptOnCancel = false)
+    val explored = try ctx.create(Seq(s"file:$r"))
+      .explore(u => Trace.of(Wget(u)))(linkExpand, maxDepth = 9)
+    finally sc.clearJobGroup()
+    val jobs = graft.exec.JobCensus.settledJobCount(sc, "bfs-backlink-census")
+    val stageCount = try stages.settled() finally sc.removeSparkListener(stages)
+    assert(ctx.metrics.exploreRounds.value == 2)
+    // seed (map + cut) + levels 0, 1 and the one empty level 2 + one cut +
+    // output
+    assert(stageCount == 2 + (2 + 1) + 1 + 1,
+      s"expected exactly one empty-frontier level stage: $stageCount stages")
+    assert(jobs == 1 + (2 + 1) + 1 + 1, s"got $jobs jobs")
+    assert(explored.dataset.count() == 3)
+    assert(ctx.metrics.pagesFetched.value == 3)
   }
 
   test("explore with checkpointDir runs identically twice; only the output's blocks stay") {
@@ -592,6 +633,24 @@ class ExploreSpec extends AnyFunSuite with BeforeAndAfterEach {
   * the (non-serializable) ScalaTest engine.
   */
 object ExploreSpec {
+
+  /** Counts the stages submitted in job group `group` (each stage carries
+    * its job's properties).
+    */
+  final class StageCensus(group: String) extends org.apache.spark.scheduler.SparkListener {
+    private val n = new java.util.concurrent.atomic.AtomicInteger
+    override def onStageSubmitted(
+        e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+      if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+        n.incrementAndGet()
+
+    /** The count once no stage has arrived for 500 ms. */
+    def settled(): Int = {
+      var last = -1
+      while (n.get != last) { last = n.get; Thread.sleep(500) }
+      last
+    }
+  }
 
   /** `rdd-*` directories Spark's reliable checkpoints wrote under `dir`. */
   def checkpointRddDirs(dir: String): Long =

@@ -623,7 +623,7 @@ object DocIO {
   }
 
   /** Schemeless and `file:` paths as java.nio paths; None for DFS schemes. */
-  private def localPath(path: String): Option[java.nio.file.Path] =
+  private[graft] def localPath(path: String): Option[java.nio.file.Path] =
     if (path.indexOf(':') < 0 || path.startsWith("file:"))
       Some(java.nio.file.Paths.get(path.stripPrefix("file:")))
     else None

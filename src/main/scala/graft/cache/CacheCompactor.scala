@@ -132,28 +132,26 @@ object SegmentStore {
     * use Hadoop seek+readFully.
     */
   def read(dir: String, e: Entry): Array[Byte] = {
-    val colon = dir.indexOf(':')
-    val isLocal = colon < 0 || dir.startsWith("file:")
-    if (isLocal) {
-      val base = if (colon < 0) dir else dir.stripPrefix("file:")
-      val p = java.nio.file.Paths.get(base, CacheCompactor.SegDirName, e.pack)
-      val ch = java.nio.file.Files.newByteChannel(p)
-      try {
-        ch.position(e.offset)
-        val buf = java.nio.ByteBuffer.allocate(e.length)
-        while (buf.hasRemaining && ch.read(buf) >= 0) {}
-        require(!buf.hasRemaining, s"short read of ${e.pack}@${e.offset}")
-        buf.array()
-      } finally ch.close()
-    } else {
-      val p = new Path(new Path(dir, CacheCompactor.SegDirName), e.pack)
-      val fs = p.getFileSystem(graft.agent.DocIO.hadoopConf)
-      val in = fs.open(p)
-      try {
-        val buf = new Array[Byte](e.length)
-        in.readFully(e.offset, buf)
-        buf
-      } finally in.close()
+    graft.agent.DocIO.localPath(dir) match {
+      case Some(base) =>
+        val ch = java.nio.file.Files.newByteChannel(
+          base.resolve(CacheCompactor.SegDirName).resolve(e.pack))
+        try {
+          ch.position(e.offset)
+          val buf = java.nio.ByteBuffer.allocate(e.length)
+          while (buf.hasRemaining && ch.read(buf) >= 0) {}
+          require(!buf.hasRemaining, s"short read of ${e.pack}@${e.offset}")
+          buf.array()
+        } finally ch.close()
+      case None =>
+        val p = new Path(new Path(dir, CacheCompactor.SegDirName), e.pack)
+        val fs = p.getFileSystem(graft.agent.DocIO.hadoopConf)
+        val in = fs.open(p)
+        try {
+          val buf = new Array[Byte](e.length)
+          in.readFully(e.offset, buf)
+          buf
+        } finally in.close()
     }
   }
 }

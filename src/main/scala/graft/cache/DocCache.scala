@@ -101,12 +101,7 @@ final class DfsDocCache(dir: String) extends DocCache with Serializable {
   // executor-local dirs (schemeless / file:) read via java.nio — Hadoop's
   // checksummed LocalFileSystem costs ~ms per stat/open, which dominates
   // warm crawls probing thousands of keys; real DFS schemes use Hadoop
-  private val localBase: Option[String] = {
-    val colon = dir.indexOf(':')
-    if (colon < 0) Some(dir)
-    else if (dir.startsWith("file:")) Some(dir.stripPrefix("file:"))
-    else None
-  }
+  private val localBase: Option[String] = graft.agent.DocIO.localPath(dir).map(_.toString)
 
   private def keyDir(key: String) = new Path(dir, key)
 

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.scale.Salt
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,41 +45,28 @@ object Ann {
     * sub-cells (`sub_id` = hash(vec_id) mod ceil(size/max)), so any
     * within-cell O(|cell|²) work is bounded by ~maxCellSize² per sub-cell
     * regardless of skew (one mega-cluster cannot produce an unbounded pair
-    * join). Trade-off, documented: pairs BETWEEN sub-cells of a split cell
-    * are not generated — on a skewed corpus this bounds cost at a recall
-    * loss inside mega-clusters (re-cluster hot cells with more centroids to
-    * recover it).
+    * join). The sizing and salt are the shared hot-key salt's
+    * ([[graft.scale.Salt]]), but not its replicating join: pairs BETWEEN
+    * sub-cells of a split cell are not generated. That is a recall trade,
+    * documented: on a skewed corpus it bounds cost at a recall loss inside
+    * mega-clusters (re-cluster hot cells with more centroids to recover it).
     */
-  def capCellSizes(corpus: DataFrame, maxCellSize: Long): DataFrame = {
-    require(maxCellSize > 0, "maxCellSize must be positive")
-    subBucket(corpus, (n, _) => ceil(n / lit(maxCellSize.toDouble)))
-  }
+  def capCellSizes(corpus: DataFrame, maxCellSize: Long): DataFrame =
+    subBucket(corpus, Salt.rows(maxCellSize))
 
   /** [[capCellSizes]] with a RELATIVE cap: cells above `skewFactor` × the
     * mean cell size split. Needs no absolute threshold — the mean comes from
-    * the same tiny cell-size aggregate.
+    * the same tiny cell-size aggregate, as a scalar subquery (no driver
+    * collect).
     */
   def capCellSkew(corpus: DataFrame, skewFactor: Double = 4.0): DataFrame = {
     require(skewFactor > 0, "skewFactor must be positive")
-    subBucket(corpus, (n, mean) => ceil(n / (mean * lit(skewFactor))))
+    subBucket(corpus, sizes => sizes.agg(avg(col("bn"))).scalar() * lit(skewFactor))
   }
 
-  /** The split factor per cell comes from a broadcast join against the
-    * k-row cell-size aggregate — a single action end-to-end, no driver
-    * collect and no k-term CASE (at 100 TB k ≈ √n can be millions of cells;
-    * a broadcast hash join on `cell_id` stays map-side and O(1) per row).
-    * `nSub(cell_n, mean_n)` is evaluated as a column over that aggregate.
-    */
-  private def subBucket(corpus: DataFrame, nSub: (Column, Column) => Column): DataFrame = {
-    val sizes = corpus.groupBy("cell_id").agg(count(lit(1)).as("cell_n"))
-    val sized = sizes
-      .crossJoin(broadcast(sizes.agg(avg(col("cell_n")).as("mean_n"))))
-      .select(col("cell_id"),
-        greatest(lit(1L), nSub(col("cell_n"), col("mean_n")).cast("long")).as("n_sub"))
-    corpus.join(broadcast(sized), Seq("cell_id"), "left")
-      .withColumn("sub_id", pmod(xxhash64(col("vec_id")), coalesce(col("n_sub"), lit(1L))))
-      .drop("n_sub")
-  }
+  private def subBucket(corpus: DataFrame, target: Salt.Target): DataFrame =
+    Salt.salt(corpus, Seq("cell_id"), col("vec_id"), target)
+      .withColumnRenamed("salt", "sub_id").drop("n_sub")
 
   /** Within-cell near-duplicate candidate pairs with the hot-cell guard
     * applied: pair volume is bounded by ~n·maxCellSize/2 total instead of

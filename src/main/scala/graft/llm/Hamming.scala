@@ -1,7 +1,7 @@
 package graft.llm
 
+import graft.scale.Salt
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Hamming-distance near-duplicate pairs over bit signatures (SimHash,
@@ -16,20 +16,12 @@ import org.apache.spark.sql.functions._
   *
   * One block value shared by a mega-cluster of m signatures makes the
   * self-join emit its m²/2 pairs FROM A SINGLE REDUCER — correct but a
-  * straggler that stalls the stage at scale. The guard SALTS instead of
-  * capping, so the result set is exactly the unguarded one (the q45 gate is
-  * byte-identical) while the work spreads: rows in a bucket larger than
-  * `targetBucket` get `nSub = ceil(n/targetBucket)` deterministic salts;
-  * the left side keys on its own salt, the right side replicates each row
-  * to every salt of its bucket — each (a,b) pair meets on exactly one
-  * reducer, and a hot bucket's pair generation runs on nSub reducers
-  * instead of one. Replication cost is n·nSub rows of (id, sig) per hot
-  * bucket — negligible next to the n²/2 output it spreads.
-  *
-  * Bucket sizes ride a window count over the block key (one narrow-row
-  * shuffle; the hot bucket holds n SIGNATURE rows on one partition — O(n),
-  * fine — versus the O(n²) pair explosion the salt defuses). No driver
-  * collect, no broadcast of an unbounded bucket-size table.
+  * straggler that stalls the stage at scale. The block join runs through
+  * the shared hot-key salt ([[graft.scale.Salt]]): buckets over
+  * `targetBucket` rows split over `ceil(n/targetBucket)` reducers, and each
+  * (a,b) pair still meets exactly once, so the result set is exactly the
+  * unguarded one (the q45 gate is byte-identical). The signature rides
+  * through the join next to the id, so the verify needs no second lookup.
   *
   * Exact-dedup-first still applies (see [[graft.queries.SimQ]] q45 notes):
   * byte-identical documents should be collapsed by hash-groupBy (q24)
@@ -52,17 +44,13 @@ object Hamming {
     */
   def nearDupPairs(sigs: DataFrame, idCol: String, sigCol: String,
                    nBits: Int, maxHamming: Int,
-                   targetBucket: Long = 4096L): DataFrame = {
-    val blocks = saltedBlocks(sigs, idCol, sigCol, nBits, maxHamming, targetBucket)
-    val x = blocks.select(col("block_id"), col("block_val"), col("salt"),
-      col("id").as("id_a"), col("sig").as("sig_a"))
-    // right side: replicate to every salt of its bucket so each pair meets
-    // exactly once (at the LEFT row's salt)
-    val y = blocks
-      .select(col("block_id"), col("block_val"),
-        explode(sequence(lit(0L), col("n_sub") - 1)).as("salt"),
+                   targetBucket: Long = Salt.TargetBucket): DataFrame = {
+    val keys = Seq("block_id", "block_val")
+    val b = Salt.salt(blocks(sigs, idCol, sigCol, nBits, maxHamming), keys, col("id"),
+      Salt.rows(targetBucket))
+    Salt.join(b.select(col("block_id"), col("block_val"), col("salt"),
+        col("id").as("id_a"), col("sig").as("sig_a")), b, keys)(
         col("id").as("id_b"), col("sig").as("sig_b"))
-    x.join(y, Seq("block_id", "block_val", "salt"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), col("sig_a"), col("sig_b"))
       .distinct() // a close pair shares several blocks; count it once
@@ -71,18 +59,14 @@ object Hamming {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** The block/salt table backing [[nearDupPairs]] — package-visible so the
-    * skew spec can assert the per-(block, salt) group bound directly.
-    * Output: (id, sig, block_id, block_val, n_sub, salt) with
-    * salt = hash(id) mod n_sub, n_sub = ceil(bucket_size / targetBucket).
+  /** The pigeonhole block table backing [[nearDupPairs]]: one
+    * (id, sig, block_id, block_val) row per signature and block.
     */
-  private[graft] def saltedBlocks(sigs: DataFrame, idCol: String, sigCol: String,
-                                nBits: Int, maxHamming: Int,
-                                targetBucket: Long): DataFrame = {
+  private[graft] def blocks(sigs: DataFrame, idCol: String, sigCol: String,
+                            nBits: Int, maxHamming: Int): DataFrame = {
     require(nBits > 0 && nBits <= 64, s"nBits=$nBits out of (0, 64]")
     require(maxHamming >= 0, "maxHamming must be >= 0")
     require(maxHamming < nBits, "maxHamming >= nBits matches everything")
-    require(targetBucket > 0, "targetBucket must be positive")
     val nBlocks = maxHamming + 1
     // block widths base/base+1 so every bit is covered (60/4 -> 15,15,15,15;
     // 64/3 -> 22,21,21); unequal widths keep the pigeonhole guarantee
@@ -99,13 +83,8 @@ object Hamming {
       struct(lit(i).as("block_id"),
         shiftright(col(sigCol), offset).bitwiseAND(lit(mask)).as("block_val"))
     }
-    val byBucket = Window.partitionBy(col("block_id"), col("block_val"))
     sigs.select(col(idCol).as("id"), col(sigCol).as("sig"),
         explode(array(blockStructs: _*)).as("b"))
       .select(col("id"), col("sig"), col("b.block_id"), col("b.block_val"))
-      .withColumn("n_sub",
-        greatest(lit(1L),
-          ceil(count(lit(1)).over(byBucket) / lit(targetBucket.toDouble)).cast("long")))
-      .withColumn("salt", pmod(xxhash64(col("id")), col("n_sub")))
   }
 }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.scale.Held
+import graft.scale.{Held, Salt}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -62,7 +62,7 @@ import org.apache.spark.sql.functions._
   * id); cluster population is corpus/k. Against a degenerate mega-cluster
   * (near-duplicate-saturated corpora are exactly where SemDeDup gets
   * deployed) `maxClusterSize` arms the hot-cluster guard — the
-  * [[Ann.capCellSizes]] sub-bucket split plus a champion seam pass; see
+  * [[graft.scale.Salt]] sub-cell split plus a champion seam pass; see
   * [[semDedup]]. Vectors are the only payload shuffled; documents/text
   * never move.
   *
@@ -482,24 +482,6 @@ object SemDedup {
   private def qdot(a: String, b: String): Column =
     graft.functions.vec_dot_long(col(a), col(b))
 
-  /** The hot-cluster guard's split: tag every member with a deterministic
-    * `sub` cell (`pmod(xxhash64(id), ceil(size/cap))` — [[Ann.capCellSizes]]'s
-    * formula), the split factor coming off the k-row cluster-size aggregate
-    * (the [[Ann]] `subBucket` shape: a join, never a driver collect).
-    * Clusters at-or-under the cap get n_sub = 1 / sub = 0. Package-visible
-    * so the bench can measure guarded pair volume without re-deriving the
-    * split.
-    */
-  private[graft] def hotSplit(m: DataFrame, idCol: String,
-                              maxClusterSize: Long): DataFrame = {
-    val nsub = m.groupBy(col("cluster")).agg(count(lit(1)).as("cn"))
-      .select(col("cluster"), greatest(lit(1L),
-        ceil(col("cn") / lit(maxClusterSize.toDouble)).cast("long")).as("n_sub"))
-    m.join(nsub.hint("shuffle_hash"), Seq("cluster"))
-      .withColumn("sub", pmod(xxhash64(col(idCol)), col("n_sub")))
-      .drop("n_sub")
-  }
-
   /** Domination + cosine verdict over candidate pairs carrying
     * (id_a, qa, da, n2a) × (id_b, qb, db, n2b): keeps `id_a` rows dominated
     * by a strictly-more-central (ties to the lower id) near-twin above
@@ -537,11 +519,12 @@ object SemDedup {
     * stage, whose unguarded join is O(Σ cluster²) — one degenerate
     * mega-cluster (near-duplicate-saturated corpora are SemDeDup's target
     * deployment) turns it quadratic. Guarded, clusters above the cap split
-    * into `ceil(size/cap)` deterministic sub-cells ([[Ann.capCellSizes]]'s
-    * split) and domination runs (a) within sub-cell — pair volume bounded
-    * by ~size·cap per cluster — plus (b) a CHAMPION SEAM PASS: every
-    * member is also judged against its cluster's single most-central
-    * member (a partial-aggregable struct-min, one row per cluster), which
+    * into `ceil(size/cap)` deterministic sub-cells (the shared hot-key
+    * sizing and salt of [[graft.scale.Salt]]) and domination runs (a)
+    * within sub-cell — pair volume bounded by ~size·cap per cluster — plus
+    * (b) a CHAMPION SEAM PASS: every member is also judged against its
+    * cluster's single most-central member (a partial-aggregable
+    * struct-min, one row per cluster), which
     * recovers the dominant mega-cluster failure mode (one near-identical
     * blob whose champion dominates everyone) without quadratic work.
     * Missed, documented: a dominator that is neither in the member's
@@ -597,7 +580,11 @@ object SemDedup {
         dominated(a.hint("shuffle_hash").join(b, Seq("cluster")),
           idCol, tauNum, tauDen).distinct()
       } else {
-        val g = hotSplit(m, idCol, maxClusterSize)
+        // the shared hot-key sizing and salt ([[graft.scale.Salt]]) tag
+        // every member with its `sub` cell; n_sub = 1 / sub = 0 at or under
+        // the cap
+        val g = Salt.salt(m, Seq("cluster"), col(idCol), Salt.rows(maxClusterSize))
+          .withColumnRenamed("salt", "sub")
         val a = g.select(col(idCol).as("id_a"), col("qv").as("qa"),
           col("cluster"), col("sub"), col("cdist").as("da"), col("n2").as("n2a"))
         val b = g.select(col(idCol).as("id_b"), col("qv").as("qb"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.scale.GraphLoop
+import graft.scale.{GraphLoop, Held, Salt}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -78,7 +78,7 @@ object SimQ {
     *
     * LSH skew: a mega-cluster sharing one band key would make the self-join
     * quadratic in the cluster size ON ONE REDUCER. The candidate join is
-    * salt-guarded ([[saltedBandCandidates]] — result-set identical,
+    * salt-guarded ([[graft.scale.Salt.candidates]] — result-set identical,
     * spec-pinned against the unguarded join under a planted mega-band by
     * LlmSpec's "minhash salt guard" properties), so
     * a hot band's pair generation spreads over ceil(n/target) reducers.
@@ -207,79 +207,7 @@ object SimQ {
     */
   def bandIndex(docs: DataFrame): DataFrame = bandsOf(sigOf(docs))
 
-  /** No (band, salt) join group exceeds ~this many rows — the same bound
-    * class [[graft.llm.Hamming]] uses for its pigeonhole blocks.
-    */
-  private val BandTargetBucket = 4096L
-
-  /** Band rows + hot-band salt: `n_sub = ceil(bucket/target)` deterministic
-    * sub-buckets per (band_id, band_key), `salt = hash(doc_id) mod n_sub`.
-    *
-    * The bucket counts come from a groupBy of ONLY the over-target buckets,
-    * not a window over the full band table: groupBy's map-side partial
-    * aggregation means its shuffle carries per-partition (band, count)
-    * partials — a vanishing fraction of the band rows — where the window
-    * formulation this replaces re-shuffled EVERY band row a second time
-    * just to count it. The filtered hot-bucket table is bounded at
-    * total_rows/targetBucket entries and is empty or near-empty in the
-    * designed pipeline (exact dedup first ⇒ hot buckets are the rare
-    * pathological keys), so AQE converts the left join below to a runtime
-    * broadcast and the band table flows straight into the candidate join's
-    * own shuffle; in the adversarial worst case (every bucket hot) the join
-    * degrades to the same shuffle class the candidate join pays anyway.
-    * No driver collect either way.
-    */
-  private[graft] def saltedBands(bands: DataFrame, targetBucket: Long): DataFrame = {
-    require(targetBucket > 0, "targetBucket must be positive")
-    val hot = bands.groupBy(col("band_id"), col("band_key"))
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > targetBucket)
-      .select(col("band_id"), col("band_key"),
-        ceil(col("bn") / lit(targetBucket.toDouble)).cast("long").as("hot_n_sub"))
-    bands.join(hot, Seq("band_id", "band_key"), "left")
-      .withColumn("n_sub", coalesce(col("hot_n_sub"), lit(1L)))
-      .drop("hot_n_sub")
-      .withColumn("salt", pmod(xxhash64(col("doc_id")), col("n_sub")))
-  }
-
-  /** Candidate (id_a < id_b) pairs from a band table, with the hot-band
-    * SALT guard (semantics-preserving — the result set is exactly the
-    * unguarded join's; LlmSpec's "minhash salt guard" properties pin that
-    * identity under a planted mega-band, batch AND incremental flags, with
-    * a targetBucket small enough that the split path actually engages): a
-    * mega-band of m rows (mass-produced
-    * boilerplate, near-empty texts sharing signatures) would otherwise emit
-    * its m²/2 candidates from a single reducer — the classic LSH mega-bucket
-    * blowup at crawl scale. Rows in a bucket larger than `targetBucket` get
-    * `n_sub` deterministic salts; the LEFT side keys on its own salt, the
-    * right side replicates each row to every salt of its bucket, so each
-    * pair meets on exactly one reducer and a hot band's pair generation
-    * spreads over n_sub reducers. Replication is n·n_sub narrow rows per hot
-    * band — negligible next to the n²/2 output it spreads. Same construction
-    * as [[graft.llm.Hamming.nearDupPairs]] and `Ann.nearDupPairsBySkew`.
-    *
-    * @param bands  full band table ((doc_id, band_id, band_key); salted here)
-    * @param isLeft which rows DRIVE the join (`lit(true)` for the batch
-    *               self-join; the arrivals flag for the incremental join —
-    *               every candidate touches >= 1 left row)
-    */
-  private[graft] def saltedBandCandidates(bands: DataFrame, isLeft: Column,
-                                          targetBucket: Long = BandTargetBucket): DataFrame = {
-    val b = saltedBands(bands.withColumn("is_left", isLeft), targetBucket)
-    val x = b.filter(col("is_left"))
-      .select(col("band_id"), col("band_key"), col("salt"), col("doc_id").as("ida"))
-    // right side: replicate to every salt of its bucket so a pair meets at
-    // the LEFT row's salt; when BOTH rows are left, keep only the meeting
-    // driven by the smaller id — exactly one surviving row per (pair, band)
-    val y = b.select(col("band_id"), col("band_key"),
-      explode(sequence(lit(0L), col("n_sub") - 1)).as("salt"),
-      col("doc_id").as("idb"), col("is_left").as("left_b"))
-    x.join(y, Seq("band_id", "band_key", "salt"))
-      .filter(col("ida") =!= col("idb") && (col("ida") < col("idb") || !col("left_b")))
-      .select(least(col("ida"), col("idb")).as("id_a"),
-        greatest(col("ida"), col("idb")).as("id_b"))
-      .distinct() // a close pair shares several bands; count it once
-  }
+  private val BandKeys = Seq("band_id", "band_key")
 
   /** Incremental near-dup PAIR detection — the arrival-time half of dedup
     * maintenance that [[graft.llm.Dedup.mergeComponents]] is the
@@ -314,12 +242,13 @@ object SimQ {
     val tagged = oldBands.select(col("doc_id"), col("band_id"), col("band_key"))
       .withColumn("is_new", lit(false))
       .union(newBands.withColumn("is_new", lit(true)))
-    val cand = saltedBandCandidates(tagged, col("is_new"))
-      .localCheckpoint()
+    val held = new Held(allDocs.sparkSession.sparkContext)
+    val cand = held.frame(Salt.candidates(tagged, BandKeys, "doc_id", col("is_new")))
     val candIds = cand.select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
     val vSigs = sigOf(allDocs.join(broadcast(candIds), Seq("doc_id"))).persist()
     val pairs = verifiedPairs(cand, vSigs).localCheckpoint()
     vSigs.unpersist(false)
+    held.release() // the pairs' checkpoint no longer reads the candidates'
     (newBands, pairs)
   }
 
@@ -353,7 +282,7 @@ object SimQ {
     // band rows: (doc_id, band_id, band_key) — only hashes travel the
     // shuffle; both self-join sides re-derive them from the cached base,
     // and the hot-band salt guard bounds each reducer's pair fan-out
-    val cand = saltedBandCandidates(bandsOf(base), lit(true))
+    val cand = Salt.candidates(bandsOf(base), BandKeys, "doc_id", lit(true))
 
     // materialize the (near-dup-pairs-only) result so the input persist
     // can be released here instead of leaking across queries; the
@@ -902,7 +831,8 @@ object SimQ {
     val bandSig = sigOf(docs).select(col("doc_id"), struct(
       col("sig.s1").as("s1"), col("sig.s2").as("s2"), col("sig.s3").as("s3"),
       col("sig.s4").as("s4"), col("sig.s5").as("s5"), col("sig.s6").as("s6")).as("sig"))
-    val cand = saltedBandCandidates(bandsOf(bandSig.localCheckpoint()), lit(true))
+    val held = new Held(docs.sparkSession.sparkContext)
+    val cand = Salt.candidates(bandsOf(held.frame(bandSig)), BandKeys, "doc_id", lit(true))
     val pref = docs.select(col("doc_id"), substring(col("text"), 1, prefixLen).as("s"))
     // Verify-cost control, exact-result-preserving: (a) a length-difference
     // pregate (lev ≥ |len_a − len_b|, so a pair failing it can never pass
@@ -943,6 +873,7 @@ object SimQ {
           col("mx") * relNum)
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .localCheckpoint()
+    held.release() // the pregated checkpoint no longer reads the signatures'
     pregated
       .withColumn("lev", levenshtein(col("sa"), col("sb"), maxAccept).cast("long"))
       .filter(col("lev") >= 0 && col("lev") * relDen <= col("mx") * relNum)

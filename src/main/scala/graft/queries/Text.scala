@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.scale.{Held, Salt}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -585,7 +586,7 @@ object TextQ {
     * Scale shape: the corpus-wide stage shuffles ONLY (doc_id, gram-hash)
     * anchor rows — 16 narrow bytes per anchor, gram STRINGS never shuffle —
     * through the same hot-key salt guard as the LSH band join
-    * ([[SimQ.saltedBandCandidates]]: a boilerplate sentence shared by m
+    * ([[graft.scale.Salt.candidates]]: a boilerplate sentence shared by m
     * docs would otherwise pin one reducer with m²/2 pair emissions). The
     * positional verify then recomputes anchor sets for CANDIDATE docs only
     * (broadcast semi-join of candidate ids against the scan) and counts
@@ -604,15 +605,10 @@ object TextQ {
     * deterministic for fixed content).
     */
   def substringDedupPairs(docs: DataFrame, k: Int, p: Int): DataFrame = {
-    // candidates ride the 8-byte xxhash64 of the gram; band_id is constant
-    // (one "band" — the anchor table IS the index).
     // checkpoint: the corpus-scale salted join runs ONCE; both consumers
     // (the candIds broadcast and the verify join) read the materialized
     // (candidate-scale) pair list — the q47 discipline
-    val cand = SimQ.saltedBandCandidates(
-      anchorIndex(docs, k, p).select(col("doc_id"), lit(1).as("band_id"),
-        xxhash64(col("gram")).as("band_key")),
-      lit(true)).localCheckpoint()
+    val cand = gramCandidates(anchorIndex(docs, k, p), lit(true)).localCheckpoint()
     verifySharedGrams(cand, docs, k, p)
   }
 
@@ -636,12 +632,21 @@ object TextQ {
                                 k: Int, p: Int): DataFrame =
     verifyShared(cand, d => anchorIndex(d, k, p), docs)
 
+  /** `(id_a < id_b)` candidates of (doc_id, gram) rows sharing the 8-byte
+    * xxhash64 of a gram, through the hot-key salt
+    * ([[graft.scale.Salt.candidates]]).
+    */
+  private def gramCandidates(grams: DataFrame, isLeft: Column): DataFrame =
+    Salt.candidates(grams.withColumn("gh", xxhash64(col("gram"))).drop("gram"),
+      Seq("gh"), "doc_id", isLeft)
+
   private def verifyShared(cand: DataFrame, index: DataFrame => DataFrame,
-                           docs: DataFrame): DataFrame = {
+                           docs: DataFrame,
+                           checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
     val candIds = cand
       .select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
-    val candAnchors = index(docs.join(broadcast(candIds), Seq("doc_id")))
-      .localCheckpoint() // read twice below; candidate-sized, not corpus-sized
+    // read twice below; candidate-sized, not corpus-sized
+    val candAnchors = checkpoint(index(docs.join(broadcast(candIds), Seq("doc_id"))))
     candAnchors.select(col("doc_id").as("id_a"), col("gram"))
       .join(cand.hint("shuffle_hash"), Seq("id_a"))
       .join(candAnchors.select(col("doc_id").as("id_b"), col("gram"))
@@ -749,10 +754,7 @@ object TextQ {
     */
   def substringDedupPairsWinnowed(docs: DataFrame, k: Int = 12,
                                   w: Int = 8): DataFrame = {
-    val cand = SimQ.saltedBandCandidates(
-      winnowIndex(docs, k, w).select(col("doc_id"), lit(1).as("band_id"),
-        xxhash64(col("gram")).as("band_key")),
-      lit(true)).localCheckpoint()
+    val cand = gramCandidates(winnowIndex(docs, k, w), lit(true)).localCheckpoint()
     verifyShared(cand, d => winnowIndex(d, k, w), docs)
   }
 
@@ -966,11 +968,13 @@ object TextQ {
     val tagged = oldAnchors.select(col("doc_id"), col("gram"))
       .withColumn("is_new", lit(false))
       .union(newAnchors.withColumn("is_new", lit(true)))
-    val cand = SimQ.saltedBandCandidates(
-      tagged.select(col("doc_id"), lit(1).as("band_id"),
-        xxhash64(col("gram")).as("band_key"), col("is_new")),
-      col("is_new")).localCheckpoint()
-    (newAnchors, verifySharedGrams(cand, allDocs, k, p).localCheckpoint())
+    val sc = allDocs.sparkSession.sparkContext
+    val (heldCand, heldAnchors) = (new Held(sc), new Held(sc))
+    val cand = heldCand.frame(gramCandidates(tagged, col("is_new")))
+    val pairs = verifyShared(cand, d => anchorIndex(d, k, p), allDocs, heldAnchors.frame)
+      .localCheckpoint()
+    heldCand.release(); heldAnchors.release() // the pairs' checkpoint reads neither
+    (newAnchors, pairs)
   }
 
   /** q60 — Gopher/C4 repetition quality filters ([[graft.functions

@@ -8,7 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Physical-layout utilities for the 100 TB shapes the query pack relies on
-  * (SURVEY §4 / prompt: "bucketing for co-located joins, salting for skew").
+  * (SURVEY §4 / prompt: "bucketing for co-located joins, salting for skew";
+  * the salt is [[Salt]]).
   */
 object Layout {
 
@@ -120,27 +121,5 @@ object Locality {
           rs.getOrElse(k, Vector.empty).map(_._2)))
       }
     }
-  }
-}
-
-/** Skew mitigation: salt a hot-keyed fact side so one key's rows spread over
-  * `nSalts` reducers, replicating the (small) dimension side per salt.
-  * AQE's skew-join handles moderate skew at runtime; explicit salting is for
-  * the pathological keys AQE splits can't fix (single-key hot spots).
-  */
-object Skew {
-
-  /** Equi-join `fact` (skewed, large) with `dim` (small) on `key`:
-    * fact rows get a deterministic salt in [0, nSalts); dim is exploded
-    * nSalts times; the join key becomes (key, salt) so a hot key's rows land
-    * on nSalts reducers instead of one. Result == plain join (spec-checked).
-    */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String, nSalts: Int): DataFrame = {
-    require(nSalts > 0)
-    val salted = fact.withColumn("_salt",
-      pmod(hash(fact.columns.map(col).toIndexedSeq: _*), lit(nSalts)))
-    val replicated = dim
-      .withColumn("_salt", explode(sequence(lit(0), lit(nSalts - 1))))
-    salted.join(replicated, Seq(key, "_salt")).drop("_salt")
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
 import graft.llm.{Ann, Multimodal}
-import graft.queries.{EngineQ, SimQ}
+import graft.queries.{EngineQ, SimQ, TextQ}
+import graft.scale.Salt
+import org.apache.spark.graft.BlockCensus
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -198,18 +200,39 @@ class LlmSpec extends AnyFunSuite {
     import spark0.implicits._
     val planted = (0L until 120L).map(i => (i, 0x0123456789ABCDL & ((1L << 60) - 1)))
     val noise = (120L until 600L).map(i => (i, sig60(i)))
-    val sigs = (planted ++ noise).toDF("id", "sig")
-    // small target bucket forces the hot 120-row bucket to actually split
-    val guarded = graft.llm.Hamming
-      .nearDupPairs(sigs, "id", "sig", nBits = 60, maxHamming = 3, targetBucket = 16L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val all = (planted ++ noise)
-    val brute = (for {
-      (a, sa) <- all; (b, sb) <- all if a < b
-      h = java.lang.Long.bitCount(sa ^ sb) if h <= 3
-    } yield (a, b, h)).toSet
-    assert(brute.size >= 120 * 119 / 2) // the planted cluster's pairs are all there
-    assert(guarded == brute)
+    // edge inputs: every block of the 16 all-zero signatures is a bucket of
+    // exactly the target (n_sub stays 1), every block of the 17 all-one
+    // signatures one of target + 1 (n_sub 2); a null id next to a partner
+    // signature and two null signatures pair with nothing
+    val ones = (1L << 60) - 1
+    val partner = (0 until 4).map(i => 0x555L << (15 * i)).sum // no block 0 or all-ones
+    val edges: Seq[(Option[Long], Option[Long])] =
+      (1000L until 1016L).map(i => (Option(i), Option(0L))) ++
+        (2000L until 2017L).map(i => (Option(i), Option(ones))) ++
+        Seq((None, Some(partner)), (Some(3001L), Some(partner)), (Some(3002L), None),
+          (Some(3003L), None))
+    val inputs = Seq((planted ++ noise).map { case (i, s) => (Option(i), Option(s)) },
+      edges, Seq.empty[(Option[Long], Option[Long])])
+    inputs.foreach { rows =>
+      val sigs = rows.toDF("id", "sig")
+      // small target bucket forces the hot 120-row bucket to actually split
+      val guarded = graft.llm.Hamming
+        .nearDupPairs(sigs, "id", "sig", nBits = 60, maxHamming = 3, targetBucket = 16L)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      val all = rows.collect { case (Some(i), Some(s)) => (i, s) }
+      val brute = (for {
+        (a, sa) <- all; (b, sb) <- all if a < b
+        h = java.lang.Long.bitCount(sa ^ sb) if h <= 3
+      } yield (a, b, h)).toSet
+      if (rows.size == 600) // the planted cluster's pairs are all there
+        assert(brute.size >= 120 * 119 / 2)
+      assert(guarded == brute)
+    }
+    val nSub = Salt.salt(graft.llm.Hamming.blocks(edges.toDF("id", "sig"), "id", "sig",
+        nBits = 60, maxHamming = 3), Seq("block_id", "block_val"), col("id"), Salt.rows(16L))
+      .filter(col("sig").isin(0L, ones)).select("sig", "n_sub").distinct()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(nSub == Map(0L -> 1L, ones -> 2L))
   }
 
   test("hamming salt guard: hot buckets split, uniform buckets untouched") {
@@ -217,9 +240,9 @@ class LlmSpec extends AnyFunSuite {
     import spark0.implicits._
     val planted = (0L until 120L).map(i => (i, 42L))
     val noise = (120L until 200L).map(i => (i, sig60(i)))
-    val blocks = graft.llm.Hamming.saltedBlocks(
+    val blocks = Salt.salt(graft.llm.Hamming.blocks(
       (planted ++ noise).toDF("id", "sig"), "id", "sig",
-      nBits = 60, maxHamming = 3, targetBucket = 16L)
+      nBits = 60, maxHamming = 3), Seq("block_id", "block_val"), col("id"), Salt.rows(16L))
     // hot bucket (120 rows sharing every block of sig 42): n_sub = ceil(120/16) = 8
     val hot = blocks.filter(col("sig") === 42L)
     assert(hot.select("n_sub").distinct().collect().map(_.getLong(0)).toSeq == Seq(8L))
@@ -235,7 +258,7 @@ class LlmSpec extends AnyFunSuite {
     assert(smallSplit.count() == 0)
   }
 
-  // ---- MinHash LSH band-join salt guard (queries/Sim.scala) ----------------
+  // ---- MinHash LSH band-join salt guard (graft.scale.Salt) -----------------
   // A band table with a planted mega-band (120 docs sharing one band key —
   // far over the test targetBucket of 16, so the split path actually
   // engages), a cross-band duplicate pair (pins the per-pair distinct), a
@@ -248,6 +271,38 @@ class LlmSpec extends AnyFunSuite {
     val noise = (200L until 260L).map(i => (i, 1, s"n$i"))
     (hot ++ crossBand ++ small ++ noise).toDF("doc_id", "band_id", "band_key")
   }
+
+  private val BandKeys = Seq("band_id", "band_key")
+
+  // edge inputs: a band of exactly the target (16 rows: n_sub stays 1), one
+  // of target + 1 (17 rows: n_sub 2), a null id in the small band and two
+  // rows sharing a null key, none of which may pair
+  private def edgeBands(spark0: org.apache.spark.sql.SparkSession) = {
+    import spark0.implicits._
+    val at = (400L until 416L).map(i => (Option(i), 4, Option("AT")))
+    val over = (500L until 517L).map(i => (Option(i), 5, Option("OVER")))
+    val nulls = Seq[(Option[Long], Int, Option[String])](
+      (None, 3, Some("S")), (Some(600L), 6, None), (Some(601L), 6, None))
+    (at ++ over ++ nulls).toDF("doc_id", "band_id", "band_key")
+  }
+
+  // the planted table, the planted table with the edge inputs, the empty table
+  private def bandInputs(spark0: org.apache.spark.sql.SparkSession) = {
+    val bands = plantedBands(spark0)
+    Seq(bands, bands.union(edgeBands(spark0)), bands.limit(0))
+  }
+
+  private def assertEdgeSizing(spark0: org.apache.spark.sql.SparkSession): Unit = {
+    val nSub = Salt.salt(edgeBands(spark0), BandKeys, col("doc_id"), Salt.rows(16L))
+      .filter(col("band_key").isin("AT", "OVER")).select("band_key", "n_sub").distinct()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(nSub == Map("AT" -> 1L, "OVER" -> 2L))
+  }
+
+  // band rows as the reference sees them: null ids and keys never pair
+  private def bandRows(bands: org.apache.spark.sql.DataFrame): Seq[(Long, Int, String)] =
+    bands.collect().toSeq.filter(r => !r.isNullAt(0) && !r.isNullAt(2))
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
 
   // unguarded reference semantics, computed row-at-a-time on the driver
   private def brutePairs(rows: Seq[(Long, Int, String)],
@@ -263,13 +318,14 @@ class LlmSpec extends AnyFunSuite {
 
   test("minhash salt guard: batch candidates == unguarded join under a planted mega-band") {
     val spark0 = spark
-    val bands = plantedBands(spark0)
-    val rows = bands.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq
-    val expected = brutePairs(rows, _ => true)
-    assert(expected.size >= 120 * 119 / 2) // the mega-band's pairs are all there
-    val got = SimQ.saltedBandCandidates(bands, lit(true), targetBucket = 16L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == expected)
+    bandInputs(spark0).zipWithIndex.foreach { case (bands, i) =>
+      val expected = brutePairs(bandRows(bands), _ => true)
+      if (i < 2) assert(expected.size >= 120 * 119 / 2) // the mega-band's pairs are all there
+      val got = Salt.candidates(bands, BandKeys, "doc_id", lit(true), targetBucket = 16L)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == expected)
+    }
+    assertEdgeSizing(spark0)
   }
 
   test("minhash salt guard: incremental flag == new x (old ∪ new), hot band split across old/new") {
@@ -277,19 +333,22 @@ class LlmSpec extends AnyFunSuite {
     // arrivals are doc_id >= 60: the mega-band holds BOTH old and new rows,
     // so new-new meetings exercise the ida < idb dedup and new-old meetings
     // exercise the !left_b branch of the meeting filter
-    val tagged = plantedBands(spark0).withColumn("is_new", col("doc_id") >= 60L)
-    val rows = tagged.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq
-    val expected = brutePairs(rows, _ >= 60L)
-    val onlyOld = brutePairs(rows, _ => true) -- expected
-    assert(onlyOld.nonEmpty) // old-old pairs exist and must be excluded
-    val got = SimQ.saltedBandCandidates(tagged, col("is_new"), targetBucket = 16L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == expected)
+    bandInputs(spark0).zipWithIndex.foreach { case (bands, i) =>
+      val tagged = bands.withColumn("is_new", col("doc_id") >= 60L)
+      val rows = bandRows(tagged)
+      val expected = brutePairs(rows, _ >= 60L)
+      val onlyOld = brutePairs(rows, _ => true) -- expected
+      if (i < 2) assert(onlyOld.nonEmpty) // old-old pairs exist and must be excluded
+      val got = Salt.candidates(tagged, BandKeys, "doc_id", col("is_new"), targetBucket = 16L)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == expected)
+    }
+    assertEdgeSizing(spark0)
   }
 
   test("minhash salt guard: hot buckets split with bounded fan-out, small buckets untouched") {
     val spark0 = spark
-    val salted = SimQ.saltedBands(plantedBands(spark0), targetBucket = 16L)
+    val salted = Salt.salt(plantedBands(spark0), BandKeys, col("doc_id"), Salt.rows(16L))
     // hot bucket: 120 rows / 16 target => n_sub = 8 on every row of the band
     val hot = salted.filter(col("band_key") === "HOT")
     assert(hot.select("n_sub").distinct().collect().map(_.getLong(0)).toSeq == Seq(8L))
@@ -503,6 +562,35 @@ class LlmSpec extends AnyFunSuite {
     val names = jdf.select(json_texts(col("js"), lit("name")).as("n")).collect()
       .head.getSeq[String](0)
     assert(names == Seq("n1", "n2"))
+  }
+
+  test("near-dup entry points: a second run is identical and leaves only its outputs' blocks") {
+    val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
+    val oldDocs = docs.filter(col("doc_id") % 4 =!= 0)
+    val newDocs = docs.filter(col("doc_id") % 4 === 0)
+    val oldBands = SimQ.bandIndex(oldDocs).localCheckpoint()
+    val oldAnchors = TextQ.anchorIndex(oldDocs).localCheckpoint()
+    val runs: Seq[(String, () => Seq[org.apache.spark.sql.DataFrame])] = Seq(
+      "fuzzyNearDupPairs" -> (() => Seq(SimQ.fuzzyNearDupPairs(docs))),
+      "incrementalNearDupPairs" -> (() => {
+        val (bands, pairs) = SimQ.incrementalNearDupPairs(docs, oldBands, newDocs)
+        Seq(bands, pairs)
+      }),
+      "incrementalSubstringPairs" -> (() => {
+        val (anchors, pairs) = TextQ.incrementalSubstringPairs(docs, oldAnchors, newDocs)
+        Seq(anchors, pairs)
+      }))
+    runs.foreach { case (name, run) =>
+      val outs = (1 to 2).map { _ =>
+        val before = BlockCensus.rddBlocks()
+        val out = run()
+        val left = BlockCensus.leftSince(before, out: _*)
+        assert(left.isEmpty, s"$name: ${left.size} RDD blocks left beyond its outputs' own: $left")
+        out.map(_.collect().map(_.toString).sorted.toSeq)
+      }
+      assert(outs(0) == outs(1), s"$name: second run differs")
+      assert(outs(0).last.nonEmpty, s"$name: the fixture corpus must yield pairs")
+    }
   }
 
   // ---- Fuzzy (edit-distance) near-dup (SimQ.fuzzyNearDupPairs) ----
@@ -808,8 +896,8 @@ class LlmSpec extends AnyFunSuite {
     val m = S.assign(q, S.fit(q, "vec_id", 2, 1))
     val unguarded = m.groupBy(col("cluster")).count()
       .agg(sum(col("count") * (col("count") - 1))).collect().head.getLong(0)
-    val guarded = S.hotSplit(m, "vec_id", 8L)
-      .groupBy(col("cluster"), col("sub")).count()
+    val guarded = Salt.salt(m, Seq("cluster"), col("vec_id"), Salt.rows(8L))
+      .groupBy(col("cluster"), col("salt")).count()
       .agg(sum(col("count") * (col("count") - 1))).collect().head.getLong(0)
     assert(unguarded >= 64L * 63L, s"blob must be quadratic unguarded: $unguarded")
     assert(guarded * 3 < unguarded,

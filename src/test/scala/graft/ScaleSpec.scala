@@ -1,6 +1,6 @@
 package graft
 
-import graft.scale.{Layout, Skew}
+import graft.scale.{Layout, Salt}
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -78,21 +78,36 @@ class ScaleSpec extends AnyFunSuite {
   test("salted join == plain join; hot key spreads over all salts") {
     val spark0 = spark
     import spark0.implicits._
+    val T = Salt.TargetBucket.toInt
     // pathological skew: 90% of fact rows share key 1
     val fact = ((1 to 9000).map(_ => 1L) ++ (1L to 1000L)).zipWithIndex
-      .map { case (k, i) => (k, i.toLong) }.toDF("key", "payload")
-    val dim = (1L to 1000L).map(i => (i, s"d$i")).toDF("key", "attr")
-    val n = 8
-    val salted = Skew.saltedJoin(fact, dim, "key", n)
-    val plain = fact.join(dim, "key")
-    assert(salted.count() == plain.count())
-    assert(salted.agg(sum("payload")).collect().head.getLong(0) ==
-      plain.agg(sum("payload")).collect().head.getLong(0))
-    // the hot key's rows really use multiple salts
-    val saltsUsed = fact.withColumn("_salt",
-        pmod(hash(fact.columns.map(col).toIndexedSeq: _*), lit(n)))
-      .filter(col("key") === 1).select("_salt").distinct().count()
-    assert(saltsUsed == n)
+      .map { case (k, i) => (Option(k), i.toLong) }.toDF("key", "payload")
+    val dim = (1L to 1000L).map(i => (Option(i), s"d$i")).toDF("key", "attr")
+    // edge inputs: key 2 grows to exactly the target (n_sub stays 1), key 3
+    // to target + 1 (n_sub 2), and null keys on both sides join nothing
+    val edges = (Seq.fill(T - 1)(Option(2L)) ++ Seq.fill(T)(Option(3L)) ++ Seq(None, None))
+      .zipWithIndex.map { case (k, i) => (k, 20000L + i) }.toDF("key", "payload")
+    val dimEdges = dim.union(Seq((Option.empty[Long], "null")).toDF("key", "attr"))
+    def saltOf(f: org.apache.spark.sql.DataFrame) =
+      Salt.salt(f, Seq("key"), struct(f.columns.map(col).toIndexedSeq: _*),
+        Salt.rows(Salt.TargetBucket))
+    Seq((fact, dim), (fact.union(edges), dimEdges), (fact.limit(0), dim)).foreach {
+      case (f, d) =>
+        val salted = Salt.saltedJoin(f, d, "key")
+        val plain = f.join(d, "key")
+        assert(salted.count() == plain.count())
+        assert(salted.agg(sum("payload")).collect().head.get(0) ==
+          plain.agg(sum("payload")).collect().head.get(0))
+    }
+    val nSub = saltOf(fact.union(edges)).filter(col("key").isin(2L, 3L))
+      .select("key", "n_sub").distinct().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(nSub == Map(2L -> 1L, 3L -> 2L))
+    // the 9,001-row hot key gets ceil(9001 / target) salts and uses every one
+    val hot = saltOf(fact).filter(col("key") === 1)
+    val n = hot.select("n_sub").distinct().collect().map(_.getLong(0)).toSeq
+    assert(n == Seq(math.ceil(9001.0 / T).toLong))
+    val saltsUsed = hot.select("salt").distinct().count()
+    assert(saltsUsed == n.head)
   }
 
   test("NarrowDisperseRDD: factor x partitions, balanced, shuffle-free, element-preserving") {

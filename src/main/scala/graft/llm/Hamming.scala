@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * unguarded one (the q45 gate is byte-identical). The signature rides
   * through the join next to the id, so the verify needs no second lookup.
   *
-  * Exact-dedup-first still applies (see [[graft.queries.SimQ]] q45 notes):
+  * Exact-dedup-first still applies (see the q45 notes):
   * byte-identical documents should be collapsed by hash-groupBy (q24)
   * before any signature pass, so mega-buckets only arise from genuine
   * near-dup clusters — the salt bounds the damage of the residual ones.

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.llm.Bloom
+import graft.llm.{Bloom, Corpus}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -56,38 +56,7 @@ object CorpusQ {
     * rows, not the corpus.
     */
   def q81Bm25(spark: SparkSession, dir: String): DataFrame =
-    bm25(Tables.documents(spark, dir), BM25_TERMS, 20)
-
-  /** Core of [[q81Bm25]] over any (doc_id, text) frame — the spec replays
-    * the exact rational arithmetic driver-side in BigInt.
-    */
-  def bm25(docs: DataFrame, terms: Seq[String], k: Int): DataFrame = {
-    val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-    val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("len"))
-    val tot = dl.agg(count(lit(1)).as("n_docs"), sum(col("len")).as("a_tot"))
-    val tf = toks.filter(col("tok").isInCollection(terms))
-      .groupBy(col("doc_id"), col("tok").as("term"))
-      .agg(count(lit(1)).as("tfc"))
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("dfc"))
-    val scored = tf
-      .join(broadcast(dfreq), "term")
-      .join(dl.hint("shuffle_hash"), "doc_id")
-      .crossJoin(broadcast(tot))
-      .select(col("doc_id"),
-        (expr("(cast(1000000 as decimal(38,0)) * (n_docs - dfc + 1)) div (dfc + 1)")
-          .cast("decimal(38,0)") *
-          expr("""(cast(1000000 as decimal(38,0)) * 22 * a_tot * tfc) div
-                 |(cast(10 as decimal(38,0)) * a_tot * tfc
-                 |  + cast(3 as decimal(38,0)) * a_tot
-                 |  + cast(9 as decimal(38,0)) * len * n_docs)""".stripMargin)
-            .cast("decimal(38,0)")).as("s"))
-    val agg = scored.groupBy(col("doc_id"))
-      .agg(sum(col("s")).cast("long").as("bm25"))
-    agg.orderBy(col("bm25").desc, col("doc_id")).limit(k)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("bm25").desc, col("doc_id"))))
-      .orderBy(col("rank"))
-  }
+    Corpus.bm25(Tables.documents(spark, dir), BM25_TERMS, 20)
 
   // ---------------------------------------------------------------- q82
 
@@ -109,32 +78,10 @@ object CorpusQ {
     * byte-identical (chunk concatenation is exact).
     */
   def q82ParagraphDedup(spark: SparkSession, dir: String): DataFrame =
-    paragraphDedup(Tables.documents(spark, dir))
+    Corpus.paragraphDedup(Tables.documents(spark, dir))
 
-  /** Core of [[q82ParagraphDedup]] over any (doc_id, text) frame. */
-  def paragraphDedup(docs: DataFrame): DataFrame = {
-    val base = docs.select(col("doc_id"), split(col("text"), " ").as("ts"))
-    val chunks = base.select(col("doc_id"),
-      posexplode(expr(
-        """transform(sequence(0, cast((size(ts) + 19) div 20 as int) - 1),
-          |  i -> array_join(slice(ts, i * 20 + 1, 20), ' '))""".stripMargin))
-        .as(Seq("idx", "chunk")))
-      .withColumn("gh", md5(col("chunk")))
-    val keepers = chunks.groupBy(col("gh"))
-      .agg(min(col("doc_id") * 1000000 + col("idx")).as("keeper"))
-    val kept = chunks.join(keepers.hint("shuffle_hash"), "gh")
-      .filter(col("doc_id") * 1000000 + col("idx") === col("keeper"))
-    val re = kept.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_kept"),
-        expr("array_join(transform(array_sort(collect_list(struct(idx, chunk))), s -> s.chunk), ' ')")
-          .as("clean_text"))
-    val nt = base.select(col("doc_id"), expr("(size(ts) + 19) div 20").as("n_chunks"))
-    nt.join(re.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_chunks"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"))
-      .orderBy(col("doc_id"))
-  }
+  /** Forwarder to [[Corpus.paragraphDedup]] for perfbench's corpus build. */
+  def paragraphDedup(docs: DataFrame): DataFrame = Corpus.paragraphDedup(docs)
 
   // ---------------------------------------------------------------- q83
 
@@ -330,111 +277,34 @@ object CorpusQ {
     * parallelizes across sources and the per-group sort is the windowed
     * partition sort, not a global one. A pathological mega-source (one
     * domain = half the corpus) makes that partition hot; the scale path is
-    * [[domainCapBucketed]] — exact two-phase top-k over hash sub-cells,
+    * [[Corpus.domainCapBucketed]] — exact two-phase top-k over hash sub-cells,
     * bit-identical verdicts (q96 gates it against THIS query's oracle). At
     * C4's actual shape (millions of domains, heavy but not degenerate
     * tail) the plain window is the right plan.
     */
   def q86DomainCap(spark: SparkSession, dir: String): DataFrame =
-    domainCap(Tables.documents(spark, dir), 20)
+    Corpus.domainCap(Tables.documents(spark, dir), 20)
 
-  /** Core of [[q86DomainCap]] over any (doc_id, source) frame. */
-  def domainCap(docs: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("source"))
-      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-    docs.select(col("doc_id"), col("source"))
-      .withColumn("rn", row_number().over(w))
-      .select(col("doc_id"), col("source"), (col("rn") <= k).as("kept"))
-      .orderBy(col("doc_id"))
-  }
+  /** Forwarder to [[Corpus.domainCap]] for perfbench's corpus build. */
+  def domainCap(docs: DataFrame, k: Int): DataFrame = Corpus.domainCap(docs, k)
 
-  /** [[domainCap]]'s MEGA-SOURCE scale path — the two-phase variant the
-    * plain window needs when one degenerate domain holds a macroscopic
-    * corpus share (its window partition becomes one hot task sorting the
-    * whole domain). Classic exact distributed top-k:
-    *
-    *   1. every doc hash-buckets into one of `buckets` deterministic
-    *      sub-cells (`pmod(xxhash64(doc_id), buckets)`); a per-(source,
-    *      bucket) window keeps each bucket's k smallest md5 keys — the
-    *      global k smallest NECESSARILY survive (each lives in some
-    *      bucket, with at most k−1 keys below it anywhere, so at most
-    *      k−1 below it in its own bucket). Partition size: domain/buckets.
-    *   2. re-rank the ≤ buckets·k survivors per source with the SAME
-    *      (md5, doc_id) order and keep rank ≤ k — a bounded partition.
-    *
-    * Kept set is therefore BIT-IDENTICAL to [[domainCap]]'s (spec-pinned,
-    * and q96 gates it against the one-phase ORACLE); dropped docs rejoin
-    * via a shuffle-hash left join for the keep/drop verdict output. Cost:
-    * two bounded windows + one verdict join instead of one unbounded
-    * window — the q48 bucketed-prefix-sum doctrine applied to top-k.
-    */
-  def domainCapBucketed(docs: DataFrame, k: Int, buckets: Int = 32): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    val keyed = docs.select(col("doc_id"), col("source"))
-      .withColumn("hk", md5(col("doc_id").cast("string")))
-      .withColumn("bk", pmod(xxhash64(col("doc_id")), lit(buckets.toLong)))
-    val w1 = Window.partitionBy(col("source"), col("bk"))
-      .orderBy(col("hk"), col("doc_id"))
-    val w2 = Window.partitionBy(col("source")).orderBy(col("hk"), col("doc_id"))
-    val keep = keyed
-      .withColumn("rn1", row_number().over(w1)).filter(col("rn1") <= k)
-      .withColumn("rn2", row_number().over(w2)).filter(col("rn2") <= k)
-      .select(col("doc_id"), lit(true).as("kept"))
-    docs.select(col("doc_id"), col("source"))
-      .join(keep.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"),
-        coalesce(col("kept"), lit(false)).as("kept"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** q96 — [[domainCapBucketed]] gated against the ONE-PHASE oracle: the
-    * DuckDB side runs q86's plain window SQL (k = 20), so the gate proves
+  /** q96 — [[Corpus.domainCapBucketed]] gated against the ONE-PHASE
+    * oracle: the DuckDB side runs q86's plain window SQL (k = 20), so the gate proves
     * the two-phase selection is exactly the one-phase selection,
     * cross-engine, row for row.
     */
   def q96DomainCapBucketed(spark: SparkSession, dir: String): DataFrame =
-    domainCapBucketed(Tables.documents(spark, dir), 20)
+    Corpus.domainCapBucketed(Tables.documents(spark, dir), 20)
 
-  /** Hot-partition bound for [[domainCapAuto]]'s dispatch: past this many
-    * rows in ONE source, the plain window's per-source partition task is
-    * sorting a macroscopic corpus share (4M (doc_id, source, md5) rows ≈
-    * hundreds of MB in one task's sorter — spill territory) and the
-    * two-phase plan wins; under it, the single window measured FASTER
-    * (one shuffle + one sort vs two windows + a verdict join; NOTES_bench_mains.md). The same number at 100 TB: domains are millions, so only a
-    * degenerate mega-domain ever crosses it.
-    */
-  val DOMAIN_CAP_HOT: Long = 1L << 22
-
-  /** Adaptive [[domainCap]]: probe the source-size distribution — ONE
-    * map-side-combined count aggregate reduced to a single driver Long
-    * (the bounded-scalar class) — and dispatch: plain window when no
-    * source exceeds `hotThreshold`, [[domainCapBucketed]] when one does.
-    * Both branches produce BIT-IDENTICAL verdicts (q96 proves it
-    * cross-engine; the dispatch spec pins the plan flip), so the probe is
-    * purely a physical-plan decision — the q72/q73 dual-regime doctrine
-    * applied to plan choice instead of broadcast shape. The probe costs
-    * one extra corpus scan; at the scales where the choice matters the
-    * mis-planned window costs a hot task sorting half the corpus.
-    */
-  def domainCapAuto(docs: DataFrame, k: Int,
-                    hotThreshold: Long = DOMAIN_CAP_HOT,
-                    buckets: Int = 32): DataFrame = {
-    val maxShare = docs.groupBy(col("source")).agg(count(lit(1)).as("n"))
-      .agg(coalesce(max(col("n")), lit(0L)).as("m"))
-      .collect()(0).getLong(0)
-    if (maxShare > hotThreshold) domainCapBucketed(docs, k, buckets)
-    else domainCap(docs, k)
-  }
-
-  /** q108 — [[domainCapAuto]] at the NATURAL corpus shape (many modest
-    * sources — the probe picks the plain window at the production
+  /** q108 — [[Corpus.domainCapAuto]] at the NATURAL corpus shape (many
+    * modest sources — the probe picks the plain window at the production
     * threshold), gated against the one-phase oracle.
     */
   def q108DomainCapAuto(spark: SparkSession, dir: String): DataFrame =
-    domainCapAuto(Tables.documents(spark, dir), 20)
+    Corpus.domainCapAuto(Tables.documents(spark, dir), 20)
 
-  /** q109 — [[domainCapAuto]] at the DEGENERATE shape: every even doc_id
-    * re-sourced to one mega-domain (half the corpus), with the threshold
+  /** q109 — [[Corpus.domainCapAuto]] at the DEGENERATE shape: every even
+    * doc_id re-sourced to one mega-domain (half the corpus), with the threshold
     * scaled to the test corpus (500) so the probe dispatches the
     * two-phase plan from sf0.01 up. The oracle replays the same remap and
     * runs the one-phase window over it — so the gate proves dispatch +
@@ -446,7 +316,7 @@ object CorpusQ {
       .select(col("doc_id"),
         when(col("doc_id") % 2 === 0, lit("mega.example"))
           .otherwise(col("source")).as("source"))
-    domainCapAuto(remapped, 20, hotThreshold = 500L)
+    Corpus.domainCapAuto(remapped, 20, hotThreshold = 500L)
   }
 
   // ---------------------------------------------------------------- q87
@@ -538,32 +408,10 @@ object CorpusQ {
     * cut exploded distinct grams ×32; this plan cut q88 from 2.8 s to the
     * map-side hash cost alone.)
     */
-  /** The q88 signature stage alone: per source, the 32 permutation minima
-    * as columns m0..m31 — one map-side hash pass + one partial-agged
-    * groupBy. min is a MERGEABLE aggregate, so the SAME frame builds
-    * streaming state (see [[graft.streaming.EventStreams
-    * .overlapSignatureIngest]]) — batch and stream cannot diverge because
-    * this is literally the shared plan.
-    */
-  def overlapSignatures(docs: DataFrame): DataFrame = {
-    // split ONCE into a column — the naive `slice(split(text), i, 8)` shape
-    // re-splits the text per gram position (quadratic in doc length)
-    val grams8 = expr(
-      """transform(sequence(1, greatest(size(ts) - 7, 1)),
-        |  i -> array_join(slice(ts, i, 8), ' '))""".stripMargin)
-    val r = graft.scale.Layout.explodeNonNull(
-        docs.select(col("source"), split(col("text"), " ").as("ts")), "source", grams8, "gram")
-      .select(col("source"), graft.functions.rolling_hash(col("gram")).as("r"))
-    val minCols = (0 until 32).map(i =>
-      min((lit((2 * i + 3).toLong) * col("r") + lit((11 * i + 7).toLong)) % 2147483647L)
-        .as(s"m$i"))
-    r.groupBy(col("source")).agg(minCols.head, minCols.tail: _*)
-  }
-
   def corpusOverlap(docs: DataFrame): DataFrame = {
     // both sides of the pair self-join consume the signatures — checkpoint
     // the |sources|×33 frame so the gram pass runs ONCE, not per side
-    val sig = overlapSignatures(docs).localCheckpoint()
+    val sig = Corpus.overlapSignatures(docs).localCheckpoint()
     val mins = sig.select(col("source"),
       posexplode(array((0 until 32).map(i => col(s"m$i")): _*)).as(Seq("i", "mh")))
     mins.as("a")
@@ -619,7 +467,7 @@ object CorpusQ {
       .join(k1.hint("shuffle_hash"), Seq("h"))
       .filter(col("doc_id") === col("keeper"))
       .select(col("doc_id"), col("text"), col("source"))
-    val s2 = paragraphDedup(s1.select(col("doc_id"), col("text")))
+    val s2 = Corpus.paragraphDedup(s1.select(col("doc_id"), col("text")))
       .filter(col("n_kept") > 0)
       .select(col("doc_id"), col("clean_text"))
     val s3 = s2.select(col("doc_id"), split(col("clean_text"), " ").as("ts"))
@@ -629,7 +477,7 @@ object CorpusQ {
       .select(col("doc_id"), col("n_toks"))
     val s3f = s3.join(
       s1.select(col("doc_id"), col("source")).hint("shuffle_hash"), "doc_id")
-    val s4 = domainCap(s3f.select(col("doc_id"), col("source")), 30)
+    val s4 = Corpus.domainCap(s3f.select(col("doc_id"), col("source")), 30)
       .filter(col("kept")).select(col("doc_id"))
     val s4f = s3f.join(s4.hint("shuffle_hash"), "doc_id")
     // PrefixSum is two-pass (offset aggregate + window) — localCheckpoint

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.scale.{GraphLoop, Held, Salt}
+import graft.scale.{Hits, LabelProp}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -66,15 +66,13 @@ object SimQ {
     * bands of 2, band-equality self-join for candidates, exact Jaccard >=
     * 0.8 verify.
     *
-    * What gets cached is deliberately TINY: only the (doc_id, band_id,
-    * band_key) band table (3 short rows per doc) and the candidate pairs.
-    * The shingle arrays themselves are never persisted — caching
-    * O(corpus-tokens) string arrays costs more than recomputing them — and
-    * the exact-Jaccard verify recomputes grams ONLY for candidate docs, by
-    * broadcast-semi-joining the candidate ids against the raw scan BEFORE
-    * gram construction (candidates are a vanishing fraction of the corpus at
-    * any useful threshold, so the verify-side gram work is near-zero while
-    * the doc scan itself stays a cheap columnar read).
+    * What gets persisted is the compact per-doc signature, once: the 6
+    * band slices, the shingle count and the sorted xxhash64 image of the
+    * shingle set — never the shingle strings. Both band sides and both
+    * verify sides read it, and the exact-Jaccard verify runs on the hash
+    * sets, so candidates never re-derive grams (only the incremental path,
+    * [[graft.llm.MinHash.incrementalNearDupPairs]], re-derives signatures
+    * for its candidate docs).
     *
     * LSH skew: a mega-cluster sharing one band key would make the self-join
     * quadratic in the cluster size ON ONE REDUCER. The candidate join is
@@ -89,209 +87,22 @@ object SimQ {
   def q26MinhashLsh(spark: SparkSession, dir: String): DataFrame =
     nearDupPairs(spark, dir).orderBy(col("id_a"), col("id_b"))
 
-  /** Session-scoped memo of [[nearDupPairs]] per sf dir: the composed
-    * pipelines (q26 ranking, q39 grouping, q40 cleaning) pay the signature
-    * pass ONCE per session instead of once per query. Values are eagerly
-    * localCheckpoint-ed (tiny — verified pairs only), so a cache hit is a
-    * narrow read of executor-held blocks. [[clearNearDupPairCache]] drops
-    * entries explicitly — the bench calls it per timed pass so q26 is
-    * charged the real signature cost every pass instead of a block lookup.
-    *
-    * Lifecycle, deliberately NOT weak keys: a cached DataFrame strongly
-    * references its SparkSession, so `WeakHashMap[SparkSession, _]` never
-    * reclaims anything (value → key). Instead the key is the non-retaining
-    * `sessionUUID` string and every access sweeps entries whose underlying
-    * SparkContext has stopped — their blocks are already gone with the
-    * executors; this drops the last strong reference to the plans.
-    *
-    * Staleness: the key includes a snapshot fingerprint of the table's file
-    * listing (name/mtime/length xor-fold), so a `dir` whose parquet is
-    * REWRITTEN within one session recomputes instead of serving stale
-    * pairs; the superseded entry is swept on the same access, letting the
-    * ContextCleaner free its checkpoint blocks.
+  /** q26's pair stage over the documents table under `dir`
+    * ([[graft.llm.MinHash.nearDupPairs]]): each call recomputes it, and
+    * the returned checkpointed frame is the handle a caller holds to reuse
+    * the pairs.
     */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), DataFrame]
+  def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
+    graft.llm.MinHash.nearDupPairs(Tables.documents(spark, dir))
 
-  // session -> opaque token. THIS weak map reclaims (its String values hold
-  // no reference back to the session, unlike cached DataFrames would).
-  private val sessionToken = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String])
-
-  private def tokenOf(spark: SparkSession): String =
-    sessionToken.computeIfAbsent(spark, _ => java.util.UUID.randomUUID().toString)
-
-  def clearNearDupPairCache(): Unit = pairCache.clear()
-
-  /** Order-independent xor-fold over (file name, mtime, length) of the
-    * documents table's listing — one driver-side FS call, no data read.
+  /** No-op: the pair stage keeps no cache. Kept because perfbench's corpus
+    * build calls it between repetitions.
     */
-  private def listingFingerprint(spark: SparkSession, dir: String): Long =
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(p, true)
-      var acc = 0L
-      while (it.hasNext) {
-        val st = it.next()
-        acc ^= (st.getPath.getName.hashCode.toLong * 31L + st.getModificationTime) * 31L +
-          st.getLen
-      }
-      acc
-    } catch { case scala.util.control.NonFatal(_) => 0L }
+  def clearNearDupPairCache(): Unit = ()
 
-  /** The shared near-dup pair stage: verified MinHash-LSH pairs
-    * (id_a < id_b, exact Jaccard >= 0.8, rounded to 4) for the documents
-    * table under `dir` — memoized per (session, dir, listing snapshot).
-    */
-  /** Upper bound on live memo entries: a session-churn application
-    * (newSession per job) mints a fresh token per session, and entries of
-    * DISCARDED-but-unStopped sessions are indistinguishable from live
-    * ones — so beyond the bound, entries from OTHER tokens are evicted
-    * (current session's entries always survive). Dropping the reference is
-    * the release: the ContextCleaner frees the checkpoint blocks.
-    */
-  private val MaxCachedPairEntries = 32
-
-  def nearDupPairs(spark: SparkSession, dir: String): DataFrame = {
-    val key = (tokenOf(spark), dir, listingFingerprint(spark, dir))
-    val it = pairCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val stale = e.getValue.sparkSession.sparkContext.isStopped ||
-        (e.getKey._1 == key._1 && e.getKey._2 == key._2 && e.getKey._3 != key._3)
-      if (stale) it.remove()
-    }
-    if (pairCache.size() > MaxCachedPairEntries) {
-      val it2 = pairCache.entrySet().iterator()
-      while (it2.hasNext && pairCache.size() > MaxCachedPairEntries) {
-        if (it2.next().getKey._1 != key._1) it2.remove()
-      }
-    }
-    pairCache.computeIfAbsent(key, _ => computeNearDupPairs(spark, dir))
-  }
-
-  /** (doc_id, sig struct) — one [[graft.sql.ShingleSignature]] pass. */
-  private def sigOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), graft.functions.shingle_signature(col("text")).as("sig"))
-
-  /** The ONE exact-Jaccard verify stage: candidate (id_a, id_b) pairs
-    * joined to per-doc signatures, |A∩B| via the sorted-hash merge,
-    * |A∪B| = n_a + n_b − |A∩B|, threshold 0.8, rounded to 4 — these are
-    * the oracle-pinned pair semantics, shared by the batch stage and the
-    * incremental stage so they can never silently diverge.
-    */
-  private def verifiedPairs(cand: DataFrame, sigs: DataFrame): DataFrame =
-    cand
-      .join(sigs.select(col("doc_id").as("id_a"), col("sig.hset").as("hs_a"),
-        col("sig.n_grams").cast("double").as("n_a")), "id_a")
-      .join(sigs.select(col("doc_id").as("id_b"), col("sig.hset").as("hs_b"),
-        col("sig.n_grams").cast("double").as("n_b")), "id_b")
-      .withColumn("inter",
-        graft.functions.sorted_intersect_count(col("hs_a"), col("hs_b")).cast("double"))
-      .withColumn("jaccard", col("inter") / (col("n_a") + col("n_b") - col("inter")))
-      .filter(col("jaccard") >= 0.8)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-
-  /** LSH band rows (doc_id, band_id, band_key) from a signature frame. */
-  private def bandsOf(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"), explode(array(
-      struct(lit(1).as("band_id"), concat_ws("|", col("sig.s1"), col("sig.s2")).as("band_key")),
-      struct(lit(2).as("band_id"), concat_ws("|", col("sig.s3"), col("sig.s4")).as("band_key")),
-      struct(lit(3).as("band_id"), concat_ws("|", col("sig.s5"), col("sig.s6")).as("band_key"))
-    )).as("b")).select(col("doc_id"), col("b.band_id"), col("b.band_key"))
-
-  /** The PERSISTABLE near-dup index of a corpus: its LSH band table — 3
-    * short hash rows per doc, no text, no shingle sets. Write it out
-    * between ingest batches and feed it to [[incrementalNearDupPairs]].
-    */
-  def bandIndex(docs: DataFrame): DataFrame = bandsOf(sigOf(docs))
-
-  private val BandKeys = Seq("band_id", "band_key")
-
-  /** Incremental near-dup PAIR detection — the arrival-time half of dedup
-    * maintenance that [[graft.llm.Dedup.mergeComponents]] is the
-    * compaction half of. Only the NEW batch pays the signature pass; its
-    * bands join against (persisted ∪ new) bands, so every candidate pair
-    * touches at least one arrival and the pre-existing corpus is never
-    * re-signatured (at 100 TB that is the whole point: per-batch work
-    * tracks the batch). The exact-Jaccard verify re-derives signatures
-    * ONLY for candidate docs, semi-joined out of the full corpus — same
-    * strategy as the batch pair stage.
-    *
-    * @param allDocs corpus INCLUDING the arrivals (doc_id, text) — the
-    *                verify side reads candidate docs from here
-    * @param oldBands persisted [[bandIndex]] of the pre-existing corpus
-    * @param newDocs the arrival batch (doc_ids disjoint from oldBands)
-    * @return (bands of the new batch — append them to the persisted
-    *         index; verified pairs (id_a, id_b, jaccard) touching >= 1
-    *         arrival). `union` with previously-known pairs, or feed the
-    *         pairs straight to an [[graft.llm.IncrementalComponents]].
-    */
-  def incrementalNearDupPairs(allDocs: DataFrame, oldBands: DataFrame,
-                              newDocs: DataFrame): (DataFrame, DataFrame) = {
-    val newBands = bandsOf(sigOf(newDocs)).localCheckpoint() // batch-sized; reused 3x
-    // arrivals drive the salted candidate join against (persisted ∪ new)
-    // bands, so every pair touches >= 1 arrival and a hot band (boilerplate
-    // flood in the corpus OR the batch) can't pin one reducer — without the
-    // guard a collision flood through a mega-band would also inflate the
-    // candIds broadcast below beyond its batch-proportional design size.
-    // checkpoint: the candidate join scans the corpus-sized band index —
-    // both downstream consumers (the candIds broadcast AND the verify
-    // join) must read the materialized (tiny) pair list, not re-run it
-    val tagged = oldBands.select(col("doc_id"), col("band_id"), col("band_key"))
-      .withColumn("is_new", lit(false))
-      .union(newBands.withColumn("is_new", lit(true)))
-    val held = new Held(allDocs.sparkSession.sparkContext)
-    val cand = held.frame(Salt.candidates(tagged, BandKeys, "doc_id", col("is_new")))
-    val candIds = cand.select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
-    val vSigs = sigOf(allDocs.join(broadcast(candIds), Seq("doc_id"))).persist()
-    val pairs = verifiedPairs(cand, vSigs).localCheckpoint()
-    vSigs.unpersist(false)
-    held.release() // the pairs' checkpoint no longer reads the candidates'
-    (newBands, pairs)
-  }
-
-  private def computeNearDupPairs(spark: SparkSession, dir: String): DataFrame = {
-    // ONE native pass over the corpus computes everything per doc
-    // ([[graft.sql.ShingleSignature]]): the 6 minhash slices (one-permutation
-    // style — md5 runs ONCE per shingle, the "permutations" are disjoint
-    // 5-hex slices) AND the sorted-xxhash64 image of the shingle set used by
-    // the exact verify (|A∩B| is invariant under an injective hash and
-    // |A∪B| = |A|+|B|−|A∩B|, so Jaccard matches the oracle's string-set
-    // arithmetic exactly). Only this compact projection is persisted — the
-    // shingle strings themselves never enter the cache or a shuffle, and the
-    // tokenize→shingle→hash→min/sort pipeline is one tight JVM loop per row
-    // instead of ~10 interpreted HOF passes (value-equivalence vs the HOF
-    // formulation pinned by SqlExprSpec).
-    // The signature stays ONE struct column through the persist boundary so
-    // the expression is guaranteed to run once per row (cache fill); band
-    // and verify branches read fields out of the cached struct.
-    val base = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        graft.functions.shingle_signature(col("text")).as("sig"))
-      .persist()
-    // fill the cache ONCE before the pair job (r21): that job has ~6
-    // independent sibling stages (both band sides, the hot-bucket agg,
-    // both verify sides) which otherwise RACE the cache fill and each
-    // recompute the whole signature pass — measured 6 × 1.1 s of task time
-    // at sf0.1 for one 1.1 s pass. One cheap count serializes the fill;
-    // every sibling stage then reads executor-held blocks.
-    base.count()
-
-    // band rows: (doc_id, band_id, band_key) — only hashes travel the
-    // shuffle; both self-join sides re-derive them from the cached base,
-    // and the hot-band salt guard bounds each reducer's pair fan-out
-    val cand = Salt.candidates(bandsOf(base), BandKeys, "doc_id", lit(true))
-
-    // materialize the (near-dup-pairs-only) result so the input persist
-    // can be released here instead of leaking across queries; the
-    // checkpoint blocks are executor-held and ContextCleaner-freed —
-    // and they're exactly what the memo hands to q26/q39/q40
-    val out = verifiedPairs(cand, base).localCheckpoint()
-    base.unpersist(false)
-    out
-  }
+  /** Forwarder to [[graft.llm.MinHash.fuzzyNearDupPairs]] for perfbench. */
+  def fuzzyNearDupPairs(docs: DataFrame): DataFrame =
+    graft.llm.MinHash.fuzzyNearDupPairs(docs)
 
   /** q39 — near-duplicate GROUPS: the transitive closure of q26's verified
     * pairs via distributed connected components ([[graft.llm.Dedup]],
@@ -350,7 +161,7 @@ object SimQ {
     * the final aggregate is a groupBy on a low-cardinality key.
     */
   def q40CorpusClean(spark: SparkSession, dir: String): DataFrame = {
-    val docs = TextQ.withQuality(Tables.documents(spark, dir))
+    val docs = graft.llm.Corpus.withQuality(Tables.documents(spark, dir))
       .select(col("doc_id"), col("lang"), col("n_tokens"), col("quality"))
 
     val passIds = docs.filter(col("quality") >= QUALITY_CUT).select(col("doc_id"))
@@ -576,36 +387,8 @@ object SimQ {
       .orderBy(col("doc_id"))
   }
 
-  /** The q149 operator: HITS hubs & authorities (Kleinberg, JACM'99) —
-    * `iters` full power iterations (auth step then hub step, each step
-    * consuming the OTHER score's latest value) in EXACT long arithmetic:
-    * hub₀ = 1, authₖ(v) = Σ_{u→v} hubₖ₋₁(u), hubₖ(u) = Σ_{u→v} authₖ(v),
-    * parallel edges a multiset (each contributes — consistent with the
-    * PageRank family). Deferring normalization to the caller keeps every
-    * iteration integer-exact, so a replaying engine matches bit-for-bit
-    * with no FP-order sensitivity — same oracle-design doctrine as the
-    * canonical-state sketches.
-    *
-    * Scale shape: [[graft.scale.GraphLoop]] with the reversed index —
-    * the auth step pushes hubs along src-keyed edges, the hub step pushes
-    * authorities along dst-keyed ones; each half-step's one exchange is
-    * the per-receiver sum. Scores are (id, auth, hub).
-    */
-  def hits(ids: DataFrame, edges: DataFrame, iters: Int): GraphLoop.Result = {
-    require(iters >= 1, s"hits: iters >= 1, got $iters")
-    val spark = ids.sparkSession
-    import spark.implicits._
-    val g = new GraphLoop(ids, edges, reversed = true)
-    val (scores, _, _) = g.rounds(g.nodes((_, _) => (0L, 1L)), iters, None, 0L) { (ah, _) =>
-      val auth = g.push(ah, g.bySrc)(_._2)(_ + _, (v, in) => (in.getOrElse(0L), v._2))
-      g.push(auth.mapValues(_._1), g.byDst)(_._1)(_ + _, (v, in) => (v._1, in.getOrElse(0L)))
-    }
-    g.result(scores.map { case (id, (a, h)) => (id, a, h) }.toDF("id", "auth", "hub"),
-      iters, Double.NaN)
-  }
-
   /** q149 — HITS over a hierarchy-shaped formula graph: 2 exact power
-    * iterations via [[hits]], then ONE final mean-normalization (score ·
+    * iterations via [[Hits.hits]], then ONE final mean-normalization (score ·
     * n / Σ scores, rounded to 4) so hubs and authorities read on a ~1.0
     * scale. The q62 formula graph is REGULAR both ways (its multipliers
     * are coprime with n), where HITS is provably uniform — so this query
@@ -626,7 +409,7 @@ object SimQ {
         .select(col("id").as("src"), expr("id DIV 2").as("dst")))
       .union(ids.filter(col("id") % 3 === 0)
         .select(col("id").as("src"), expr("id DIV 3").as("dst")))
-    val scores = hits(ids, edges, iters = 2).frame
+    val scores = Hits.hits(ids, edges, iters = 2).frame
     val totals = scores.agg(sum(col("auth")).as("sa"), sum(col("hub")).as("sh"))
     scores.crossJoin(broadcast(totals))
       .select(col("id").as("doc_id"),
@@ -648,7 +431,7 @@ object SimQ {
     * Scale shape: [[graft.scale.GraphLoop]] — labels and the src-keyed
     * edge index are co-partitioned once, and each round's one exchange is
     * the map-side-combined per-dst label count (the declarative
-    * [[lpRound]] re-shuffled the edges every round).
+    * [[LabelProp.lpRound]] re-shuffled the edges every round).
     */
   def q90LabelProp(spark: SparkSession, dir: String): DataFrame = {
     val ids = Tables.documents(spark, dir).select(col("doc_id").as("id"))
@@ -657,86 +440,11 @@ object SimQ {
       explode(array(
         (col("id") * 7 + 1) % n, (col("id") * 13 + 3) % n,
         (col("id") * 31 + 7) % n)).as("dst"))
-    labelPropagate(ids, edges, 3).frame.orderBy(col("id"))
-  }
-
-  /** One synchronous label-propagation round: relabel every node with the
-    * MODE of its in-neighbors' labels (count desc, label asc — fully
-    * deterministic; no in-edges → keep). Output carries the OLD label as
-    * `prev` so convergence loops can count changes without a second join.
-    * The declarative reference that CorpusSpec holds [[labelPropagate]]
-    * to.
-    */
-  private[graft] def lpRound(edges: DataFrame)(labels: DataFrame): DataFrame = {
-    val counts = edges
-      .join(labels.select(col("id").as("l_id"), col("lbl")).hint("shuffle_hash"),
-        col("src") === col("l_id"))
-      .groupBy(col("dst").as("c_id"), col("lbl").as("nl"))
-      .agg(count(lit(1)).as("c"))
-    val mode = counts
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("c_id")).orderBy(col("c").desc, col("nl"))))
-      .filter(col("rn") === 1)
-      .select(col("c_id"), col("nl"))
-    labels.join(mode.hint("shuffle_hash"), col("id") === col("c_id"), "left")
-      .select(col("id"), coalesce(col("nl"), col("lbl")).as("lbl"),
-        col("lbl").as("prev"))
-  }
-
-  /** Core of [[q90LabelProp]] over any (id) / (src, dst) frames — the spec
-    * hand-verifies rounds on planted community graphs. `rounds` synchronous
-    * rounds on [[graft.scale.GraphLoop]]: each node counts its in-neighbors'
-    * labels into a per-receiver map and takes the mode (count desc, label
-    * asc over any iteration order — [[lpRound]]'s rule; counts are exact
-    * longs, so the result matches the declarative unroll by arithmetic,
-    * and CorpusSpec pins the parity on random multigraphs). The frame is
-    * (id, lbl).
-    */
-  def labelPropagate(ids: DataFrame, edges: DataFrame,
-                     rounds: Int): GraphLoop.Result =
-    labelLoop(ids, edges, rounds, None)
-
-  /** [[labelPropagate]] with a CONVERGENCE STOP — run until a round changes
-    * no label (or `maxRounds`). The changed count is the loop's per-round
-    * tally, so each round launches ONE job (spec-pinned by a SparkListener
-    * census) and holds O(1) storage. `rounds` is the first round whose
-    * changed count hit zero, or `maxRounds`; `last` is that round's changed
-    * count. Synchronous LPA can 2-cycle on bipartite-ish structures and
-    * never converge — `maxRounds` bounds that honestly (callers read
-    * `last > 0` as "stopped, not settled").
-    */
-  def labelPropagateConverge(ids: DataFrame, edges: DataFrame,
-                             maxRounds: Int): GraphLoop.Result = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    labelLoop(ids, edges, maxRounds,
-      Some(GraphLoop.Tally[Long, Long](0L, (nw, old) => if (nw != old) 1L else 0L,
-        _ + _, _ == 0L)))
-  }
-
-  private def labelLoop(ids: DataFrame, edges: DataFrame, maxRounds: Int,
-      tally: Option[GraphLoop.Tally[Long, Long]]): GraphLoop.Result = {
-    type Counts = scala.collection.mutable.LongMap[Long]
-    val spark = ids.sparkSession
-    import spark.implicits._
-    val g = new GraphLoop(ids, edges)
-    val (labels, r, changed) = g.rounds(g.nodes((id, _) => id), maxRounds, tally, 0L) {
-      (l, _) => g.push(l, g.bySrc)(lbl => { val m = new Counts(); m.update(lbl, 1L); m })(
-        (a, b) => { b.foreach { case (k, c) => a.update(k, a.getOrElse(k, 0L) + c) }; a },
-        (old, in) => in.fold(old) { m =>
-          var bestL = Long.MaxValue
-          var bestC = 0L
-          m.foreach { case (k, c) =>
-            if (c > bestC || (c == bestC && k < bestL)) { bestC = c; bestL = k }
-          }
-          bestL
-        })
-    }
-    g.result(labels.toDF("id", "lbl"), r,
-      if (tally.isDefined) changed.toDouble else Double.NaN)
+    LabelProp.labelPropagate(ids, edges, 3).frame.orderBy(col("id"))
   }
 
   /** q95 — label propagation with the CONVERGENCE STOP oracle-gated, the
-    * q69 pattern applied to [[labelPropagateConverge]]: groups of 8
+    * q69 pattern applied to [[LabelProp.labelPropagateConverge]]: groups of 8
     * consecutive doc ids, back-edges (id−1 → id, id−2 → id) within each
     * group — a DAG rooted at each group leader, so the leader's label
     * sweeps forward ~2 offsets per round and the run reaches its fixed
@@ -753,7 +461,7 @@ object SimQ {
       .select((col("id") - 1).as("src"), col("id").as("dst"))
       .union(ids.filter(col("id") % 8 >= 2)
         .select((col("id") - 2).as("src"), col("id").as("dst")))
-    val res = labelPropagateConverge(ids, edges, maxRounds = 6)
+    val res = LabelProp.labelPropagateConverge(ids, edges, maxRounds = 6)
     res.frame
       .select(col("id").as("doc_id"), col("lbl"), lit(res.rounds.toLong).as("rounds"))
       .orderBy(col("doc_id"))
@@ -812,74 +520,8 @@ object SimQ {
     * shuffle).
     */
   def q76FuzzyDedup(spark: SparkSession, dir: String): DataFrame =
-    fuzzyNearDupPairs(Tables.documents(spark, dir))
+    graft.llm.MinHash.fuzzyNearDupPairs(Tables.documents(spark, dir))
       .orderBy(col("id_a"), col("id_b"))
-
-  /** The q76 operator over any (doc_id, text) frame. `prefixLen` caps the
-    * DP; `relNum/relDen` is the rational accept threshold
-    * (lev·relDen ≤ relNum·maxLen).
-    */
-  def fuzzyNearDupPairs(docs: DataFrame, prefixLen: Int = 256,
-                        relNum: Long = 1, relDen: Long = 5): DataFrame = {
-    // sig frame materialized once (eager localCheckpoint): both sides of
-    // the band self-join read executor-held blocks instead of recomputing
-    // the signature pass. Project the struct down to the 6 band slices
-    // FIRST (r21): localCheckpoint materializes full rows eagerly — no
-    // Catalyst pruning reaches past it — and q76's verify stage reads
-    // prefixes, never the per-doc shingle hash SET that dominates the
-    // signature struct's bytes (n_grams longs/doc vs 6 band slices).
-    val bandSig = sigOf(docs).select(col("doc_id"), struct(
-      col("sig.s1").as("s1"), col("sig.s2").as("s2"), col("sig.s3").as("s3"),
-      col("sig.s4").as("s4"), col("sig.s5").as("s5"), col("sig.s6").as("s6")).as("sig"))
-    val held = new Held(docs.sparkSession.sparkContext)
-    val cand = Salt.candidates(bandsOf(held.frame(bandSig)), BandKeys, "doc_id", lit(true))
-    val pref = docs.select(col("doc_id"), substring(col("text"), 1, prefixLen).as("s"))
-    // Verify-cost control, exact-result-preserving: (a) a length-difference
-    // pregate (lev ≥ |len_a − len_b|, so a pair failing it can never pass
-    // the accept test) kills dissimilar candidates for the price of two
-    // ints; (b) the DP itself runs BANDED with the loosest threshold any
-    // pair could accept at (⌊prefixLen·relNum/relDen⌋) — O(len·threshold)
-    // with early abort instead of O(len²), returning −1 above it, and −1
-    // pairs are exactly the pairs the unbanded test rejects. Together these
-    // cut the sf0.1 verify stage ~10× with a bit-identical result set.
-    val maxAccept = (prefixLen.toLong * relNum / relDen).toInt
-    // Two r21 plan fixes, found by reading the executed plan (guide §7.2):
-    // (a) Catalyst pushed the `lev` accept-filter INTO the prefix join's
-    //     condition, so the O(prefixLen·threshold) DP ran inside the join
-    //     stage — evaluated per candidate row (twice, condition + output
-    //     column) and serialized on the ONE task AQE's byte-sized
-    //     coalescing gave that stage (2.4 s while 31 cores idled). The
-    //     localCheckpoint is a materialization barrier the filter cannot
-    //     be pushed below; it carries only pregate-surviving (ids, two
-    //     ≤prefixLen prefixes) rows — the same pair-scale class the q53
-    //     verify already materializes.
-    // (b) The DP stage itself is CPU-dense, so cores — not bytes — are the
-    //     right task denominator (guide §2.5): a pinned round-robin
-    //     redistribution (deterministic under retries,
-    //     sortBeforeRepartition) fans it across defaultParallelism tasks.
-    // The barrier must sit ABOVE the redistribution: a deterministic filter
-    // sinks through both Project and Repartition, so any pre-repartition
-    // checkpoint still left the DP on the barrier's single task. With the
-    // checkpoint taken AFTER the pinned repartition, the materialized
-    // LogicalRDD itself carries defaultParallelism partitions and the
-    // pushed-down accept filter (with its DP) runs one task per block.
-    val pregated = cand
-      .hint("shuffle_hash")
-      .join(pref.select(col("doc_id").as("id_a"), col("s").as("sa")), "id_a")
-      .join(pref.select(col("doc_id").as("id_b"), col("s").as("sb")), "id_b")
-      .withColumn("mx", greatest(length(col("sa")), length(col("sb"))).cast("long"))
-      .filter(col("mx") > 0 &&
-        abs(length(col("sa")) - length(col("sb"))).cast("long") * relDen <=
-          col("mx") * relNum)
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint()
-    held.release() // the pregated checkpoint no longer reads the signatures'
-    pregated
-      .withColumn("lev", levenshtein(col("sa"), col("sb"), maxAccept).cast("long"))
-      .filter(col("lev") >= 0 && col("lev") * relDen <= col("mx") * relNum)
-      .select(col("id_a"), col("id_b"), col("lev"),
-        round(col("lev").cast("double") / col("mx"), 4).as("rel"))
-  }
 
   def q74SemDedup(spark: SparkSession, dir: String): DataFrame =
     graft.llm.SemDedup.semDedup(
@@ -1025,10 +667,12 @@ object SimQ {
 
   // q69: 8 unrolled power iterations (damping 0.5) + a delta scalar per
   // step; `sel` picks the first iteration whose Σ|pr'−pr| <= 0.02·n — the
-  // same stop PageRank.run's tol>0 early exit takes
+  // same stop PageRank.run's tol>0 early exit takes. Every step is read twice
+  // (by the next step and by its delta), so ids, e and r1..r8 are
+  // MATERIALIZED: inlined, DuckDB redoes all earlier steps twice per step
   private val PR_CONV_ITERS = 8
   private val PR_CONV_STEPS = (1 to PR_CONV_ITERS).map { i =>
-    s"""r$i AS (SELECT ids.id, (1::DOUBLE - 0.5::DOUBLE) + 0.5 *
+    s"""r$i AS MATERIALIZED (SELECT ids.id, (1::DOUBLE - 0.5::DOUBLE) + 0.5 *
        |    coalesce(sum(r${i - 1}.pr / deg.outdeg), 0) AS pr
        |  FROM ids LEFT JOIN e ON e.dst = ids.id
        |    LEFT JOIN r${i - 1} ON r${i - 1}.id = e.src LEFT JOIN deg ON deg.src = e.src
@@ -1046,8 +690,8 @@ object SimQ {
   val oracles: Map[String, String] = Map(
     "q69_pagerank_converge" ->
       s"""WITH n AS (SELECT count(*) AS n FROM documents),
-         |ids AS (SELECT doc_id AS id FROM documents),
-         |e AS (
+         |ids AS MATERIALIZED (SELECT doc_id AS id FROM documents),
+         |e AS MATERIALIZED (
          |  SELECT id AS src, (id * id + 1) % (SELECT n FROM n) AS dst FROM ids
          |  UNION ALL
          |  SELECT id, (id * 13 + 5) % (SELECT n FROM n) FROM ids WHERE id % 3 = 0),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.scale.{Held, Salt}
+import graft.llm.{Corpus, Substring}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,8 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object TextQ {
 
-  private[queries] val STOPWORDS = Seq("the", "a", "of", "to", "in")
-
   /** q20 — token counting: whitespace tokens + distinct tokens + byte len. */
   def q20TokenStats(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
@@ -32,7 +30,7 @@ object TextQ {
 
   /** q21 — quality scoring: stopword ratio, mean token length, alpha ratio. */
   def q21Quality(spark: SparkSession, dir: String): DataFrame =
-    withQuality(Tables.documents(spark, dir))
+    Corpus.withQuality(Tables.documents(spark, dir))
       .withColumn("mean_tok_len",
         round((length(col("text")) - col("n_tokens") + 1).cast("double") / col("n_tokens"), 4))
       .select(col("doc_id"), col("n_tokens"), col("n_stop"), col("stop_ratio"),
@@ -105,34 +103,6 @@ object TextQ {
           .as("n_word_chars"))
       .orderBy(col("doc_id"))
 
-  /** Rabin rolling-hash fingerprint over a `norm` column (shared by q44 and
-    * the streaming ingest twin [[graft.streaming.EventStreams.cleanIngest]]).
-    * Native codegen expression ([[graft.functions.rolling_hash]]) — one
-    * pass over the code points, empty string = bare seed by construction
-    * (the old HOF formulation needed an explicit guard because Spark's
-    * `sequence(1, 0)` yields the DESCENDING [1, 0]); value-equivalence to
-    * the HOF pinned by SqlExprSpec, the DuckDB oracle unchanged.
-    */
-  private[graft] def rollingFingerprint: org.apache.spark.sql.Column =
-    graft.functions.rolling_hash(col("norm"))
-
-  /** Adds the q21 quality columns (`n_tokens`, `n_stop`, `stop_ratio`,
-    * `quality`) to any frame with a `text` column — the ONE definition of
-    * the quality formula, shared by q21, q40 and the streaming
-    * [[graft.streaming.EventStreams.cleanIngest]] so the three can never
-    * silently diverge from each other or the DuckDB oracle.
-    */
-  private[graft] def withQuality(df: DataFrame): DataFrame = {
-    val stopList = STOPWORDS.map(s => s"'$s'").mkString(", ")
-    df.withColumn("toks", split(col("text"), " "))
-      .withColumn("n_tokens", size(col("toks")))
-      .withColumn("n_stop", expr(s"size(filter(toks, t -> t IN ($stopList)))"))
-      .withColumn("stop_ratio", round(col("n_stop").cast("double") / col("n_tokens"), 4))
-      .withColumn("quality",
-        round(least(lit(1.0), col("stop_ratio") * 2 + col("n_tokens") / lit(100.0)), 4))
-      .drop("toks")
-  }
-
   /** q44 — Rabin polynomial rolling hash (base-31 mod 2^31-1) over the
     * normalized text as the document fingerprint, folded left-to-right over
     * the char stream exactly as an incremental/streaming hasher would
@@ -142,7 +112,7 @@ object TextQ {
     * md5 route) falls out of the window count.
     */
   def q44RollingHash(spark: SparkSession, dir: String): DataFrame = {
-    val rfp = rollingFingerprint
+    val rfp = Corpus.rollingFingerprint
     Tables.documents(spark, dir)
       .withColumn("norm", regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""))
       .withColumn("rfp", rfp)
@@ -448,7 +418,7 @@ object TextQ {
     * correlate only weakly with the text — so the trained model's accuracy
     * is demonstrated on constructed fixtures where the quality signal is
     * real (TextOpsSpec), never asserted on the corpus. The fixed q21
-    * formula ([[withQuality]]) remains the oracle-gated production default;
+    * formula ([[Corpus.withQuality]]) remains the oracle-gated production default;
     * [[Quality.predict]] is the drop-in upgrade once real labels exist.
     */
   object Quality {
@@ -464,7 +434,7 @@ object TextQ {
       * count, stopword ratio, mean token length, distinct-token ratio.
       */
     private[graft] def featurize(df: DataFrame): DataFrame = {
-      val stopList = STOPWORDS.map(s => s"'$s'").mkString(", ")
+      val stopList = Corpus.STOPWORDS.map(s => s"'$s'").mkString(", ")
       df.withColumn("toks", split(col("text"), " "))
         .withColumn("f0", log1p(size(col("toks"))))
         .withColumn("f1",
@@ -595,65 +565,8 @@ object TextQ {
     * (id_a, id_b, n_shared) — n_shared = distinct shared anchor grams.
     */
   def q53SubstringDedup(spark: SparkSession, dir: String): DataFrame =
-    substringDedupPairs(Tables.documents(spark, dir), k = 12, p = 4)
+    Substring.substringDedupPairs(Tables.documents(spark, dir), k = 12, p = 4)
       .orderBy(col("id_a"), col("id_b"))
-
-  /** The operator behind q53, on any (doc_id, text) frame. `p = 1` keeps
-    * every gram: detection of any shared span ≥ k tokens is exhaustive
-    * (the TextOpsSpec planted property pins that against a brute positional
-    * scan; p > 1 is pinned against brute-force ANCHOR semantics, which are
-    * deterministic for fixed content).
-    */
-  def substringDedupPairs(docs: DataFrame, k: Int, p: Int): DataFrame = {
-    // checkpoint: the corpus-scale salted join runs ONCE; both consumers
-    // (the candIds broadcast and the verify join) read the materialized
-    // (candidate-scale) pair list — the q47 discipline
-    val cand = gramCandidates(anchorIndex(docs, k, p), lit(true)).localCheckpoint()
-    verifySharedGrams(cand, docs, k, p)
-  }
-
-  /** Positional verify shared by the batch and incremental substring-dedup
-    * paths: re-derive anchor gram STRINGS for candidate docs only
-    * (broadcast semi-join out of the corpus scan) and count distinct
-    * shared grams per pair — 64-bit candidate-key collisions die here,
-    * with their pairs (the inner join drops 0-overlap pairs).
-    *
-    * The pair table itself NEVER broadcasts: pair cardinality is quadratic
-    * in boilerplate-cluster size (a span shared by m docs is m²/2 pairs),
-    * so unlike the candIds broadcast (candidate-DOC-scale, linear) it has
-    * no safe size premise — both pair joins shuffle-hash instead (hints
-    * pinned because checkpointed inputs carry no stats and the static
-    * planner would otherwise fall back to sort-merge). Callers who need
-    * boilerplate-heavy corpora at full scale should prefer the
-    * O(occurrences) span-granular [[substringRemovalSpans]], which never
-    * materializes pairs at all.
-    */
-  private def verifySharedGrams(cand: DataFrame, docs: DataFrame,
-                                k: Int, p: Int): DataFrame =
-    verifyShared(cand, d => anchorIndex(d, k, p), docs)
-
-  /** `(id_a < id_b)` candidates of (doc_id, gram) rows sharing the 8-byte
-    * xxhash64 of a gram, through the hot-key salt
-    * ([[graft.scale.Salt.candidates]]).
-    */
-  private def gramCandidates(grams: DataFrame, isLeft: Column): DataFrame =
-    Salt.candidates(grams.withColumn("gh", xxhash64(col("gram"))).drop("gram"),
-      Seq("gh"), "doc_id", isLeft)
-
-  private def verifyShared(cand: DataFrame, index: DataFrame => DataFrame,
-                           docs: DataFrame,
-                           checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
-    val candIds = cand
-      .select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
-    // read twice below; candidate-sized, not corpus-sized
-    val candAnchors = checkpoint(index(docs.join(broadcast(candIds), Seq("doc_id"))))
-    candAnchors.select(col("doc_id").as("id_a"), col("gram"))
-      .join(cand.hint("shuffle_hash"), Seq("id_a"))
-      .join(candAnchors.select(col("doc_id").as("id_b"), col("gram"))
-        .hint("shuffle_hash"), Seq("id_b", "gram"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(countDistinct(col("gram")).as("n_shared"))
-  }
 
   /** q54 — PII detection + redaction parity gate ([[graft.llm.Pii]]).
     *
@@ -728,214 +641,18 @@ object TextQ {
       .orderBy(col("rank"))
   }
 
-  /** The persistable exact-substring index of a corpus: its anchor table —
-    * (doc_id, gram) rows, ~1/p of the k-grams, no text. Write it out
-    * between ingest batches and feed it to [[incrementalSubstringPairs]]
-    * (the substring-family analog of [[SimQ.bandIndex]]).
-    */
-  def anchorIndex(docs: DataFrame, k: Int = 12, p: Int = 4): DataFrame =
-    graft.scale.Layout.explodeNonNull(
-      docs, "doc_id", graft.functions.anchor_grams(col("text"), k, p), "gram")
-
-  /** Winnowed variant of [[anchorIndex]] — selection by sliding min-hash
-    * window instead of mod-p, making detection of shared spans ≥ w+k−1
-    * tokens GUARANTEED ([[graft.sql.WinnowGrams]]).
-    */
-  def winnowIndex(docs: DataFrame, k: Int = 12, w: Int = 8): DataFrame =
-    docs.select(col("doc_id"),
-      explode(graft.functions.winnow_grams(col("text"), k, w)).as("gram"))
-
-  /** [[substringDedupPairs]] with winnowing selection: same salted
-    * candidate join and positional verify, but the fingerprints carry the
-    * SIGMOD'03 guarantee — any pair sharing an exact span of ≥ w+k−1
-    * tokens is reported (spec-pinned; the mod-p gate variant stays the
-    * oracle-replayable default). n_shared counts distinct shared WINNOWED
-    * grams.
-    */
-  def substringDedupPairsWinnowed(docs: DataFrame, k: Int = 12,
-                                  w: Int = 8): DataFrame = {
-    val cand = gramCandidates(winnowIndex(docs, k, w), lit(true)).localCheckpoint()
-    verifyShared(cand, d => winnowIndex(d, k, w), docs)
-  }
-
-  /** Span-granular exact-substring dedup — REMOVAL LISTS instead of doc
-    * pairs (Lee et al. ACL'22, "Deduplicating Training Data Makes Language
-    * Models Better": delete every duplicated span, keep one canonical
-    * occurrence, never enumerate pairs). This is the output mode that
-    * survives boilerplate-heavy corpora at 100 TB: a span shared by m
-    * documents costs O(m) occurrence rows end-to-end where the pair mode
-    * ([[substringDedupPairs]]) is O(m²) by result-set identity.
-    *
-    * Shape: one positional-anchor pass ([[graft.functions.anchor_spans]],
-    * repeats kept — each occurrence is a removable span of its own) →
-    * shuffle of (doc_id, pos, 16-hex-char md5-prefix key) rows → per-gram
-    * keeper election (global min (doc_id, pos), deterministic) → every
-    * non-keeper occurrence becomes a removal interval [pos, pos+k) →
-    * per-doc interval merge (sort + one fold over a doc-bounded list).
-    * Three shuffles total (gram key, gram key again for the join-back,
-    * doc_id), all linear in occurrences; the skew unit is one reducer
-    * row per occurrence of a hot gram — linear, so no salt needed.
-    *
-    * Both engines group on `substr(md5(gram), 1, 16)` — bit-identical by
-    * construction (a fingerprint collision, ~2⁻⁶⁴, would affect both
-    * identically), and 16 narrow chars shuffle instead of ~100-byte gram
-    * strings.
-    *
-    * @return (doc_id, n_spans, n_removed_tokens) per doc with ≥ 1 removal
-    *         interval after merging; spans cover tokens
-    *         [pos, min(pos+k, n_tokens)).
-    */
-  def substringRemovalSpans(docs: DataFrame, k: Int = 12, p: Int = 4): DataFrame =
-    substringRemovalIntervals(docs, k, p)
-      .select(col("doc_id"),
-        size(col("m")).cast("long").as("n_spans"),
-        expr("aggregate(m, 0L, (a, x) -> a + x.e - x.s)").as("n_removed_tokens"))
-
-  /** The merged removal INTERVALS behind [[substringRemovalSpans]] —
-    * (doc_id, m: array<struct<s,e>>) for docs with ≥ 1 removal; feed to
-    * [[substringScrub]] to materialize the deduplicated corpus.
-    */
-  def substringRemovalIntervals(docs: DataFrame, k: Int = 12, p: Int = 4): DataFrame =
-    intervalsFromSpans(docs, graft.functions.anchor_spans(col("text"), k, p), k)
-
-  /** [[substringRemovalIntervals]] under WINNOWING selection
-    * ([[graft.functions.winnow_spans]]): any span shared by ≥ 2 docs (or
-    * repeated in one) of ≥ w+k−1 tokens is GUARANTEED to lose at least
-    * one interval on every non-keeper occurrence — the SIGMOD'03
-    * guarantee carried into removal lists (mod-p sampling trades that
-    * certainty for an oracle-replayable selection rule; spec-pinned like
-    * the winnowed pair mode).
-    */
-  def substringRemovalIntervalsWinnowed(docs: DataFrame, k: Int = 12,
-                                        w: Int = 8): DataFrame =
-    intervalsFromSpans(docs, graft.functions.winnow_spans(col("text"), k, w), k)
-
-  private def intervalsFromSpans(docs: DataFrame, spansCol: Column,
-                                 k: Int): DataFrame = {
-    val occ = docs
-      .select(col("doc_id"), size(split(col("text"), " ")).as("n_toks"),
-        explode(spansCol).as("a"))
-      .select(col("doc_id"), col("n_toks"), col("a.pos").as("pos"),
-        substring(md5(col("a.gram")), 1, 16).as("gh"))
-      .localCheckpoint() // the anchor pass runs once; both sides of the
-                         // keeper join read the materialized occurrences
-    val okey = col("doc_id") * lit(4294967296L) + col("pos")
-    val keep = occ.groupBy(col("gh"))
-      .agg(count(lit(1)).as("n_occ"), min(okey).as("kkey"))
-      .filter(col("n_occ") >= 2)
-      .select(col("gh"), col("kkey"))
-    val spans = occ.join(keep.hint("shuffle_hash"), Seq("gh"))
-      .filter(okey =!= col("kkey"))
-      .select(col("doc_id"), col("pos").as("s"),
-        least(col("pos") + lit(k), col("n_toks")).as("e"))
-    spans.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("s"), col("e")))).as("sp"))
-      .select(col("doc_id"), expr(
-        """aggregate(slice(sp, 2, size(sp) - 1), array(sp[0]),
-          |  (acc, x) -> IF(x.s <= element_at(acc, -1).e,
-          |    concat(slice(acc, 1, size(acc) - 1),
-          |      array(named_struct('s', element_at(acc, -1).s,
-          |        'e', greatest(element_at(acc, -1).e, x.e)))),
-          |    concat(acc, array(x))))""".stripMargin).as("m"))
-  }
-
-  /** APPLY the removal lists — the output stage of Lee et al. 2022's
-    * dedup: every doc minus its duplicated spans (keeper occurrences
-    * survive), as text. Docs without removals pass through VERBATIM (no
-    * tokenize/rejoin round trip — byte-identical text for the untouched
-    * majority of the corpus); scrubbed docs drop exactly the tokens in
-    * their merged intervals (a per-row index filter — O(tokens × spans),
-    * spans per doc are few after merging). One shuffle beyond the
-    * interval computation (the doc_id join; interval side is
-    * removal-scale, not corpus-scale).
-    *
-    * @return (doc_id, clean_text, n_removed_tokens) for EVERY input doc
-    */
-  def substringScrub(docs: DataFrame, k: Int = 12, p: Int = 4): DataFrame = {
-    val iv = substringRemovalIntervals(docs, k, p)
-    docs.join(iv.hint("shuffle_hash"), Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        when(col("m").isNull, col("text")).otherwise(expr(
-          """array_join(filter(split(text, ' '),
-            |  (t, i) -> !exists(m, v -> i >= v.s AND i < v.e)), ' ')""".stripMargin))
-          .as("clean_text"),
-        coalesce(expr("aggregate(m, 0L, (a, x) -> a + x.e - x.s)"), lit(0L))
-          .as("n_removed_tokens"))
-  }
-
-  /** Incremental span-granular removal lists — arrivals-only, the
-    * [[incrementalSubstringPairs]] discipline for the removal-list mode:
-    * only the NEW batch pays an anchor pass; its occurrences meet the
-    * PERSISTED per-gram summary (gh → keeper key + occurrence count)
-    * instead of the corpus. Keeper elections are MONOTONE under
-    * append-only ingest with increasing doc ids (the min (doc_id, pos)
-    * key of a gram can only be claimed by an older doc), so existing
-    * docs never gain or lose removals when a batch lands — the new
-    * removals are exactly the arrival occurrences of (a) grams already
-    * known to the index and (b) grams duplicated within the batch,
-    * minus each gram's global keeper. Per-batch cost tracks the batch,
-    * never the corpus.
-    *
-    * @param oldIndex persisted per-gram summary (gh, kkey, n_occ) of the
-    *                 pre-existing corpus — pass `null`/empty for the
-    *                 first batch; maintain by persisting `_1` of the
-    *                 return value between batches
-    * @param newDocs  the arrival batch (doc_ids strictly greater than
-    *                 every pre-existing doc_id)
-    * @return (updated per-gram summary — REPLACES the persisted index;
-    *         merged removal intervals (doc_id, m) for arrival docs only,
-    *         the [[substringRemovalIntervals]] shape)
-    */
-  def incrementalRemovalIntervals(oldIndex: DataFrame, newDocs: DataFrame,
-                                  k: Int = 12, p: Int = 4): (DataFrame, DataFrame) = {
-    val occ = newDocs
-      .select(col("doc_id"), size(split(col("text"), " ")).as("n_toks"),
-        explode(graft.functions.anchor_spans(col("text"), k, p)).as("a"))
-      .select(col("doc_id"), col("n_toks"), col("a.pos").as("pos"),
-        substring(md5(col("a.gram")), 1, 16).as("gh"))
-      .localCheckpoint() // batch-sized; read by summary + removal paths
-    val okey = col("doc_id") * lit(4294967296L) + col("pos")
-    val batchSum = occ.groupBy(col("gh"))
-      .agg(count(lit(1)).as("n_occ"), min(okey).as("kkey"))
-    val newIndex = Option(oldIndex).filter(!_.isEmpty)
-      .map { old =>
-        old.select(col("gh"), col("kkey"), col("n_occ"))
-          .union(batchSum.select(col("gh"), col("kkey"), col("n_occ")))
-          .groupBy(col("gh"))
-          .agg(sum(col("n_occ")).as("n_occ"), min(col("kkey")).as("kkey"))
-      }
-      .getOrElse(batchSum)
-      .select(col("gh"), col("kkey"), col("n_occ"))
-      .localCheckpoint()
-    val keep = newIndex.filter(col("n_occ") >= 2).select(col("gh"), col("kkey"))
-    val spans = occ.join(keep.hint("shuffle_hash"), Seq("gh"))
-      .filter(okey =!= col("kkey"))
-      .select(col("doc_id"), col("pos").as("s"),
-        least(col("pos") + lit(k), col("n_toks")).as("e"))
-    val intervals = spans.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("s"), col("e")))).as("sp"))
-      .select(col("doc_id"), expr(
-        """aggregate(slice(sp, 2, size(sp) - 1), array(sp[0]),
-          |  (acc, x) -> IF(x.s <= element_at(acc, -1).e,
-          |    concat(slice(acc, 1, size(acc) - 1),
-          |      array(named_struct('s', element_at(acc, -1).s,
-          |        'e', greatest(element_at(acc, -1).e, x.e)))),
-          |    concat(acc, array(x))))""".stripMargin).as("m"))
-    (newIndex, intervals)
-  }
-
-  /** q66 — the scrubbed corpus ([[substringScrub]]): q63's removal lists
+  /** q66 — the scrubbed corpus ([[Substring.substringScrub]]): q63's removal lists
     * APPLIED. The DuckDB oracle rebuilds each scrubbed doc by anti-joining
     * token positions against the expanded removal intervals and
     * re-aggregating in order; untouched docs must round-trip
     * byte-identically.
     */
   def q66SubstringScrub(spark: SparkSession, dir: String): DataFrame =
-    substringScrub(Tables.documents(spark, dir), k = 12, p = 4)
+    Substring.substringScrub(Tables.documents(spark, dir), k = 12, p = 4)
       .orderBy(col("doc_id"))
 
   /** q63 — span-granular substring-dedup removal lists over the corpus
-    * ([[substringRemovalSpans]]): which docs lose which token spans when
+    * ([[Substring.substringRemovalSpans]]): which docs lose which token spans when
     * every duplicated ≥ k=12-token anchor span is removed (one canonical
     * keeper survives). The DuckDB oracle recomputes positional anchors
     * from first principles and merges intervals with the gaps-and-islands
@@ -943,39 +660,8 @@ object TextQ {
     * window vs a doc-bounded fold).
     */
   def q63SubstringRemoval(spark: SparkSession, dir: String): DataFrame =
-    substringRemovalSpans(Tables.documents(spark, dir), k = 12, p = 4)
+    Substring.substringRemovalSpans(Tables.documents(spark, dir), k = 12, p = 4)
       .orderBy(col("doc_id"))
-
-  /** Incremental exact-substring pair detection — arrivals-only, the
-    * [[SimQ.incrementalNearDupPairs]] discipline applied to the substring
-    * family: only the NEW batch pays the anchor pass; its anchors join
-    * (persisted ∪ new) through the hot-key-salted candidate join, so every
-    * candidate pair touches ≥ 1 arrival and per-batch cost tracks the
-    * batch, never the corpus. The positional verify re-derives gram
-    * strings ONLY for candidate docs (broadcast semi-join out of the full
-    * corpus).
-    *
-    * @param allDocs corpus INCLUDING the arrivals (doc_id, text)
-    * @param oldAnchors persisted [[anchorIndex]] of the pre-existing corpus
-    * @param newDocs the arrival batch (doc_ids disjoint from oldAnchors)
-    * @return (anchors of the new batch — append to the persisted index;
-    *         verified pairs (id_a, id_b, n_shared) touching ≥ 1 arrival)
-    */
-  def incrementalSubstringPairs(allDocs: DataFrame, oldAnchors: DataFrame,
-                                newDocs: DataFrame, k: Int = 12,
-                                p: Int = 4): (DataFrame, DataFrame) = {
-    val newAnchors = anchorIndex(newDocs, k, p).localCheckpoint() // batch-sized; reused
-    val tagged = oldAnchors.select(col("doc_id"), col("gram"))
-      .withColumn("is_new", lit(false))
-      .union(newAnchors.withColumn("is_new", lit(true)))
-    val sc = allDocs.sparkSession.sparkContext
-    val (heldCand, heldAnchors) = (new Held(sc), new Held(sc))
-    val cand = heldCand.frame(gramCandidates(tagged, col("is_new")))
-    val pairs = verifyShared(cand, d => anchorIndex(d, k, p), allDocs, heldAnchors.frame)
-      .localCheckpoint()
-    heldCand.release(); heldAnchors.release() // the pairs' checkpoint reads neither
-    (newAnchors, pairs)
-  }
 
   /** q60 — Gopher/C4 repetition quality filters ([[graft.functions
     * .ngram_rep_stats]]): duplicate-bigram fraction and top-bigram
@@ -1110,57 +796,7 @@ object TextQ {
     * TakeOrdered (no global sort materialization).
     */
   def q73DsirResample(spark: SparkSession, dir: String): DataFrame =
-    dsirResample(Tables.documents(spark, dir))
-
-  private val DSIR_B = 1024
-  private val DSIR_K = 100
-
-  private def dsirToks(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("tok"))
-    .withColumn("bucket", pmod(graft.functions.rolling_hash(col("tok")), lit(DSIR_B)))
-
-  /** Frozen per-bucket importance scores: one row for EVERY bucket 0..B-1
-    * (unseen buckets get the pure add-1 smoothing score), so a snapshot of
-    * this table can score future arrivals whose tokens hash anywhere —
-    * the streaming ingest surface depends on that totality.
-    */
-  def dsirBucketScores(docs: DataFrame): DataFrame = {
-    val toks = dsirToks(docs)
-    val rCounts = toks.groupBy(col("bucket")).agg(count(lit(1)).as("cr"))
-    val tCounts = toks.filter(col("lang") === "en")
-      .groupBy(col("bucket")).agg(count(lit(1)).as("ct"))
-    val totals = toks.agg(
-      count(lit(1)).as("n_r"),
-      count(when(col("lang") === "en", 1)).as("n_t"))
-
-    // integer millionths in one floor division: decimal(38,0) products stay
-    // exact where BIGINT would overflow at cluster scale (ANSI would throw)
-    docs.sparkSession.range(DSIR_B).select(col("id").as("bucket"))
-      .join(rCounts, Seq("bucket"), "left").na.fill(0L, Seq("cr"))
-      .join(tCounts, Seq("bucket"), "left").na.fill(0L, Seq("ct"))
-      .crossJoin(broadcast(totals))
-      .select(col("bucket"),
-        expr(s"""(cast(1000000 as decimal(38,0)) * (ct + 1) * (n_r + $DSIR_B))
-                | div (cast(cr + 1 as decimal(38,0)) * (n_t + $DSIR_B))""".stripMargin)
-          .as("s"))
-  }
-
-  /** Per-doc importance weights (pre-top-K): the streaming parity anchor. */
-  def dsirScores(docs: DataFrame): DataFrame =
-    dsirToks(docs)
-      .join(broadcast(dsirBucketScores(docs)), Seq("bucket")) // B rows, bounded
-      .groupBy(col("doc_id"), col("lang"))
-      .agg(count(lit(1)).as("n_toks"), sum(col("s")).as("weight"))
-
-  /** Core of [[q73DsirResample]] over any (doc_id, lang, text) frame. */
-  def dsirResample(docs: DataFrame): DataFrame =
-    dsirScores(docs)
-      .orderBy(col("weight").desc, col("doc_id"))
-      .limit(DSIR_K)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("weight").desc, col("doc_id"))).cast("long"))
-      .orderBy(col("rank"))
+    Corpus.dsirResample(Tables.documents(spark, dir))
 
   /** q104 — Unicode NFC normalization (native codegen [[graft.sql
     * .NfcNormalize]], the canonical-composition pass every hash-based
@@ -1390,8 +1026,8 @@ object TextQ {
 
   private val QUOTA_B = 100L
 
-  /** q113 — exact-budget stratified sampling: [[apportion]]'s Hamilton
-    * quotas (per-language doc counts, budget [[QUOTA_B]]) DRIVE the q49
+  /** q113 — exact-budget stratified sampling: [[Corpus.apportion]]'s
+    * Hamilton quotas (per-language doc counts, budget [[QUOTA_B]]) DRIVE the q49
     * per-stratum deterministic draw — each language contributes exactly
     * its quota of docs (md5-permutation order). For B ≤ corpus size,
     * Σ rows = B exactly: apportioning by the strata's OWN row counts can
@@ -1411,7 +1047,7 @@ object TextQ {
     */
   def q113QuotaSample(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
-    val quotas = apportion(
+    val quotas = Corpus.apportion(
       docs.groupBy(col("lang")).agg(count(lit(1)).as("n_toks")), QUOTA_B)
       .select(col("lang"), least(col("quota"), col("n_toks")).as("quota"))
     distributedRunningSum(
@@ -1435,28 +1071,12 @@ object TextQ {
     * ranking shape, never corpus-sized.
     */
   def q106Apportion(spark: SparkSession, dir: String): DataFrame =
-    apportion(
+    Corpus.apportion(
       Tables.documents(spark, dir)
         .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
         .groupBy(col("lang")).agg(count(lit(1)).as("n_toks")),
       1000000L)
       .orderBy(col("lang"))
-
-  /** Core of [[q106Apportion]] over any (lang, n_toks) aggregate — the
-    * spec hand-verifies quotas and the Σ = B invariant on planted counts.
-    */
-  def apportion(counts: DataFrame, budget: Long): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    counts
-      .withColumn("ntot", sum(col("n_toks")).over(w.partitionBy()))
-      .withColumn("base", expr(s"(n_toks * ${budget}L) div ntot"))
-      .withColumn("rem", expr(s"(n_toks * ${budget}L) % ntot"))
-      .withColumn("base_total", sum(col("base")).over(w.partitionBy()))
-      .withColumn("rk", row_number().over(w.orderBy(col("rem").desc, col("lang"))))
-      .select(col("lang"), col("n_toks"),
-        (col("base") +
-          when(col("rk") <= lit(budget) - col("base_total"), 1L).otherwise(0L)).as("quota"))
-  }
 
   /** The in-plan 60-bit md5 hash of a string expression — `conv` over the
     * first 15 hex chars, the [[graft.sql.KmvFunction.hash60]] value as a

@@ -34,8 +34,7 @@ object PrefixSum {
     * input first if producing it is expensive. Because the offsets are a
     * call-time snapshot, the returned DataFrame assumes an IMMUTABLE input:
     * re-executing it after the source changes would combine fresh
-    * within-bucket sums with stale offsets. (Same class of contract as the
-    * near-dup pair memo's immutability assumption.)
+    * within-bucket sums with stale offsets.
     *
     * @param df       input with columns: `hkey` (hex string order key),
     *                 `doc_id` (unique tiebreak), `groupCol` (string),

@@ -91,9 +91,9 @@ object EventStreams {
     * connected components re-visits the whole edge set per round, which has
     * no bounded-state streaming form. The full incremental architecture is
     * this ingest gate plus, per micro-batch (`foreachBatch`):
-    * [[graft.queries.SimQ.incrementalNearDupPairs]] (only arrivals pay the
+    * [[graft.llm.MinHash.incrementalNearDupPairs]] (only arrivals pay the
     * signature pass; candidates come from the persisted
-    * [[graft.queries.SimQ.bandIndex]]) feeding
+    * [[graft.llm.MinHash.bandIndex]]) feeding
     * [[graft.llm.IncrementalComponents]] (contraction merge into the
     * running assignment; full CC only on the first batch) — both halves
     * restartable from persisted tables.
@@ -121,10 +121,10 @@ object EventStreams {
     // are all computed over the scrubbed form and raw PII never outlives
     // the scan. Stateless column expressions — streaming-safe.
     val src = if (scrubPii) graft.llm.Pii.scrub(docs) else docs
-    val scored = graft.queries.TextQ.withQuality(src) // the ONE quality formula
+    val scored = graft.llm.Corpus.withQuality(src) // the ONE quality formula
       .filter(col("quality") >= qualityCut)
       .withColumn("norm", regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""))
-      .withColumn("fingerprint", graft.queries.TextQ.rollingFingerprint)
+      .withColumn("fingerprint", graft.llm.Corpus.rollingFingerprint)
       .drop("n_stop", "stop_ratio", "norm")
     if (scored.isStreaming) dedupWithinWatermark(scored, Seq("fingerprint"), watermark)
     else {
@@ -140,7 +140,7 @@ object EventStreams {
   }
 
   /** Streaming span-granular substring dedup — the ingest surface of
-    * [[graft.queries.TextQ.incrementalRemovalIntervals]] (r11 verdict #7).
+    * [[graft.llm.Substring.incrementalRemovalIntervals]] (r11 verdict #7).
     * Each micro-batch of arriving documents pays ONLY its own anchor pass;
     * its occurrences meet the running per-gram index instead of the corpus,
     * and the batch's merged removal intervals go to `sink`. Because keeper
@@ -183,7 +183,7 @@ object EventStreams {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val (newIndex, intervals) =
-          graft.queries.TextQ.incrementalRemovalIntervals(index, batch, k, p)
+          graft.llm.Substring.incrementalRemovalIntervals(index, batch, k, p)
         index = newIndex
         sink(newIndex, intervals, batchId)
         ()
@@ -192,9 +192,9 @@ object EventStreams {
   }
 
   /** Streaming DSIR scoring — the ingest surface of
-    * [[graft.queries.TextQ.dsirScores]] (q73): arriving documents are
+    * [[graft.llm.Corpus.dsirScores]] (q73): arriving documents are
     * importance-weighted against a FROZEN bucket-score snapshot (trained
-    * offline by [[graft.queries.TextQ.dsirBucketScores]], which emits ALL
+    * offline by [[graft.llm.Corpus.dsirBucketScores]], which emits ALL
     * B buckets so any future token has a defined score). The whole scorer
     * is one stateless column expression — `aggregate` over the token array
     * with the B-long score table as a single array literal — so it is
@@ -222,13 +222,13 @@ object EventStreams {
     * signatures are a plain streaming aggregation (min is mergeable, so
     * Spark's agg state store IS the signature store — state bounded by
     * |sources| × 32 longs, no watermark needed), built from LITERALLY the
-    * batch plan ([[graft.queries.CorpusQ.overlapSignatures]] — shared, so
+    * batch plan ([[graft.llm.Corpus.overlapSignatures]] — shared, so
     * batch and stream cannot diverge). Run in complete/update output
     * mode; the tiny pair-compare step runs downstream per trigger (or
     * periodically in batch) against the current signature table.
     */
   def overlapSignatureIngest(docs: DataFrame): DataFrame =
-    graft.queries.CorpusQ.overlapSignatures(docs)
+    graft.llm.Corpus.overlapSignatures(docs)
 
   /** Watermarked stream-stream interval join — the streaming twin of the
     * q84 bucketed range join, on Spark's native stream-stream join with an

@@ -2,7 +2,7 @@ package graft
 
 import graft.api.GraftContext
 import graft.conf.GraftConf
-import graft.llm.Dedup
+import graft.llm.{Dedup, MinHash}
 import graft.queries.SimQ
 
 import org.apache.spark.sql.functions._
@@ -29,12 +29,12 @@ class CorpusPipelineIT extends AnyFunSuite {
     // batches is exactly what production persists: the band index and the
     // component assignment
     val batches = (0 until 3).map(b => all.filter(col("doc_id") % 3 === b))
-    var bandIdx = SimQ.bandIndex(all.limit(0)).localCheckpoint()
+    var bandIdx = MinHash.bandIndex(all.limit(0)).localCheckpoint()
     var ingested = all.limit(0)
     val groups = new graft.llm.IncrementalComponents
     for (batch <- batches) {
       ingested = ingested.union(batch).localCheckpoint()
-      val (newBands, pairs) = SimQ.incrementalNearDupPairs(ingested, bandIdx, batch)
+      val (newBands, pairs) = MinHash.incrementalNearDupPairs(ingested, bandIdx, batch)
       bandIdx = bandIdx.union(newBands).localCheckpoint()
       if (pairs.head(1).nonEmpty) groups.update(pairs, "id_a", "id_b")
     }

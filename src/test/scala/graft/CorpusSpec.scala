@@ -1,7 +1,8 @@
 package graft
 
-import graft.llm.Bloom
+import graft.llm.{Bloom, Corpus}
 import graft.queries.CorpusQ
+import graft.scale.LabelProp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -29,7 +30,7 @@ class CorpusSpec extends AnyFunSuite {
       (4L, "filter scan table row agg") // len 5, no query terms
     ).toDF("doc_id", "text")
     val terms = Seq("spark", "join", "vector")
-    val got = CorpusQ.bm25(docs, terms, 10)
+    val got = Corpus.bm25(docs, terms, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
 
     // independent replay in BigInt
@@ -74,7 +75,7 @@ class CorpusSpec extends AnyFunSuite {
       (20L, s"$chunkA $uniqB"), // loses chunk 0, keeps chunk 1
       (30L, shortC)
     ).toDF("doc_id", "text")
-    val got = CorpusQ.paragraphDedup(docs)
+    val got = Corpus.paragraphDedup(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
     assert(got == Seq(
       (10L, 2L, 2L, s"$chunkA $tailA"), // byte-identical round-trip
@@ -87,7 +88,7 @@ class CorpusSpec extends AnyFunSuite {
     import spark0.implicits._
     val c = (1 to 20).map(i => s"x$i").mkString(" ")
     val docs = Seq((1L, s"$c $c")).toDF("doc_id", "text")
-    val got = CorpusQ.paragraphDedup(docs).collect()
+    val got = Corpus.paragraphDedup(docs).collect()
     assert(got.head.getLong(1) == 2L && got.head.getLong(2) == 1L)
     assert(got.head.getString(3) == c)
   }
@@ -246,13 +247,13 @@ class CorpusSpec extends AnyFunSuite {
     import spark0.implicits._
     val docs = ((1 to 25).map(i => (i.toLong, "big")) ++
       (100 to 104).map(i => (i.toLong, "small"))).toDF("doc_id", "source")
-    val got = CorpusQ.domainCap(docs, 20)
+    val got = Corpus.domainCap(docs, 20)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2)))
     val bySource = got.groupBy(_._2)
     assert(bySource("big").count(_._3) == 20 && bySource("big").size == 25)
     assert(bySource("small").forall(_._3) && bySource("small").size == 5)
     // deterministic: a second run keeps the same doc set
-    val again = CorpusQ.domainCap(docs, 20)
+    val again = Corpus.domainCap(docs, 20)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2)))
     assert(got.toSeq == again.toSeq)
   }
@@ -305,17 +306,17 @@ class CorpusSpec extends AnyFunSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def collect(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2))).toSeq
-    assert(collect(CorpusQ.domainCapBucketed(docs, 20)) ==
-      collect(CorpusQ.domainCap(docs, 20)))
+    assert(collect(Corpus.domainCapBucketed(docs, 20)) ==
+      collect(Corpus.domainCap(docs, 20)))
 
     // planted mega-domain: one source holds 90% of a 2000-doc corpus; the
     // two-phase selection must still pick exactly the window's k, at
     // several bucket counts (including buckets > k and buckets = 1)
     val mega = (0L until 2000L).map(i =>
       (i, if (i < 1800L) "megadomain.example" else s"s${i % 40}")).toDF("doc_id", "source")
-    val onePhase = collect(CorpusQ.domainCap(mega, 25))
+    val onePhase = collect(Corpus.domainCap(mega, 25))
     Seq(1, 8, 64).foreach { b =>
-      assert(collect(CorpusQ.domainCapBucketed(mega, 25, b)) == onePhase,
+      assert(collect(Corpus.domainCapBucketed(mega, 25, b)) == onePhase,
         s"buckets=$b must not change verdicts")
     }
     assert(onePhase.count(r => r._2 == "megadomain.example" && r._3) == 25)
@@ -332,7 +333,7 @@ class CorpusSpec extends AnyFunSuite {
     val tri = Seq((0L, 1L), (1L, 2L), (2L, 0L), (0L, 2L), (2L, 1L), (1L, 0L),
       (3L, 4L), (4L, 5L), (5L, 3L), (3L, 5L), (5L, 4L), (4L, 3L),
       (0L, 6L), (3L, 6L))
-    val got = graft.queries.SimQ.labelPropagate(ids.toDF("id"), tri.toDF("src", "dst"), 3)
+    val got = LabelProp.labelPropagate(ids.toDF("id"), tri.toDF("src", "dst"), 3)
       .frame.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // round 1: each triangle node takes the min of its two in-labels;
     // by round 3 both cliques sit on their component min
@@ -352,21 +353,21 @@ class CorpusSpec extends AnyFunSuite {
     val ids = (0L to 15L).toDF("id")
     val edges = (ids.filter($"id" % 8 >= 1).select(($"id" - 1).as("src"), $"id".as("dst")))
       .union(ids.filter($"id" % 8 >= 2).select(($"id" - 2).as("src"), $"id".as("dst")))
-    val res = graft.queries.SimQ.labelPropagateConverge(ids, edges, maxRounds = 20)
+    val res = LabelProp.labelPropagateConverge(ids, edges, maxRounds = 20)
     val got = res.frame.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(res.rounds == 5, s"must stop at the detection round, not maxRounds: ${res.rounds}")
     assert(res.last == 0.0)
     assert((0L to 7L).forall(got(_) == 0L) && (8L to 15L).forall(got(_) == 8L),
       s"groups must converge to their leaders: $got")
     // parity with the declarative unroll at the converged round count
-    val unrolled = graft.queries.SimQ.labelPropagate(ids, edges, 5)
+    val unrolled = LabelProp.labelPropagate(ids, edges, 5)
       .frame.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(unrolled == got)
     res.release()
 
     // a 2-cycle (bipartite oscillation) must NOT converge: maxRounds
     // bounds it and the last changed count stays > 0
-    val osc = graft.queries.SimQ.labelPropagateConverge(
+    val osc = LabelProp.labelPropagateConverge(
       (0L to 1L).toDF("id"), Seq((0L, 1L), (1L, 0L)).toDF("src", "dst"), maxRounds = 4)
     assert(osc.rounds == 4 && osc.last > 0.0,
       s"oscillator must exhaust maxRounds: ${osc.rounds}, ${osc.last}")
@@ -386,11 +387,11 @@ class CorpusSpec extends AnyFunSuite {
         .toDF("src", "dst")
       val ids = (0L until n.toLong).toDF("id")
       val rounds = 1 + rnd.nextInt(4)
-      val viaRdd = graft.queries.SimQ.labelPropagate(ids, edges, rounds)
+      val viaRdd = LabelProp.labelPropagate(ids, edges, rounds)
         .frame.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       val viaPlan = (1 to rounds)
         .foldLeft(ids.select($"id", $"id".as("lbl"))) { (l, _) =>
-          graft.queries.SimQ.lpRound(edges)(l).drop("prev")
+          LabelProp.lpRound(edges)(l).drop("prev")
         }
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(viaRdd == viaPlan,
@@ -407,10 +408,10 @@ class CorpusSpec extends AnyFunSuite {
     val edges = (clean.map { case (a, b) => (Option(a), Option(b)) } ++ nulls).toDF("src", "dst")
     def labels(df: DataFrame): Map[Long, Long] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val expected = labels(graft.queries.SimQ.labelPropagate(ids, clean.toDF("src", "dst"), 3).frame)
-    assert(labels(graft.queries.SimQ.labelPropagate(ids, edges, 3).frame) == expected)
+    val expected = labels(LabelProp.labelPropagate(ids, clean.toDF("src", "dst"), 3).frame)
+    assert(labels(LabelProp.labelPropagate(ids, edges, 3).frame) == expected)
     val viaPlan = (1 to 3).foldLeft(ids.select($"id", $"id".as("lbl"))) { (l, _) =>
-      graft.queries.SimQ.lpRound(edges)(l).drop("prev")
+      LabelProp.lpRound(edges)(l).drop("prev")
     }
     assert(labels(viaPlan) == expected)
   }
@@ -428,7 +429,7 @@ class CorpusSpec extends AnyFunSuite {
       val edges = (ids.filter($"id" % 8 >= 1).select(($"id" - 1).as("src"), $"id".as("dst")))
         .union(ids.filter($"id" % 8 >= 2).select(($"id" - 2).as("src"), $"id".as("dst")))
       sc.setJobGroup("lp-census", "lp-census", interruptOnCancel = false)
-      val res = graft.queries.SimQ.labelPropagateConverge(ids, edges, maxRounds = 20)
+      val res = LabelProp.labelPropagateConverge(ids, edges, maxRounds = 20)
       sc.clearJobGroup()
       assert(res.rounds == 5 && res.last == 0.0)
       Thread.sleep(1000) // listener bus drains async
@@ -443,13 +444,12 @@ class CorpusSpec extends AnyFunSuite {
   test("domain cap auto: probe flips the physical plan at the threshold; branches bit-identical") {
     val spark0 = spark
     import spark0.implicits._
-    val C = graft.queries.CorpusQ
     // 1 mega source (60 docs) + 20 modest sources (3 docs each)
     val docs = (0L until 120L).map { i =>
       (i, if (i < 60) "mega.example" else s"s${i % 20}.example")
     }.toDF("doc_id", "source")
-    val hot = C.domainCapAuto(docs, 5, hotThreshold = 10L)        // probe trips
-    val cold = C.domainCapAuto(docs, 5, hotThreshold = Long.MaxValue) // never trips
+    val hot = Corpus.domainCapAuto(docs, 5, hotThreshold = 10L)        // probe trips
+    val cold = Corpus.domainCapAuto(docs, 5, hotThreshold = Long.MaxValue) // never trips
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getBoolean(2))).toSeq
     assert(rows(hot) == rows(cold),

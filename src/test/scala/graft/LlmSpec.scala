@@ -1,7 +1,7 @@
 package graft
 
-import graft.llm.{Ann, Multimodal}
-import graft.queries.{EngineQ, SimQ, TextQ}
+import graft.llm.{Ann, MinHash, Multimodal, Substring}
+import graft.queries.{EngineQ, SimQ}
 import graft.scale.Salt
 import org.apache.spark.graft.BlockCensus
 
@@ -500,12 +500,12 @@ class LlmSpec extends AnyFunSuite {
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // "full recompute" oracle: run the incremental path with everything new
-    val (_, fullPairs) = SimQ.incrementalNearDupPairs(all, SimQ.bandIndex(all.limit(0)), all)
+    val (_, fullPairs) = MinHash.incrementalNearDupPairs(all, MinHash.bandIndex(all.limit(0)), all)
     // old corpus assigned first, then the arrival batch folds in
-    val oldBands = SimQ.bandIndex(oldDocs).localCheckpoint()
+    val oldBands = MinHash.bandIndex(oldDocs).localCheckpoint()
     val (_, oldPairs) =
-      SimQ.incrementalNearDupPairs(oldDocs, SimQ.bandIndex(oldDocs.limit(0)), oldDocs)
-    val (newBands, incPairs) = SimQ.incrementalNearDupPairs(all, oldBands, newDocs)
+      MinHash.incrementalNearDupPairs(oldDocs, MinHash.bandIndex(oldDocs.limit(0)), oldDocs)
+    val (newBands, incPairs) = MinHash.incrementalNearDupPairs(all, oldBands, newDocs)
     assert(pairSet(oldPairs) ++ pairSet(incPairs) == pairSet(fullPairs),
       "incremental + old-only pairs must reconstruct the full pair set")
     // every incremental pair touches an arrival; the appended band rows are
@@ -517,29 +517,49 @@ class LlmSpec extends AnyFunSuite {
       .select("id_a", "id_b", "jaccard")))
   }
 
-  test("nearDupPairs memo: rewritten table invalidates; repeat listing hits the memo") {
+  test("nearDupPairs: a rewritten table is seen by the next call") {
     val spark0 = spark
     import spark0.implicits._
-    val dir = scratchDir("pairmemo")
+    val dir = scratchDir("pairtable")
     def write(docs: Seq[(Long, String)]): Unit =
       docs.toDF("doc_id", "text").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
-    SimQ.clearNearDupPairCache()
     // two byte-identical docs: one verified pair
     write(Seq((1L, "alpha beta gamma delta epsilon"),
               (2L, "alpha beta gamma delta epsilon"),
               (3L, "zeta eta theta iota kappa")))
-    assert(SimQ.nearDupPairs(spark, dir).count() == 1)
-    // same listing => memoized: the returned plan is the SAME object
-    assert(SimQ.nearDupPairs(spark, dir) eq SimQ.nearDupPairs(spark, dir))
-    // REWRITE the table in-place within the session: no dups anymore. The
-    // memo key carries a listing fingerprint, so this must recompute, not
-    // serve the stale 1-pair result.
+    val before = BlockCensus.rddBlocks()
+    val first = SimQ.nearDupPairs(spark, dir)
+    val left = BlockCensus.leftSince(before, first)
+    assert(left.isEmpty, s"${left.size} RDD blocks left beyond the output checkpoint's: $left")
+    assert(first.count() == 1)
+    // REWRITE the table in place within the session: no dups anymore, and
+    // the next call reads the new table
     write(Seq((1L, "one two three four five"),
               (2L, "six seven eight nine ten")))
     assert(SimQ.nearDupPairs(spark, dir).count() == 0)
-    SimQ.clearNearDupPairCache()
+  }
+
+  test("minhash band keys: null text never pairs") {
+    val spark0 = spark
+    import spark0.implicits._
+    val m = 6L
+    val nulls = (1L to m).map(i => (i, null: String)).toDF("doc_id", "text")
+    val docs = nulls.union(Seq((101L, ""), (102L, "")).toDF("doc_id", "text"))
+    val keys = MinHash.bandIndex(docs).collect()
+      .map(r => r.getLong(0) -> Option(r.getString(2)))
+    assert(keys.count(_._1 <= m) == 3 * m)
+    assert(keys.filter(_._1 <= m).forall(_._2.isEmpty), "a null text must get null band keys")
+    val emptyKeys = keys.filter(_._1 > 100L).groupBy(_._1)
+      .map { case (id, ks) => id -> ks.map(_._2).toSet }
+    assert(emptyKeys(101L) == emptyKeys(102L) && emptyKeys(101L).forall(_.exists(_.nonEmpty)))
+    val cand = Salt.candidates(MinHash.bandIndex(nulls), Seq("band_id", "band_key"),
+      "doc_id", lit(true))
+    assert(cand.count() == 0, "null-text docs must yield no candidate pairs")
+    val pairs = MinHash.nearDupPairs(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(pairs == Set((101L, 102L, 1.0)))
   }
 
   test("extraction functions: css/json column DSL") {
@@ -568,16 +588,16 @@ class LlmSpec extends AnyFunSuite {
     val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
     val oldDocs = docs.filter(col("doc_id") % 4 =!= 0)
     val newDocs = docs.filter(col("doc_id") % 4 === 0)
-    val oldBands = SimQ.bandIndex(oldDocs).localCheckpoint()
-    val oldAnchors = TextQ.anchorIndex(oldDocs).localCheckpoint()
+    val oldBands = MinHash.bandIndex(oldDocs).localCheckpoint()
+    val oldAnchors = Substring.anchorIndex(oldDocs).localCheckpoint()
     val runs: Seq[(String, () => Seq[org.apache.spark.sql.DataFrame])] = Seq(
-      "fuzzyNearDupPairs" -> (() => Seq(SimQ.fuzzyNearDupPairs(docs))),
+      "fuzzyNearDupPairs" -> (() => Seq(MinHash.fuzzyNearDupPairs(docs))),
       "incrementalNearDupPairs" -> (() => {
-        val (bands, pairs) = SimQ.incrementalNearDupPairs(docs, oldBands, newDocs)
+        val (bands, pairs) = MinHash.incrementalNearDupPairs(docs, oldBands, newDocs)
         Seq(bands, pairs)
       }),
       "incrementalSubstringPairs" -> (() => {
-        val (anchors, pairs) = TextQ.incrementalSubstringPairs(docs, oldAnchors, newDocs)
+        val (anchors, pairs) = Substring.incrementalSubstringPairs(docs, oldAnchors, newDocs)
         Seq(anchors, pairs)
       }))
     runs.foreach { case (name, run) =>
@@ -593,7 +613,7 @@ class LlmSpec extends AnyFunSuite {
     }
   }
 
-  // ---- Fuzzy (edit-distance) near-dup (SimQ.fuzzyNearDupPairs) ----
+  // ---- Fuzzy (edit-distance) near-dup (MinHash.fuzzyNearDupPairs) ----
 
   /** Textbook DP Levenshtein — the spec's independent reference. */
   private def levRef(a: String, b: String): Long = {
@@ -618,7 +638,7 @@ class LlmSpec extends AnyFunSuite {
     val b = words.updated(25, "tokXX").mkString(" ")     // one in-word corruption
     val far = (0 until 50).map(i => f"zzz$i%02d").mkString(" ")
     val docs = Seq((0L, a), (1L, b), (2L, far)).toDF("doc_id", "text")
-    val out = SimQ.fuzzyNearDupPairs(docs)
+    val out = MinHash.fuzzyNearDupPairs(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(out == Set((0L, 1L, levRef(a.take(256), b.take(256)))))
   }
@@ -629,7 +649,7 @@ class LlmSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     // candidates from the operator's own (spec-pinned-elsewhere) band stage;
     // this test independently replays the VERIFY arithmetic
-    val got = SimQ.fuzzyNearDupPairs(docs)
+    val got = MinHash.fuzzyNearDupPairs(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     assert(got.nonEmpty, "fixture corpus must contain fuzzy pairs")
     got.foreach { case (ia, ib, lev, rel) =>

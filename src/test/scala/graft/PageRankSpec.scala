@@ -1,6 +1,6 @@
 package graft
 
-import graft.scale.{GraphLoop, PageRank}
+import graft.scale.{GraphLoop, Hits, LabelProp, PageRank}
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -258,7 +258,7 @@ class PageRankSpec extends AnyFunSuite {
     val nodes = (0L to 4L).toDF("id")
     val e = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 4L), (2L, 4L), (3L, 4L))
       .toDF("src", "dst")
-    val got = graft.queries.SimQ.hits(nodes, e, iters = 2).frame.collect()
+    val got = Hits.hits(nodes, e, iters = 2).frame.collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     // iter1: auth = indeg -> a=(0,1,1,1,3); hub1(u) = Σ auth1(dst):
     //   hub1 = (3, 3, 3, 3, 0)
@@ -275,7 +275,7 @@ class PageRankSpec extends AnyFunSuite {
     val nodes = (0L to 2L).toDF("id")
     // doubled edge 0->1 contributes twice to auth(1) and twice to hub(0)
     val e = Seq((0L, 1L), (0L, 1L), (1L, 2L)).toDF("src", "dst")
-    val got = graft.queries.SimQ.hits(nodes, e, iters = 1).frame.collect()
+    val got = Hits.hits(nodes, e, iters = 1).frame.collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     // auth1 = weighted indeg = (0, 2, 1); hub1 = Σ auth1(dst): 0 -> 2+2=4, 1 -> 1
     assert(got == Map(0L -> ((0L, 4L)), 1L -> ((2L, 1L)), 2L -> ((1L, 0L))))
@@ -284,7 +284,7 @@ class PageRankSpec extends AnyFunSuite {
     val n = 60
     val rnodes = (0L until n.toLong).toDF("id")
     val re = q62Edges(n).toDF("src", "dst")
-    val u = graft.queries.SimQ.hits(rnodes, re, iters = 2).frame.collect()
+    val u = Hits.hits(rnodes, re, iters = 2).frame.collect()
       .map(r => (r.getLong(1), r.getLong(2))).distinct
     assert(u.length == 1, s"regular graph must score uniformly, got ${u.length} classes")
   }
@@ -304,7 +304,7 @@ class PageRankSpec extends AnyFunSuite {
         auth = ids.map(v => v -> inner.collect { case (u, `v`) => hub(u) }.sum).toMap
         hub = ids.map(u => u -> inner.collect { case (`u`, v) => auth(v) }.sum).toMap
       }
-      val res = graft.queries.SimQ.hits(ids.toDF("id"), edges.toDF("src", "dst"), iters = 3)
+      val res = Hits.hits(ids.toDF("id"), edges.toDF("src", "dst"), iters = 3)
       val got = res.frame.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
       res.release()
       assert(got == ids.map(v => v -> ((auth(v), hub(v)))).toMap, s"seed $seed")
@@ -322,14 +322,13 @@ class PageRankSpec extends AnyFunSuite {
     val lpIds = (0L to 15L).toDF("id")
     val lpEdges = (lpIds.filter($"id" % 8 >= 1).select(($"id" - 1).as("src"), $"id".as("dst")))
       .union(lpIds.filter($"id" % 8 >= 2).select(($"id" - 2).as("src"), $"id".as("dst")))
-    val S = graft.queries.SimQ
     val runs: Seq[(String, () => GraphLoop.Result)] = Seq(
       "pagerank lineage" -> (() => PageRank.run(nodes, regular, maxIter = 2 * GraphLoop.CheckpointEvery + 1)),
       "pagerank dangling" -> (() => PageRank.run(nodes, e, maxIter = 4)),
       "pagerank tol" -> (() => PageRank.run(nodes, e, tol = 0.01 * n, maxIter = 30)),
-      "label propagation" -> (() => S.labelPropagate(nodes, e, 2 * GraphLoop.CheckpointEvery + 1)),
-      "label propagation converge" -> (() => S.labelPropagateConverge(lpIds, lpEdges, 20)),
-      "hits" -> (() => S.hits(nodes, e, 3)))
+      "label propagation" -> (() => LabelProp.labelPropagate(nodes, e, 2 * GraphLoop.CheckpointEvery + 1)),
+      "label propagation converge" -> (() => LabelProp.labelPropagateConverge(lpIds, lpEdges, 20)),
+      "hits" -> (() => Hits.hits(nodes, e, 3)))
     runs.foreach { case (name, run) =>
       val outs = (1 to 2).map { _ =>
         val before = sc.getPersistentRDDs.keySet

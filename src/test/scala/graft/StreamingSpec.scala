@@ -139,13 +139,13 @@ class StreamingSpec extends AnyFunSuite {
       (100 until 130).map(i => (i.toLong, "xx", doc(vocabB)))).toDF("doc_id", "lang", "text")
 
     // freeze bucket stats offline (ALL 1024 buckets present — totality)
-    val bucketRows = graft.queries.TextQ.dsirBucketScores(corpus).collect()
+    val bucketRows = graft.llm.Corpus.dsirBucketScores(corpus).collect()
       .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
     assert(bucketRows.size == 1024)
     val scores = Array.tabulate(1024)(bucketRows)
 
     // the parity anchor: batch weights over the SAME frozen stats' corpus
-    val batch = graft.queries.TextQ.dsirScores(corpus).collect()
+    val batch = graft.llm.Corpus.dsirScores(corpus).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).toSet
 
     val input = MemoryStream[(Long, String, String)]
@@ -362,7 +362,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("source", "text")
-    val batch = graft.queries.CorpusQ.overlapSignatures(corpus).collect()
+    val batch = graft.llm.Corpus.overlapSignatures(corpus).collect()
       .map(r => r.getString(0) -> (1 until 33).map(r.getLong).toSeq).toMap
 
     val rows = corpus.collect().map(r => (r.getString(0), r.getString(1)))
@@ -541,7 +541,7 @@ class StreamingSpec extends AnyFunSuite {
     val fp = spark.table("ci").filter($"doc_id" === 1L).select("fingerprint").as[Long].head()
     val expected = Seq(good).toDF("text")
       .selectExpr("regexp_replace(lower(text), '[^a-z0-9 ]', '') AS norm")
-      .select(graft.queries.TextQ.rollingFingerprint.as("fp")).as[Long].head()
+      .select(graft.llm.Corpus.rollingFingerprint.as("fp")).as[Long].head()
     assert(fp == expected)
   }
 
@@ -585,7 +585,7 @@ class StreamingSpec extends AnyFunSuite {
     // fold two phantom zero chars into 6727; the oracle folds nothing -> 7
     val fps = Seq("!!!", "abc").toDF("text")
       .selectExpr("regexp_replace(lower(text), '[^a-z0-9 ]', '') AS norm")
-      .select(graft.queries.TextQ.rollingFingerprint.as("fp")).as[Long].collect()
+      .select(graft.llm.Corpus.rollingFingerprint.as("fp")).as[Long].collect()
     assert(fps(0) == 7L)
     assert(fps(1) == ((7L * 31 + 'a') * 31 + 'b') * 31 + 'c')
   }
@@ -663,7 +663,7 @@ class StreamingSpec extends AnyFunSuite {
     var refIdx: org.apache.spark.sql.DataFrame = null
     val expect = scala.collection.mutable.Map.empty[Long, Seq[(Int, Int)]]
     Seq(b1, b2, b3).foreach { b =>
-      val (ni, iv) = graft.queries.TextQ.incrementalRemovalIntervals(
+      val (ni, iv) = graft.llm.Substring.incrementalRemovalIntervals(
         refIdx, b.toDF("doc_id", "text"), k = 12, p = 1)
       refIdx = ni
       expect ++= ivMap(iv)

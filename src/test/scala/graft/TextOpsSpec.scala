@@ -1,5 +1,6 @@
 package graft
 
+import graft.llm.{Corpus, Substring}
 import graft.queries.TextQ
 
 import org.apache.spark.sql.functions._
@@ -141,7 +142,7 @@ class TextOpsSpec extends AnyFunSuite {
     assert(expected.keySet == Set((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L)))
     // a 40-token span carries 40-12+1 = 29 shared grams
     assert(expected((1L, 2L)) == 29L && expected((10L, 11L)) == 9L)
-    val got = TextQ.substringDedupPairs(docs, k = 12, p = 1)
+    val got = Substring.substringDedupPairs(docs, k = 12, p = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == expected)
   }
@@ -151,7 +152,7 @@ class TextOpsSpec extends AnyFunSuite {
     val rows = docs.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val expected = bruteSpanPairs(rows, k = 12,
       g => "048c".contains(md5LastHex(g)))
-    val got = TextQ.substringDedupPairs(docs, k = 12, p = 4)
+    val got = Substring.substringDedupPairs(docs, k = 12, p = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == expected)
     // sampling only thins counts, never invents pairs
@@ -222,7 +223,7 @@ class TextOpsSpec extends AnyFunSuite {
     val docs = (0 until 6).map { i =>
       (i.toLong, (soup(5 + 7 * i) ++ span ++ soup(40 - 5 * i)).mkString(" "))
     } ++ (100L until 140L).map(i => (i, soup(60).mkString(" ")))
-    val got = TextQ.substringDedupPairsWinnowed(docs.toDF("doc_id", "text"), k, w)
+    val got = Substring.substringDedupPairsWinnowed(docs.toDF("doc_id", "text"), k, w)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // all 15 pairs among the 6 span-carrying docs — no misses, by theorem
     val expected = (for {
@@ -236,7 +237,7 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("incremental substring dedup: composed batches reconstruct the full-corpus pairs") {
     val all = plantedSpanDocs()
-    val batchTruth = TextQ.substringDedupPairs(all, k = 12, p = 4)
+    val batchTruth = Substring.substringDedupPairs(all, k = 12, p = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // arrival order: {1,10,20,21,noise} first, then {2,11}, then {3} — every
     // planted pair completes in the batch where its LATER member arrives
@@ -244,14 +245,14 @@ class TextOpsSpec extends AnyFunSuite {
     val b1 = all.filter(col("doc_id").isin(2L, 11L))
     val b2 = all.filter(col("doc_id") === 3L)
 
-    val initPairs = TextQ.substringDedupPairs(init, k = 12, p = 4)
+    val initPairs = Substring.substringDedupPairs(init, k = 12, p = 4)
     assert(initPairs.isEmpty) // no planted pair is complete yet
-    var index = TextQ.anchorIndex(init)
-    val (idx1, pairs1) = TextQ.incrementalSubstringPairs(init.union(b1), index, b1)
+    var index = Substring.anchorIndex(init)
+    val (idx1, pairs1) = Substring.incrementalSubstringPairs(init.union(b1), index, b1)
     assert(pairs1.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set((1L, 2L), (10L, 11L)))
     index = index.union(idx1)
-    val (idx2, pairs2) = TextQ.incrementalSubstringPairs(all, index, b2)
+    val (idx2, pairs2) = Substring.incrementalSubstringPairs(all, index, b2)
     assert(pairs2.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set((1L, 3L), (2L, 3L)))
     index = index.union(idx2)
@@ -261,14 +262,14 @@ class TextOpsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(composed == batchTruth)
     // and the maintained index is exactly the full corpus anchor index
-    val full = TextQ.anchorIndex(all).collect()
+    val full = Substring.anchorIndex(all).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(index.collect().map(r => (r.getLong(0), r.getString(1))).toSet == full)
   }
 
   // ---- span-granular removal lists (q63 operator) --------------------------
 
-  /** Brute reference for [[TextQ.substringRemovalSpans]]: positional
+  /** Brute reference for [[Substring.substringRemovalSpans]]: positional
     * k-grams per doc (repeats kept — each occurrence removable), grams
     * with >= 2 occurrences globally elect keeper = min (doc_id, pos),
     * every other occurrence becomes [pos, min(pos+k, n_toks)), merged
@@ -306,7 +307,7 @@ class TextOpsSpec extends AnyFunSuite {
     assert(expected.keySet == Set(2L, 3L, 11L))
     assert(expected(2L) == ((1L, 40L)) && expected(3L) == ((1L, 40L)) &&
       expected(11L) == ((1L, 20L)))
-    val got = TextQ.substringRemovalSpans(docs, k = 12, p = 1)
+    val got = Substring.substringRemovalSpans(docs, k = 12, p = 1)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == expected)
   }
@@ -315,7 +316,7 @@ class TextOpsSpec extends AnyFunSuite {
     val docs = plantedSpanDocs()
     val rows = docs.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val expected = bruteRemoval(rows, k = 12, g => "048c".contains(md5LastHex(g)))
-    val got = TextQ.substringRemovalSpans(docs, k = 12, p = 4)
+    val got = Substring.substringRemovalSpans(docs, k = 12, p = 4)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == expected)
   }
@@ -336,7 +337,7 @@ class TextOpsSpec extends AnyFunSuite {
       (id, (soup(5 + (id % 7).toInt) ++ (s"pre$id" +: boiler :+ s"post$id")
         ++ soup(8)).mkString(" "))
     }.toDF("doc_id", "text")
-    val got = TextQ.substringRemovalSpans(docs, k = 12, p = 1)
+    val got = Substring.substringRemovalSpans(docs, k = 12, p = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // doc 0 is the global-min keeper; every other doc loses exactly the
     // 20-token boilerplate span, merged to ONE interval
@@ -347,7 +348,7 @@ class TextOpsSpec extends AnyFunSuite {
   test("substring scrub: removal lists APPLIED — keeper keeps its span, others lose exactly it") {
     val docs = plantedSpanDocs()
     val rows = docs.collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    val got = TextQ.substringScrub(docs, k = 12, p = 1)
+    val got = Substring.substringScrub(docs, k = 12, p = 1)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     assert(got.keySet == rows.keySet) // every doc present
     // brute expectation: drop tokens covered by brute removal intervals
@@ -386,7 +387,7 @@ class TextOpsSpec extends AnyFunSuite {
       Seq((2L * g, (soup(6) ++ (s"pre${2 * g}" +: span :+ s"post${2 * g}") ++ soup(5)).mkString(" ")),
         (2L * g + 1, ((s"pre${2 * g + 1}" +: span :+ s"post${2 * g + 1}") ++ soup(9)).mkString(" ")))
     }.toDF("doc_id", "text")
-    val got = TextQ.substringRemovalIntervalsWinnowed(docs, k = k, w = w)
+    val got = Substring.substringRemovalIntervalsWinnowed(docs, k = k, w = w)
       .collect().map(r => r.getLong(0) ->
         r.getSeq[org.apache.spark.sql.Row](1).map(x => (x.getInt(0), x.getInt(1)))).toMap
     (0 until 20).foreach { g =>
@@ -414,7 +415,7 @@ class TextOpsSpec extends AnyFunSuite {
     def ivMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) ->
         r.getSeq[org.apache.spark.sql.Row](1).map(x => (x.getInt(0), x.getInt(1)))).toMap
-    val full = ivMap(TextQ.substringRemovalIntervals(all, k = 12, p = 1))
+    val full = ivMap(Substring.substringRemovalIntervals(all, k = 12, p = 1))
     // arrival batches in doc_id order (keeper monotonicity's precondition)
     val batches = Seq(all.filter(col("doc_id") < 10L),
       all.filter(col("doc_id") >= 10L && col("doc_id") < 85L),
@@ -422,7 +423,7 @@ class TextOpsSpec extends AnyFunSuite {
     var idx: org.apache.spark.sql.DataFrame = null
     val composed = scala.collection.mutable.Map.empty[Long, Seq[(Int, Int)]]
     batches.foreach { b =>
-      val (ni, iv) = TextQ.incrementalRemovalIntervals(idx, b, k = 12, p = 1)
+      val (ni, iv) = Substring.incrementalRemovalIntervals(idx, b, k = 12, p = 1)
       idx = ni
       composed ++= ivMap(iv)
     }
@@ -433,14 +434,14 @@ class TextOpsSpec extends AnyFunSuite {
     assert(full(90L).map(iv => iv._2 - iv._1).sum == 40)
     assert(!full.contains(1L))
     // the maintained index equals the full-corpus per-gram summary
-    val fullIdx = TextQ.incrementalRemovalIntervals(null, all, k = 12, p = 1)._1
+    val fullIdx = Substring.incrementalRemovalIntervals(null, all, k = 12, p = 1)._1
       .collect().map(r => (r.getString(0), r.getLong(2), r.getLong(1))).toSet
     assert(idx.collect().map(r => (r.getString(0), r.getLong(2), r.getLong(1))).toSet == fullIdx)
   }
 
   test("pair mode never broadcasts the pair-derived table (shuffle-hash pinned)") {
     val docs = plantedSpanDocs()
-    val plan = TextQ.substringDedupPairs(docs, k = 12, p = 4)
+    val plan = Substring.substringDedupPairs(docs, k = 12, p = 4)
       .queryExecution.executedPlan.toString
     // the verify stage joins anchors to the candidate-PAIR table on id_a:
     // pair cardinality is quadratic in boilerplate-cluster size, so that
@@ -464,7 +465,7 @@ class TextOpsSpec extends AnyFunSuite {
     import s.implicits._
     val rnd = new scala.util.Random(seed)
     val content = (0 until 400).map(i => s"word$i")
-    val stops = Seq("the", "a", "of", "to", "in") // TextQ.STOPWORDS (private)
+    val stops = Seq("the", "a", "of", "to", "in") // Corpus.STOPWORDS (private)
     val rows = (0 until nPerClass).flatMap { i =>
       val good = (0 until 60).map { _ =>
         if (rnd.nextInt(4) == 0) stops(rnd.nextInt(stops.size))
@@ -541,7 +542,7 @@ class TextOpsSpec extends AnyFunSuite {
       // impostors: labeled 'xx' but WRITTEN in the target distribution —
       // importance weighting must rank them by content, not label
       (200 until 205).map(i => (i.toLong, "xx", doc(vocabA)))).toDF("doc_id", "lang", "text")
-    val ranked = TextQ.dsirResample(docs).select(col("doc_id"), col("rank")).collect()
+    val ranked = Corpus.dsirResample(docs).select(col("doc_id"), col("rank")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val worstTargetLike = (ranked.filter(_._1 < 40) ++ ranked.filter(_._1 >= 200)).values.max
     val bestOod = ranked.filter(kv => kv._1 >= 100 && kv._1 < 140).values.min
@@ -568,7 +569,7 @@ class TextOpsSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def run(counts: Seq[(String, Long)], b: Long): Map[String, Long] =
-      graft.queries.TextQ.apportion(counts.toDF("lang", "n_toks"), b)
+      Corpus.apportion(counts.toDF("lang", "n_toks"), b)
         .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     // exact proportions: no remainders
     assert(run(Seq(("a", 3L), ("b", 3L), ("c", 4L)), 10L) ==

@@ -1,6 +1,6 @@
 package graft.agent
 
-import graft.doc.{Doc, DocUID, NoDoc, Observation}
+import graft.doc.{Doc, DocUID, JsonNode, NoDoc, Observation}
 
 import java.io.ByteArrayOutputStream
 import java.net.{HttpURLConnection, URI}
@@ -129,9 +129,9 @@ object Fetcher {
     if (status.isDirectory) {
       val entries = fs.listStatus(path).sortBy(_.getPath.getName).map { st =>
         val name = st.getPath.getName
-        s"""{"name":${jstr(name)},"uri":${jstr(st.getPath.toUri.toString)},"isDir":${st.isDirectory}}"""
+        s"""{"name":${JsonNode.quote(name)},"uri":${JsonNode.quote(st.getPath.toUri.toString)},"isDir":${st.isDirectory}}"""
       }
-      val json = s"""{"uri":${jstr(uri)},"entries":[${entries.mkString(",")}]}"""
+      val json = s"""{"uri":${JsonNode.quote(uri)},"entries":[${entries.mkString(",")}]}"""
       Doc(uid, uri, json.getBytes(StandardCharsets.UTF_8), Some("application/json"),
         metadata = Map("type" -> "directory"), timestampMillis = now)
     } else {
@@ -144,14 +144,6 @@ object Fetcher {
     if (uri.startsWith("file://")) uri.stripPrefix("file://")
     else if (uri.startsWith("file:")) uri.stripPrefix("file:")
     else uri
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def readAll(in: java.io.InputStream): Array[Byte] = {
     val out = new ByteArrayOutputStream()

@@ -30,13 +30,6 @@ object ArchiveNode {
     */
   val MaxEntries = 4096
 
-  /** Per-member inflate cap for the zip walk (the OfficeNode discipline —
-    * a zip-bomb member stays LISTED with its declared size but extracts no
-    * text; refusal, not truncation). Tar members need no cap: tar stores
-    * them uncompressed, so the archive's own byte length bounds them.
-    */
-  val MaxMemberBytes: Int = 64 << 20
-
   private val depth = new ThreadLocal[Integer] { override def initialValue: Integer = 0 }
 
   private final case class Entry(name: String, size: Long, isDir: Boolean, text: String)
@@ -78,11 +71,15 @@ object ArchiveNode {
     else listing("tar", es, truncated)
   }
 
-  /** Plain-zip walk (caller has already ruled out OOXML/EPUB). The cap is
-    * a parameter only so the spec can exercise the bomb path with small
-    * fixtures; production callers use the default.
+  /** Plain-zip walk (caller has already ruled out OOXML/EPUB). Members
+    * inflate up to [[Codecs.MaxInflate]]: a zip-bomb member stays LISTED
+    * with its size but extracts no text (refusal, not truncation). Tar
+    * members need no cap: tar stores them uncompressed, so the archive's
+    * own byte length bounds them. The cap is a parameter only so the spec
+    * can exercise the bomb path with small fixtures; production callers
+    * use the default.
     */
-  def fromZip(content: Array[Byte], maxMember: Int = MaxMemberBytes): Node =
+  def fromZip(content: Array[Byte], maxMember: Int = Codecs.MaxInflate): Node =
     try {
       val zin = new java.util.zip.ZipInputStream(new ByteArrayInputStream(content))
       val entries = Vector.newBuilder[Entry]
@@ -117,7 +114,7 @@ object ArchiveNode {
     * not truncation), nesting cap via [[memberText]]. Unrecognisable when
     * the bytes are not a 7z or the header is corrupt.
     */
-  def from7z(content: Array[Byte], maxMember: Int = MaxMemberBytes): Node =
+  def from7z(content: Array[Byte], maxMember: Int = Codecs.MaxInflate): Node =
     try {
       val ch = new org.apache.commons.compress.utils.SeekableInMemoryByteChannel(content)
       val sz = org.apache.commons.compress.archivers.sevenz.SevenZFile.builder()
@@ -169,28 +166,20 @@ object ArchiveNode {
 
   private def listing(kind: String, entries: Seq[Entry], truncated: Boolean): Node = {
     val sb = new StringBuilder
-    sb.append("{\"archive\":").append(jstr(kind))
+    sb.append("{\"archive\":").append(JsonNode.quote(kind))
     if (truncated) sb.append(",\"truncated\":true")
     sb.append(",\"entries\":[")
     entries.zipWithIndex.foreach { case (e, i) =>
       if (i > 0) sb.append(',')
-      sb.append("{\"name\":").append(jstr(e.name))
+      sb.append("{\"name\":").append(JsonNode.quote(e.name))
         .append(",\"size\":").append(e.size)
         .append(",\"isDir\":").append(e.isDir)
-      if (e.text.nonEmpty) sb.append(",\"text\":").append(jstr(e.text))
+      if (e.text.nonEmpty) sb.append(",\"text\":").append(JsonNode.quote(e.text))
       sb.append('}')
     }
     sb.append("]}")
     JsonNode.parse(sb.result())
   }
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def isUstar(c: Array[Byte], off: Int): Boolean =
     off + 262 < c.length &&

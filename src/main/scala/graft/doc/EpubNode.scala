@@ -1,8 +1,6 @@
 package graft.doc
 
-import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
-import java.util.zip.ZipInputStream
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -14,40 +12,20 @@ import scala.collection.mutable.ArrayBuffer
   * spine resolution via `content.opf` is deliberately out of scope —
   * best-effort extraction, same contract as the reference's Tika fallback.
   *
-  * Inflate bounds mirror [[OfficeNode]]: 64 MiB per entry / 256 MiB total,
-  * so a zip bomb degrades to partial text instead of an executor OOM.
+  * Bounds: chapters are read through [[Codecs.zipWalk]], whose per-entry
+  * and total caps turn a zip bomb into partial text instead of an executor
+  * OOM.
   */
 object EpubNode {
 
-  private val EntryCap = 64 << 20
-  private val TotalCap = 256 << 20
-
   def parse(content: Array[Byte]): Node = {
     val blocks = ArrayBuffer.empty[String]
-    val zin = new ZipInputStream(new ByteArrayInputStream(content))
-    var total = 0L
-    try {
-      var e = zin.getNextEntry
-      while (e != null && total < TotalCap) {
-        val name = e.getName
-        if (isChapter(name)) {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](8192)
-          var n = zin.read(chunk)
-          while (n >= 0 && buf.size + n <= EntryCap) {
-            buf.write(chunk, 0, n)
-            n = zin.read(chunk)
-          }
-          total += buf.size
-          val t = try HtmlNode.parse(decodeChapter(buf.toByteArray)).text.trim
-          catch { case scala.util.control.NonFatal(_) => "" }
-          if (t.nonEmpty) blocks += t
-        }
-        e = zin.getNextEntry
-      }
-    } catch {
-      case scala.util.control.NonFatal(_) => // truncated/corrupt zip: keep what we have
-    } finally zin.close()
+    Codecs.zipWalk(content, isChapter) { (_, bytes) =>
+      val t = try HtmlNode.parse(decodeChapter(bytes)).text.trim
+      catch { case scala.util.control.NonFatal(_) => "" }
+      if (t.nonEmpty) blocks += t
+      true
+    }
     val bs = blocks.toVector
     if (bs.isEmpty) Node.Unrecognisable else new BlockRoot(bs)
   }

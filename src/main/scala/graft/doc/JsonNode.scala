@@ -86,6 +86,19 @@ object JsonNode {
 
   def parse(json: String): Node = JsonNode(mapper.readTree(json))
 
+  /** `s` as a JSON string literal: quote and backslash escaped, every
+    * control char as a unicode escape — the one quoter behind the synthetic
+    * JSON documents (archive, image-metadata, subtitle and directory
+    * listings).
+    */
+  def quote(s: String): String =
+    "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   /** Arrays become one node per element (reference: "arrays exploded"). */
   private def explode(n: JacksonNode, name: String): Seq[Node] =
     if (n.isArray) n.elements().asScala.toSeq.map(JsonNode(_, name))

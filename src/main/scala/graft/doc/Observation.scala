@@ -293,19 +293,33 @@ object Charsets {
   }
 }
 
-/** Capped stream-codec inflation for [[Doc]]'s transparent unwrap: gzip
-  * (JDK), bzip2/xz/zstd/lz4-frame (Apache commons-compress + its xz /
-  * zstd-jni backends, all on the Spark runtime classpath). Magic-sniffed —
-  * declared mimes and extensions only decide suffix stripping, never the
-  * codec.
+/** Capped inflation of untrusted container bytes — the one place that
+  * decides how far they may inflate:
+  *
+  *   - [[Doc]]'s transparent unwrap: gzip (JDK), bzip2/xz/zstd/lz4-frame
+  *     (Apache commons-compress + its xz / zstd-jni backends, all on the
+  *     Spark runtime classpath), magic-sniffed — declared mimes and
+  *     extensions only decide suffix stripping, never the codec;
+  *   - the one zlib/deflate loop ([[inflateStream]]) under the zlib unwrap,
+  *     PDF `/FlateDecode` streams and PNG `zTXt`/`iTXt` chunks;
+  *   - the one zip walk ([[zipWalk]]) under the OOXML, ODF and EPUB
+  *     parsers; [[ArchiveNode]] caps its zip and 7z members at
+  *     [[MaxInflate]] too.
+  *
+  * Each caller keeps its own acceptance rule (refusal or truncation); the
+  * caps live here.
   */
 private[graft] object Codecs {
 
-  /** Bomb guard: refuse to inflate past this (the doc then stays an opaque
-    * binary — refusal, not truncation, so extraction never sees a silently
-    * cut-off document).
+  /** Bomb guard: no stream or container entry inflates past this. The
+    * codec unwrap and archive members refuse an over-cap body (the doc
+    * stays opaque, so extraction never sees a silently cut-off document),
+    * PDF skips an over-cap stream, and the zip walk cuts a wanted entry here.
     */
   val MaxInflate: Int = 64 << 20
+
+  /** Total bytes one [[zipWalk]] hands out before it stops. */
+  val MaxZipTotal: Long = 256L << 20
 
   /** Declared mimes that mean "a codec wrapper, not the content type" —
     * the unwrapped bytes decide the effective mime instead.
@@ -372,15 +386,8 @@ private[graft] object Codecs {
         case "lz4"   => new compressors.lz4.FramedLZ4CompressorInputStream(bin, true)
         case _       => return None
       }
-      val out = new ByteArrayOutputStream(math.min(math.max(raw.length * 4, 1024), 1 << 20))
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      var over = false
-      while (n >= 0 && !over) {
-        out.write(buf, 0, n)
-        if (out.size > cap) over = true else n = in.read(buf)
-      }
-      if (over) None else Some(out.toByteArray)
+      val out = in.readNBytes(cap + 1)
+      if (out.length > cap) None else Some(out)
     } catch {
       case scala.util.control.NonFatal(_) => None // corrupt stream: keep raw bytes
     } finally if (in != null) try in.close() catch { case _: java.io.IOException => }
@@ -394,23 +401,68 @@ private[graft] object Codecs {
     * non-empty output, and consumed the whole input (true zlib bodies are
     * exactly one stream + adler trailer); anything else keeps raw bytes.
     */
-  private def inflateZlib(raw: Array[Byte], cap: Int): Option[Array[Byte]] = {
+  private def inflateZlib(raw: Array[Byte], cap: Int): Option[Array[Byte]] =
+    inflateStream(raw, 0, raw.length, cap)
+      .collect { case s if s.finished && s.bytes.nonEmpty && s.remaining == 0 => s.bytes }
+
+  /** One zlib-framed deflate stream's output: whether the stream reached
+    * its end, and how many input bytes were left after it.
+    */
+  final case class Inflated(bytes: Array[Byte], finished: Boolean, remaining: Int)
+
+  /** The one zlib/deflate inflate loop: inflates `a[from, until)` until the
+    * stream ends or the input runs out (then `finished` is false and the
+    * output so far is kept). None on corrupt data, on a preset-dictionary
+    * stream and when the output would pass `cap`. The inflater is released
+    * on every path.
+    */
+  def inflateStream(a: Array[Byte], from: Int, until: Int, cap: Int): Option[Inflated] = {
     val inf = new java.util.zip.Inflater()
     try {
-      inf.setInput(raw)
-      val out = new ByteArrayOutputStream(math.min(math.max(raw.length * 4, 1024), 1 << 20))
+      inf.setInput(a, from, until - from)
+      val out = new ByteArrayOutputStream(math.min(math.max((until - from) * 4, 1024), 1 << 20))
       val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n > 0) {
-          out.write(buf, 0, n)
-          if (out.size > cap) return None
-        } else if (!inf.finished()) return None // needs input/dict on a full buffer: corrupt
+      var n = 1
+      // n == 0 without finishing: no forward progress is possible (input
+      // exhausted or a dictionary needed), so an untrusted stream can't spin
+      while (!inf.finished() && n > 0) {
+        n = inf.inflate(buf)
+        if (out.size + n > cap) return None
+        out.write(buf, 0, n)
       }
-      if (out.size == 0 || inf.getRemaining > 0) None else Some(out.toByteArray)
+      if (inf.needsDictionary()) None
+      else Some(Inflated(out.toByteArray, inf.finished(), inf.getRemaining))
     } catch {
       case scala.util.control.NonFatal(_) => None
     } finally inf.end()
+  }
+
+  /** The one capped zip walk: visits entries in zip order and hands each
+    * entry `wanted` accepts to `f` — its name and its first `entryCap`
+    * bytes (a longer entry is cut there). The walk stops at the end of the
+    * zip, when `f` returns false, once `totalCap` bytes were handed out,
+    * or at the first corrupt entry (what was handed out stays handed out).
+    * The caps are parameters only so a spec can reach them with small
+    * fixtures; parsers use the defaults.
+    */
+  def zipWalk(content: Array[Byte], wanted: String => Boolean,
+              entryCap: Int = MaxInflate, totalCap: Long = MaxZipTotal)(
+      f: (String, Array[Byte]) => Boolean): Unit = {
+    val zin = new java.util.zip.ZipInputStream(new ByteArrayInputStream(content))
+    try {
+      var total = 0L
+      var e = zin.getNextEntry
+      while (e != null && total < totalCap) {
+        val go = !wanted(e.getName) || {
+          val bytes = zin.readNBytes(entryCap)
+          total += bytes.length
+          f(e.getName, bytes)
+        }
+        e = if (go) zin.getNextEntry else null
+      }
+    } catch {
+      case scala.util.control.NonFatal(_) => // truncated/corrupt zip: keep what was handed out
+    } finally zin.close()
   }
 }
 

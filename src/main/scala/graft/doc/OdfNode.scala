@@ -1,8 +1,6 @@
 package graft.doc
 
-import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
-import java.util.zip.ZipInputStream
 
 /** Native OpenDocument (odt/ods/odp) text extraction — the ODF leg of the
   * reference's Tika any-mime normalisation, next to [[OfficeNode]]'s OOXML.
@@ -13,35 +11,18 @@ import java.util.zip.ZipInputStream
   * elements. One block per paragraph/heading, [[RtfNode.BlockRoot]] shape
   * (`text` joins with newlines, `findAll("block")` yields them).
   *
-  * Bounds: same cap discipline as OfficeNode — content.xml inflates
-  * through a streaming ZipInputStream up to 64 MiB; absent content.xml →
-  * `Unrecognisable` (this parser never guesses at arbitrary archives).
+  * Bounds: content.xml is read through [[Codecs.zipWalk]], cut at its
+  * per-entry cap; absent content.xml → `Unrecognisable` (this parser
+  * never guesses at arbitrary archives).
   */
 object OdfNode {
 
-  private val EntryCap = 64 << 20
-
   def parse(content: Array[Byte]): Node = {
     var xml: String = null
-    val zin = new ZipInputStream(new ByteArrayInputStream(content))
-    try {
-      var e = zin.getNextEntry
-      while (e != null && xml == null) {
-        if (e.getName == "content.xml") {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](8192)
-          var n = zin.read(chunk)
-          while (n >= 0 && buf.size + n <= EntryCap) {
-            buf.write(chunk, 0, n)
-            n = zin.read(chunk)
-          }
-          xml = new String(buf.toByteArray, StandardCharsets.UTF_8)
-        }
-        e = zin.getNextEntry
-      }
-    } catch {
-      case scala.util.control.NonFatal(_) => // corrupt zip: fall through
-    } finally zin.close()
+    Codecs.zipWalk(content, _ == "content.xml") { (_, bytes) =>
+      xml = new String(bytes, StandardCharsets.UTF_8)
+      false // content.xml carries all body text: stop the walk
+    }
 
     if (xml == null) Node.Unrecognisable
     else {

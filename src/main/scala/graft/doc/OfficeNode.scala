@@ -1,8 +1,6 @@
 package graft.doc
 
-import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
-import java.util.zip.ZipInputStream
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -24,39 +22,17 @@ import scala.collection.mutable.ArrayBuffer
   * (or "*") yields them. A zip that contains none of the known parts is
   * `Unrecognisable` — this parser never guesses at arbitrary archives.
   *
-  * Bounds: entries are inflated through a streaming ZipInputStream with a
-  * 64 MiB per-entry / 256 MiB total cap, so a zip bomb degrades to partial
-  * text instead of an executor OOM.
+  * Bounds: parts are read through [[Codecs.zipWalk]], whose per-entry and
+  * total caps turn a zip bomb into partial text instead of an executor OOM.
   */
 object OfficeNode {
 
-  private val EntryCap = 64 << 20
-  private val TotalCap = 256 << 20
-
   def parse(content: Array[Byte]): Node = {
     val wanted = ArrayBuffer.empty[(String, String)] // (entry name, xml)
-    val zin = new ZipInputStream(new ByteArrayInputStream(content))
-    var total = 0L
-    try {
-      var e = zin.getNextEntry
-      while (e != null && total < TotalCap) {
-        val name = e.getName
-        if (isTextPart(name)) {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](8192)
-          var n = zin.read(chunk)
-          while (n >= 0 && buf.size + n <= EntryCap) {
-            buf.write(chunk, 0, n)
-            n = zin.read(chunk)
-          }
-          total += buf.size
-          wanted += name -> new String(buf.toByteArray, StandardCharsets.UTF_8)
-        }
-        e = zin.getNextEntry
-      }
-    } catch {
-      case scala.util.control.NonFatal(_) => // truncated/corrupt zip: keep what we have
-    } finally zin.close()
+    Codecs.zipWalk(content, isTextPart) { (name, bytes) =>
+      wanted += name -> new String(bytes, StandardCharsets.UTF_8)
+      true
+    }
 
     val blocks = ArrayBuffer.empty[String]
     wanted.sortBy { case (name, _) => (partRank(name), slideNumber(name), name) }

@@ -1,8 +1,6 @@
 package graft.doc
 
-import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
-import java.util.zip.Inflater
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -14,9 +12,11 @@ import scala.collection.mutable.ArrayBuffer
   *   - object/stream scanning without an xref table (tolerant of linearized
   *     or appended-update files: every `stream…endstream` body is visited in
   *     document order)
-  *   - `/FlateDecode` streams inflated with java.util.zip (the overwhelming
-  *     majority of real-world content streams); unfiltered streams used
-  *     as-is; unsupported filters skipped
+  *   - `/FlateDecode` streams inflated through [[Codecs.inflateStream]]
+  *     (the overwhelming majority of real-world content streams), a
+  *     truncated stream keeping its output; a stream that would inflate
+  *     past [[Codecs.MaxInflate]] adds no text (bomb guard); unfiltered
+  *     streams used as-is; unsupported filters skipped
   *   - text operators inside BT…ET blocks: `Tj`, `'`, `"`, `TJ` arrays,
   *     with literal-string escapes (\\n, \\t, octal, …) and hex strings;
   *     `Td`/`TD`/`T*`/`ET` emit line breaks
@@ -43,11 +43,11 @@ object PdfNode {
       if (end < 0) { i = -1 } // truncated file: stop scanning
       else {
         val dict = dictBefore(content, i)
-        val raw = java.util.Arrays.copyOfRange(content, bodyStart, end)
         val data =
-          if (dict.contains("/FlateDecode")) inflate(raw)
+          if (dict.contains("/FlateDecode"))
+            Codecs.inflateStream(content, bodyStart, end, Codecs.MaxInflate).map(_.bytes)
           else if (dict.contains("/Filter")) None // unsupported filter: skip
-          else Some(raw)
+          else Some(java.util.Arrays.copyOfRange(content, bodyStart, end))
         data.foreach { bytes =>
           val s = new String(bytes, StandardCharsets.ISO_8859_1)
           if (s.contains("BT")) blocks ++= textBlocks(s)
@@ -79,21 +79,6 @@ object PdfNode {
     val open = s.lastIndexOf("<<")
     if (open < 0) "" else s.substring(open)
   }
-
-  private def inflate(raw: Array[Byte]): Option[Array[Byte]] =
-    try {
-      val inf = new Inflater()
-      inf.setInput(raw)
-      val out = new ByteArrayOutputStream(raw.length * 4)
-      val buf = new Array[Byte](8192)
-      while (!inf.finished() && !inf.needsInput()) {
-        val n = inf.inflate(buf)
-        if (n > 0) out.write(buf, 0, n)
-        else if (n == 0 && inf.needsDictionary()) return None
-      }
-      inf.end()
-      Some(out.toByteArray)
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Extract one string per BT…ET block from a content stream. ONE scan
     * with string-literal awareness: `BT`/`ET`/`Td` are only operators when

@@ -2,7 +2,7 @@ package graft.doc
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
-import java.util.zip.{CRC32, Inflater}
+import java.util.zip.CRC32
 
 /** PNG textual-metadata extraction behind the [[Node]] seam (public
   * format: PNG, ISO/IEC 15948 — the tEXt / zTXt / iTXt chunks every
@@ -12,9 +12,11 @@ import java.util.zip.{CRC32, Inflater}
   *     bounds-checked; a corrupt length ends the walk, never throws)
   *   - IHDR width/height/bit-depth
   *   - `tEXt` (latin-1 keyword\u0000value), `zTXt` (deflate-compressed
-  *     value), `iTXt` (UTF-8, optionally deflate-compressed) — inflate
-  *     output capped (decompression-bomb guard, the [[ArchiveNode]]
-  *     discipline)
+  *     value), `iTXt` (UTF-8, optionally deflate-compressed)
+  *
+  * Bounds: compressed chunks inflate through [[Codecs.inflateStream]] and
+  * must finish within a 1 MiB text-chunk cap (decompression-bomb guard);
+  * anything else drops the chunk.
   *
   * Result: `{"png":{width,height,bit_depth,<keyword>:text…}}` — the
   * JSON-listing convention, selectors and `attr` from [[JsonNode]].
@@ -23,7 +25,7 @@ object PngNode {
 
   private val Signature =
     Array[Byte](0x89.toByte, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n')
-  private val MaxInflate = 1 << 20
+  private val MaxText = 1 << 20
 
   def parse(content: Array[Byte]): Node = {
     try {
@@ -94,7 +96,7 @@ object PngNode {
       // dropped rather than spliced.
       texts.foreach { case (k, v) =>
         if (k != "width" && k != "height" && k != "bit_depth")
-          sb.append(',').append(jstr(k)).append(':').append(jstr(v))
+          sb.append(',').append(JsonNode.quote(k)).append(':').append(JsonNode.quote(v))
       }
       sb.append("}}")
       JsonNode.parse(sb.result())
@@ -146,31 +148,6 @@ object PngNode {
     -1
   }
 
-  private def inflate(a: Array[Byte], from: Int, until: Int): Option[Array[Byte]] = {
-    val inf = new Inflater()
-    try {
-      inf.setInput(a, from, until - from)
-      val out = new ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      while (!inf.finished() && out.size() <= MaxInflate) {
-        val n = inf.inflate(buf)
-        // n==0 without finishing means no forward progress is possible:
-        // truncated stream (needsInput) OR a preset-dictionary stream
-        // (needsDictionary) — either way an untrusted chunk must not
-        // spin the task forever.
-        if (n == 0 && !inf.finished()) return None
-        out.write(buf, 0, n)
-      }
-      if (out.size() > MaxInflate) None else Some(out.toByteArray)
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally inf.end()
-  }
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  private def inflate(a: Array[Byte], from: Int, until: Int): Option[Array[Byte]] =
+    Codecs.inflateStream(a, from, until, MaxText).collect { case s if s.finished => s.bytes }
 }

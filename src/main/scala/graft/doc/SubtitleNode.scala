@@ -87,7 +87,7 @@ object SubtitleNode {
         sb.append("{\"idx\":").append(c.idx)
           .append(",\"start_ms\":").append(c.startMs)
           .append(",\"end_ms\":").append(c.endMs)
-          .append(",\"text\":").append(jstr(c.text)).append('}')
+          .append(",\"text\":").append(JsonNode.quote(c.text)).append('}')
       }
       sb.append("]}}")
       JsonNode.parse(sb.result())
@@ -126,11 +126,4 @@ object SubtitleNode {
     sb.result().getBytes(StandardCharsets.UTF_8)
   }
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

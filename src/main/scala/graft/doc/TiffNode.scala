@@ -140,7 +140,7 @@ object TiffNode {
         .append(",\"height\":").append(height)
         .append(",\"pages\":").append(pages)
       texts.foreach { case (k, v) =>
-        sb.append(',').append(jstr(k)).append(':').append(jstr(v))
+        sb.append(',').append(JsonNode.quote(k)).append(':').append(JsonNode.quote(v))
       }
       sb.append("}}")
       Some(sb.result())
@@ -219,11 +219,4 @@ object TiffNode {
     out.toByteArray
   }
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

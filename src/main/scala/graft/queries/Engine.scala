@@ -4,6 +4,7 @@ import graft.Tables
 import graft.actions.{Trace, Wget}
 import graft.api.GraftContext
 import graft.conf.GraftConf
+import graft.doc.JsonNode
 import graft.exec.FetchedRow
 import graft.llm.{Ann, Multimodal}
 
@@ -51,14 +52,6 @@ object EngineQ {
     p.toString
   }
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   // -------------------------------------------------------------------------
   // q31 — fetch + trace-dedup + JSON node extraction
   // -------------------------------------------------------------------------
@@ -80,7 +73,7 @@ object EngineQ {
       rows.foreach { r =>
         val id = r.getLong(0)
         val json =
-          s"""{"doc_id":$id,"lang":${jstr(r.getString(1))},"text":${jstr(r.getString(2))}}"""
+          s"""{"doc_id":$id,"lang":${JsonNode.quote(r.getString(1))},"text":${JsonNode.quote(r.getString(2))}}"""
         graft.agent.DocIO.writeText(fix, s"doc_$id.json", json)
       }
     }
@@ -819,7 +812,7 @@ object EngineQ {
     val server = stubServer()
     server.createContext("/echo", (ex: HttpExchange) => {
       val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      val resp = s"""{"method":${jstr(ex.getRequestMethod)},"body":${jstr(body)}}"""
+      val resp = s"""{"method":${JsonNode.quote(ex.getRequestMethod)},"body":${JsonNode.quote(body)}}"""
         .getBytes(StandardCharsets.UTF_8)
       ex.getResponseHeaders.set("Content-Type", "application/json")
       ex.sendResponseHeaders(200, resp.length)

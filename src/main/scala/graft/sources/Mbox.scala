@@ -85,10 +85,19 @@ object Mbox {
 
   /** Distributed segment reader: one row per message, constant memory per
     * task (the [[Warc.read]] listing + streaming-open shape).
+    *
+    * A glob `path` is expanded here and the source gets the concrete paths:
+    * given one path, the file source stats it as a possible metadata dir,
+    * and a literal glob makes that probe log a `FileNotFoundException`. A
+    * glob that matches nothing is passed through, so it fails as before.
     */
   def read(spark: SparkSession, path: String): Dataset[MboxMessage] = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(path)
+    val glob = new org.apache.hadoop.fs.Path(path)
+    val fs = glob.getFileSystem(spark.sessionState.newHadoopConf())
+    val paths = Option(fs.globStatus(glob)).map(_.toSeq.map(_.getPath.toString))
+      .filter(_.nonEmpty).getOrElse(Seq(path))
+    spark.read.format("binaryFile").load(paths: _*)
       .select(col("path"))
       .as[String]
       .mapPartitions { segs =>

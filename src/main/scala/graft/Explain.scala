@@ -2,8 +2,9 @@ package graft
 
 /** Plan-audit tool: `runMain graft.Explain q34_ann_ivf [sfDir]` prints the
   * formatted physical plan of any SparkEntry query plus red-flag checks
-  * (cartesian products, missing pushdown). Used per-round to keep plans
-  * scale-shaped, not just correct.
+  * (cartesian products, missing pushdown) and its exchanges: the hash
+  * exchanges in its own plan, and every exchange `below` the checkpoints
+  * it reads. Used per-round to keep plans scale-shaped, not just correct.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -29,8 +30,12 @@ object Explain {
         "SortMergeJoin"    -> plan.contains("SortMergeJoin"),
         "full-scan ReadSchema" -> false
       ).collect { case (f, true) => f }
+      // a frame checkpointed by graft.scale.Held keeps the plan it cut, its
+      // final adaptive plan: every exchange (hash, range, round-robin or
+      // broadcast) in it ran below the one scan the query's own plan shows
+      val below = graft.scale.Held.cutPlans(df).map(_.linesIterator.count(_.contains("Exchange "))).sum
       println(s"[flags] ${if (flags.isEmpty) "none" else flags.mkString(", ")}; " +
-        s"exchanges=${plan.linesIterator.count(_.contains("Exchange hashpartitioning"))}")
+        s"exchanges=${plan.linesIterator.count(_.contains("Exchange hashpartitioning"))} below=$below")
     }
     spark.stop()
   }

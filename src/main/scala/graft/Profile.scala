@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Per-query profiling harness (optimization-guide §1: measure first).
   *
@@ -8,9 +10,12 @@ import org.apache.spark.scheduler._
   * runs each named query (default: all) once untimed for warm-up, then
   * `GRAFT_PROFILE_RUNS` (default 3) timed runs, and prints per query:
   * median wall seconds, Spark job count, summed task time, shuffle
-  * read/write bytes, and spill — the numbers that separate "driver-latency
-  * bound" (many jobs, little task time) from "compute bound" (task time ≈
-  * wall × cores) from "shuffle bound". Master/core count follow the bench
+  * read/write bytes, spill, and the Janino compiles and compile
+  * milliseconds the run paid (deltas of Spark's codegen metrics: a class
+  * Spark's codegen cache still holds costs nothing) — the numbers that
+  * separate "driver-latency bound" (many jobs, little task time) from
+  * "compute bound" (task time ≈ wall × cores) from "shuffle bound" from
+  * "compile bound". Master/core count follow the bench
   * contract env vars so profiles are comparable to bench runs.
   */
 object Profile {
@@ -33,12 +38,18 @@ object Profile {
       var shufWriteB = 0L
       var spillB = 0L
       var inputB = 0L
+      // codegen counters are JVM-global; the run reads their deltas
+      private var compiles0 = 0L
+      private var compileNs0 = 0L
+      private def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       def reset(): Unit = { jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0
-        shufReadB = 0; shufWriteB = 0; spillB = 0; inputB = 0 }
+        shufReadB = 0; shufWriteB = 0; spillB = 0; inputB = 0
+        compiles0 = compiles; compileNs0 = CodeGenerator.compileTime }
       /** This run's tallies as the table's counter columns. */
       def columns: String =
         f"$jobs%5d $stages%6d $tasks%6d ${taskTimeMs / 1e3}%8.2f " +
-          f"${shufReadB / 1e6}%9.2f ${shufWriteB / 1e6}%9.2f ${spillB / 1e6}%9.2f ${inputB / 1e6}%8.2f"
+          f"${shufReadB / 1e6}%9.2f ${shufWriteB / 1e6}%9.2f ${spillB / 1e6}%9.2f ${inputB / 1e6}%8.2f " +
+          f"${compiles - compiles0}%8d ${(CodeGenerator.compileTime - compileNs0) / 1e6}%8.1f"
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages += 1
@@ -79,12 +90,16 @@ object Profile {
       })
     }
 
-    names.foreach { n => // warm-up
+    // warm-up; its compiles are the query's first-run codegen cost
+    val firstCompiles = names.map { n =>
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       try SparkEntry.queries(n)(spark, dir).count()
       catch { case e: Throwable => println(s"WARMUP FAIL $n: ${e.getMessage}") }
-    }
+      n -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    }.toMap
     println(f"${"query"}%-32s ${"wall_s"}%8s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s " +
-      f"${"task_s"}%8s ${"shufR_MB"}%9s ${"shufW_MB"}%9s ${"spill_MB"}%9s ${"in_MB"}%8s")
+      f"${"task_s"}%8s ${"shufR_MB"}%9s ${"shufW_MB"}%9s ${"spill_MB"}%9s ${"in_MB"}%8s " +
+      f"${"compiles"}%8s ${"cmp_ms"}%8s")
     // listener bus is async — poll until the tallies stop moving (the
     // JobCensus settle discipline; listenerBus itself is private[spark])
     def settle(): Unit = {
@@ -127,7 +142,7 @@ object Profile {
       if (ok.isEmpty) println(f"$n%-32s ${"ALL-RUNS-FAILED"}%8s")
       else {
         val (wall, columns, fix) = ok.sortBy(_._1).apply(ok.size / 2)
-        println(f"$n%-32s $wall%8.3f $columns" +
+        println(f"$n%-32s $wall%8.3f $columns  first_compiles=${firstCompiles(n)}" +
           (if (fix > 0.005) f"  fixture=$fix%.3f" else ""))
       }
     }

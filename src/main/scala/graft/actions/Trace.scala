@@ -2,6 +2,7 @@ package graft.actions
 
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
+import java.util.HexFormat
 
 /** An ordered, replayable program of [[Action]]s (reference
   * actions/Trace.scala:127-305). Pure data — composition, canonicalization
@@ -131,7 +132,10 @@ object Trace {
   private[graft] def digestBytes(b: Array[Byte]): String =
     hex(MessageDigest.getInstance("SHA-256").digest(b))
 
-  private def hex(bytes: Array[Byte]): String = bytes.map("%02x".format(_)).mkString
+  /** Lowercase hex through the JDK's table encoder: keys name the DFS
+    * cache directories, so this must stay byte-identical to `%02x`.
+    */
+  private[graft] def hex(bytes: Array[Byte]): String = HexFormat.of().formatHex(bytes)
 }
 
 /** A set of alternative traces — the fan-out unit that `fetch`/`explore`

@@ -53,7 +53,7 @@ object DownSampling {
       val md = java.security.MessageDigest.getInstance("MD5")
       val n = xs.size
       val keys = xs.indices.map { i =>
-        (md.digest(s"$seed:$n:$i".getBytes("UTF-8")).map("%02x".format(_)).mkString, i)
+        (graft.actions.Trace.hex(md.digest(s"$seed:$n:$i".getBytes("UTF-8"))), i)
       }
       val keep = keys.sorted.take(k).map(_._2).toSet
       xs.indices.collect { case i if keep(i) => xs(i) }

@@ -41,7 +41,7 @@ object EpubNode {
       new String(bytes, StandardCharsets.UTF_16LE)
     else new String(bytes, StandardCharsets.UTF_8)
 
-  private def isChapter(name: String): Boolean = {
+  private[doc] def isChapter(name: String): Boolean = {
     val lower = name.toLowerCase
     !lower.startsWith("meta-inf/") &&
       (lower.endsWith(".xhtml") || lower.endsWith(".html") || lower.endsWith(".htm"))

@@ -104,19 +104,22 @@ object Node {
       else if (m.contains("officedocument")) OfficeNode.parse(content)
       else if (m.contains("opendocument")) OdfNode.parse(content)
       else if (m.contains("application/zip")) {
-        // magic-sniffed zips: OOXML entry names first, ODF content.xml,
-        // EPUB chapters, generic archive listing last (r10 — plain zips
-        // used to fall to Unrecognisable)
-        val office = OfficeNode.parse(content)
-        if (office ne Unrecognisable) office
-        else {
-          val odf = OdfNode.parse(content)
-          if (odf ne Unrecognisable) odf
-          else {
-            val epub = EpubNode.parse(content)
-            if (epub ne Unrecognisable) epub else ArchiveNode.fromZip(content)
-          }
+        // magic-sniffed zips, in order: OOXML parts, ODF content.xml, EPUB
+        // chapters, the generic archive listing (r10 — plain zips used to
+        // fall to Unrecognisable). The central directory's names pick the
+        // one parser they point to, so a zip is walked once; when that
+        // parser finds nothing, or the directory is unreadable, the order
+        // runs as written
+        val parsers = Vector[Array[Byte] => Node](
+          OfficeNode.parse, OdfNode.parse, EpubNode.parse, ArchiveNode.fromZip(_))
+        val pick = Codecs.zipNames(content).map { names =>
+          if (names.exists(OfficeNode.isTextPart)) 0
+          else if (names.contains("content.xml")) 1
+          else if (names.exists(EpubNode.isChapter)) 2
+          else 3
         }
+        (pick.iterator ++ parsers.indices.iterator.filterNot(pick.contains))
+          .map(parsers(_)(content)).find(_ ne Unrecognisable).getOrElse(Unrecognisable)
       }
       else if (m.contains("x-tar")) ArchiveNode.fromTar(content)
       else if (m.contains("7z")) ArchiveNode.from7z(content)

@@ -303,7 +303,8 @@ object Charsets {
   *   - the one zlib/deflate loop ([[inflateStream]]) under the zlib unwrap,
   *     PDF `/FlateDecode` streams and PNG `zTXt`/`iTXt` chunks;
   *   - the one zip walk ([[zipWalk]]) under the OOXML, ODF and EPUB
-  *     parsers; [[ArchiveNode]] caps its zip and 7z members at
+  *     parsers, and the central-directory listing ([[zipNames]]) that picks
+  *     one of them for a plain zip; [[ArchiveNode]] caps its zip and 7z members at
   *     [[MaxInflate]] too.
   *
   * Each caller keeps its own acceptance rule (refusal or truncation); the
@@ -436,6 +437,23 @@ private[graft] object Codecs {
       case scala.util.control.NonFatal(_) => None
     } finally inf.end()
   }
+
+  /** The entry names in a zip's central directory, read without inflating
+    * any entry; None when the directory cannot be read (a truncated or
+    * stream-only zip), so a caller falls back to walking the entries.
+    */
+  def zipNames(content: Array[Byte]): Option[Seq[String]] =
+    try {
+      val zf = org.apache.commons.compress.archivers.zip.ZipFile.builder()
+        .setSeekableByteChannel(
+          new org.apache.commons.compress.utils.SeekableInMemoryByteChannel(content)).get()
+      try {
+        val names = Vector.newBuilder[String]
+        val es = zf.getEntries
+        while (es.hasMoreElements) names += es.nextElement().getName
+        Some(names.result())
+      } finally zf.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The one capped zip walk: visits entries in zip order and hands each
     * entry `wanted` accepts to `f` — its name and its first `entryCap`

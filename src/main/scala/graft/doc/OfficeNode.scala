@@ -51,7 +51,7 @@ object OfficeNode {
     if (bs.isEmpty) Node.Unrecognisable else new BlockRoot(bs)
   }
 
-  private def isTextPart(name: String): Boolean =
+  private[doc] def isTextPart(name: String): Boolean =
     name == "word/document.xml" || name == "word/footnotes.xml" ||
       name == "word/endnotes.xml" || name == "xl/sharedStrings.xml" ||
       (name.startsWith("ppt/slides/slide") && name.endsWith(".xml"))

@@ -140,28 +140,30 @@ object Corpus {
       .orderBy(col("rank"))
   }
 
-  /** Paragraph-granular dedup (q82) over any (doc_id, text) frame. */
+  /** Paragraph-granular dedup (q82) over a (doc_id, text) frame keyed by
+    * doc_id: each 20-token chunk is kept in the doc with the smallest
+    * (doc_id, position) that holds it. One chunk pass: the keeper flag is a
+    * window min over the chunk hash, and one aggregate per doc, planned on
+    * the range exchange its `orderBy` needs anyway, yields the counts and
+    * the clean text. `posexplode_outer` gives a null text its one
+    * placeholder row, so every doc keeps its output row.
+    */
   def paragraphDedup(docs: DataFrame): DataFrame = {
-    val base = docs.select(col("doc_id"), split(col("text"), " ").as("ts"))
-    val chunks = base.select(col("doc_id"),
-      posexplode(expr(
-        """transform(sequence(0, cast((size(ts) + 19) div 20 as int) - 1),
-          |  i -> array_join(slice(ts, i * 20 + 1, 20), ' '))""".stripMargin))
-        .as(Seq("idx", "chunk")))
-      .withColumn("gh", md5(col("chunk")))
-    val keepers = chunks.groupBy(col("gh"))
-      .agg(min(col("doc_id") * 1000000 + col("idx")).as("keeper"))
-    val kept = chunks.join(keepers.hint("shuffle_hash"), "gh")
-      .filter(col("doc_id") * 1000000 + col("idx") === col("keeper"))
-    val re = kept.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_kept"),
-        expr("array_join(transform(array_sort(collect_list(struct(idx, chunk))), s -> s.chunk), ' ')")
-          .as("clean_text"))
-    val nt = base.select(col("doc_id"), expr("(size(ts) + 19) div 20").as("n_chunks"))
-    nt.join(re.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_chunks"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"))
+    val chunks = docs.select(col("doc_id"), split(col("text"), " ").as("ts"))
+      .select(col("doc_id"), expr("(size(ts) + 19) div 20").as("n_chunks"),
+        posexplode_outer(expr(
+          """transform(sequence(0, cast((size(ts) + 19) div 20 as int) - 1),
+            |  i -> array_join(slice(ts, i * 20 + 1, 20), ' '))""".stripMargin))
+          .as(Seq("idx", "chunk")))
+      .withColumn("pos", col("doc_id") * 1000000 + col("idx"))
+    chunks
+      .withColumn("kept", col("pos") === min(col("pos")).over(Window.partitionBy(md5(col("chunk")))))
+      .repartitionByRange(col("doc_id"))
+      .groupBy(col("doc_id"))
+      .agg(max(col("n_chunks")).as("n_chunks"),
+        count_if(col("kept")).as("n_kept"),
+        expr("array_join(transform(array_sort(collect_list(if(kept, struct(idx, chunk), null))), " +
+          "s -> s.chunk), ' ')").as("clean_text"))
       .orderBy(col("doc_id"))
   }
 

@@ -43,18 +43,19 @@ object MinHash {
       .filter(col("jaccard") >= 0.8)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
 
-  /** LSH band rows (doc_id, band_id, band_key) from a signature frame. The
-    * key is a null-propagating `concat`, so a null signature (null text)
-    * gets null band keys, which never pair ([[graft.scale.Salt]]'s null-key
-    * contract) — `concat_ws` would give every null doc the key "" in all
-    * three bands and pair each with every other.
+  /** LSH band rows (doc_id, carry…, band_id, band_key) from a signature
+    * frame. The key is a null-propagating `concat`, so a null signature
+    * (null text) gets null band keys, which never pair ([[graft.scale.Salt]]'s
+    * null-key contract) — `concat_ws` would give every null doc the key ""
+    * in all three bands and pair each with every other.
     */
-  private def bandsOf(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"), explode(array(
+  private def bandsOf(sigs: DataFrame, carry: String*): DataFrame =
+    sigs.select(Seq(col("doc_id")) ++ carry.map(col) :+ explode(array(
       struct(lit(1).as("band_id"), concat(col("sig.s1"), lit("|"), col("sig.s2")).as("band_key")),
       struct(lit(2).as("band_id"), concat(col("sig.s3"), lit("|"), col("sig.s4")).as("band_key")),
       struct(lit(3).as("band_id"), concat(col("sig.s5"), lit("|"), col("sig.s6")).as("band_key"))
-    )).as("b")).select(col("doc_id"), col("b.band_id"), col("b.band_key"))
+    )).as("b"): _*).select(Seq(col("doc_id")) ++ carry.map(col) ++
+      Seq(col("b.band_id"), col("b.band_key")): _*)
 
   /** The PERSISTABLE near-dup index of a corpus: its LSH band table — 3
     * short hash rows per doc, no text, no shingle sets. Write it out
@@ -160,19 +161,22 @@ object MinHash {
     */
   def fuzzyNearDupPairs(docs: DataFrame, prefixLen: Int = 256,
                         relNum: Long = 1, relDen: Long = 5): DataFrame = {
-    // sig frame materialized once (eager localCheckpoint): both sides of
+    // One frame, materialized once (eager localCheckpoint), holds per doc
+    // the 6 band slices and the text prefix the verify reads: both sides of
     // the band self-join read executor-held blocks instead of recomputing
-    // the signature pass. Project the struct down to the 6 band slices
-    // FIRST (r21): localCheckpoint materializes full rows eagerly — no
-    // Catalyst pruning reaches past it — and q76's verify stage reads
-    // prefixes, never the per-doc shingle hash SET that dominates the
-    // signature struct's bytes (n_grams longs/doc vs 6 band slices).
-    val bandSig = sigOf(docs).select(col("doc_id"), struct(
-      col("sig.s1").as("s1"), col("sig.s2").as("s2"), col("sig.s3").as("s3"),
-      col("sig.s4").as("s4"), col("sig.s5").as("s5"), col("sig.s6").as("s6")).as("sig"))
+    // the signature pass, and the prefixes ride the candidate join as
+    // carried columns, so no join back to the docs follows it. The struct
+    // is projected down to the slices FIRST (r21): localCheckpoint
+    // materializes full rows eagerly — no Catalyst pruning reaches past
+    // it — and the per-doc shingle hash SET dominates the signature's bytes.
+    val sigs = docs.select(col("doc_id"), graft.functions.shingle_signature(col("text")).as("sig"),
+        substring(col("text"), 1, prefixLen).as("s"))
+      .select(col("doc_id"), struct(
+        col("sig.s1").as("s1"), col("sig.s2").as("s2"), col("sig.s3").as("s3"),
+        col("sig.s4").as("s4"), col("sig.s5").as("s5"), col("sig.s6").as("s6")).as("sig"), col("s"))
     val held = new Held(docs.sparkSession.sparkContext)
-    val cand = Salt.candidates(bandsOf(held.frame(bandSig)), BandKeys, "doc_id", lit(true))
-    val pref = docs.select(col("doc_id"), substring(col("text"), 1, prefixLen).as("s"))
+    val cand = Salt.candidates(bandsOf(held.frame(sigs), "s"), BandKeys, "doc_id", lit(true),
+      carry = Seq("s"))
     // Verify-cost control, exact-result-preserving: (a) a length-difference
     // pregate (lev ≥ |len_a − len_b|, so a pair failing it can never pass
     // the accept test) kills dissimilar candidates for the price of two
@@ -183,15 +187,13 @@ object MinHash {
     // cut the sf0.1 verify stage ~10× with a bit-identical result set.
     val maxAccept = (prefixLen.toLong * relNum / relDen).toInt
     // Two r21 plan fixes, found by reading the executed plan (guide §7.2):
-    // (a) Catalyst pushed the `lev` accept-filter INTO the prefix join's
-    //     condition, so the O(prefixLen·threshold) DP ran inside the join
-    //     stage — evaluated per candidate row (twice, condition + output
-    //     column) and serialized on the ONE task AQE's byte-sized
-    //     coalescing gave that stage (2.4 s while 31 cores idled). The
-    //     localCheckpoint is a materialization barrier the filter cannot
-    //     be pushed below; it carries only pregate-surviving (ids, two
-    //     ≤prefixLen prefixes) rows — the same pair-scale class the q53
-    //     verify already materializes.
+    // (a) Catalyst pushes a deterministic `lev` accept-filter down into the
+    //     candidate stage, where the O(prefixLen·threshold) DP ran per
+    //     candidate row (twice, condition + output column) on the ONE task
+    //     AQE's byte-sized coalescing gave that stage (2.4 s while 31 cores
+    //     idled). The localCheckpoint is a materialization barrier the
+    //     filter cannot be pushed below; it carries only pregate-surviving
+    //     (ids, two ≤prefixLen prefixes) rows.
     // (b) The DP stage itself is CPU-dense, so cores — not bytes — are the
     //     right task denominator (guide §2.5): a pinned round-robin
     //     redistribution (deterministic under retries,
@@ -202,17 +204,14 @@ object MinHash {
     // checkpoint taken AFTER the pinned repartition, the materialized
     // LogicalRDD itself carries defaultParallelism partitions and the
     // pushed-down accept filter (with its DP) runs one task per block.
-    val pregated = cand
-      .hint("shuffle_hash")
-      .join(pref.select(col("doc_id").as("id_a"), col("s").as("sa")), "id_a")
-      .join(pref.select(col("doc_id").as("id_b"), col("s").as("sb")), "id_b")
-      .withColumn("mx", greatest(length(col("sa")), length(col("sb"))).cast("long"))
+    val pregated = held.frame(cand
+      .select(col("id_a"), col("id_b"), col("s_a").as("sa"), col("s_b").as("sb"),
+        greatest(length(col("s_a")), length(col("s_b"))).cast("long").as("mx"))
       .filter(col("mx") > 0 &&
         abs(length(col("sa")) - length(col("sb"))).cast("long") * relDen <=
           col("mx") * relNum)
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint()
-    held.release() // the pregated checkpoint no longer reads the signatures'
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism))
+    // the pregated frame superseded the signatures', which are released
     pregated
       .withColumn("lev", levenshtein(col("sa"), col("sb"), maxAccept).cast("long"))
       .filter(col("lev") >= 0 && col("lev") * relDen <= col("mx") * relNum)

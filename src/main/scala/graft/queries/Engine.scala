@@ -1176,13 +1176,13 @@ object EngineQ {
     // hot-cell cap at 4x the mean cell size: near-uniform corpora (this one)
     // are untouched — the oracle joins on cell_id alone — while a skewed cell
     // gets split instead of exploding the join
-    val out = Ann.nearDupPairsBySkew(corpus, skewFactor = 4.0)
-      .orderBy(col("cosine").desc, col("id_a"), col("id_b"))
-      .limit(50)
-      // materialize (top-50 only, executor-held blocks cleaned by the
-      // ContextCleaner once unreferenced) so the input persist can be
-      // released here instead of leaking across queries
-      .localCheckpoint()
+    // materialize (top-50 only, executor-held blocks cleaned by the
+    // ContextCleaner once unreferenced) so the input persist can be
+    // released here instead of leaking across queries
+    val out = new graft.scale.Held(spark.sparkContext).frame(
+      Ann.nearDupPairsBySkew(corpus, skewFactor = 4.0)
+        .orderBy(col("cosine").desc, col("id_a"), col("id_b"))
+        .limit(50))
     corpus.unpersist(false)
     out
   }

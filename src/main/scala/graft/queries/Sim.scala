@@ -243,11 +243,10 @@ object SimQ {
   def q45SimhashNearDup(spark: SparkSession, dir: String): DataFrame = {
     val s = simhash60(Tables.documents(spark, dir).filter(col("doc_id") % 5 === 0))
       .persist() // both sides of the block self-join read it
-    val out = graft.llm.Hamming.nearDupPairs(s, "doc_id", "sim",
-        nBits = 60, maxHamming = 3)
-      .orderBy(col("hamming"), col("id_a"), col("id_b"))
-      .limit(100)
-      .localCheckpoint() // release the persist before returning
+    val out = new graft.scale.Held(spark.sparkContext).frame( // release the persist before returning
+      graft.llm.Hamming.nearDupPairs(s, "doc_id", "sim", nBits = 60, maxHamming = 3)
+        .orderBy(col("hamming"), col("id_a"), col("id_b"))
+        .limit(100))
     s.unpersist(false)
     out
   }
@@ -515,9 +514,8 @@ object SimQ {
     * are corrupted. The accept test is `5·lev ≤ max(len)` (rel ≤ 0.2) —
     * pure integer compare, engine-exact. Scale shape: the O(len²) DP is
     * bounded by the prefix cap (≤ 256² cells) and runs only on banded
-    * candidates, never all pairs; texts join to candidates via
-    * shuffle-hash, prefixes only (full text never rides the pair
-    * shuffle).
+    * candidates, never all pairs; text prefixes ride the candidate join
+    * as carried columns (full text never rides the pair shuffle).
     */
   def q76FuzzyDedup(spark: SparkSession, dir: String): DataFrame =
     graft.llm.MinHash.fuzzyNearDupPairs(Tables.documents(spark, dir))

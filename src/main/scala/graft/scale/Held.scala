@@ -5,7 +5,9 @@ import scala.reflect.ClassTag
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.storage.StorageLevel
 
 /** The one lineage cut under every iterative loop ([[GraphLoop]]'s rounds,
@@ -19,7 +21,9 @@ import org.apache.spark.storage.StorageLevel
   *    of recomputing), else `localCheckpoint`.
   *  - [[frame]] takes an eager `localCheckpoint` of a DataFrame and holds
   *    the checkpointed RDD under its plan: `Dataset.unpersist` frees
-  *    nothing on a checkpointed frame, unpersisting that RDD does.
+  *    nothing on a checkpointed frame, unpersisting that RDD does. The
+  *    frame keeps the executed plan it cut ([[Held.cutPlans]]), so a plan
+  *    audit sees the work below the checkpoint.
   *  - [[release]] frees what is held.
   *
   * Driver-side only; tallies and closures never capture the instance.
@@ -55,7 +59,9 @@ final class Held(sc: SparkContext, dir: Option[String] = None) {
   /** `df` eagerly localCheckpointed; its checkpoint supersedes the held one. */
   def frame(df: DataFrame): DataFrame = {
     val out = df.localCheckpoint(eager = true)
-    hold(out.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.orNull)
+    val cut = out.queryExecution.logical.collectFirst { case r: LogicalRDD => r }.get
+    cut.setTagValue(Held.CutPlan, Held.rendered(df.queryExecution))
+    hold(cut.rdd)
     out
   }
 
@@ -66,4 +72,26 @@ final class Held(sc: SparkContext, dir: Option[String] = None) {
     if (held != null) held.unpersist(blocking = false)
     held = rdd
   }
+}
+
+object Held {
+
+  /** The executed plan a [[Held.frame]] cut, kept rendered: the live plan
+    * would pin the shuffles below the checkpoint for the frame's lifetime.
+    */
+  private val CutPlan = TreeNodeTag[String]("graft.held.cutPlan")
+
+  /** The physical plan `qe` runs, rendered: adaptive execution's final
+    * plan once an action ran it, else its initial plan.
+    */
+  def rendered(qe: QueryExecution): String = qe.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+    case p => p.toString
+  }
+
+  /** The executed plans cut below `df`: one per [[Held.frame]] checkpoint
+    * its plan reads directly, in plan order.
+    */
+  def cutPlans(df: DataFrame): Seq[String] =
+    df.queryExecution.analyzed.collect { case r: LogicalRDD => r.getTagValue(CutPlan) }.flatten
 }

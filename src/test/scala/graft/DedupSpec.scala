@@ -173,6 +173,61 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  /** Whole-stage codegen stages and exchanges (shuffle and broadcast) over
+    * the final plans of every SQL execution `action` runs, each plan read
+    * after it ran. Plan counts are deterministic where the JVM-global
+    * compile counter is not: earlier specs warm Spark's codegen cache.
+    */
+  private def planShape(action: => Unit): (Int, Int) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             d: Long): Unit = plans.add(graft.scale.Held.rendered(qe))
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      action
+      // the listener bus is asynchronous: wait until the plan count settles
+      var last = -1
+      val deadline = System.currentTimeMillis() + 15000
+      while (plans.size != last && System.currentTimeMillis() < deadline) {
+        last = plans.size; Thread.sleep(500)
+      }
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val ps = plans.asScala.toSeq
+    (ps.map(p => "\\*\\((\\d+)\\)".r.findAllMatchIn(p).map(_.group(1)).toSet.size).sum,
+      ps.map(_.linesIterator.count(_.matches("^[\\s:|+-]*(Broadcast)?Exchange .*"))).sum)
+  }
+
+  test("corpus operators' plan shape: codegen stages and exchanges pinned") {
+    val s = spark
+    import s.implicits._
+    val rnd = new Random(7)
+    val words = (0 until 300).map(i => s"w$i")
+    val base = (0 until 40).map(_ => Seq.fill(30 + rnd.nextInt(40))(words(rnd.nextInt(300))))
+    // near-duplicates prepend one word; every fifth doc repeats a paragraph
+    val texts = base ++ base.take(10).map("x" +: _) ++ base.take(8).map(base.head.take(20) ++ _)
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t.mkString(" "), s"site${i % 3}") }
+      .toDF("doc_id", "text", "source")
+    val shapes = Seq(
+      "paragraphDedup" -> (() => graft.llm.Corpus.paragraphDedup(docs.select("doc_id", "text"))),
+      "fuzzyNearDupPairs" -> (() =>
+        graft.llm.MinHash.fuzzyNearDupPairs(docs.select("doc_id", "text"))),
+      "runningSum" -> (() => graft.scale.PrefixSum.runningSum(
+        docs.withColumn("hkey", md5(col("doc_id").cast("string"))).withColumn("g", lit("all"))
+          .withColumn("n", length(col("text")).cast("long")), "g", "n")),
+      "domainCap" -> (() => graft.llm.Corpus.domainCap(docs.select("doc_id", "source"), 5))
+    ).map { case (name, op) => name -> planShape(op().collect()) }.toMap
+    info(shapes.toSeq.sortBy(_._1).map { case (n, (w, x)) => s"$n: $w codegen stages, $x exchanges" }
+      .mkString("; "))
+    assert(shapes == Map(
+      "paragraphDedup" -> (4, 2), "fuzzyNearDupPairs" -> (4, 3),
+      "runningSum" -> (2, 1), "domainCap" -> (3, 2)))
+  }
+
   test("star loop: a second run is identical and leaves only its output's blocks") {
     val chain = (0L until 255L).map(i => (i, i + 1))
     val outs = (1 to 2).map { _ =>

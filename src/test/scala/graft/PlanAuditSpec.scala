@@ -76,4 +76,14 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(s73.contains("BroadcastHashJoin"),
       s"q73 stopped broadcasting the bounded bucket table:\n$s73")
   }
+
+  test("a Held frame keeps the plan it cut: the exchanges below a checkpoint stay visible") {
+    Seq("q36_embed_neardup", "q45_simhash_neardup").foreach { q =>
+      val df = graft.SparkEntry.queries(q)(spark, dir)
+      val below = graft.scale.Held.cutPlans(df)
+      assert(below.size == 1, s"$q: ${below.size} cut plans")
+      assert(below.head.linesIterator.exists(_.contains("Exchange ")),
+        s"$q: no exchange below its checkpoint:\n${below.head}")
+    }
+  }
 }

@@ -45,6 +45,14 @@ class TraceSpec extends AnyFunSuite {
     assert(d.cacheKey != e.cacheKey)
   }
 
+  test("golden keys: a fixed Wget trace and a byte digest keep their hex") {
+    // keys name the DFS cache directories: an encoder change must not move them
+    assert(Trace.of(Wget("https://example.com/golden")).cacheKey ==
+      "7c0cf3be3b0af5c101e9306d716875639a10dd259d8eb092eafbc5d39447e226")
+    assert(Trace.digestBytes((0 until 256).map(_.toByte).toArray) ==
+      "40aff2e9d2d8922e47afd4648e6967497158785fbd1da870e7110266bf944880")
+  }
+
   test("Loop and LocalRetry canonicalize their bodies; retry count is not identity") {
     val l1 = Trace.of(LocalRetry(Trace.of(Wget("file:/x", 100)), retries = 1))
     val l2 = Trace.of(LocalRetry(Trace.of(Wget("file:/x", 999)), retries = 7))

@@ -32,8 +32,10 @@ object Explain {
       ).collect { case (f, true) => f }
       // a frame checkpointed by graft.scale.Held keeps the plan it cut, its
       // final adaptive plan: every exchange (hash, range, round-robin or
-      // broadcast) in it ran below the one scan the query's own plan shows
-      val below = graft.scale.Held.cutPlans(df).map(_.linesIterator.count(_.contains("Exchange "))).sum
+      // broadcast) in it ran below the one scan the query's own plan shows;
+      // a ReusedExchange ran no shuffle of its own and is not counted
+      val below = graft.scale.Held.cutPlans(df).map(_.linesIterator
+        .count(l => l.contains("Exchange ") && !l.contains("ReusedExchange"))).sum
       println(s"[flags] ${if (flags.isEmpty) "none" else flags.mkString(", ")}; " +
         s"exchanges=${plan.linesIterator.count(_.contains("Exchange hashpartitioning"))} below=$below")
     }

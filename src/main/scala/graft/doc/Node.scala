@@ -109,7 +109,8 @@ object Node {
         // fall to Unrecognisable). The central directory's names pick the
         // one parser they point to, so a zip is walked once; when that
         // parser finds nothing, or the directory is unreadable, the order
-        // runs as written
+        // runs as written. The directory is trusted: one whose names
+        // disagree with the entries' own headers still picks by its names
         val parsers = Vector[Array[Byte] => Node](
           OfficeNode.parse, OdfNode.parse, EpubNode.parse, ArchiveNode.fromZip(_))
         val pick = Codecs.zipNames(content).map { names =>

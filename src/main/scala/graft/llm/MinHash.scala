@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.scale.{Held, Salt}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** MinHash-LSH near-duplicate detection over (doc_id, text) frames — the
@@ -43,19 +43,34 @@ object MinHash {
       .filter(col("jaccard") >= 0.8)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
 
-  /** LSH band rows (doc_id, carry…, band_id, band_key) from a signature
-    * frame. The key is a null-propagating `concat`, so a null signature
-    * (null text) gets null band keys, which never pair ([[graft.scale.Salt]]'s
-    * null-key contract) — `concat_ws` would give every null doc the key ""
-    * in all three bands and pair each with every other.
+  /** A signature's three LSH band keys, in band order. Each is a
+    * null-propagating `concat`, so a null signature (null text) gets null
+    * band keys, which never pair ([[graft.scale.Salt]]'s null-key contract)
+    * — `concat_ws` would give every null doc the key "" in all three bands
+    * and pair each with every other.
     */
-  private def bandsOf(sigs: DataFrame, carry: String*): DataFrame =
-    sigs.select(Seq(col("doc_id")) ++ carry.map(col) :+ explode(array(
-      struct(lit(1).as("band_id"), concat(col("sig.s1"), lit("|"), col("sig.s2")).as("band_key")),
-      struct(lit(2).as("band_id"), concat(col("sig.s3"), lit("|"), col("sig.s4")).as("band_key")),
-      struct(lit(3).as("band_id"), concat(col("sig.s5"), lit("|"), col("sig.s6")).as("band_key"))
-    )).as("b"): _*).select(Seq(col("doc_id")) ++ carry.map(col) ++
-      Seq(col("b.band_id"), col("b.band_key")): _*)
+  private val bandKeys: Column = array(
+    concat(col("sig.s1"), lit("|"), col("sig.s2")),
+    concat(col("sig.s3"), lit("|"), col("sig.s4")),
+    concat(col("sig.s5"), lit("|"), col("sig.s6")))
+
+  /** The first band two docs share, in a meeting of
+    * [[graft.scale.Salt.candidates]] over band rows that carry their doc's
+    * band keys as `ks`: a pair meeting in band k shares it, so the first
+    * equal key is at k or before.
+    */
+  private[graft] val firstSharedBand: Column =
+    when(col("ks_x")(0) === col("ks_y")(0), 1)
+      .when(col("ks_x")(1) === col("ks_y")(1), 2).otherwise(3)
+
+  /** LSH band rows (doc_id, carry…, band_id, band_key) from a signature
+    * frame: one row per band, band_id 1 to 3.
+    */
+  private def bandsOf(sigs: DataFrame, carry: String*): DataFrame = {
+    val kept = col("doc_id") +: carry.map(col)
+    sigs.select(kept :+ posexplode(bandKeys).as(Seq("b", "band_key")): _*)
+      .select(kept ++ Seq((col("b") + 1).as("band_id"), col("band_key")): _*)
+  }
 
   /** The PERSISTABLE near-dup index of a corpus: its LSH band table — 3
     * short hash rows per doc, no text, no shingle sets. Write it out
@@ -164,19 +179,23 @@ object MinHash {
     // One frame, materialized once (eager localCheckpoint), holds per doc
     // the 6 band slices and the text prefix the verify reads: both sides of
     // the band self-join read executor-held blocks instead of recomputing
-    // the signature pass, and the prefixes ride the candidate join as
-    // carried columns, so no join back to the docs follows it. The struct
-    // is projected down to the slices FIRST (r21): localCheckpoint
-    // materializes full rows eagerly — no Catalyst pruning reaches past
-    // it — and the per-doc shingle hash SET dominates the signature's bytes.
+    // the signature pass, and the prefixes ride the band join as carried
+    // columns, so no join back to the docs follows it. Each band row also
+    // carries its doc's three band keys, so a pair sharing several bands is
+    // kept at its first shared band alone, with no distinct to shuffle the
+    // prefixes once more. The struct is projected down to the slices FIRST
+    // (r21): localCheckpoint materializes full rows eagerly — no Catalyst
+    // pruning reaches past it — and the per-doc shingle hash SET dominates
+    // the signature's bytes.
     val sigs = docs.select(col("doc_id"), graft.functions.shingle_signature(col("text")).as("sig"),
         substring(col("text"), 1, prefixLen).as("s"))
       .select(col("doc_id"), struct(
         col("sig.s1").as("s1"), col("sig.s2").as("s2"), col("sig.s3").as("s3"),
         col("sig.s4").as("s4"), col("sig.s5").as("s5"), col("sig.s6").as("s6")).as("sig"), col("s"))
     val held = new Held(docs.sparkSession.sparkContext)
-    val cand = Salt.candidates(bandsOf(held.frame(sigs), "s"), BandKeys, "doc_id", lit(true),
-      carry = Seq("s"))
+    val cand = Salt.candidates(bandsOf(held.frame(sigs).withColumn("ks", bandKeys), "ks", "s"),
+      BandKeys, "doc_id", lit(true), carry = Seq("s", "ks"),
+      once = Some(col("band_id") === firstSharedBand))
     // Verify-cost control, exact-result-preserving: (a) a length-difference
     // pregate (lev ≥ |len_a − len_b|, so a pair failing it can never pass
     // the accept test) kills dissimilar candidates for the price of two

@@ -63,12 +63,16 @@ object Salt {
     * target `targetBucket`. `isLeft` picks the rows that DRIVE the join:
     * `lit(true)` for a self-join, the arrivals flag for an incremental one
     * (every candidate then touches >= 1 left row). A pair sharing several
-    * keys counts once. Each `carry` column c, a function of the id, rides
-    * along as `c_a` and `c_b`, so a verify step needs no join back to the
-    * rows.
+    * keys counts once: a `distinct` drops its other meetings, unless the
+    * caller names the one meeting to keep with `once`, a predicate over the
+    * keys and the two rows' carried columns that holds for exactly one of a
+    * pair's shared keys. Each `carry` column c, a function of the id, rides
+    * along as `c_x` and `c_y` (the two rows of a meeting) and leaves as
+    * `c_a` and `c_b`, so a verify step needs no join back to the rows.
     */
   def candidates(df: DataFrame, keys: Seq[String], id: String, isLeft: Column,
-                 targetBucket: Long = TargetBucket, carry: Seq[String] = Nil): DataFrame = {
+                 targetBucket: Long = TargetBucket, carry: Seq[String] = Nil,
+                 once: Option[Column] = None): DataFrame = {
     val b = salt(df.withColumn("is_left", isLeft), keys, col(id), rows(targetBucket))
     val x = b.filter(col("is_left"))
       .select(keys.map(col) ++ Seq(col("salt"), col(id).as("ida")) ++
@@ -76,14 +80,15 @@ object Salt {
     val swap = col("ida") > col("idb")
     // when BOTH rows are left, keep only the meeting driven by the smaller
     // id: exactly one surviving row per (pair, key)
-    join(x, b, keys)(Seq(col(id).as("idb"), col("is_left").as("left_b")) ++
+    val pairs = join(x, b, keys)(Seq(col(id).as("idb"), col("is_left").as("left_b")) ++
         carry.map(c => col(c).as(s"${c}_y")): _*)
-      .filter(col("ida") =!= col("idb") && (col("ida") < col("idb") || !col("left_b")))
+      .filter(col("ida") =!= col("idb") && (col("ida") < col("idb") || !col("left_b")) &&
+        once.getOrElse(lit(true)))
       .select(Seq(least(col("ida"), col("idb")).as("id_a"),
         greatest(col("ida"), col("idb")).as("id_b")) ++ carry.flatMap(c => Seq(
           when(swap, col(s"${c}_y")).otherwise(col(s"${c}_x")).as(s"${c}_a"),
           when(swap, col(s"${c}_x")).otherwise(col(s"${c}_y")).as(s"${c}_b"))): _*)
-      .distinct()
+    if (once.isEmpty) pairs.distinct() else pairs
   }
 
   /** Equi-join a skewed `fact` with a small `dim` on `key`: fact rows salt

@@ -175,10 +175,14 @@ class DedupSpec extends AnyFunSuite {
 
   /** Whole-stage codegen stages and exchanges (shuffle and broadcast) over
     * the final plans of every SQL execution `action` runs, each plan read
-    * after it ran. Plan counts are deterministic where the JVM-global
-    * compile counter is not: earlier specs warm Spark's codegen cache.
+    * after it ran, and the jobs `action` runs: a job outside any SQL
+    * execution (runningSum's map-only fold over `queryExecution.toRdd`)
+    * adds no plan, so only the job count sees it. Plan counts are
+    * deterministic where the JVM-global compile counter is not: earlier
+    * specs warm Spark's codegen cache.
     */
-  private def planShape(action: => Unit): (Int, Int) = {
+  private def planShape(name: String)(action: => Unit): (Int, Int, Int) = {
+    val sc = spark.sparkContext
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
@@ -188,7 +192,8 @@ class DedupSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      action
+      sc.setJobGroup(name, name, interruptOnCancel = false)
+      try action finally sc.clearJobGroup()
       // the listener bus is asynchronous: wait until the plan count settles
       var last = -1
       val deadline = System.currentTimeMillis() + 15000
@@ -199,10 +204,11 @@ class DedupSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val ps = plans.asScala.toSeq
     (ps.map(p => "\\*\\((\\d+)\\)".r.findAllMatchIn(p).map(_.group(1)).toSet.size).sum,
-      ps.map(_.linesIterator.count(_.matches("^[\\s:|+-]*(Broadcast)?Exchange .*"))).sum)
+      ps.map(_.linesIterator.count(_.matches("^[\\s:|+-]*(Broadcast)?Exchange .*"))).sum,
+      JobCensus.settledJobCount(sc, name))
   }
 
-  test("corpus operators' plan shape: codegen stages and exchanges pinned") {
+  test("corpus operators' plan shape: codegen stages, exchanges and jobs pinned") {
     val s = spark
     import s.implicits._
     val rnd = new Random(7)
@@ -220,12 +226,12 @@ class DedupSpec extends AnyFunSuite {
         docs.withColumn("hkey", md5(col("doc_id").cast("string"))).withColumn("g", lit("all"))
           .withColumn("n", length(col("text")).cast("long")), "g", "n")),
       "domainCap" -> (() => graft.llm.Corpus.domainCap(docs.select("doc_id", "source"), 5))
-    ).map { case (name, op) => name -> planShape(op().collect()) }.toMap
-    info(shapes.toSeq.sortBy(_._1).map { case (n, (w, x)) => s"$n: $w codegen stages, $x exchanges" }
-      .mkString("; "))
+    ).map { case (name, op) => name -> planShape(s"shape-$name")(op().collect()) }.toMap
+    info(shapes.toSeq.sortBy(_._1).map { case (n, (w, x, j)) =>
+      s"$n: $w codegen stages, $x exchanges, $j jobs" }.mkString("; "))
     assert(shapes == Map(
-      "paragraphDedup" -> (4, 2), "fuzzyNearDupPairs" -> (4, 3),
-      "runningSum" -> (2, 1), "domainCap" -> (3, 2)))
+      "paragraphDedup" -> (4, 2, 4), "fuzzyNearDupPairs" -> (3, 2, 7),
+      "runningSum" -> (2, 1, 3), "domainCap" -> (3, 2, 4)))
   }
 
   test("star loop: a second run is identical and leaves only its output's blocks") {

@@ -328,6 +328,32 @@ class LlmSpec extends AnyFunSuite {
     assertEdgeSizing(spark0)
   }
 
+  test("minhash salt guard: keeping each pair's first shared band == the distinct; carried columns follow their ids") {
+    val spark0 = spark
+    import spark0.implicits._
+    // 150 docs, three bands each: band 1 is one mega-band for docs < 120
+    // (split by the test target of 16), band 2 is shared by every tenth doc
+    // and band 3 by every seventh, so pairs share one, two or all three
+    // bands; doc 999 has null keys (a null signature) and never pairs
+    val keyed = (0L until 150L).map { i =>
+      (i, Seq(if (i < 120) "HOT" else s"a$i", if (i % 10 == 0) "X" else s"b$i",
+        if (i % 7 == 0) "Y" else s"c$i"), s"p$i")
+    } :+ ((999L, Seq[String](null, null, null), "p999"))
+    val bands = keyed.toDF("doc_id", "ks", "s")
+      .select(col("doc_id"), col("ks"), col("s"), posexplode(col("ks")).as(Seq("b", "band_key")))
+      .select(col("doc_id"), col("ks"), col("s"), (col("b") + 1).as("band_id"), col("band_key"))
+    val distinct = Salt.candidates(bands, BandKeys, "doc_id", lit(true), targetBucket = 16L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(distinct.size > 120 * 119 / 2)
+    val once = Salt.candidates(bands, BandKeys, "doc_id", lit(true), targetBucket = 16L,
+      carry = Seq("s", "ks"), once = Some(col("band_id") === MinHash.firstSharedBand))
+      .select("id_a", "id_b", "s_a", "s_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3))).toSeq
+    assert(once.size == distinct.size, "a pair kept at more than one band")
+    assert(once.map(r => (r._1, r._2)).toSet == distinct)
+    assert(once.forall { case (a, b, sa, sb) => sa == s"p$a" && sb == s"p$b" })
+  }
+
   test("minhash salt guard: incremental flag == new x (old ∪ new), hot band split across old/new") {
     val spark0 = spark
     // arrivals are doc_id >= 60: the mega-band holds BOTH old and new rows,

@@ -20,11 +20,10 @@ object Explain {
       println(s"\n===== $name =====")
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      // full output (tree + per-operator details) on demand — the detail
-      // section is where filter/join expressions live, which is what plan
-      // claims are checked against; default stays tree-only for skimming
-      if (sys.env.contains("GRAFT_EXPLAIN_FULL")) println(formatted)
-      else println(formatted.linesIterator.takeWhile(_.nonEmpty).mkString("\n"))
+      // tree + per-operator details: the detail section is where
+      // filter/join expressions live, which is what plan claims are
+      // checked against
+      println(formatted)
       val flags = Seq(
         "CartesianProduct" -> plan.contains("CartesianProduct"),
         "SortMergeJoin"    -> plan.contains("SortMergeJoin"),

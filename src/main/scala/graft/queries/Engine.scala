@@ -52,6 +52,15 @@ object EngineQ {
     p.toString
   }
 
+  /** Deletes the files in a fixture dir, for a query that lists what it
+    * wrote there: names that embed a path, port or timestamp would
+    * otherwise leave a prior run's files beside this run's.
+    */
+  private def wipe(dir: String): Unit = {
+    val s = Files.list(Paths.get(dir))
+    try s.forEach(p => Files.deleteIfExists(p)) finally s.close()
+  }
+
   // -------------------------------------------------------------------------
   // q31 — fetch + trace-dedup + JSON node extraction
   // -------------------------------------------------------------------------
@@ -505,6 +514,7 @@ object EngineQ {
   def q141SaveRoundTrip(spark: SparkSession, dir: String): DataFrame = {
     val fixA = fixtureDir(dir, "q141-src")
     val fixB = fixtureDir(dir, "q141-saved")
+    wipe(fixB) // saved names embed the fixture's absolute path
     val docs = Tables.documents(spark, dir).filter(col("doc_id") % 20 === 11)
     FixtureClock.timed {
     docs.select("doc_id", "lang").foreachPartition { (rows: Iterator[Row]) =>
@@ -554,10 +564,6 @@ object EngineQ {
     import com.sun.net.httpserver.{HttpExchange, HttpServer}
     val auditDir = fixtureDir(dir, "q146-audit")
     val errDir = fixtureDir(dir, "q146-errors")
-    def wipe(d: String): Unit = {
-      val s = Files.list(Paths.get(d))
-      try s.forEach(p => Files.deleteIfExists(p)) finally s.close()
-    }
     wipe(auditDir); wipe(errDir)
     val docs = Tables.documents(spark, dir).filter(col("doc_id") % 20 === 7)
     val server = stubServer()

@@ -209,24 +209,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("corpus operators' plan shape: codegen stages, exchanges and jobs pinned") {
-    val s = spark
-    import s.implicits._
-    val rnd = new Random(7)
-    val words = (0 until 300).map(i => s"w$i")
-    val base = (0 until 40).map(_ => Seq.fill(30 + rnd.nextInt(40))(words(rnd.nextInt(300))))
-    // near-duplicates prepend one word; every fifth doc repeats a paragraph
-    val texts = base ++ base.take(10).map("x" +: _) ++ base.take(8).map(base.head.take(20) ++ _)
-    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t.mkString(" "), s"site${i % 3}") }
-      .toDF("doc_id", "text", "source")
-    val shapes = Seq(
-      "paragraphDedup" -> (() => graft.llm.Corpus.paragraphDedup(docs.select("doc_id", "text"))),
-      "fuzzyNearDupPairs" -> (() =>
-        graft.llm.MinHash.fuzzyNearDupPairs(docs.select("doc_id", "text"))),
-      "runningSum" -> (() => graft.scale.PrefixSum.runningSum(
-        docs.withColumn("hkey", md5(col("doc_id").cast("string"))).withColumn("g", lit("all"))
-          .withColumn("n", length(col("text")).cast("long")), "g", "n")),
-      "domainCap" -> (() => graft.llm.Corpus.domainCap(docs.select("doc_id", "source"), 5))
-    ).map { case (name, op) => name -> planShape(s"shape-$name")(op().collect()) }.toMap
+    val shapes = DedupSpec.corpusOps(spark)
+      .map { case (name, op) => name -> planShape(s"shape-$name")(op().collect()) }.toMap
     info(shapes.toSeq.sortBy(_._1).map { case (n, (w, x, j)) =>
       s"$n: $w codegen stages, $x exchanges, $j jobs" }.mkString("; "))
     assert(shapes == Map(
@@ -326,5 +310,31 @@ class DedupSpec extends AnyFunSuite {
     // the relabel join against the (potentially 100 TB) assignment table
     // must be broadcast, never sort-merge: SMJ would shuffle the big side
     assert(!plan.contains("SortMergeJoin"), s"assignment relabel fell back to SMJ:\n$plan")
+  }
+}
+
+object DedupSpec {
+
+  /** The four corpus operators whose plan shape DedupSpec pins, each over
+    * the same seeded docs: 58 docs, 10 near-duplicates that prepend one
+    * word and 8 that repeat a paragraph.
+    */
+  def corpusOps(spark: org.apache.spark.sql.SparkSession)
+      : Seq[(String, () => org.apache.spark.sql.DataFrame)] = {
+    import spark.implicits._
+    val rnd = new Random(7)
+    val words = (0 until 300).map(i => s"w$i")
+    val base = (0 until 40).map(_ => Seq.fill(30 + rnd.nextInt(40))(words(rnd.nextInt(300))))
+    val texts = base ++ base.take(10).map("x" +: _) ++ base.take(8).map(base.head.take(20) ++ _)
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t.mkString(" "), s"site${i % 3}") }
+      .toDF("doc_id", "text", "source")
+    Seq(
+      "paragraphDedup" -> (() => graft.llm.Corpus.paragraphDedup(docs.select("doc_id", "text"))),
+      "fuzzyNearDupPairs" -> (() =>
+        graft.llm.MinHash.fuzzyNearDupPairs(docs.select("doc_id", "text"))),
+      "runningSum" -> (() => graft.scale.PrefixSum.runningSum(
+        docs.withColumn("hkey", md5(col("doc_id").cast("string"))).withColumn("g", lit("all"))
+          .withColumn("n", length(col("text")).cast("long")), "g", "n")),
+      "domainCap" -> (() => graft.llm.Corpus.domainCap(docs.select("doc_id", "source"), 5)))
   }
 }

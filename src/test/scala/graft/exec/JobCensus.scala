@@ -2,7 +2,7 @@ package graft.exec
 
 import org.apache.spark.SparkContext
 
-/** Exact job-count reads for the census asserts (bench harnesses + specs).
+/** Exact job-count reads for the specs' census asserts.
   *
   * `statusTracker` is fed by the ASYNC listener bus, so reading it right
   * after `clearJobGroup` races the drain — a fixed sleep is either wasted
